@@ -11,11 +11,14 @@ object Pipeline {
 
   final case class Stage(name: String, critical: Boolean)(val run: () => Boolean)
 
-  final case class StageResult(name: String, ran: Boolean, succeeded: Boolean)
+  /** `seconds` is the stage's wall time; `cause` the exception a
+    * failed stage threw (None when it returned false or did not run). */
+  final case class StageResult(name: String, ran: Boolean, succeeded: Boolean,
+                               seconds: Double = 0.0, cause: Option[Throwable] = None)
 
   /** Run stages in order. A critical failure aborts the remainder
-    * (reported as ran=false); non-critical failures are recorded and
-    * execution continues. */
+    * (reported as ran=false); non-critical failures are recorded, with
+    * the exception if one was thrown, and execution continues. */
   def run(stages: Seq[Stage]): Seq[StageResult] = {
     val results = Seq.newBuilder[StageResult]
     var aborted = false
@@ -26,8 +29,12 @@ object Pipeline {
         // propagate — converting a cancellation into an ordinary stage
         // failure would clear the interrupt and keep the pipeline
         // running through the remaining stages
-        val ok = try st.run() catch { case scala.util.control.NonFatal(_) => false }
-        results += StageResult(st.name, ran = true, succeeded = ok)
+        val t0 = System.nanoTime()
+        val (ok, cause) =
+          try (st.run(), None)
+          catch { case scala.util.control.NonFatal(e) => (false, Some(e)) }
+        results += StageResult(st.name, ran = true, succeeded = ok,
+          (System.nanoTime() - t0) / 1e9, cause)
         if (!ok && st.critical) aborted = true
       }
     }

@@ -1,6 +1,8 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,7 +16,7 @@ import org.apache.spark.sql.types._
   * 3-column projection is EXPLICIT, realizing the intent and fixing the
   * defect. Snapshot versioning replaces filename mangling
   * (tickers_YYYYMMDD[_updated].json) with a `sync_date` partition
-  * column, so "latest" is partition pruning, not an mtime glob
+  * column, so "latest" is a partition listing, not an mtime glob
   * (update_ticker_info.py:38-60).
   */
 object TickerStore {
@@ -83,28 +85,62 @@ object TickerStore {
       .withColumn("delist_date", lit(delistDate))
       .write.partitionBy("delist_date").mode(SaveMode.Append).parquet(archiveRoot)
 
-  /** S12: latest-snapshot resolution — max partition of EITHER kind
-    * (mirroring the reference's glob matching both raw and _updated
-    * files), via partition pruning instead of file mtimes. When BOTH
-    * kinds exist for the latest date (the reference's normal daily
-    * flow: raw sync then enrichment), only the "updated" rows are
-    * returned — the reference's mtime max picks the later _updated
-    * file; returning both would duplicate every symbol with stale raw
-    * values interleaved. */
-  def readLatestSnapshot(s: SparkSession, root: String): DataFrame = {
-    val all = s.read.parquet(root)
-    // partition values are type-inferred on read (yyyymmdd → int);
-    // compare as string so the layout owns the format, not the reader
-    val latestRow = all.groupBy()
-      .agg(max(col("sync_date").cast("string")).as("d")).head
-    val latest = latestRow.getString(0)
-    val onDate = all.filter(col("sync_date").cast("string") === latest)
-    val kinds = onDate.select(col("kind").cast("string")).distinct()
-      .collect().map(_.getString(0)) // bounded: ≤ 2 partition values
-    val preferred =
-      if (kinds.length > 1 && kinds.contains("updated"))
-        onDate.filter(col("kind").cast("string") === "updated")
-      else onDate
-    preferred.drop("sync_date", "kind")
+  /** The latest snapshot's partition directories: `syncDate` with the
+    * `kinds` read for it (raw values, unescaped) and their `dirs`. */
+  final case class Latest(syncDate: String, kinds: Seq[String], dirs: Seq[String])
+
+  /** S12: latest-snapshot resolution from a driver-side listing of the
+    * `sync_date=<date>/kind=<kind>` directories, so it launches no Spark job.
+    * Like Spark's file index, entries starting with `_` or `.`
+    * (`_temporary`, `.spark-staging-*`, `_SUCCESS`, checksums) are
+    * skipped, and a kind directory counts only when it holds a data
+    * file. The latest date is the max partition value of EITHER kind,
+    * compared as a string, mirroring the reference's glob over both raw
+    * and _updated files. When "updated" exists on that date alongside
+    * another kind (the reference's normal daily flow: raw sync then
+    * enrichment), only "updated" is read: the reference's mtime max
+    * picks the later _updated file, and returning both would duplicate
+    * every symbol with stale raw values. None when no snapshot exists,
+    * including a missing root. */
+  def latestPartition(s: SparkSession, root: String): Option[Latest] = {
+    val rootPath = new Path(root)
+    val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+    def visible(st: FileStatus) = {
+      val n = st.getPath.getName
+      !(n.startsWith("_") && !n.contains("=")) && !n.startsWith(".") &&
+        !n.endsWith("._COPYING_")
+    }
+    def children(p: Path): Seq[FileStatus] =
+      try fs.listStatus(p).toSeq.filter(visible)
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    // (unescaped value, directory) of each `col=value` child directory
+    def partitions(p: Path, column: String): Seq[(String, Path)] =
+      children(p).filter(_.isDirectory).flatMap { st =>
+        st.getPath.getName.split("=", 2) match {
+          case Array(`column`, v) if v != ExternalCatalogUtils.DEFAULT_PARTITION_NAME =>
+            Some(ExternalCatalogUtils.unescapePathName(v) -> st.getPath)
+          case _ => None
+        }
+      }
+    partitions(rootPath, "sync_date").sortBy(_._1)(Ordering[String].reverse)
+      .iterator.map { case (date, dir) =>
+        val kinds = partitions(dir, "kind")
+          .filter { case (_, k) => children(k).exists(_.isFile) }
+        val read =
+          if (kinds.exists(_._1 == "updated")) kinds.filter(_._1 == "updated") else kinds
+        Latest(date, read.map(_._1), read.map(_._2.toString))
+      }
+      .find(_.dirs.nonEmpty)
   }
+
+  /** The snapshot rows of a resolved [[Latest]] partition, read with the
+    * pinned [[tickerSchema]] (no schema inference). */
+  def readSnapshot(s: SparkSession, latest: Latest): DataFrame =
+    s.read.schema(tickerSchema).parquet(latest.dirs: _*)
+
+  /** The latest snapshot's rows ([[latestPartition]], then
+    * [[readSnapshot]]); throws when `root` holds no snapshot. */
+  def readLatestSnapshot(s: SparkSession, root: String): DataFrame =
+    readSnapshot(s, latestPartition(s, root).getOrElse(
+      throw new IllegalStateException(s"no ticker snapshot under $root")))
 }

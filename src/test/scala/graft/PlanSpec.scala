@@ -473,9 +473,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("no operator collects the corpus to the driver") {
-    // every query plan must keep its row movement inside Spark: the only
-    // driver-side action in the library is TickerStore.readLatestSnapshot's
-    // 1-row partition max. Query functions themselves are lazy.
+    // every query plan must keep its row movement inside Spark; query
+    // functions themselves are lazy. (This checks only that each plan
+    // analyses; it does not bound the rows a query pulls to the driver.)
     SparkEntry.queries.foreach { case (name, q) =>
       val df = q(spark, sf)
       assert(df.queryExecution.analyzed != null, s"$name must build a lazy plan")

@@ -131,6 +131,52 @@ class SourcesSpec extends SparkSpec {
     assert(latest.filter($"symbol" === "HBL").head().getString(1) == "HABIB BANK LIMITED")
   }
 
+  test("latest-snapshot listing skips staging dirs and partitions without data, like Spark's file index (S12)") {
+    val root = tmp("store_listing")
+    val t = Ingest.mockTickerTable(spark).toDF()
+    TickerStore.writeSnapshot(t, root, "20250101", "raw")
+    val dataFile = Files.list(java.nio.file.Paths.get(s"$root/sync_date=20250101/kind=raw"))
+      .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
+    // later-dated leftovers that must not win: an uncommitted task
+    // attempt, a dynamic-overwrite staging dir, and a partition holding
+    // only a marker file
+    for (dir <- Seq("_temporary/0/sync_date=20990101/kind=raw",
+                    ".spark-staging-1/sync_date=20990102/kind=updated")) {
+      val d = Files.createDirectories(java.nio.file.Paths.get(s"$root/$dir"))
+      Files.copy(dataFile, d.resolve(dataFile.getFileName))
+    }
+    val empty = Files.createDirectories(java.nio.file.Paths.get(s"$root/sync_date=20990103/kind=raw"))
+    Files.createFile(empty.resolve("_SUCCESS"))
+    val (latest, jobs) = jobsLaunchedBy()(TickerStore.latestPartition(spark, root))
+    assert(latest.map(l => (l.syncDate, l.kinds)) == Some(("20250101", Seq("raw"))))
+    assert(jobs == 0, s"resolving the latest partition launched $jobs Spark jobs")
+    // Spark's own partition discovery agrees on the latest date
+    assert(spark.read.parquet(root).agg(max($"sync_date".cast("string"))).head.getString(0)
+      == "20250101")
+    assert(TickerStore.readLatestSnapshot(spark, root).count() == 22)
+  }
+
+  test("latest-snapshot listing unescapes partition values (S12)") {
+    val root = tmp("store_escaped")
+    val t = Ingest.mockTickerTable(spark).toDF()
+    TickerStore.writeSnapshot(t, root, "2025/01=05", "raw")
+    assert(new java.io.File(root).list().filter(_.startsWith("sync_date")).toSeq
+      == Seq("sync_date=2025%2F01%3D05"))
+    val latest = TickerStore.latestPartition(spark, root).get
+    assert(latest.syncDate == "2025/01=05" && latest.kinds == Seq("raw"))
+    assert(spark.read.parquet(root).select($"sync_date").as[String].distinct().collect()
+      .toSeq == Seq(latest.syncDate))
+    assert(TickerStore.readSnapshot(spark, latest).count() == 22)
+  }
+
+  test("update-info without any snapshot fails with exit 1") {
+    val dataDir = tmp("no_snapshot")
+    val log = scala.collection.mutable.ListBuffer[String]()
+    assert(Main.run(Seq("--update-ticker-info"),
+      Main.defaultStages(spark, s"$dataDir/missing", "20250111"), log += _) == 1)
+    assert(log.exists(_.matches("stage update-ticker-info \\(\\d+\\.\\d\\d s\\): FAILED")), log)
+  }
+
   test("delisted archive keeps only departing symbols, partitioned by date (P5)") {
     val root = tmp("archive")
     val snap = Ingest.mockTickerTable(spark).toDF()
@@ -158,6 +204,20 @@ class SourcesSpec extends SparkSpec {
       Pipeline.Stage("boom", critical = true)(() => throw new RuntimeException("x")),
       stage("next", crit = false, ok = true)))
     assert(!r3(0).succeeded && !r3(1).ran) // exceptions = failure
+    assert(r3(0).cause.map(_.getMessage) == Some("x") && r3(1).cause.isEmpty)
+  }
+
+  test("Main CLI: stage lines carry the duration and a thrown exception's class and message") {
+    val log = scala.collection.mutable.ListBuffer[String]()
+    val st = Main.Stages(sync = () => true,
+      updateInfo = () => throw new IllegalStateException("details source down"),
+      downloadHistorical = () => false, dailyUpdate = () => true)
+    assert(Main.run(Seq("--full-run"), st, log += _) == 0)
+    assert(log.toSeq.map(_.replaceAll("\\(\\d+\\.\\d\\d s\\)", "(t)")) == Seq(
+      "stage sync-tickers (t): ok",
+      "stage update-ticker-info (t): FAILED (java.lang.IllegalStateException: details source down)",
+      "stage download-historical (t): FAILED",
+      "stage daily-update (t): ok"), log)
   }
 
   test("Main CLI: flag surface + full-run failure algebra (E1, main.py:45-50,90-115)") {
@@ -257,15 +317,30 @@ class SourcesSpec extends SparkSpec {
       .select("event_id", "ts", "user_id", "event_type", "value")
     ev.filter($"event_id" % 3 =!= 0).write.mode("append")
       .parquet(s"$dataDir/landing")
-    val st = Main.defaultStages(spark, dataDir, "20250111")
+    // the details source runs inside update-info after its input is
+    // (or is not) pinned: record the pin count it sees
+    val pinsSeen = scala.collection.mutable.ListBuffer[Int]()
+    val st = Main.defaultStages(spark, dataDir, "20250111", details = s => {
+      pinsSeen += Caches.pinnedCount
+      Ingest.mockTickerTable(s).toDF()
+    })
+    val pins0 = Caches.pinnedCount
     assert(Main.run(Seq.empty, st, _ => ()) == 0)
+    // a normal day reads (today, raw), which its write does not touch:
+    // no pin
+    assert(pinsSeen.toSeq == Seq(pins0) && Caches.pinnedCount == pins0)
     // sync + update: latest snapshot resolves to the updated kind
+    assert(TickerStore.latestPartition(spark, s"$dataDir/tickers")
+      .map(l => (l.syncDate, l.kinds)) == Some(("20250111", Seq("updated"))))
     val latest = TickerStore.readLatestSnapshot(spark, s"$dataDir/tickers")
     assert(latest.count() == 22)
     // SAME-DAY RE-RUN IDEMPOTENCE: the reference's sync overwrites its
     // dated file; a second full-run on the same sync date must REPLACE
-    // the day's partitions, never append duplicates into them
+    // the day's partitions, never append duplicates into them. The
+    // re-run reads the (today, updated) partition it overwrites, so it
+    // pins its input first and releases the pin afterwards
     assert(Main.run(Seq("--sync-tickers", "--update-ticker-info"), st, _ => ()) == 0)
+    assert(pinsSeen.toSeq == Seq(pins0, pins0 + 1) && Caches.pinnedCount == pins0)
     val latest2 = TickerStore.readLatestSnapshot(spark, s"$dataDir/tickers")
     assert(latest2.count() == 22,
       s"same-day re-run duplicated snapshot rows: ${latest2.count()}")

@@ -86,6 +86,34 @@ class StreamingSpec extends SparkSpec {
     assert(stored.select("event_id").distinct().count() == 2)
   }
 
+  test("incremental append: a re-delivered late tick is deduped across runs, with no schema inference") {
+    val landing = tmp("landing4")
+    val store = tmp("store4") + "/store" // absent until the first batch writes it
+    val ckpt = tmp("ckpt4")              // ONE checkpoint across both runs
+    def t(s: String) = java.sql.Timestamp.valueOf(s)
+    def drop(rows: (Long, java.sql.Timestamp, Double)*): Unit =
+      rows.toDF("event_id", "ts", "value").write.mode("append").parquet(landing)
+    drop((1L, t("2024-07-01 10:00:00"), 1.0), (2L, t("2024-07-01 11:00:00"), 2.0),
+      (3L, t("2024-07-02 10:00:00"), 3.0))
+    val schema = spark.read.parquet(landing).schema
+    Streaming.incrementalAppend(spark, landing, store, ckpt, schema)
+    // run 2: tick 2 of the OLDER day 07-01 is delivered again, beside a
+    // new late tick of that day and a new day
+    drop((2L, t("2024-07-01 11:00:00"), 2.0), (4L, t("2024-07-01 12:00:00"), 4.0),
+      (5L, t("2024-07-03 10:00:00"), 5.0))
+    // parquet schema inference is the loop's one job over a driver-side
+    // parallelize (of footers to read); the batch's own jobs scan files
+    val (_, inferJobs) = jobsLaunchedBy(
+        _.stageInfos.exists(_.rddInfos.exists(_.name == "ParallelCollectionRDD"))) {
+      Streaming.incrementalAppend(spark, landing, store, ckpt, schema)
+    }
+    assert(inferJobs == 0, s"the second run's batch launched $inferJobs schema-inference jobs")
+    val stored = spark.read.parquet(store)
+    assert(stored.select("event_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 4L, 5L),
+      "the re-delivered tick must not duplicate into its older day partition")
+    assert(stored.filter($"day" === java.sql.Date.valueOf("2024-07-01")).count() == 3)
+  }
+
   test("incremental append reads only store partitions overlapping the batch (P2 scale)") {
     val landing = tmp("landing")
     val store = tmp("store")
