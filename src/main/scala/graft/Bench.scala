@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
@@ -18,49 +17,20 @@ import org.apache.spark.sql.SparkSession
   *    history): SPARK_GRAFT_BENCH_OUT if set, else the COMMITTED
   *    BENCH_QUERIES.json when SPARK_GRAFT_BENCH_COMMIT=1, else the
   *    gitignored target/BENCH_QUERIES.json — so default runs never
-  *    clobber the reconciled committed artifact (r11 verdict #3);
+  *    clobber the reconciled committed artifact;
   *  - a SHORT total-only JSON line follows the big one, so a bounded
   *    stdout capture that truncates the per-query map still carries the
-  *    headline number (the r04 driver artifact lost its total that way).
+  *    headline number (a committed driver artifact once lost its total
+  *    that way).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse(Env.SfDir, "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse(Env.Cpus, "4")
     val reps = sys.env.getOrElse(Env.Reps, "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // a 238-query run leaves thousands of dereferenced shuffle
-      // dependencies; ContextCleaner only reclaims their files after a
-      // JVM GC notices the dead references, and the default periodic-GC
-      // interval (30 min) outlives the whole run — so the back half of
-      // a long run would otherwise accumulate every query's shuffle
-      // files on disk (r10 verdict #1, the bench back-half drift)
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      // r13 (guide §2.1/§2.2): always use the SORT-based shuffle writer
-      // (one data file + index per map task). The default
-      // bypassMergeThreshold=200 routes every <=200-partition shuffle
-      // through the bypass-merge writer, which creates numMaps x
-      // numPartitions files — at 32 maps x 32 partitions that is 1024
-      // file open/closes per exchange for kilobyte payloads (q72's
-      // 129 KB exchange spent 1.85 s summed over tasks in shuffle
-      // write). Cluster runs are unaffected: production shuffles run
-      // >200 partitions, where Spark already takes the sort path — this
-      // makes local/small-shuffle behavior match it. Measured on a
-      // 5-query shuffle-heavy subset, 3 interleaved A/B pairs:
-      // 5.7-7.3 s (sort) vs 8.9-10.3 s (bypass). Parameterized for
-      // re-measurement; the value is a writer-selection threshold, not
-      // a partition-count tuning.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse(Env.Bypass, "1"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Exogenous-window canary (r12 verdict #4): a SEPARATE fixed-work
-    // timer process (tools/canary/Canary.java via JDK source-file mode
-    // — no classpath needed, so it launches identically under sbt).
+    val spark = Session.local()
+    // Exogenous-window canary: a SEPARATE fixed-work timer process
+    // (tools/canary/Canary.java via JDK source-file mode — no
+    // classpath needed, so it launches identically under sbt).
     // Its timeline distinguishes "the host was slow during these reps"
     // from "the tree got slower" by artifact diff instead of a
     // re-bisect; its own JVM means bench-side GC never dilates it.
@@ -80,12 +50,6 @@ object Bench {
       } catch { case e: java.io.IOException =>
         System.err.println(s"BENCH CANARY launch failed: ${e.getMessage}"); None
       }
-    // releasing a localCheckpoint logs one WARN per RDD ("lineage has
-    // been truncated...") — correct behavior under the Caches.pin
-    // release discipline, but hundreds of them would drown the bench
-    // output, so the rdd logger runs at ERROR here
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
     // optional debug filter: SPARK_GRAFT_ONLY=regex runs a subset.
     // Full runs skip the fixed-size semantics audits (benchExcluded) —
     // an explicit ONLY regex still selects them for dev timing.
@@ -109,10 +73,12 @@ object Bench {
       .orElse(selected.toSeq.sortBy(_._1).headOption.map(_._2))
     warmupFn.foreach { fn =>
       try consume(fn(spark, sfDir))
-      catch { case _: Throwable => () }
+      catch { case t: Throwable =>
+        System.err.println(s"BENCH WARMUP: ${t.getClass.getSimpleName}: ${t.getMessage}")
+      }
       finally Caches.releaseAll() // timed reps must not reuse warmup caches
     }
-    // Untimed BUILD phase (r8 verdict #4): memoized per-process
+    // Untimed BUILD phase: memoized per-process
     // fixtures — the media container encode and the persisted store/
     // index builds — are triggered here, so they are charged to setup
     // instead of whichever query the map iterates first (the builds run
@@ -128,12 +94,12 @@ object Bench {
       finally Caches.releaseAll()
     }
     val failed = scala.collection.mutable.ListBuffer[String]()
-    // per-process leak diagnostic (r10 verdict #1): every 50 queries,
+    // per-process leak diagnostic: every 50 queries,
     // one stderr line with heap, registered-pin count, live persistent
     // RDDs, and the scratch shuffle footprint — the drift signature
     // (any of these growing run-long) now has a committed trace.
     var qIndex = 0
-    // cumulative stop-the-world GC time: the r11 dispersion suspect —
+    // cumulative stop-the-world GC time: a dispersion suspect —
     // spark.cleaner.periodicGC fires System.gc() every minute, and a
     // full GC on a pre-touched 30g heap is a multi-second pause charged
     // to whichever query is running (BENCH SPREAD below localizes it)
@@ -167,15 +133,15 @@ object Bench {
       // host noise on throughput queries, not to double a pin's cost
       val qReps = if (SparkEntry.singleRep(name)) 1 else reps
       var times = runReps(qReps)
-      // Sub-second queries get extra reps (r8 verdict #5): min-of-2 on
+      // Sub-second queries get extra reps: min-of-2 on
       // a trivial line still carried 8–10× host-noise swings between
-      // artifacts (q06/q15 in BENCH_r08, byte-identical code since r7).
+      // artifacts (q06/q15 in BENCH_r08, on byte-identical code).
       // Extra reps on a < 1 s line are cheap by definition; the target
       // is min-of-4 so the committed artifact's sub-second cohort stops
       // moving multi-x on identical code.
       if (!SparkEntry.singleRep(name) && times.nonEmpty && times.min < 1.0 && qReps < 4)
         times = times ++ runReps(4 - qReps)
-      // Dispersion localizer (r11 verdict #1): when this query's reps
+      // Dispersion localizer: when this query's reps
       // disagree by >3x, print EVERY rep time plus the GC time the
       // query's reps accumulated — separates a one-rep environmental
       // pause (min-of-reps already absorbs it) from an all-reps state
@@ -183,14 +149,14 @@ object Bench {
       if (times.length > 1 && times.min > 0 && times.max / times.min > 3)
         System.err.println(s"BENCH SPREAD #$qIndex $name " +
           s"reps=[${times.map(t => f"$t%.3f").mkString(",")}] gcMsDelta=${gcMs - gc0}")
-      // DIAG fires AFTER query #qIndex's reps complete (r11 advice:
-      // emitting it before the query ran reported pre-query process
+      // DIAG fires AFTER query #qIndex's reps complete (emitting it
+      // before the query ran reported pre-query process
       // state under a post-query label — off-by-one vs BENCH TIME #N)
       if (qIndex % 50 == 0) leakLine()
       if (times.isEmpty) { failed += name; None } else {
-        // stderr trace with the RUN POSITION — the drift diagnostic
-        // (r10 #1): lets two runs be compared positionally, which the
-        // order-free JSON map cannot support
+        // stderr trace with the RUN POSITION — the drift diagnostic:
+        // lets two runs be compared positionally, which the order-free
+        // JSON map cannot support
         System.err.println(f"BENCH TIME #$qIndex $name ${times.min}%.3f")
         Some(name -> times.min)
       }
@@ -206,7 +172,7 @@ object Bench {
     // truncation-proof summary: a bounded stdout capture can lose the
     // head of the big line above; this one is < 120 bytes and LAST
     println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":${failed.size}}""")
-    // One-artifact protocol (r11 verdict #3): the COMMITTED
+    // One-artifact protocol: the COMMITTED
     // BENCH_QUERIES.json is updated ONLY on an explicit opt-in
     // (SPARK_GRAFT_BENCH_COMMIT=1) — the driver's default per-round runs
     // kept overwriting the builder's reconciled artifact in the working

@@ -15,5 +15,4 @@ object Env {
   val DataDir  = "SPARK_GRAFT_DATA_DIR" // graft.Main's pipeline data root
   val Stress   = "SPARK_GRAFT_STRESS"   // =1: run the opt-in scale-stress suite
   val Canary   = "SPARK_GRAFT_CANARY"   // =1: Bench launches the fixed-work host canary
-  val Bypass   = "SPARK_GRAFT_BYPASS"   // shuffle bypassMergeThreshold override (default 1: sort writer)
 }

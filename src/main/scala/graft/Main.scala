@@ -191,14 +191,7 @@ object Main {
   def main(args: Array[String]): Unit = {
     if (args.contains("--version")) { println(s"graft v$version"); sys.exit(0) }
     val dataDir = sys.env.getOrElse(Env.DataDir, "./graft_data")
-    val cpus = sys.env.getOrElse(Env.Cpus, "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val syncDate = java.time.LocalDate.now().toString.replace("-", "")
     val code =
       try run(args.toSeq, defaultStages(spark, dataDir, syncDate))

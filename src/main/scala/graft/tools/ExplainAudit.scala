@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print condensed final physical plans for a query subset —
   * the fast way to eyeball pushdown/pruning/joins/codegen after a plan
   * change.
@@ -17,11 +15,7 @@ object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val pattern = args.headOption.getOrElse(".*")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(_._1.matches(pattern))
       .foreach { case (name, fn) =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.Env
 
 /** Dev-only: dump .explain("formatted") for every query matching a
@@ -14,14 +13,7 @@ object PlanDump {
     val suffix = args(1)
     val re = if (args.length > 2) args(2) else ".*"
     val sfDir = sys.env.getOrElse(Env.SfDir, "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse(Env.Cpus, "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(_._1.matches(re))
@@ -35,7 +27,7 @@ object PlanDump {
             txt.getBytes("UTF-8"))
         } catch {
           case t: Throwable =>
-            System.err.println(s"PLANDUMP FAIL $name: ${t.getMessage}")
+            System.err.println(s"PLANDUMP FAIL $name: ${t.getClass.getSimpleName}: ${t.getMessage}")
         } finally graft.Caches.releaseAll()
       }
     spark.stop()

@@ -1,14 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.Env
 
 /** Dev-only per-query cost-class profiler (not part of the driver
   * contract; `runMain graft.tools.ProfileQueries [regex]`).
   *
   * Splits each query's wall time into the three cost classes the bench
-  * min-of-reps actually charges (guide §1: decide WHERE the time goes
-  * before touching anything):
+  * min-of-reps actually charges (decide WHERE the time goes before
+  * touching anything):
   *   - build: constructing the DataFrame (includes any eager work the
   *     query does at construction time: fanOut's `.rdd` partition-count
   *     probe, maybeBroadcast's optimizedPlan.stats, store builds);
@@ -24,19 +23,8 @@ import graft.Env
 object ProfileQueries {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse(Env.SfDir, "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse(Env.Cpus, "32")
     val re = args.headOption.getOrElse(".*")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      // match Bench's shuffle-writer selection (see Bench.scala)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse(Env.Bypass, "1"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     def consume(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     val selected = (graft.SparkEntry.queries -- graft.SparkEntry.benchExcluded)
@@ -44,12 +32,17 @@ object ProfileQueries {
     // warmup (same as Bench)
     selected.find(_._1 == "q02_revenue_by_nation").orElse(selected.headOption)
       .foreach { case (_, fn) =>
-        try consume(fn(spark, sfDir)) catch { case _: Throwable => () }
+        try consume(fn(spark, sfDir))
+        catch { case t: Throwable =>
+          System.err.println(s"PROFILE WARMUP: ${t.getClass.getSimpleName}: ${t.getMessage}")
+        }
         finally graft.Caches.releaseAll()
       }
     graft.SparkEntry.benchBuilds.filter(n => selected.exists(_._1 == n)).foreach { n =>
       try { graft.SparkEntry.queries(n)(spark, sfDir); () }
-      catch { case _: Throwable => () }
+      catch { case t: Throwable =>
+        System.err.println(s"PROFILE SETUP $n: ${t.getClass.getSimpleName}: ${t.getMessage}")
+      }
       finally graft.Caches.releaseAll()
     }
     case class P(name: String, build: Double, plan: Double, exec: Double) {
@@ -71,7 +64,7 @@ object ProfileQueries {
         Some(P(name, (t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9))
       } catch {
         case t: Throwable =>
-          System.err.println(s"PROFILE FAIL $name: ${t.getMessage}")
+          System.err.println(s"PROFILE FAIL $name: ${t.getClass.getSimpleName}: ${t.getMessage}")
           graft.Caches.releaseAll(); None
       }
     }

@@ -1,33 +1,21 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import graft.Env
 
 /** Dev-only: run one query (warm, noop sink) and print the FINAL
-  * executed plan tree with each operator's SQLMetrics — the UI-less
-  * spelling of guide §7.1 "find where the time goes". Cached
-  * intermediates are followed into their InMemoryRelation build plans.
+  * executed plan tree with each operator's SQLMetrics — a UI-less way
+  * to find where the time goes. Cached intermediates are followed into
+  * their InMemoryRelation build plans.
   * Usage: runMain graft.tools.QueryMetrics <queryName>
   */
 object QueryMetrics {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = sys.env.getOrElse(Env.SfDir, "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse(Env.Cpus, "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match Bench's shuffle-writer selection, or shuffleWriteTime
-      // metrics reflect the bypass-merge writer the bench never uses
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse(Env.Bypass, "1"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     def consume(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     val fn = graft.SparkEntry.queries(name)

@@ -1,79 +1,33 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+/** The engine's custom expressions, reached through plain SQL once
+  * registered on the session (`X.register`, the only registration
+  * path), compute what their definitions and library spellings say. */
+class ExtensionsSpec extends SparkSpec {
 
-/** The config-driven extension path must expose the custom expression
-  * to pure-SQL sessions (no library code in the query). */
-class ExtensionsSpec extends AnyFunSuite {
-
-  test("spark.sql.extensions registers sorted_intersect_count for SQL") {
-    // spark.sql.extensions is a STATIC conf: it only takes effect on
-    // the first session of a SparkContext. Any suite running before
-    // this one leaves a context without extensions, so getOrCreate
-    // would silently hand back a session the conf can't reach — stop
-    // that context and build a fresh one. The extensions session is
-    // left as the process default afterwards (same end state as when
-    // this suite runs first); later suites' getOrCreate reuses it and
-    // their runtime confs still apply.
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(_.sparkContext.stop())
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+  test("SQL sorted_intersect_count, dot_scaled and simhash64 match their definitions") {
+    graft.plans.SortedIntersectCount.register(spark)
+    graft.plans.DotScaled.register(spark)
+    graft.plans.SimHash64.register(spark)
     val got = spark.sql(
-        """SELECT sorted_intersect_count(array('a','b','c'), array('b','c','d')) AS n,
-                  sorted_intersect_count(array(), array('x')) AS zero""").head()
-      assert(got.getInt(0) == 2 && got.getInt(1) == 0)
-      // dot_scaled: Σ floor(a·b·1e14) with float/double arrays
-      val dot = spark.sql(
-        """SELECT dot_scaled(array(CAST(0.5 AS FLOAT), CAST(2.0 AS FLOAT)),
-                             array(CAST(2.0 AS FLOAT), CAST(0.25 AS FLOAT))) AS d,
-                  dot_scaled(array(CAST(1.0 AS DOUBLE)), array(CAST(1.0 AS DOUBLE), CAST(2.0 AS DOUBLE))) AS mism""").head()
-      assert(dot.getLong(0) == 150000000000000L) // (1.0 + 0.5) * 1e14
-      assert(dot.isNullAt(1)) // length mismatch poisons, like zip_with
-      // simhash64 via pure SQL matches the library HOF spelling
-      val sh = spark.sql("SELECT simhash64('hello world') AS h").head().getLong(0)
-      val ref = spark.createDataset(Seq("hello world"))(org.apache.spark.sql.Encoders.STRING)
-        .toDF("text").select(graft.dedup.Dedup.simhash64Hof("text")).head().getLong(0)
-      assert(sh == ref)
-
-      // DemoteOversizedBroadcasts: under a tiny budget the BROADCAST
-      // hint on the parquet-backed side is stripped (no BroadcastHashJoin
-      // with that side as build), under the default budget it survives.
-      // Auto-broadcast is disabled so any broadcast in the plan can only
-      // come from the HINT — the demotion is what's observed.
-      val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      val ids = docs.select("doc_id", "source")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
-        def planOf(): String = docs
-          .join(org.apache.spark.sql.functions.broadcast(ids), Seq("doc_id"))
-          .queryExecution.executedPlan.toString
-        spark.conf.set("spark.graft.maxBroadcastBytes", "64")
-        assert(!planOf().contains("BroadcastHashJoin"),
-          "64-byte budget must demote the hinted broadcast")
-        spark.conf.set("spark.graft.maxBroadcastBytes", (512L << 20).toString)
-        assert(planOf().contains("BroadcastHashJoin"),
-          "in-budget hint must keep its broadcast")
-      } finally {
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.adaptive.enabled")
-        spark.conf.unset("spark.graft.maxBroadcastBytes")
-      }
+      """SELECT sorted_intersect_count(array('a','b','c'), array('b','c','d')) AS n,
+                sorted_intersect_count(array(), array('x')) AS zero""").head()
+    assert(got.getInt(0) == 2 && got.getInt(1) == 0)
+    // dot_scaled: Σ floor(a·b·1e14) with float/double arrays
+    val dot = spark.sql(
+      """SELECT dot_scaled(array(CAST(0.5 AS FLOAT), CAST(2.0 AS FLOAT)),
+                           array(CAST(2.0 AS FLOAT), CAST(0.25 AS FLOAT))) AS d,
+                dot_scaled(array(CAST(1.0 AS DOUBLE)), array(CAST(1.0 AS DOUBLE), CAST(2.0 AS DOUBLE))) AS mism""").head()
+    assert(dot.getLong(0) == 150000000000000L) // (1.0 + 0.5) * 1e14
+    assert(dot.isNullAt(1)) // length mismatch poisons, like zip_with
+    // simhash64 via pure SQL matches the library HOF spelling
+    val sh = spark.sql("SELECT simhash64('hello world') AS h").head().getLong(0)
+    val ref = spark.createDataset(Seq("hello world"))(org.apache.spark.sql.Encoders.STRING)
+      .toDF("text").select(graft.dedup.Dedup.simhash64Hof("text")).head().getLong(0)
+    assert(sh == ref)
   }
 
   test("deflate_len orders repetition below prose below randomness") {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    val sf = "/root/testdata/sf0.001"
     import spark.implicits._
     import org.apache.spark.sql.functions._
     graft.plans.DeflateLen.register(spark)
@@ -114,74 +68,6 @@ class ExtensionsSpec extends AnyFunSuite {
         r.getAs[Long]("n_repetitive") + r.getAs[Long]("n_prose") +
           r.getAs[Long]("n_random"))
       assert(r.getAs[Long]("deflate_bytes") > 0)
-    }
-  }
-
-  test("similarity-join placeholder: stats-gated LSH rewrite, off by default, pair-set pinned (r9 verdict #4)") {
-    // runs on the extensions session the first test left as process
-    // default (ExpandSimilarityJoin is injected there)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "text")
-    def planOf(df: org.apache.spark.sql.DataFrame): String =
-      df.queryExecution.optimizedPlan.toString.toLowerCase
-    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-      df.select($"a_id", $"b_id").as[(Long, Long)].collect().toSet
-    val ref = pairs(graft.dedup.Dedup.jaccardPairs(docs, 3)
-      .filter($"jaccard" >= 0.7))
-    try {
-      // every input "oversized" under a 1-byte brute-force budget
-      spark.conf.set("spark.graft.simJoinRewrite.maxBruteForceBytes", "1")
-
-      // 1. OFF BY DEFAULT: flag unset -> exact route even when oversized
-      val off = graft.plans.SimilarityJoin.of(docs, n = 3, threshold = 0.7)
-      assert(!planOf(off).contains("minhash"),
-        "rewrite must be off by default (flag unset)")
-      assert(pairs(off) == ref, "default expansion must be the exact route")
-
-      // 2. ENABLED + OVERSIZED: rewrites to the LSH candidate route.
-      //    Pin: the rewrite emits EXACTLY the q37 pipeline's pair set
-      //    (the route it claims to be — the q86 == q37 equality
-      //    pattern), its pairs are a SUBSET of the exact route (the
-      //    verify stage makes precision 1), and recall on this fixture
-      //    clears the q37-class floor. Full equality with the exact
-      //    route is NOT the contract: banding recall is probabilistic,
-      //    which is exactly why the rewrite is opt-in.
-      spark.conf.set("spark.graft.simJoinRewrite.enabled", "true")
-      val on = graft.plans.SimilarityJoin.of(docs, n = 3, threshold = 0.7)
-      assert(planOf(on).contains("minhash"),
-        s"oversized corpus must rewrite to the LSH route:\n${planOf(on)}")
-      val got = pairs(on)
-      val lshRef = pairs(graft.dedup.Dedup.minhashNearDups(
-        docs, n = 3, k = 32, bands = 8, threshold = 0.7))
-      assert(got == lshRef,
-        "rewrite must emit exactly the q37 route's pair set")
-      assert(got.subsetOf(ref),
-        "exact verify must make the rewritten route precision-1")
-      assert(got.size >= (ref.size * 0.8).toInt,
-        s"fixture recall floor: ${got.size}/${ref.size}")
-
-      // 3. SMALL INPUTS UNTOUCHED: generous budget -> exact route
-      spark.conf.set("spark.graft.simJoinRewrite.maxBruteForceBytes",
-        (1L << 40).toString)
-      val small = graft.plans.SimilarityJoin.of(docs, n = 3, threshold = 0.7)
-      assert(!planOf(small).contains("minhash"),
-        "in-budget corpus must keep the exact route even with the flag on")
-
-      // 4. parent operators compose over the placeholder (resolution
-      //    survives the exprId re-aliasing)
-      val agg = graft.plans.SimilarityJoin.of(docs, n = 3, threshold = 0.7)
-        .groupBy($"a_id").agg(count(lit(1)).as("n"))
-      assert(agg.collect().map(_.getLong(1)).sum == ref.size.toLong)
-    } finally {
-      spark.conf.unset("spark.graft.simJoinRewrite.enabled")
-      spark.conf.unset("spark.graft.simJoinRewrite.maxBruteForceBytes")
-      graft.Caches.releaseAll()
     }
   }
 }

@@ -1,10 +1,8 @@
 package graft
 
 import graft.tools.PlanFingerprint
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
-/** The whole-surface plan-regression net (r11 verdict #7): every query's
+/** The whole-surface plan-regression net: every query's
   * physical-plan operator multiset is pinned in the committed
   * PLANS.json; a join-strategy flip, a new shuffle, or a lost pushdown
   * in ANY of the ~250 queries fails this suite the day it happens
@@ -20,35 +18,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * both, and EMPTY the whitelist again (it must be empty at rest so
   * the net stays whole).
   *
-  * HERMETIC SESSION: the artifact pins the DRIVER's environment —
-  * Verify/Bench run a plain session, no `spark.sql.extensions` — but
-  * inside the full suite ExtensionsSpec leaves an extensions session
-  * as the process default, under which DemoteOversizedBroadcasts
-  * statically strips the IVF-serve family's hinted broadcasts (their
-  * join-output ESTIMATES exceed the 512 MB fence even at fixture
-  * scale; AQE would restore the broadcast at runtime) — 4 fingerprints
-  * legitimately differ. This spec therefore stops any pre-existing
-  * context and fingerprints under a fresh PLAIN session, making it
-  * order-independent (the ExtensionsSpec convention, in reverse; the
-  * media memo and scratch stores are restart-safe by design — the
-  * memo is session-keyed with liveness checks, stores are plain
-  * parquet on disk).
+  * The artifact pins the plans under the engine's one session config
+  * ([[Session]]), which the drivers and every suite share; a suite that
+  * leaves a cache or a runtime conf behind would show up here as drift.
   */
-class PlanFingerprintSpec extends AnyFunSuite {
-  private val sf = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = {
-    Caches.releaseAll() // before the stop: never unpersist dead handles
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(_.sparkContext.stop())
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+class PlanFingerprintSpec extends SparkSpec {
 
   /** Queries whose fingerprints are intentionally changing THIS change;
     * empty at rest. */

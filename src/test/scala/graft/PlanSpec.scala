@@ -67,21 +67,14 @@ class PlanSpec extends SparkSpec {
     //  q43 — corpus × 16 broadcast centroids (IVF assignment pass)
     //  q59 — event-type dimension × 30-day calendar grid (fill-forward
     //        resample target frame, same shape as q17's grid)
-    //  q79 — corpus × 8 broadcast centroids (Lloyd reassignment pass,
-    //        same shape as q43)
     //  q81 — recall evaluation COMPOSES the q38 baseline, so its plan
     //        embeds q38's documented broadcast cross product
     //  q87 — query-side cell ranking × 16 broadcast stored centroids
     //        (the serve half of q43's documented assignment shape)
     //  q103 — the same serve shape as q87 over the append-maintained
     //        index (plus the batch-assignment pass, q43's shape)
-    //  q90 — corpus × 8 broadcast centroids (semantic-dedup cell
-    //        assignment, the same lloydAssign shape as q79); the pair
-    //        stage itself is an equi-join on cell, not a cross product
     //  q92 — postings × the broadcast 1-row global-stats (N, avgdl)
     //        row; every other join in the query is an equi-join
-    //  q96 — corpus × 8 broadcast centroids (the same lloydAssign
-    //        shape as q79/q90)
     //  q110 — scored-bigram vocab × the broadcast 1-row corpus-total
     //        row (q92's 1-row-stats shape); the bigram↔unigram
     //        scoring joins are equi-joins on the token
@@ -102,8 +95,6 @@ class PlanSpec extends SparkSpec {
     //  q145 — the 256-row bucket model × the broadcast 1-row
     //        (N_raw, N_target) totals (q92's 1-row-stats shape); the
     //        doc-bucket/model join is an equi-join
-    //  q146 — lloydAssign's corpus × broadcast nCells-row centroid
-    //        table (the q79/q90/q96 assignment shape)
     //  q148 — four q38-shaped broadcast-query scans (corpus × the
     //        10-vector query set), one per truncation width
     //  q150 — q92's scorer over merged index state: the same broadcast
@@ -118,12 +109,10 @@ class PlanSpec extends SparkSpec {
     //        q113/q126 shape, shared helper)
     val allowed = Set("q17_gap_detect", "q38_cosine_topk",
       "q39_embedding_neardup", "q43_ann_ivf", "q59_fill_forward",
-      "q79_kmeans_step", "q81_ann_recall", "q87_ivf_serve",
-      "q90_semantic_dedup", "q92_bm25_topk", "q96_prototype_coreset",
+      "q81_ann_recall", "q87_ivf_serve", "q92_bm25_topk",
       "q103_ivf_append_serve", "q110_phrase_pmi", "q113_surprisal_bucket",
       "q123_hybrid_retrieval", "q126_filter_auc", "q130_rag_index_build",
-      "q142_bigram_lm_score", "q145_dsir_weights",
-      "q146_cluster_quota_sample", "q148_matryoshka_recall",
+      "q142_bigram_lm_score", "q145_dsir_weights", "q148_matryoshka_recall",
       "q150_incremental_postings", "q153_vocab_growth",
       "q154_mmr_rerank", "q157_hard_negatives",
       "q159_score_calibration",
@@ -135,11 +124,10 @@ class PlanSpec extends SparkSpec {
       "q179_postings_bytes", // 1-row doc-id-ceiling broadcast
       "q180_rfm_segments", // 1-row reference-date + fence broadcasts
       "q185_pq_adc_topk", // corpus × 2048 broadcast codebook rows (the
-                          // q43/q79 assignment shape) + the 20480-row
+                          // q43 assignment shape) + the 20480-row
                           // broadcast ADC table (that one IS an
                           // equi-join on (ss, code))
-      "q186_ivfpq_topk", // composes q185's codebook scan with
-                         // lloydAssign's corpus × 8 centroid grid; the
+      "q186_ivfpq_topk", // composes q185's codebook scan; the
                          // candidate/ADC joins are equi-joins
       "q209_matryoshka_serve", // one q38-shaped broadcast-query scan
                                // (corpus × the 10-vector query set);
@@ -148,15 +136,10 @@ class PlanSpec extends SparkSpec {
                               // store: query set × 8 stored coarse
                               // centroids (broadcast); code/ADC joins
                               // are equi-joins
-      "q218_silhouette",      // corpus × 8 broadcast centroids (the
-                              // q79/q90/q96 lloydAssign shape) — the
-                              // whole point is O(n·cells), no pairs
       "q226_pq_delete_serve", // q215's serve shape over the
                               // delete-maintained store
       "q234_important_parts", // 1-row global-mean broadcast (the
                               // q142/q178 threshold pattern)
-      "q253_dangling_mass",   // two 1-row broadcasts per round (dangling
-                              // mass + node count — the q142 stats shape)
       "q256_zipf_slope",      // 1-row max-frequency broadcast keying the
                               // Prefix rank offsets (the q142/q178
                               // 1-row-stats pattern)
@@ -297,9 +280,8 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.catalyst.plans.Inner
-    // r8 verdict #2 + r14: the (doc, pos±k) equi-joins may move only the
-    // three phrase terms' posting lists. Since r14 the term filter runs
-    // BEFORE the shared postings cache (the cached frame holds only the
+    // the (doc, pos±k) equi-joins may move only the three phrase
+    // terms' posting lists. The term filter runs BEFORE the shared postings cache (the cached frame holds only the
     // three matched lists, bounded by 3·df — not the corpus positional
     // index), so structurally: every input of every positional inner
     // join must read the term-filtered cache (an InMemoryTableScan whose
@@ -386,8 +368,8 @@ class PlanSpec extends SparkSpec {
     // past the cluster-shape budget the exact-verify array build must
     // sit ABOVE a left-semi join against the candidate-pair id set —
     // a full-corpus build (and its ~gramSize× cache) would be the last
-    // corpus-proportional cost of the flagship dedup pipeline at 100 TB
-    // (r5 verdict headline). UNDER the budget the full-corpus build
+    // corpus-proportional cost of the flagship dedup pipeline at 100 TB.
+    // UNDER the budget the full-corpus build
     // must remain (the scoped shape's extra stages measured ~1 s slower
     // on the fixture — see minhashNearDups doc). The build is a cached
     // intermediate, so it is asserted through its InMemoryRelation's
@@ -457,7 +439,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("Lloyd reassignment inlines the centroid table — no corpus re-key (q79)") {
-    // r14: the bounded k×d centroid table rides inside the codegen'd
+    // the bounded k×d centroid table rides inside the codegen'd
     // lloyd_dists kernel (literal centroids), so assignment is one
     // stream-through projection: no broadcast, no join, and the ONLY
     // exchanges are the per-cell rollup + the bounded output sort. A

@@ -6,14 +6,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session base for all suites: one local session per suite. */
+/** Shared session base for all suites: the engine's session on 4 local
+  * cores, shared by every suite in the test JVM. */
 abstract class SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
   val sf = "/root/testdata/sf0.001"
 
   /** Run `body` and count the Spark jobs it launched that `which`

@@ -1,10 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
-/** Per-batch INTERNAL plan net for the streaming audit loops (r12
-  * verdict #5). PlanFingerprintSpec deliberately skips the audit
+/** Per-batch INTERNAL plan net for the streaming audit loops.
+  * PlanFingerprintSpec deliberately skips the audit
   * queries — their outer plan is a constant scan of the folded result —
   * so the plans that carry the actual operator shapes (state
   * restore/save, per-batch dedup/anti-join chains, stream joins) had
@@ -18,25 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *   SPARK_GRAFT_PLANS_UPDATE=1 sbt "testOnly graft.StreamPlanFingerprintSpec"
   * then review the STREAMPLANS.json git diff alongside the change.
   *
-  * Hermetic session, PlanFingerprintSpec convention: a fresh PLAIN
-  * session (no extensions) so the artifact pins the driver's
-  * environment and the spec is order-independent in the full suite.
+  * Runs on the shared suite session, as PlanFingerprintSpec does.
   */
-class StreamPlanFingerprintSpec extends AnyFunSuite {
-  private val sf = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = {
-    Caches.releaseAll()
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(_.sparkContext.stop())
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+class StreamPlanFingerprintSpec extends SparkSpec {
 
   /** Loops whose fingerprints are intentionally changing THIS change;
     * empty at rest. */
