@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, to_date}
 import graft.sources.{Ingest, Pipeline, TickerStore}
 
 /** E1: the runnable pipeline entrypoint — the reference CLI's flag
@@ -53,23 +54,35 @@ object Main {
     * `dataDir/tickers` snapshot store, `dataDir/landing` raw event
     * parquet drops, `dataDir/ohlc` bar table, `dataDir/store` the
     * day-partitioned dedup store, `dataDir/ckpt` stream checkpoints.
-    * A missing landing dir makes the two data stages vacuous successes
-    * (nothing to ingest is not a failure — the reference's stub stages
-    * log and continue, main.py:78-88). The landing schema is inferred
-    * at most once per bindings object and shared by both data stages;
-    * update-info resolves the latest snapshot from the partition
-    * listing ([[TickerStore.latestPartition]]) and checkpoints its
-    * input only on a same-day re-run. */
+    * A landing dir without a data file (missing, or holding only
+    * `_SUCCESS`, `_temporary/` and the like —
+    * [[TickerStore.holdsDataFile]]) makes the two data stages vacuous
+    * successes (nothing to ingest is not a failure — the reference's
+    * stub stages log and continue, main.py:78-88). The landing schema
+    * is inferred at most once per bindings object and shared by both
+    * data stages; update-info resolves the latest snapshot from the
+    * partition listing ([[TickerStore.latestPartition]]) and
+    * checkpoints its input only on a same-day re-run.
+    *
+    * Event identity: an `event_id` names one tick, and a re-delivery
+    * repeats that tick's row. download-historical dedups landing on
+    * `(day, event_id)`, the identity the day-partitioned store keeps,
+    * so one exchange on `day` serves both the dedup and the
+    * `(event_type, day)` bars. daily-update dedups each batch on
+    * `event_id` and takes the batch's day range over its non-null rows
+    * ([[streaming.Streaming.incrementalAppend]]). The one input where
+    * these rules differ from a dedup on `event_id` alone is an
+    * `event_id` that lands on two different days: download-historical
+    * counts it once on each day, and daily-update stores one of the
+    * two rows when both arrive in one batch, or both when the later
+    * batch's day range does not cover the earlier row's day. */
   def defaultStages(spark: SparkSession, dataDir: String,
                     syncDate: String,
                     details: SparkSession => org.apache.spark.sql.DataFrame =
                       s => Ingest.mockTickerTable(s).toDF()): Stages = {
     val tickerRoot = s"$dataDir/tickers"
     val landing = s"$dataDir/landing"
-    def landingExists: Boolean = {
-      val p = new org.apache.hadoop.fs.Path(landing)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
+    def landingHasData: Boolean = TickerStore.holdsDataFile(spark, landing)
     lazy val landingSchema = spark.read.parquet(landing).schema
     Stages(
       sync = () => {
@@ -107,22 +120,25 @@ object Main {
           } finally if (rerun) graft.Caches.unpin(latest)
       },
       downloadHistorical = () => {
-        if (!landingExists) true // nothing to ingest
+        if (!landingHasData) true // nothing to ingest
         else {
           // landing is an at-least-once drop zone: a re-delivered file
-          // must not double-count bar volume — dedup on the natural key
-          // BEFORE aggregating (the incrementalAppend store does the
-          // same for the persisted table)
+          // must not double-count bar volume — dedup BEFORE aggregating.
+          // The ticks are clustered once on day; the (day, event_id)
+          // dedup and the (event_type, day) bars both run inside that
+          // one exchange
           val ticks = spark.read.schema(landingSchema).parquet(landing)
-            .dropDuplicates("event_id")
+            .withColumn("day", to_date(col("ts")))
+            .repartition(col("day"))
+            .dropDuplicates("day", "event_id")
           operators.TimeSeries
-            .ohlcDaily(ticks, "event_type", "ts", "value", "event_id")
+            .ohlcBars(ticks, "event_type", "ts", "value", "event_id")
             .write.mode("overwrite").parquet(s"$dataDir/ohlc")
           true
         }
       },
       dailyUpdate = () => {
-        if (!landingExists) true // nothing to ingest
+        if (!landingHasData) true // nothing to ingest
         else {
           streaming.Streaming.incrementalAppend(spark, landing,
             s"$dataDir/store", s"$dataDir/ckpt", landingSchema)

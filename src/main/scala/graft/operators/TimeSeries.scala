@@ -40,8 +40,14 @@ object TimeSeries {
     * (same shape as Streaming.dailyBars): no window sort, no dedup
     * shuffle — the scale-correct plan for tick → bar compaction. */
   def ohlcDaily(ticks: DataFrame, key: String, ts: String, value: String, id: String): DataFrame =
+    ohlcBars(ticks.withColumn("day", to_date(col(ts))), key, ts, value, id)
+
+  /** [[ohlcDaily]]'s aggregate over ticks that already carry their
+    * `day` column. A caller that has clustered the ticks on `day` gets
+    * the bars with no exchange of their own: a hash partitioning on
+    * `day` satisfies the `(key, day)` grouping. */
+  def ohlcBars(ticks: DataFrame, key: String, ts: String, value: String, id: String): DataFrame =
     ticks
-      .withColumn("day", to_date(col(ts)))
       .groupBy(col(key), col("day"))
       .agg(
         min_by(col(value), struct(col(ts), col(id))).as("open"),
@@ -589,9 +595,9 @@ object TimeSeries {
       val dd = graft.Caches.cached(dailyClose(s, dir)
         .select(col("event_type"), col("day"),
           (dec(col("close")) * lit(100)).cast("long").as("cents"))
-        // structural positivity (r10 ADVICE): DIV on a non-positive
-        // peak diverges cross-engine (Spark NULLs, DuckDB // floors);
-        // prices are positive by contract — enforce it in the PLAN (and
+        // structural positivity: DIV on a non-positive peak diverges
+        // cross-engine (Spark NULLs, DuckDB // floors); prices are
+        // positive by contract — enforce it in the PLAN (and
         // identically in the oracle) instead of a comment
         .filter(col("cents") > 0)
         .withColumn("peak", max(col("cents")).over(w))
@@ -664,8 +670,8 @@ object TimeSeries {
           sum(col("x") * col("y")).as("sxy"),
           sum(col("x") * col("x")).as("sxx"),
           sum(col("y") * col("y")).as("syy"))
-        // zero-variance guard (r10 ADVICE): a constant series at some
-        // lag makes the denominator 0, where Spark double division
+        // zero-variance guard: a constant series at some lag makes
+        // the denominator 0, where Spark double division
         // yields NULL but DuckDB yields inf/NaN — make the degenerate
         // case EXPLICITLY NULL in both spellings (when-without-
         // otherwise here, NULLIF in the oracle)

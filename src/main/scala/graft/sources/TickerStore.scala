@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
@@ -105,14 +105,7 @@ object TickerStore {
   def latestPartition(s: SparkSession, root: String): Option[Latest] = {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def visible(st: FileStatus) = {
-      val n = st.getPath.getName
-      !(n.startsWith("_") && !n.contains("=")) && !n.startsWith(".") &&
-        !n.endsWith("._COPYING_")
-    }
-    def children(p: Path): Seq[FileStatus] =
-      try fs.listStatus(p).toSeq.filter(visible)
-      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    def children(p: Path) = visibleChildren(fs, p)
     // (unescaped value, directory) of each `col=value` child directory
     def partitions(p: Path, column: String): Seq[(String, Path)] =
       children(p).filter(_.isDirectory).flatMap { st =>
@@ -131,6 +124,32 @@ object TickerStore {
         Latest(date, read.map(_._1), read.map(_._2.toString))
       }
       .find(_.dirs.nonEmpty)
+  }
+
+  /** True when `dir` holds a data file, directly or in a subdirectory,
+    * by [[latestPartition]]'s rule: names starting with `_` or `.` are
+    * skipped, so a directory holding only `_SUCCESS` or `_temporary/`
+    * holds none. False for a missing directory. Launches no Spark job. */
+  def holdsDataFile(s: SparkSession, dir: String): Boolean = {
+    val path = new Path(dir)
+    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
+    def walk(p: Path): Boolean =
+      visibleChildren(fs, p).exists(st => st.isFile || walk(st.getPath))
+    walk(path)
+  }
+
+  /** The listing of a directory without the entries Spark's file index
+    * skips (names starting with `.`, or with `_` outside a `col=value`
+    * partition name, and in-flight `._COPYING_` files); empty for a
+    * missing directory. */
+  private def visibleChildren(fs: FileSystem, p: Path): Seq[FileStatus] = {
+    def visible(st: FileStatus) = {
+      val n = st.getPath.getName
+      !(n.startsWith("_") && !n.contains("=")) && !n.startsWith(".") &&
+        !n.endsWith("._COPYING_")
+    }
+    try fs.listStatus(p).toSeq.filter(visible)
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
   }
 
   /** The snapshot rows of a resolved [[Latest]] partition, read with the

@@ -255,7 +255,7 @@ class SourcesSpec extends SparkSpec {
     assert(Main.run(Seq("--version"), stages(c6), quiet) == 0 && c6.isEmpty)
     assert(Main.run(Seq("--frobnicate"), stages(c6), quiet) == 2 && c6.isEmpty)
     // --full-run COMBINED with stage flags runs BOTH blocks, exactly as
-    // main.py:63-88 then :90-115 (r11 ADVICE): sync executes twice
+    // main.py:63-88 then :90-115: sync executes twice
     val c7 = scala.collection.mutable.ListBuffer[String]()
     assert(Main.run(Seq("--sync-tickers", "--full-run"), stages(c7), quiet) == 0)
     assert(c7.toSeq == Seq("sync", "sync", "upd", "dl", "daily"))
@@ -344,12 +344,14 @@ class SourcesSpec extends SparkSpec {
     val latest2 = TickerStore.readLatestSnapshot(spark, s"$dataDir/tickers")
     assert(latest2.count() == 22,
       s"same-day re-run duplicated snapshot rows: ${latest2.count()}")
-    // historical: bars match the operator over the same landing data
-    val bars = spark.read.parquet(s"$dataDir/ohlc")
-    val want = graft.operators.TimeSeries.ohlcDaily(
-      spark.read.parquet(s"$dataDir/landing"),
-      "event_type", "ts", "value", "event_id")
-    assert(bars.count() == want.count() && bars.count() > 0)
+    // historical: bars match the operator over the same landing data,
+    // row for row
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.mkString("|")).toSeq.sorted
+    def bars(ticks: org.apache.spark.sql.DataFrame): Seq[String] =
+      rows(graft.operators.TimeSeries.ohlcDaily(ticks, "event_type", "ts", "value", "event_id"))
+    val got = rows(spark.read.parquet(s"$dataDir/ohlc"))
+    assert(got.nonEmpty && got == bars(spark.read.parquet(s"$dataDir/landing")))
     // daily update: store holds exactly the landed (deduped) ids; a
     // SECOND run with a re-delivered overlap stays duplicate-free
     val n1 = spark.read.parquet(s"$dataDir/store").count()
@@ -366,14 +368,53 @@ class SourcesSpec extends SparkSpec {
     // RE-DELIVERS the overlap) must equal bars over the DISTINCT
     // events — re-delivery must not double-count volume
     assert(Main.run(Seq("--download-historical"), st, _ => ()) == 0)
-    val bars2 = spark.read.parquet(s"$dataDir/ohlc")
-      .collect().map(_.toSeq).toSet
-    val wantDedup = graft.operators.TimeSeries.ohlcDaily(
-      ev.filter($"event_id" % 3 =!= 0 || $"event_id" % 2 === 0),
-      "event_type", "ts", "value", "event_id")
-      .collect().map(_.toSeq).toSet
-    assert(bars2 == wantDedup,
+    val bars2 = rows(spark.read.parquet(s"$dataDir/ohlc"))
+    assert(bars2 == bars(ev.filter($"event_id" % 3 =!= 0 || $"event_id" % 2 === 0)),
       "re-delivered landing files double-counted bar volume")
+    // the two landing consumers agree: the bars are the bars of the store
+    assert(bars2 == bars(stored), "ohlc and the deduplicated store disagree")
+  }
+
+  test("Main CLI: a landing dir without a data file is nothing to ingest") {
+    // a finished empty write leaves only _SUCCESS; an unfinished one
+    // only _temporary/ (its part file is not yet visible)
+    for ((name, leave) <- Seq[(String, String => Unit)](
+        "_SUCCESS" -> (l => Files.createFile(java.nio.file.Paths.get(l, "_SUCCESS"))),
+        "_temporary/" -> (l => spark.range(3).toDF("event_id")
+          .write.parquet(s"$l/_temporary/0/task")))) {
+      val dataDir = tmp("maincli_empty")
+      val landing = s"$dataDir/landing"
+      Files.createDirectories(java.nio.file.Paths.get(landing))
+      leave(landing)
+      assert(!TickerStore.holdsDataFile(spark, landing))
+      val log = scala.collection.mutable.ListBuffer[String]()
+      assert(Main.run(Seq("--download-historical", "--daily-update"),
+        Main.defaultStages(spark, dataDir, "20250111"), log += _) == 0,
+        s"landing holding only $name: ${log.mkString("; ")}")
+      assert(log.size == 2 && log.forall(_.endsWith(": ok")), log)
+      assert(!new java.io.File(s"$dataDir/ohlc").exists() &&
+        !new java.io.File(s"$dataDir/store").exists())
+    }
+    // one visible file makes it data, also inside a partition directory
+    val part = tmp("maincli_part")
+    spark.range(3).toDF("event_id").write.parquet(s"$part/landing/day=2025-01-10")
+    assert(TickerStore.holdsDataFile(spark, s"$part/landing"))
+  }
+
+  test("Main CLI: a warm day's download-historical shuffles the landing ticks once") {
+    val dataDir = tmp("maincli_shuffles")
+    val ev = Tables.events(spark, sf)
+      .select("event_id", "ts", "user_id", "event_type", "value")
+    val st = Main.defaultStages(spark, dataDir, "20250111")
+    ev.filter($"event_id" % 2 === 0).write.mode("append").parquet(s"$dataDir/landing")
+    assert(Main.run(Seq("--download-historical"), st, _ => ()) == 0)
+    ev.filter($"event_id" % 3 === 0).write.mode("append").parquet(s"$dataDir/landing")
+    val (code, shuffles) = shufflesRunBy(Main.run(Seq("--download-historical"), st, _ => ()))
+    assert(code == 0)
+    // one exchange clusters the ticks on day; the (day, event_id) dedup
+    // and the (event_type, day) bars both run inside it
+    assert(shuffles.size == 1 && shuffles.head.contains("hashpartitioning(day#"),
+      s"download-historical ran ${shuffles.size} shuffles:\n${shuffles.mkString("\n")}")
   }
 
   test("stats store: manifest prunes files, pruned read equals full filter") {

@@ -135,6 +135,26 @@ class StreamingSpec extends SparkSpec {
       s"expected pruned scan to admit both landing rows, got:\n${stored.collect().mkString("\n")}")
   }
 
+  test("incremental append: a warm batch runs one dedup exchange, not one per action") {
+    val landing = tmp("landing5")
+    val store = tmp("store5") + "/store"
+    val ckpt = tmp("ckpt5")
+    val ev = Tables.events(spark, sf).select("event_id", "ts", "value")
+    ev.filter($"event_id" < 600).write.mode("append").parquet(landing)
+    val schema = spark.read.parquet(landing).schema
+    Streaming.incrementalAppend(spark, landing, store, ckpt, schema)
+    // day 2: a re-delivered overlap beside new ticks
+    ev.filter($"event_id" >= 400).write.mode("append").parquet(landing)
+    val (_, shuffles) = shufflesRunBy(Streaming.incrementalAppend(spark, landing, store, ckpt, schema))
+    // the day range is an aggregate over the raw batch; only the write
+    // dedups (the store's keys join it by broadcast)
+    val dedups = shuffles.filter(_.contains("hashpartitioning(event_id#"))
+    assert(dedups.size == 1,
+      s"the batch ran ${dedups.size} dedup exchanges:\n${shuffles.mkString("\n")}")
+    val stored = spark.read.parquet(store)
+    assert(stored.count() == ev.count() && stored.select("event_id").distinct().count() == ev.count())
+  }
+
   test("streaming near-dup admission: clusters admit min-id, store wins transitively (q88 twin)") {
     val landing = tmp("dd_landing")
     val sig = tmp("dd_sig") + "/store"      // not yet existing: bootstrap path
