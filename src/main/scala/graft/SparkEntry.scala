@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Queries and oracles live next to the operator modules they exercise
   * (graft.operators.*, graft.dedup.*, graft.similarity.*, ...); this
@@ -38,7 +38,7 @@ object SparkEntry {
     *    beyond-budget 100 TB route (pair-cache barrier + salted narrow
     *    survivors + survivor-scoped arrays) purely as a scale-shape pin —
     *    a pin, not a throughput query, and its one-rep timing was the
-    *    noisiest line of BENCH_r07 (r7 verdict #4).
+    *    noisiest line of BENCH_r07.
     * SPARK_GRAFT_ONLY still selects any of them explicitly for dev
     * timing. */
   val benchExcluded: Set[String] = Set("q101_admission_loop",
@@ -53,22 +53,22 @@ object SparkEntry {
     * executes a full checkpointed streaming loop / lifecycle replay and
     * whose returned frame is a pinned result scan. Their physical plan
     * is a constant (`Scan:1` / a LocalTableScan rollup) carrying zero
-    * plan-regression signal, so PlanFingerprintSpec skips them instead
-    * of paying minutes of audit wall-time per suite run for nothing —
-    * their correctness lives in the Verify hash gate, their internal
-    * shapes in StreamingSpec. q86 stays fingerprinted: its construction
-    * is lazy plan-building and its cluster-route shape is exactly what
-    * the net exists to pin. */
+    * plan-regression signal, so PLANS.json does not pin them: their
+    * correctness lives in the Verify hash gate, their per-batch plans
+    * in STREAMPLANS.json (both fingerprint nets read the tests' one
+    * catalogue pass, which runs each audit loop once). q86 stays
+    * fingerprinted: its construction is lazy plan-building and its
+    * cluster-route shape is exactly what the net exists to pin. */
   val auditQueries: Set[String] = benchExcluded - "q86_lsh_narrow_salted"
 
   /** Queries Bench runs at ONE rep instead of SPARK_GRAFT_REPS — none
-    * currently; q86 moved to [[benchExcluded]] (r7 verdict #4). */
+    * currently; q86 is in [[benchExcluded]]. */
   val singleRep: Set[String] = Set.empty
 
   /** Queries whose construction triggers a MEMOIZED per-process build
     * (media container encode, persisted IVF/range/Z-order/bloom/
     * signature stores). Bench invokes each once in the UNTIMED setup
-    * phase (r8 verdict #4) so the build is charged to setup, not to
+    * phase so the build is charged to setup, not to
     * whichever query the map happens to iterate first — q104's 3.4×
     * phantom regression in BENCH_r08 was exactly such a first-touch
     * media-encode charge. Membership here does NOT exclude a query

@@ -96,17 +96,10 @@ object Streaming {
         if (!row.isNullAt(0)) {
           val (lo, hi) = (row.getDate(0), row.getDate(1))
           val batch = live.dropDuplicates("event_id").withColumn("day", to_date(col("ts")))
-          val storedKeys =
-            try spark.read.schema(batch.schema).parquet(storeDir)
-              .filter(col("day") >= lit(lo) && col("day") <= lit(hi)) // partition-pruned
-              .select("event_id")
-            catch {
-              // ONLY the store-not-created-yet case may fall through to
-              // "no stored keys"; an IO/permission/corruption failure
-              // must abort the batch, not silently disable dedup
-              case _: org.apache.spark.sql.AnalysisException =>
-                batch.select("event_id").limit(0) // schema-correct empty
-            }
+          val storedKeys = readStore(spark, storeDir, Some(batch.schema)).fold(
+            batch.select("event_id").limit(0))( // schema-correct empty
+            _.filter(col("day") >= lit(lo) && col("day") <= lit(hi)) // partition-pruned
+              .select("event_id"))
           batch.join(storedKeys, Seq("event_id"), "left_anti")
             .write.mode("append").partitionBy("day").parquet(storeDir)
         }
@@ -165,29 +158,20 @@ object Streaming {
         // would free checkpoints pinned outside the stream, which are
         // unrecoverable (truncated lineage)
         graft.Caches.scoped {
-          // None ONLY for a not-yet-existing dir (first run) — an
-          // existing-but-unreadable store must THROW and abort the
-          // batch: silently bootstrapping over a corrupt store would
-          // re-admit near-dups of every doc already in it
-          def tryRead(dir: String): Option[DataFrame] = {
-            val p = new org.apache.hadoop.fs.Path(dir)
-            val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            if (fs.exists(p)) Some(spark.read.parquet(dir)) else None
-          }
           // at-least-once ingest can repeat a doc inside one batch
           // (dropDuplicates) or re-deliver an ALREADY-PROCESSED id
           // across batches (anti-join vs the admitted store — without
           // it a replayed admitted doc would pair with its own store
           // signature and re-admit as a duplicate)
           val batch = graft.Caches.cached(
-            tryRead(admittedDir).foldLeft(
+            readStore(spark, admittedDir).foldLeft(
               batch0.select(col("doc_id"), col("text")).dropDuplicates("doc_id"))(
               (b, adm) => b.join(adm.select("doc_id"), Seq("doc_id"), "left_anti")))
           // ONLY store-absent (first run) may fall through to the
           // bootstrap; IO/corruption failures must abort the batch
-          val pairs = graft.Caches.cached(tryRead(sigStoreDir) match {
+          val pairs = graft.Caches.cached(readStore(spark, sigStoreDir) match {
             case Some(_) =>
-              val texts = tryRead(admittedDir)
+              val texts = readStore(spark, admittedDir)
                 .map(_.select("doc_id", "text").unionByName(batch))
                 .getOrElse(batch)
               Dedup.incrementalNearDupsTokens(sigStoreDir, batch, texts,
@@ -344,6 +328,19 @@ object Streaming {
     * delegates to the one shared spelling. */
   private def rmTree(f: java.io.File): Unit = graft.Scratch.rmTree(f)
 
+  /** The parquet store at `dir`, or None while it does not exist yet.
+    * Only an absent store falls through: an existing store that cannot
+    * be read throws, since reading it as empty would silently disable
+    * the dedup or admission that consults it. Existence is checked
+    * first because reading a missing path makes Spark's FileStreamSink
+    * log a WARN with a full stack trace. */
+  private def readStore(spark: SparkSession, dir: String,
+                        schema: Option[org.apache.spark.sql.types.StructType] = None): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
+    else Some(schema.fold(spark.read)(spark.read.schema).parquet(dir))
+  }
+
   /** Run `body` under a fixture-sized shuffle width: every join in an
     * audit is ≤ 17 docs, so a wide session shuffle only adds empty-task
     * scheduling overhead to the ~30 stages a multi-run audit executes.
@@ -368,9 +365,7 @@ object Streaming {
     val schema = StructType(Seq(
       StructField("doc_id", LongType, nullable = false),
       StructField("text", StringType, nullable = true)))
-    def storeCount(): Long =
-      try spark.read.parquet(adm).count()
-      catch { case _: org.apache.spark.sql.AnalysisException => 0L }
+    def storeCount(): Long = readStore(spark, adm).fold(0L)(_.count())
     val runs = withNarrowShuffle(spark) {
       Seq(b1, b2, b2).zipWithIndex.map { case (batch, i) =>
         batch.toDF("doc_id", "text")

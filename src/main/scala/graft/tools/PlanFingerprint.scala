@@ -1,11 +1,10 @@
 package graft.tools
 
-/** Physical-plan operator-multiset fingerprints (r11 verdict #7).
+/** Physical-plan operator-multiset fingerprints.
   *
   * BenchPlanSpec pins one load-bearing shape per top-10 timed query;
-  * the other ~240 queries had no plan regression net — a join-strategy
-  * flip or a new shuffle in any of them would only surface as a slow
-  * bench line two rounds later. The fingerprint closes that gap: every
+  * the fingerprint nets every other query: a join-strategy flip or a
+  * new shuffle would otherwise only surface as a slow bench line. Every
   * query's UNEXECUTED physical plan is reduced to the multiset of its
   * operator names ("BroadcastHashJoin:2|Exchange:3|FileScan:4|..."),
   * committed to PLANS.json, and diffed by PlanFingerprintSpec on every

@@ -4,20 +4,20 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 
 /** Internal micro-batch plan fingerprints for the streaming audit
-  * loops (r12 verdict #5).
+  * loops.
   *
-  * PlanFingerprintSpec nets all 241 fingerprintable BATCH plans, but a
-  * streaming audit's outer plan is a constant scan of its folded
-  * result — the plans that actually carry the operator shapes (state
-  * restore/save, stream joins, the per-batch dedup/anti-join chains)
-  * are the per-batch `IncrementalExecution`s inside each loop, and
-  * they had no regression net. This recorder closes the gap: each
-  * audit's foreachBatch closure calls [[record]], which — when a spec
-  * has enabled collection — fingerprints the CURRENT batch's
+  * PLANS.json nets every non-audit BATCH plan, but a streaming audit's
+  * outer plan is a constant scan of its folded result — the plans that
+  * actually carry the operator shapes (state restore/save, stream
+  * joins, the per-batch dedup/anti-join chains) are the per-batch
+  * `IncrementalExecution`s inside each loop. This recorder nets them:
+  * each loop's foreachBatch closure calls [[record]], which — when
+  * collection is enabled — fingerprints the CURRENT batch's
   * IncrementalExecution physical plan (at foreachBatch time the active
   * query's `lastExecution` IS the running batch) into a per-loop set.
-  * StreamingSpec's closing test diffs the collected sets against the
-  * committed STREAMPLANS.json (update via SPARK_GRAFT_PLANS_UPDATE=1,
+  * The tests' catalogue pass enables collection while it runs every
+  * loop, and StreamPlanFingerprintSpec diffs the collected sets against
+  * the committed STREAMPLANS.json (update via SPARK_GRAFT_PLANS_UPDATE=1,
   * same workflow as PLANS.json).
   *
   * Disabled (the default, incl. Verify/Bench/production): `record` is

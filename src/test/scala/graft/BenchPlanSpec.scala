@@ -1,12 +1,14 @@
 package graft
 
-/** Plan pins for the TOP-10 TIMED BENCH LINES (r10 verdict #8): each of
-  * the most expensive queries in the committed bench artifact keeps ONE
-  * named load-bearing physical shape, so a silent planner regression
-  * (a Spark upgrade, a stats change, an accidental hint removal) fails
-  * CI instead of quietly showing up as a slower bench artifact two
-  * rounds later. PlanSpec sweeps EVERY query for cartesians; this suite
-  * pins what makes the expensive queries fast, not just not-broken.
+/** Plan pins for the TOP-10 TIMED BENCH LINES: each of the most
+  * expensive queries in the committed bench artifact keeps ONE named
+  * load-bearing physical shape, so a silent planner regression (a Spark
+  * upgrade, a stats change, an accidental hint removal) fails CI
+  * instead of quietly showing up as a slower bench artifact later.
+  * The catalogue pass (PlanSpec's per-query cross-product bound,
+  * PlanFingerprintSpec's operator multisets) nets every query's plan at
+  * coarse grain; this suite pins what makes the expensive queries fast,
+  * not just not-broken.
   *
   * Pins assert shapes that are stable at the spec's fixture scale and
   * load-bearing at any scale (top-k operators, kernel-in-join, anti-

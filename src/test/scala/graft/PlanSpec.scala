@@ -60,103 +60,127 @@ class PlanSpec extends SparkSpec {
 
   test("no query plans a cartesian or nested-loop join, except documented baselines") {
     // deliberate exceptions, each a BOUNDED cross product against a
-    // broadcast side that is dimension-sized by construction:
-    //  q17 — suppliers × 60-day calendar grid (gap detection)
-    //  q38/q39 — exact-cosine BASELINES (broadcast query/slice side);
-    //            their scale paths are q40/q48
-    //  q43 — corpus × 16 broadcast centroids (IVF assignment pass)
-    //  q59 — event-type dimension × 30-day calendar grid (fill-forward
-    //        resample target frame, same shape as q17's grid)
-    //  q81 — recall evaluation COMPOSES the q38 baseline, so its plan
-    //        embeds q38's documented broadcast cross product
-    //  q87 — query-side cell ranking × 16 broadcast stored centroids
-    //        (the serve half of q43's documented assignment shape)
-    //  q103 — the same serve shape as q87 over the append-maintained
-    //        index (plus the batch-assignment pass, q43's shape)
-    //  q92 — postings × the broadcast 1-row global-stats (N, avgdl)
-    //        row; every other join in the query is an equi-join
-    //  q110 — scored-bigram vocab × the broadcast 1-row corpus-total
-    //        row (q92's 1-row-stats shape); the bigram↔unigram
-    //        scoring joins are equi-joins on the token
-    //  q113 — token stream × the broadcast 1-row corpus-total row and
-    //        per-doc scores × the broadcast 1-row doc-count row (both
-    //        q92's 1-row-stats shape); the vocab join is an equi-join
-    //  q123 — COMPOSES both documented baselines: q38's broadcast
-    //        query-set cross product (vector leg) and q92's 1-row
-    //        global-stats row (BM25 leg); the fusion join itself is a
-    //        (query_id, doc_id) equi-join
-    //  q126 — reuses q113's surprisal score, hence its 1-row
-    //        corpus-total broadcast; everything above it is aggregates
-    //  q130 — chunk-BM25 serve: the same 1-row (n_chunks, avgdl)
-    //        stats broadcast as q92; every other join is an equi-join
-    //  q142 — bigram stream × the broadcast 1-row vocabulary-size row
-    //        (q92's 1-row-stats shape); the context/bigram-count
-    //        joins are equi-joins
-    //  q145 — the 256-row bucket model × the broadcast 1-row
-    //        (N_raw, N_target) totals (q92's 1-row-stats shape); the
-    //        doc-bucket/model join is an equi-join
-    //  q148 — four q38-shaped broadcast-query scans (corpus × the
-    //        10-vector query set), one per truncation width
-    //  q150 — q92's scorer over merged index state: the same broadcast
-    //        1-row (n_docs, avgdl) stats row
-    //  q153 — the 1-row max(doc_id) threshold base broadcast against
-    //        the distinct-token first-occurrence table (q142 shape)
-    //  q154 — one q38-shaped broadcast-query scan (corpus × the
-    //        10-vector quantized query set) feeding the MMR greedy
-    //  q157 — the same q38-shaped broadcast-query scan feeding the
-    //        labeled positive/hard-negative argmaxes
-    //  q159 — surprisalPerDoc's broadcast 1-row token-total (the
-    //        q113/q126 shape, shared helper)
-    val allowed = Set("q17_gap_detect", "q38_cosine_topk",
-      "q39_embedding_neardup", "q43_ann_ivf", "q59_fill_forward",
-      "q81_ann_recall", "q87_ivf_serve", "q92_bm25_topk",
-      "q103_ivf_append_serve", "q110_phrase_pmi", "q113_surprisal_bucket",
-      "q123_hybrid_retrieval", "q126_filter_auc", "q130_rag_index_build",
-      "q142_bigram_lm_score", "q145_dsir_weights", "q148_matryoshka_recall",
-      "q150_incremental_postings", "q153_vocab_growth",
-      "q154_mmr_rerank", "q157_hard_negatives",
-      "q159_score_calibration",
-      "q172_copurchase_lift", // 1-row order-count broadcast (q142 pattern)
-      "q174_curriculum_phases", // 1-row token-budget broadcast
-      "q175_backoff_lm", // 1-row (train-bigrams, vocab) stats broadcast
-      "q177_interleave_schedule", // 1-row corpus-size broadcast
-      "q178_doc_keywords", // 1-row doc-count broadcast
-      "q179_postings_bytes", // 1-row doc-id-ceiling broadcast
-      "q180_rfm_segments", // 1-row reference-date + fence broadcasts
-      "q185_pq_adc_topk", // corpus × 2048 broadcast codebook rows (the
-                          // q43 assignment shape) + the 20480-row
-                          // broadcast ADC table (that one IS an
-                          // equi-join on (ss, code))
-      "q186_ivfpq_topk", // composes q185's codebook scan; the
-                         // candidate/ADC joins are equi-joins
-      "q209_matryoshka_serve", // one q38-shaped broadcast-query scan
-                               // (corpus × the 10-vector query set);
-                               // stage 2 runs on 32 rows/query
-      "q215_pq_append_serve", // q186's serve shape over the appended
-                              // store: query set × 8 stored coarse
-                              // centroids (broadcast); code/ADC joins
-                              // are equi-joins
-      "q226_pq_delete_serve", // q215's serve shape over the
-                              // delete-maintained store
-      "q234_important_parts", // 1-row global-mean broadcast (the
-                              // q142/q178 threshold pattern)
-      "q256_zipf_slope",      // 1-row max-frequency broadcast keying the
-                              // Prefix rank offsets (the q142/q178
-                              // 1-row-stats pattern)
-      "q257_kl_drift",        // 1-row corpus-token-total broadcast (the
-                              // q113/q126 shape); the vocab and
-                              // source-total joins are equi-joins
-      "q258_source_ablation", // 1-row corpus-mass broadcast (same
-                              // 1-row-stats shape); the spread join is
-                              // a vocab equi-join
-      "q259_kneser_ney_counts") // 1-row bigram-type-total broadcast;
-                                // continuation joins are vocab
-                                // equi-joins
-    SparkEntry.queries.keys.filterNot(allowed).toSeq.sorted.foreach { name =>
-      val p = plan(name)
-      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-        s"$name must generate candidates, not cross products:\n${p.take(4000)}")
+    // broadcast side that is dimension-sized by construction, with the
+    // number of cross-product operators its plan carries. A query may
+    // not carry more than its bound (absent means 0), and every entry
+    // must still carry one, so the list is no wider than the tree needs.
+    val allowed = Map(
+      // suppliers × 60-day calendar grid (gap detection)
+      "q17_gap_detect" -> 1,
+      // exact-cosine BASELINES (broadcast query/slice side); their
+      // scale paths are q40/q48
+      "q38_cosine_topk" -> 1,
+      "q39_embedding_neardup" -> 1,
+      // corpus × 16 broadcast centroids (IVF assignment pass)
+      "q43_ann_ivf" -> 2,
+      // event-type dimension × 30-day calendar grid (fill-forward
+      // resample target frame, same shape as q17's grid)
+      "q59_fill_forward" -> 1,
+      // recall evaluation COMPOSES the q38 baseline, so its plan embeds
+      // q38's documented broadcast cross product
+      "q81_ann_recall" -> 2,
+      // query-side cell ranking × 16 broadcast stored centroids (the
+      // serve half of q43's documented assignment shape)
+      "q87_ivf_serve" -> 2,
+      // postings × the broadcast 1-row global-stats (N, avgdl) row;
+      // every other join in the query is an equi-join
+      "q92_bm25_topk" -> 1,
+      // the same serve shape as q87 over the append-maintained index
+      // (plus the batch-assignment pass, q43's shape)
+      "q103_ivf_append_serve" -> 2,
+      // scored-bigram vocab × the broadcast 1-row corpus-total row
+      // (q92's 1-row-stats shape); the bigram↔unigram scoring joins are
+      // equi-joins on the token
+      "q110_phrase_pmi" -> 1,
+      // token stream × the broadcast 1-row corpus-total row and per-doc
+      // scores × the broadcast 1-row doc-count row (both q92's
+      // 1-row-stats shape); the vocab join is an equi-join
+      "q113_surprisal_bucket" -> 13,
+      // COMPOSES both documented baselines: q38's broadcast query-set
+      // cross product (vector leg) and q92's 1-row global-stats row
+      // (BM25 leg); the fusion join itself is a (query_id, doc_id)
+      // equi-join
+      "q123_hybrid_retrieval" -> 2,
+      // reuses q113's surprisal score, hence its 1-row corpus-total
+      // broadcast; everything above it is aggregates
+      "q126_filter_auc" -> 2,
+      // chunk-BM25 serve: the same 1-row (n_chunks, avgdl) stats
+      // broadcast as q92; every other join is an equi-join
+      "q130_rag_index_build" -> 1,
+      // bigram stream × the broadcast 1-row vocabulary-size row (q92's
+      // 1-row-stats shape); the context/bigram-count joins are
+      // equi-joins
+      "q142_bigram_lm_score" -> 1,
+      // the 256-row bucket model × the broadcast 1-row (N_raw,
+      // N_target) totals (q92's 1-row-stats shape); the
+      // doc-bucket/model join is an equi-join
+      "q145_dsir_weights" -> 1,
+      // four q38-shaped broadcast-query scans (corpus × the 10-vector
+      // query set), one per truncation width
+      "q148_matryoshka_recall" -> 4,
+      // q92's scorer over merged index state: the same broadcast 1-row
+      // (n_docs, avgdl) stats row
+      "q150_incremental_postings" -> 1,
+      // the 1-row max(doc_id) threshold base broadcast against the
+      // distinct-token first-occurrence table (q142 shape)
+      "q153_vocab_growth" -> 1,
+      // one q38-shaped broadcast-query scan (corpus × the 10-vector
+      // quantized query set) feeding the MMR greedy
+      "q154_mmr_rerank" -> 1,
+      // the same q38-shaped broadcast-query scan feeding the labeled
+      // positive/hard-negative argmaxes
+      "q157_hard_negatives" -> 1,
+      // surprisalPerDoc's broadcast 1-row token-total (the q113/q126
+      // shape, shared helper)
+      "q159_score_calibration" -> 1,
+      "q172_copurchase_lift" -> 1, // 1-row order-count broadcast (q142 pattern)
+      "q174_curriculum_phases" -> 1, // 1-row token-budget broadcast
+      "q175_backoff_lm" -> 1, // 1-row (train-bigrams, vocab) stats broadcast
+      "q177_interleave_schedule" -> 1, // 1-row corpus-size broadcast
+      "q178_doc_keywords" -> 1, // 1-row doc-count broadcast
+      "q179_postings_bytes" -> 1, // 1-row doc-id-ceiling broadcast
+      "q180_rfm_segments" -> 9, // 1-row reference-date + fence broadcasts
+      // corpus × 2048 broadcast codebook rows (the q43 assignment
+      // shape) + the 20480-row broadcast ADC table (that one IS an
+      // equi-join on (ss, code))
+      "q185_pq_adc_topk" -> 1,
+      // composes q185's codebook scan; the candidate/ADC joins are
+      // equi-joins
+      "q186_ivfpq_topk" -> 3,
+      // one q38-shaped broadcast-query scan (corpus × the 10-vector
+      // query set); stage 2 runs on 32 rows/query
+      "q209_matryoshka_serve" -> 1,
+      // q186's serve shape over the appended store: query set × 8
+      // stored coarse centroids (broadcast); code/ADC joins are
+      // equi-joins
+      "q215_pq_append_serve" -> 3,
+      // q215's serve shape over the delete-maintained store
+      "q226_pq_delete_serve" -> 3,
+      // 1-row global-mean broadcast (the q142/q178 threshold pattern)
+      "q234_important_parts" -> 1,
+      // 1-row max-frequency broadcast keying the Prefix rank offsets
+      // (the q142/q178 1-row-stats pattern)
+      "q256_zipf_slope" -> 1,
+      // 1-row corpus-token-total broadcast (the q113/q126 shape); the
+      // vocab and source-total joins are equi-joins
+      "q257_kl_drift" -> 1,
+      // 1-row corpus-mass broadcast (same 1-row-stats shape); the
+      // spread join is a vocab equi-join
+      "q258_source_ablation" -> 1,
+      // 1-row bigram-type-total broadcast; continuation joins are vocab
+      // equi-joins
+      "q259_kneser_ney_counts" -> 1)
+    val pass = Catalogue.pass(spark, sf)
+    val unbounded = pass.records.toSeq.sortBy(_._1).collect {
+      case (name, r) if r.crossProducts > allowed.getOrElse(name, 0) =>
+        s"$name plans ${r.crossProducts} cross products, bound ${allowed.getOrElse(name, 0)}; " +
+          s"it must generate candidates, not cross products:\n${r.plan.take(4000)}"
     }
+    val stale = allowed.keys.toSeq.sorted.filter { name =>
+      !pass.failed.contains(name) && pass.records.get(name).forall(_.crossProducts == 0)
+    }.map(name => s"$name is allowlisted but plans no cross product: drop its entry")
+    val bad = unbounded ++ stale ++ pass.failures
+    if (bad.nonEmpty) fail(bad.mkString("\n"))
   }
 
   test("semantic dedup's quadratic stage keys on cell, never a cartesian (q90)") {
@@ -458,9 +482,11 @@ class PlanSpec extends SparkSpec {
     // every query plan must keep its row movement inside Spark; query
     // functions themselves are lazy. (This checks only that each plan
     // analyses; it does not bound the rows a query pulls to the driver.)
-    SparkEntry.queries.foreach { case (name, q) =>
-      val df = q(spark, sf)
-      assert(df.queryExecution.analyzed != null, s"$name must build a lazy plan")
+    val pass = Catalogue.pass(spark, sf)
+    val unbuilt = pass.records.toSeq.sortBy(_._1).collect {
+      case (name, r) if !r.analyzed => s"$name must build a lazy plan"
     }
+    val bad = unbuilt ++ pass.failures
+    if (bad.nonEmpty) fail(bad.mkString("\n"))
   }
 }

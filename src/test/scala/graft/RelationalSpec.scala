@@ -80,9 +80,13 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("all registered queries return rows at sf0.001") {
-    SparkEntry.queries.foreach { case (name, q) =>
-      assert(q(spark, sf).count() > 0, s"$name returned 0 rows")
+    val pass = Catalogue.pass(spark, sf)
+    assert(pass.records.keySet ++ pass.failed.keySet == SparkEntry.queries.keySet)
+    val empty = pass.records.toSeq.sortBy(_._1).collect {
+      case (name, r) if r.rows <= 0 => s"$name returned 0 rows"
     }
+    val bad = empty ++ pass.failures
+    if (bad.nonEmpty) fail(bad.mkString("\n"))
   }
 
   test("every oracle key has a matching query") {

@@ -1,21 +1,19 @@
 package graft
 
 /** Per-batch INTERNAL plan net for the streaming audit loops.
-  * PlanFingerprintSpec deliberately skips the audit
-  * queries — their outer plan is a constant scan of the folded result —
-  * so the plans that carry the actual operator shapes (state
-  * restore/save, per-batch dedup/anti-join chains, stream joins) had
-  * no regression net. This spec runs every audit loop at sf0.001 with
-  * [[graft.tools.StreamPlans]] collection enabled: each foreachBatch
-  * closure fingerprints its running micro-batch's IncrementalExecution
-  * plan, and the per-loop fingerprint SETS are diffed against the
-  * committed STREAMPLANS.json.
+  * PlanFingerprintSpec deliberately skips the audit queries — their
+  * outer plan is a constant scan of the folded result — so the plans
+  * that carry the actual operator shapes (state restore/save,
+  * per-batch dedup/anti-join chains, stream joins) are netted here.
+  * [[Catalogue.pass]] runs every audit loop at sf0.001, plus one
+  * `incrementalAppend` replay, with [[graft.tools.StreamPlans]]
+  * collection enabled: each foreachBatch closure fingerprints its
+  * running micro-batch's IncrementalExecution plan, and the per-loop
+  * fingerprint SETS are diffed against the committed STREAMPLANS.json.
   *
   * Update workflow (intended plan changes), same as PLANS.json:
   *   SPARK_GRAFT_PLANS_UPDATE=1 sbt "testOnly graft.StreamPlanFingerprintSpec"
   * then review the STREAMPLANS.json git diff alongside the change.
-  *
-  * Runs on the shared suite session, as PlanFingerprintSpec does.
   */
 class StreamPlanFingerprintSpec extends SparkSpec {
 
@@ -37,34 +35,13 @@ class StreamPlanFingerprintSpec extends SparkSpec {
   }
 
   test("every audit loop's per-batch plan fingerprint set matches the committed STREAMPLANS.json") {
-    graft.tools.StreamPlans.enable()
-    try {
-      // construction RUNS each audit's full loop (checkpointed replays
-      // included); recording happens inside the foreachBatch closures
-      graft.streaming.Streaming.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-        try { fn(spark, sf); () } finally Caches.releaseAll()
-      }
-      // incrementalAppend is the one foreachBatch loop no audit query
-      // drives (its audits are StreamingSpec's P2 tests) — run one
-      // deterministic two-chunk replay here so its internal plans are
-      // netted with the rest
-      val tmp = java.nio.file.Files.createTempDirectory("spfs_p2").toString
-      try {
-        import org.apache.spark.sql.functions.col
-        val ev = Tables.events(spark, sf)
-          .select("event_id", "ts", "value").orderBy("event_id")
-        val schema = ev.schema
-        Seq(ev.limit(200), ev.limit(400)).zipWithIndex.foreach { case (chunk, i) =>
-          chunk.write.mode("overwrite").parquet(s"$tmp/landing/c$i")
-          graft.streaming.Streaming.incrementalAppend(
-            spark, s"$tmp/landing/c$i", s"$tmp/store", s"$tmp/ckpt$i", schema)
-        }
-      } finally {
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-        Caches.releaseAll()
-      }
-    } finally graft.tools.StreamPlans.disable()
-    val current = graft.tools.StreamPlans.collected
+    val pass = Catalogue.pass(spark, sf)
+    // a loop that threw recorded only part of its batches
+    val thrown = (pass.failed.filter { case (name, _) => SparkEntry.auditQueries(name) } ++
+      pass.replayFailure.map("the incrementalAppend replay" -> _))
+      .toSeq.sorted.map { case (name, cause) => s"$name threw $cause" }
+    if (thrown.nonEmpty) fail(thrown.mkString("\n"))
+    val current = pass.streamPlans
     assert(current.nonEmpty, "no per-batch plans were recorded — the " +
       "foreachBatch record() hooks or the active-query lookup broke")
     if (sys.env.get("SPARK_GRAFT_PLANS_UPDATE").contains("1")) {

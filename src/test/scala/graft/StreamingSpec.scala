@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.streaming.Streaming
+import scala.jdk.CollectionConverters._
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -112,6 +113,36 @@ class StreamingSpec extends SparkSpec {
     assert(stored.select("event_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 4L, 5L),
       "the re-delivered tick must not duplicate into its older day partition")
     assert(stored.filter($"day" === java.sql.Date.valueOf("2024-07-01")).count() == 3)
+  }
+
+  test("incremental append: a first batch into an absent store logs no FileStreamSink warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val landing = tmp("landing6")
+    val store = tmp("store6") + "/store" // absent until the first batch writes it
+    Seq((1L, java.sql.Timestamp.valueOf("2024-07-01 10:00:00"), 1.0))
+      .toDF("event_id", "ts", "value").write.mode("overwrite").parquet(landing)
+    val schema = spark.read.parquet(landing).schema
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("fileStreamSinkWarnings", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName.endsWith("FileStreamSink") && e.getLevel.isMoreSpecificThan(Level.WARN))
+          warned.add(e.getMessage.getFormattedMessage)
+    }
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    capture.start()
+    ctx.getConfiguration.getRootLogger.addAppender(capture, Level.WARN, null)
+    ctx.updateLoggers()
+    try Streaming.incrementalAppend(spark, landing, store, tmp("ckpt6"), schema)
+    finally {
+      ctx.getConfiguration.getRootLogger.removeAppender(capture.getName)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    assert(warned.isEmpty, s"the first batch logged: ${warned.asScala.mkString("\n")}")
+    assert(spark.read.parquet(store).count() == 1)
   }
 
   test("incremental append reads only store partitions overlapping the batch (P2 scale)") {
