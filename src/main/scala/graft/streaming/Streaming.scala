@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.PinnedOps
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
@@ -71,42 +71,34 @@ object Streaming {
     * identity is `(day, event_id)`: an id stored on a day outside the
     * range is appended again. */
   def incrementalAppend(spark: SparkSession, landingDir: String, storeDir: String,
-                        checkpointDir: String, schema: org.apache.spark.sql.types.StructType): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        // per-batch plan net: no-op unless a spec enabled collection
-        graft.tools.StreamPlans.record("incrementalAppend", batch0.sparkSession)
-        val spark = batch0.sparkSession
-        // in-batch dedup before the write: a re-delivered landing file
-        // (at-least-once ingest) can repeat an event_id inside one
-        // micro-batch — the store anti-join below only guards against
-        // PAST batches. Null event times are rejected up front: a row
-        // without a day cannot join the day-partitioned dedup contract
-        // (it would land in the null partition, which no future
-        // [lo, hi] range scan reads, so its re-delivery would duplicate
-        // forever); a production deployment quarantines them instead
-        // of appending.
-        val live = batch0.filter(col("ts").isNotNull)
-        // the range needs no dedup: duplicates repeat a row's day
-        val Array(row) = live
-          .agg(min(to_date(col("ts"))).as("lo"), max(to_date(col("ts"))).as("hi")).collect()
-        if (!row.isNullAt(0)) {
-          val (lo, hi) = (row.getDate(0), row.getDate(1))
-          val batch = live.dropDuplicates("event_id").withColumn("day", to_date(col("ts")))
-          val storedKeys = readStore(spark, storeDir, Some(batch.schema)).fold(
-            batch.select("event_id").limit(0))( // schema-correct empty
-            _.filter(col("day") >= lit(lo) && col("day") <= lit(hi)) // partition-pruned
-              .select("event_id"))
-          batch.join(storedKeys, Seq("event_id"), "left_anti")
-            .write.mode("append").partitionBy("day").parquet(storeDir)
-        }
+                        checkpointDir: String, schema: org.apache.spark.sql.types.StructType): Unit =
+    drain("incrementalAppend", spark.readStream.schema(schema).parquet(landingDir),
+        checkpointDir) { (batch0, _) =>
+      val spark = batch0.sparkSession
+      // in-batch dedup before the write: a re-delivered landing file
+      // (at-least-once ingest) can repeat an event_id inside one
+      // micro-batch — the store anti-join below only guards against
+      // PAST batches. Null event times are rejected up front: a row
+      // without a day cannot join the day-partitioned dedup contract
+      // (it would land in the null partition, which no future
+      // [lo, hi] range scan reads, so its re-delivery would duplicate
+      // forever); a production deployment quarantines them instead
+      // of appending.
+      val live = batch0.filter(col("ts").isNotNull)
+      // the range needs no dedup: duplicates repeat a row's day
+      val Array(row) = live
+        .agg(min(to_date(col("ts"))).as("lo"), max(to_date(col("ts"))).as("hi")).collect()
+      if (!row.isNullAt(0)) {
+        val (lo, hi) = (row.getDate(0), row.getDate(1))
+        val batch = live.dropDuplicates("event_id").withColumn("day", to_date(col("ts")))
+        val storedKeys = readStore(spark, storeDir, Some(batch.schema)).fold(
+          batch.select("event_id").limit(0))( // schema-correct empty
+          _.filter(col("day") >= lit(lo) && col("day") <= lit(hi)) // partition-pruned
+            .select("event_id"))
+        batch.join(storedKeys, Seq("event_id"), "left_anti")
+          .write.mode("append").partitionBy("day").parquet(storeDir)
       }
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** Streaming near-dup ADMISSION — the [[graft.dedup.Dedup]] q88
     * incremental regime closed into the full production loop: each
@@ -145,88 +137,81 @@ object Streaming {
                    w: Int = 5, k: Int = 32, bands: Int = 8,
                    threshold: Double = 0.7): Unit = {
     import graft.dedup.Dedup
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        // per-batch plan net: no-op unless a spec enabled collection
-        graft.tools.StreamPlans.record("nearDupAdmit", batch0.sparkSession)
-        val spark = batch0.sparkSession
-        // scoped, NOT releaseAll: batch cleanup must only free this
-        // batch's own caches/pins — a global release inside a batch
-        // would free checkpoints pinned outside the stream, which are
-        // unrecoverable (truncated lineage)
-        graft.Caches.scoped {
-          // at-least-once ingest can repeat a doc inside one batch
-          // (dropDuplicates) or re-deliver an ALREADY-PROCESSED id
-          // across batches (anti-join vs the admitted store — without
-          // it a replayed admitted doc would pair with its own store
-          // signature and re-admit as a duplicate)
-          val batch = graft.Caches.cached(
-            readStore(spark, admittedDir).foldLeft(
-              batch0.select(col("doc_id"), col("text")).dropDuplicates("doc_id"))(
-              (b, adm) => b.join(adm.select("doc_id"), Seq("doc_id"), "left_anti")))
-          // ONLY store-absent (first run) may fall through to the
-          // bootstrap; IO/corruption failures must abort the batch
-          val pairs = graft.Caches.cached(readStore(spark, sigStoreDir) match {
-            case Some(_) =>
-              val texts = readStore(spark, admittedDir)
-                .map(_.select("doc_id", "text").unionByName(batch))
-                .getOrElse(batch)
-              Dedup.incrementalNearDupsTokens(sigStoreDir, batch, texts,
-                w, k, bands, threshold)
-            case None =>
-              Dedup.minhashNearDupsTokens(batch, w, k, bands, threshold)
-          })
-          val batchIds = batch.select("doc_id")
-          // pair sides resolve store-vs-batch membership by semi/anti
-          // joins (ids are disjoint by construction — the store only
-          // ever receives ADMITTED ids, which left the batch)
-          val aInBatch = pairs.join(batchIds.withColumnRenamed("doc_id", "a_id"),
-            Seq("a_id"), "left_semi")
-          val storeHitA = pairs.join(batchIds.withColumnRenamed("doc_id", "a_id"),
-            Seq("a_id"), "left_anti").select(col("b_id").as("doc_id"))
-          val storeHitB = aInBatch.join(batchIds.withColumnRenamed("doc_id", "b_id"),
-            Seq("b_id"), "left_anti").select(col("a_id").as("doc_id"))
-          val storeHit = graft.Caches.cached(
-            storeHitA.unionByName(storeHitB).distinct())
-          val batchPairs = aInBatch
-            .join(batchIds.withColumnRenamed("doc_id", "b_id"), Seq("b_id"), "left_semi")
-            .select("a_id", "b_id")
-          // members: (doc_id, canonical_id) for every batch doc with a
-          // batch-internal pair; singletons (incl. singleton store
-          // hits) are handled by the storeHit anti-join below
-          val members = graft.Caches.cached(
-            // uniquePairs: batchPairs is a semi-join-scoped subset of
-            // the LSH verify stream (distinct a<b)
-            Dedup.components(graft.Caches.cached(batchPairs), uniquePairs = true))
-          val infectedClusters = members
-            .join(storeHit, Seq("doc_id"), "left_semi")
-            .select("canonical_id").distinct()
-          val clusterRejected = members
-            .join(infectedClusters, Seq("canonical_id"), "left_semi")
-            .select("doc_id")
-            .unionByName(members.filter(col("doc_id") =!= col("canonical_id"))
-              .select("doc_id"))
-          // EAGER lineage cut before the appends: admitted's plan READS
-          // admittedDir (the replay anti-join), and appending to a path
-          // refreshes that path's caches — a cached-but-lineage-bearing
-          // admitted would re-evaluate against its own output when the
-          // signature write runs, admitting the wrong docs into the
-          // store. The pin holds the batch-sized result in executor
-          // blocks; both appends then read those blocks, and the
-          // surrounding scope frees them when the batch ends.
-          val admitted = graft.Caches.pin(batch
-            .join(storeHit, Seq("doc_id"), "left_anti")
-            .join(clusterRejected, Seq("doc_id"), "left_anti"))
-          admitted.write.mode("append").parquet(admittedDir)
-          Dedup.minhashSignaturesTokens(admitted, w, k)
-            .write.mode("append").parquet(sigStoreDir)
-        } // scoped: per-batch intermediates released here
-      }
-      .start()
-    q.awaitTermination()
+    drain("nearDupAdmit", spark.readStream.schema(schema).parquet(landingDir),
+        checkpointDir) { (batch0, _) =>
+      val spark = batch0.sparkSession
+      // scoped, NOT releaseAll: batch cleanup must only free this
+      // batch's own caches/pins — a global release inside a batch
+      // would free checkpoints pinned outside the stream, which are
+      // unrecoverable (truncated lineage)
+      graft.Caches.scoped {
+        // at-least-once ingest can repeat a doc inside one batch
+        // (dropDuplicates) or re-deliver an ALREADY-PROCESSED id
+        // across batches (anti-join vs the admitted store — without
+        // it a replayed admitted doc would pair with its own store
+        // signature and re-admit as a duplicate)
+        val batch = graft.Caches.cached(
+          readStore(spark, admittedDir).foldLeft(
+            batch0.select(col("doc_id"), col("text")).dropDuplicates("doc_id"))(
+            (b, adm) => b.join(adm.select("doc_id"), Seq("doc_id"), "left_anti")))
+        // ONLY store-absent (first run) may fall through to the
+        // bootstrap; IO/corruption failures must abort the batch
+        val pairs = graft.Caches.cached(readStore(spark, sigStoreDir) match {
+          case Some(_) =>
+            val texts = readStore(spark, admittedDir)
+              .map(_.select("doc_id", "text").unionByName(batch))
+              .getOrElse(batch)
+            Dedup.incrementalNearDupsTokens(sigStoreDir, batch, texts,
+              w, k, bands, threshold)
+          case None =>
+            Dedup.minhashNearDupsTokens(batch, w, k, bands, threshold)
+        })
+        val batchIds = batch.select("doc_id")
+        // pair sides resolve store-vs-batch membership by semi/anti
+        // joins (ids are disjoint by construction — the store only
+        // ever receives ADMITTED ids, which left the batch)
+        val aInBatch = pairs.join(batchIds.withColumnRenamed("doc_id", "a_id"),
+          Seq("a_id"), "left_semi")
+        val storeHitA = pairs.join(batchIds.withColumnRenamed("doc_id", "a_id"),
+          Seq("a_id"), "left_anti").select(col("b_id").as("doc_id"))
+        val storeHitB = aInBatch.join(batchIds.withColumnRenamed("doc_id", "b_id"),
+          Seq("b_id"), "left_anti").select(col("a_id").as("doc_id"))
+        val storeHit = graft.Caches.cached(
+          storeHitA.unionByName(storeHitB).distinct())
+        val batchPairs = aInBatch
+          .join(batchIds.withColumnRenamed("doc_id", "b_id"), Seq("b_id"), "left_semi")
+          .select("a_id", "b_id")
+        // members: (doc_id, canonical_id) for every batch doc with a
+        // batch-internal pair; singletons (incl. singleton store
+        // hits) are handled by the storeHit anti-join below
+        val members = graft.Caches.cached(
+          // uniquePairs: batchPairs is a semi-join-scoped subset of
+          // the LSH verify stream (distinct a<b)
+          Dedup.components(graft.Caches.cached(batchPairs), uniquePairs = true))
+        val infectedClusters = members
+          .join(storeHit, Seq("doc_id"), "left_semi")
+          .select("canonical_id").distinct()
+        val clusterRejected = members
+          .join(infectedClusters, Seq("canonical_id"), "left_semi")
+          .select("doc_id")
+          .unionByName(members.filter(col("doc_id") =!= col("canonical_id"))
+            .select("doc_id"))
+        // EAGER lineage cut before the appends: admitted's plan READS
+        // admittedDir (the replay anti-join), and appending to a path
+        // refreshes that path's caches — a cached-but-lineage-bearing
+        // admitted would re-evaluate against its own output when the
+        // signature write runs, admitting the wrong docs into the
+        // store. The pin holds the batch-sized result in executor
+        // blocks; both appends then read those blocks, and the
+        // surrounding scope frees them when the batch ends.
+        val admitted = graft.Caches.pin(batch
+          .join(storeHit, Seq("doc_id"), "left_anti")
+          .join(clusterRejected, Seq("doc_id"), "left_anti"))
+        admitted.write.mode("append").parquet(admittedDir)
+        Dedup.minhashSignaturesTokens(admitted, w, k)
+          .write.mode("append").parquet(sigStoreDir)
+      } // scoped: per-batch intermediates released here
+    }
   }
 
   /** Store lifecycle for the [[nearDupAdmit]] stores —
@@ -290,25 +275,6 @@ object Streaming {
     (admRetired, sigRetired, admFiles, sigFiles)
   }
 
-  /** Driver-visible audit of [[nearDupAdmit]]'s three-run admission law:
-    * runs the REAL streaming loop three times over a deterministic
-    * landing fixture in a fresh temp store —
-    *   run 1 (bootstrap): 10 base docs + one exact copy of doc rn1 —
-    *     the copy's cluster admits only its canonical;
-    *   run 2 (store-hit): 5 fresh docs + a copy of STORE doc rn2
-    *     (rejected wholly — store content wins) + a batch-internal
-    *     dup pair built from rn16's text (admits its canonical only);
-    *   run 3 (replay): run 2's rows re-delivered as new landing files
-    *     (at-least-once ingest) — everything either anti-joins out
-    *     against the admitted store or re-rejects via its store pair,
-    *     so the loop is replay-idempotent.
-    * Output: per-run (n_landed, n_admitted, n_store_docs) accounting.
-    * The DuckDB oracle replays the ENTIRE admission algebra from exact
-    * token-5-gram Jaccard pairs (the loop's own verify is exact, and
-    * with k=16 single-row bands the constructed J=1 copies collide in
-    * every band deterministically), so this entry is hash-checked, not
-    * rows-only. The 17-doc fixture collect is a bounded driver action;
-    * at corpus scale the audit stays 17 docs by construction. */
   /** Deterministic 17-doc audit fixture shared by the streaming audits
     * (q101/q132): the first 17 docs in doc_id order with ≥ 5 whitespace
     * tokens (the signature kernel's minimum). Bounded driver action —
@@ -324,9 +290,40 @@ object Streaming {
     base
   }
 
-  /** Recursive temp cleanup for the audits' per-invocation stores —
-    * delegates to the one shared spelling. */
-  private def rmTree(f: java.io.File): Unit = graft.Scratch.rmTree(f)
+  /** Runs one checkpointed `Trigger.AvailableNow` start of `stream` to
+    * termination: every checkpointed loop in this file is spelled
+    * through here. Each micro-batch is first fingerprinted under `loop`
+    * for the STREAMPLANS.json net (a no-op unless collection is on),
+    * then handed to `sink` with its batch id. */
+  private[graft] def drain[T](loop: String, stream: Dataset[T], checkpointDir: String,
+                              mode: OutputMode = OutputMode.Append())(
+                              sink: (Dataset[T], Long) => Unit): Unit =
+    stream.writeStream
+      .outputMode(mode)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: Dataset[T], batchId: Long) =>
+        graft.tools.StreamPlans.record(loop, batch.sparkSession)
+        sink(batch, batchId)
+      }
+      .start()
+      .awaitTermination()
+
+  /** Runs `body` on a fresh temp directory named from `prefix` and
+    * removes the directory afterwards, also when `body` throws. What
+    * `body` returns must not read the directory lazily: pin it, or
+    * build it from driver-side rows. */
+  private[graft] def replay[A](prefix: String)(body: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(dir.toString) finally graft.Scratch.rmTree(dir)
+  }
+
+  /** (min, max) of the long expression `e` over `df` — a bounded
+    * 2-value driver action, from which the audits cut their replays. */
+  private def span(df: DataFrame, e: Column): (Long, Long) = {
+    val Array(r) = df.agg(min(e), max(e)).collect()
+    (r.getLong(0), r.getLong(1))
+  }
 
   /** The parquet store at `dir`, or None while it does not exist yet.
     * Only an absent store falls through: an existing store that cannot
@@ -351,6 +348,25 @@ object Streaming {
     finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
+  /** Driver-visible audit of [[nearDupAdmit]]'s three-run admission law:
+    * runs the REAL streaming loop three times over a deterministic
+    * landing fixture in a fresh temp store —
+    *   run 1 (bootstrap): 10 base docs + one exact copy of doc rn1 —
+    *     the copy's cluster admits only its canonical;
+    *   run 2 (store-hit): 5 fresh docs + a copy of STORE doc rn2
+    *     (rejected wholly — store content wins) + a batch-internal
+    *     dup pair built from rn16's text (admits its canonical only);
+    *   run 3 (replay): run 2's rows re-delivered as new landing files
+    *     (at-least-once ingest) — everything either anti-joins out
+    *     against the admitted store or re-rejects via its store pair,
+    *     so the loop is replay-idempotent.
+    * Output: per-run (n_landed, n_admitted, n_store_docs) accounting.
+    * The DuckDB oracle replays the ENTIRE admission algebra from exact
+    * token-5-gram Jaccard pairs (the loop's own verify is exact, and
+    * with k=16 single-row bands the constructed J=1 copies collide in
+    * every band deterministically), so this entry is hash-checked, not
+    * rows-only. The 17-doc fixture collect is a bounded driver action;
+    * at corpus scale the audit stays 17 docs by construction. */
   def admissionLoopAudit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.types._
@@ -359,23 +375,23 @@ object Streaming {
     val b1 = base.take(10).toSeq :+ (1000001L, doc(1)._2)
     val b2 = base.slice(10, 15).toSeq ++
       Seq((1000002L, doc(2)._2), (1000003L, doc(16)._2), (1000004L, doc(16)._2))
-    val tmp = java.nio.file.Files.createTempDirectory("q101_admit").toString
-    val (landing, sig, adm, ckpt) =
-      (s"$tmp/landing", s"$tmp/sigs", s"$tmp/admitted", s"$tmp/ckpt")
     val schema = StructType(Seq(
       StructField("doc_id", LongType, nullable = false),
       StructField("text", StringType, nullable = true)))
-    def storeCount(): Long = readStore(spark, adm).fold(0L)(_.count())
-    val runs = withNarrowShuffle(spark) {
-      Seq(b1, b2, b2).zipWithIndex.map { case (batch, i) =>
-        batch.toDF("doc_id", "text")
-          .write.mode("append").parquet(landing) // new files = new delivery
-        nearDupAdmit(spark, landing, sig, adm, ckpt, schema,
-          w = 5, k = 16, bands = 16, threshold = 0.7)
-        (i + 1L, batch.length.toLong, storeCount())
+    val runs = replay("q101_admit") { tmp =>
+      val (landing, sig, adm, ckpt) =
+        (s"$tmp/landing", s"$tmp/sigs", s"$tmp/admitted", s"$tmp/ckpt")
+      def storeCount(): Long = readStore(spark, adm).fold(0L)(_.count())
+      withNarrowShuffle(spark) {
+        Seq(b1, b2, b2).zipWithIndex.map { case (batch, i) =>
+          batch.toDF("doc_id", "text")
+            .write.mode("append").parquet(landing) // new files = new delivery
+          nearDupAdmit(spark, landing, sig, adm, ckpt, schema,
+            w = 5, k = 16, bands = 16, threshold = 0.7)
+          (i + 1L, batch.length.toLong, storeCount())
+        }
       }
     }
-    rmTree(new java.io.File(tmp))
     runs.map { case (run, landed, cum) =>
       val prev = runs.takeWhile(_._1 < run).lastOption.map(_._3).getOrElse(0L)
       (run, landed, cum - prev, cum)
@@ -417,35 +433,35 @@ object Streaming {
     def doc(rn: Int): (Long, String) = base(rn - 1)
     val b1 = base.take(10).toSeq :+ (2000001L, doc(1)._2)
     val b2 = Seq((2000002L, doc(1)._2), (2000003L, doc(2)._2))
-    val tmp = java.nio.file.Files.createTempDirectory("q132_lifecycle").toString
-    val (landing, sigDir, admDir, ckpt, archive) =
-      (s"$tmp/landing", s"$tmp/sigs", s"$tmp/admitted", s"$tmp/ckpt", s"$tmp/archive")
     val schema = StructType(Seq(
       StructField("doc_id", LongType, nullable = false),
       StructField("text", StringType, nullable = true)))
-    def counts(): (Long, Long) =
-      (spark.read.parquet(admDir).count(), spark.read.parquet(sigDir).count())
-    def land(batch: Seq[(Long, String)]): Unit = {
-      batch.toDF("doc_id", "text")
-        .write.mode("append").parquet(landing) // new files = new delivery
-      nearDupAdmit(spark, landing, sigDir, admDir, ckpt, schema,
-        w = 5, k = 16, bands = 16, threshold = 0.7)
+    val rows = replay("q132_lifecycle") { tmp =>
+      val (landing, sigDir, admDir, ckpt, archive) =
+        (s"$tmp/landing", s"$tmp/sigs", s"$tmp/admitted", s"$tmp/ckpt", s"$tmp/archive")
+      def counts(): (Long, Long) =
+        (spark.read.parquet(admDir).count(), spark.read.parquet(sigDir).count())
+      def land(batch: Seq[(Long, String)]): Unit = {
+        batch.toDF("doc_id", "text")
+          .write.mode("append").parquet(landing) // new files = new delivery
+        nearDupAdmit(spark, landing, sigDir, admDir, ckpt, schema,
+          w = 5, k = 16, bands = 16, threshold = 0.7)
+      }
+      withNarrowShuffle(spark) {
+        land(b1)
+        val (adm1, sig1) = counts()
+        val (retDocs, retSigs, admFiles, sigFiles) = retireAndCompact(
+          spark, admDir, sigDir, archive,
+          Seq(doc(1)._1).toDF("doc_id"), retireDate = "2026-01-01")
+        val (adm2, sig2) = counts()
+        land(b2)
+        val (adm3, sig3) = counts()
+        Seq(
+          (1L, b1.length.toLong, adm1, 0L, 0L, adm1, sig1, 0L),
+          (2L, 0L, 0L, retDocs, retSigs, adm2, sig2, (admFiles + sigFiles).toLong),
+          (3L, b2.length.toLong, adm3 - adm2, 0L, 0L, adm3, sig3, 0L))
+      }
     }
-    val rows = withNarrowShuffle(spark) {
-      land(b1)
-      val (adm1, sig1) = counts()
-      val (retDocs, retSigs, admFiles, sigFiles) = retireAndCompact(
-        spark, admDir, sigDir, archive,
-        Seq(doc(1)._1).toDF("doc_id"), retireDate = "2026-01-01")
-      val (adm2, sig2) = counts()
-      land(b2)
-      val (adm3, sig3) = counts()
-      Seq(
-        (1L, b1.length.toLong, adm1, 0L, 0L, adm1, sig1, 0L),
-        (2L, 0L, 0L, retDocs, retSigs, adm2, sig2, (admFiles + sigFiles).toLong),
-        (3L, b2.length.toLong, adm3 - adm2, 0L, 0L, adm3, sig3, 0L))
-    }
-    rmTree(new java.io.File(tmp))
     rows.toDF("phase", "n_landed", "n_admitted", "n_retired_docs",
       "n_retired_sigs", "n_store_docs", "n_sig_rows", "n_compact_files")
       .orderBy("phase")
@@ -469,8 +485,6 @@ object Streaming {
       .select(col("doc_id"), col("source"), col("text"))
     val maxDoc = docs.agg(max(col("doc_id"))).head.getLong(0) // 1-value driver action
     val cuts = Seq(maxDoc / 3, 2 * maxDoc / 3)
-    val tmp = java.nio.file.Files.createTempDirectory("q133_pack").toString
-    val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/packed", s"$tmp/ckpt")
     val schema = StructType(Seq(
       StructField("doc_id", LongType, nullable = false),
       StructField("source", StringType, nullable = true),
@@ -479,32 +493,25 @@ object Streaming {
       docs.filter(col("doc_id") <= cuts(0)),
       docs.filter(col("doc_id") > cuts(0) && col("doc_id") <= cuts(1)),
       docs.filter(col("doc_id") > cuts(1)))
-    chunks.foreach { c =>
-      c.write.mode("append").parquet(landing) // new files = new delivery
-      val stream = spark.readStream.schema(schema).parquet(landing)
-      val q = sequencePack(stream).writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: Dataset[PackedDoc], _: Long) =>
-          // per-batch plan net: no-op unless a spec enabled collection
-          graft.tools.StreamPlans.record("streamPackAudit", b.sparkSession)
+    replay("q133_pack") { tmp =>
+      val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/packed", s"$tmp/ckpt")
+      chunks.foreach { c =>
+        c.write.mode("append").parquet(landing) // new files = new delivery
+        drain("streamPackAudit", sequencePack(spark.readStream.schema(schema).parquet(landing)),
+            ckpt, OutputMode.Update()) { (b, _) =>
           b.toDF().write.mode("append").parquet(outDir)
         }
-        .start()
-      q.awaitTermination()
+      }
+      // each doc is emitted exactly once (its one processing batch), so
+      // the manifest is a plain rollup; localCheckpoint materializes it
+      // before the per-invocation temp stores are removed
+      spark.read.parquet(outDir)
+        .groupBy(col("source"), col("bin"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"),
+          min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
+        .orderBy("source", "bin")
+        .pinned()
     }
-    // each doc is emitted exactly once (its one processing batch), so
-    // the manifest is a plain rollup; localCheckpoint materializes it
-    // before the per-invocation temp stores are removed
-    val manifest = spark.read.parquet(outDir)
-      .groupBy(col("source"), col("bin"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"),
-        min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
-      .orderBy("source", "bin")
-      .pinned()
-    rmTree(new java.io.File(tmp))
-    manifest
   }
 
   /** Driver-visible audit of [[scd2Stream]]: the REAL
@@ -522,48 +529,37 @@ object Streaming {
     val ev = graft.Tables.events(spark, dir)
       .filter(col("user_id") < 100)
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-    val Array(bounds) = ev.agg(min(unix_millis(col("ts"))).as("lo"),
-      max(unix_millis(col("ts"))).as("hi")).collect() // 2-value driver action
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+    val ms = unix_millis(col("ts"))
+    val (lo, hi) = span(ev, ms)
     val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-    val tmp = java.nio.file.Files.createTempDirectory("q134_scd2").toString
-    val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/hist", s"$tmp/ckpt")
     val schema = StructType(Seq(
       StructField("user_id", LongType, nullable = false),
       StructField("event_id", LongType, nullable = false),
       StructField("ts", TimestampType, nullable = true),
       StructField("event_type", StringType, nullable = true)))
-    val ms = unix_millis(col("ts"))
     val chunks = Seq(
       ev.filter(ms < t1),
       ev.filter(ms >= t1 && ms < t2),
       ev.filter(ms >= t2))
-    chunks.zipWithIndex.foreach { case (c, k) =>
-      c.write.mode("append").parquet(landing) // new files = new delivery
-      val q = scd2Stream(spark.readStream.schema(schema).parquet(landing))
-        .writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: Dataset[Scd2Row], _: Long) =>
-          // per-batch plan net: no-op unless a spec enabled collection
-          graft.tools.StreamPlans.record("streamScd2Audit", b.sparkSession)
+    replay("q134_scd2") { tmp =>
+      val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/hist", s"$tmp/ckpt")
+      chunks.zipWithIndex.foreach { case (c, k) =>
+        c.write.mode("append").parquet(landing) // new files = new delivery
+        drain("streamScd2Audit", scd2Stream(spark.readStream.schema(schema).parquet(landing)),
+            ckpt, OutputMode.Update()) { (b, _) =>
           b.toDF().withColumn("run", lit(k)).write.mode("append").parquet(outDir)
         }
-        .start()
-      q.awaitTermination()
+      }
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("user_id", "version").orderBy(col("run").desc)
+      spark.read.parquet(outDir)
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1)
+        .select(col("user_id"), col("version"), col("attr"), col("valid_from"),
+          col("valid_to"), col("n_events"), col("is_current"))
+        .orderBy("user_id", "version")
+        .pinned()
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id", "version").orderBy(col("run").desc)
-    val hist = spark.read.parquet(outDir)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("version"), col("attr"), col("valid_from"),
-        col("valid_to"), col("n_events"), col("is_current"))
-      .orderBy("user_id", "version")
-      .pinned()
-    rmTree(new java.io.File(tmp))
-    hist
   }
 
   /** Driver-visible audit of [[sessionize]] (the custom
@@ -593,54 +589,42 @@ object Streaming {
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"))
-    val Array(bounds) = ev.agg(min(unix_millis(col("ts"))).as("lo"),
-      max(unix_millis(col("ts"))).as("hi")).collect() // 2-value driver action
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+    val ms = unix_millis(col("ts"))
+    val (lo, hi) = span(ev, ms)
     val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
     val sentinelUser = Long.MaxValue // reserved: no real user can collide
-    val tmp = java.nio.file.Files.createTempDirectory("q137_sessions").toString
-    val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/sessions", s"$tmp/ckpt")
     val schema = StructType(Seq(
       StructField("event_id", LongType, nullable = false),
       StructField("ts", TimestampType, nullable = true),
       StructField("user_id", LongType, nullable = false),
       StructField("event_type", StringType, nullable = true),
       StructField("value", DoubleType, nullable = false)))
-    val ms = unix_millis(col("ts"))
     val sentinel = Seq((-1L, new java.sql.Timestamp(hi + gapMs + 7200000L),
       sentinelUser, "closeout", 0.0))
       .toDF("event_id", "ts", "user_id", "event_type", "value")
     val chunks = Seq(ev.filter(ms < t1), ev.filter(ms >= t1 && ms < t2),
       ev.filter(ms >= t2), sentinel, null) // null = no-new-data timeout flush
-    chunks.foreach { c =>
-      if (c != null) c.write.mode("append").parquet(landing)
-      val q = sessionize(
-          spark.readStream.schema(schema).parquet(landing).as[Event],
-          gapMinutes = 30, watermark = "0 seconds")
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: Dataset[Session], _: Long) =>
-          // per-batch plan net: no-op unless a spec enabled collection
-          graft.tools.StreamPlans.record("streamSessionAudit", b.sparkSession)
+    replay("q137_sessions") { tmp =>
+      val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/sessions", s"$tmp/ckpt")
+      chunks.foreach { c =>
+        if (c != null) c.write.mode("append").parquet(landing)
+        drain("streamSessionAudit", sessionize(
+            spark.readStream.schema(schema).parquet(landing).as[Event],
+            gapMinutes = 30, watermark = "0 seconds"), ckpt) { (b, _) =>
           b.toDF().write.mode("append").parquet(outDir)
         }
-        .start()
-      q.awaitTermination()
+      }
+      val wU = org.apache.spark.sql.expressions.Window
+        .partitionBy("user_id").orderBy("start")
+      spark.read.parquet(outDir)
+        .filter(col("user_id") =!= sentinelUser)
+        .withColumn("session_id", row_number().over(wU).cast("long"))
+        .select(col("user_id"), col("session_id"),
+          col("n_events").cast("long").as("n_events"),
+          col("start").as("session_start"), col("end").as("session_end"))
+        .orderBy("user_id", "session_id")
+        .pinned()
     }
-    val wU = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy("start")
-    val out = spark.read.parquet(outDir)
-      .filter(col("user_id") =!= sentinelUser)
-      .withColumn("session_id", row_number().over(wU).cast("long"))
-      .select(col("user_id"), col("session_id"),
-        col("n_events").cast("long").as("n_events"),
-        col("start").as("session_start"), col("end").as("session_end"))
-      .orderBy("user_id", "session_id")
-      .pinned()
-    rmTree(new java.io.File(tmp))
-    out
   }
 
   /** Driver-visible audit of [[purchaseViewJoin]] (the watermarked
@@ -657,49 +641,37 @@ object Streaming {
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"))
-    val Array(bounds) = ev.agg(min(unix_millis(col("ts"))).as("lo"),
-      max(unix_millis(col("ts"))).as("hi")).collect() // 2-value driver action
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+    val ms = unix_millis(col("ts"))
+    val (lo, hi) = span(ev, ms)
     val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-    val tmp = java.nio.file.Files.createTempDirectory("q141_ssjoin").toString
-    val (landP, landV, outDir, ckpt) =
-      (s"$tmp/purchases", s"$tmp/views", s"$tmp/joined", s"$tmp/ckpt")
     val schema = StructType(Seq(
       StructField("event_id", LongType, nullable = false),
       StructField("ts", TimestampType, nullable = true),
       StructField("user_id", LongType, nullable = false),
       StructField("value", DoubleType, nullable = false)))
-    val ms = unix_millis(col("ts"))
     val cuts = Seq(ms < t1, ms >= t1 && ms < t2, ms >= t2)
-    cuts.foreach { cond =>
-      val chunk = ev.filter(cond)
-      chunk.filter(col("event_type") === "purchase")
-        .select("event_id", "ts", "user_id", "value")
-        .write.mode("append").parquet(landP)
-      chunk.filter(col("event_type") === "view")
-        .select("event_id", "ts", "user_id", "value")
-        .write.mode("append").parquet(landV)
-      val q = purchaseViewJoin(
-          spark.readStream.schema(schema).parquet(landP),
-          spark.readStream.schema(schema).parquet(landV))
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          // per-batch plan net: no-op unless a spec enabled collection
-          graft.tools.StreamPlans.record("streamIntervalJoinAudit", b.sparkSession)
+    replay("q141_ssjoin") { tmp =>
+      val (landP, landV, outDir, ckpt) =
+        (s"$tmp/purchases", s"$tmp/views", s"$tmp/joined", s"$tmp/ckpt")
+      cuts.foreach { cond =>
+        val chunk = ev.filter(cond)
+        chunk.filter(col("event_type") === "purchase")
+          .select("event_id", "ts", "user_id", "value")
+          .write.mode("append").parquet(landP)
+        chunk.filter(col("event_type") === "view")
+          .select("event_id", "ts", "user_id", "value")
+          .write.mode("append").parquet(landV)
+        drain("streamIntervalJoinAudit", purchaseViewJoin(
+            spark.readStream.schema(schema).parquet(landP),
+            spark.readStream.schema(schema).parquet(landV)), ckpt) { (b, _) =>
           b.write.mode("append").parquet(outDir)
         }
-        .start()
-      q.awaitTermination()
+      }
+      spark.read.parquet(outDir)
+        .select("p_id", "user_id", "p_ts", "p_value", "v_id", "v_ts", "v_value")
+        .orderBy("p_id", "v_id")
+        .pinned()
     }
-    val out = spark.read.parquet(outDir)
-      .select("p_id", "user_id", "p_ts", "p_value", "v_id", "v_ts", "v_value")
-      .orderBy("p_id", "v_id")
-      .pinned()
-    rmTree(new java.io.File(tmp))
-    out
   }
 
   /** Driver-visible audit of [[dailyBars]] (the P1 streaming twin):
@@ -718,47 +690,36 @@ object Streaming {
     import org.apache.spark.sql.types._
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-    val Array(bounds) = ev.agg(min(unix_millis(col("ts"))).as("lo"),
-      max(unix_millis(col("ts"))).as("hi")).collect() // 2-value driver action
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+    val ms = unix_millis(col("ts"))
+    val (lo, hi) = span(ev, ms)
     val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-    val tmp = java.nio.file.Files.createTempDirectory("q143_ohlc").toString
-    val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/bars", s"$tmp/ckpt")
     val schema = StructType(Seq(
       StructField("event_id", LongType, nullable = false),
       StructField("ts", TimestampType, nullable = true),
       StructField("event_type", StringType, nullable = true),
       StructField("value", DoubleType, nullable = false)))
-    val ms = unix_millis(col("ts"))
     // sentinel: one event 3 days past the corpus (1-day window + 1-day
     // watermark + margin) under a reserved type the fold excludes
     val sentinel = Seq((-1L, new java.sql.Timestamp(hi + 3L * 86400000L),
       "closeout", 0.0)).toDF("event_id", "ts", "event_type", "value")
     val chunks = Seq(ev.filter(ms < t1), ev.filter(ms >= t1 && ms < t2),
       ev.filter(ms >= t2), sentinel, null) // null = no-data flush start
-    chunks.foreach { c =>
-      if (c != null) c.write.mode("append").parquet(landing)
-      val q = dailyBars(spark.readStream.schema(schema).parquet(landing))
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          // per-batch plan net: no-op unless a spec enabled collection
-          graft.tools.StreamPlans.record("streamOhlcAudit", b.sparkSession)
+    replay("q143_ohlc") { tmp =>
+      val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/bars", s"$tmp/ckpt")
+      chunks.foreach { c =>
+        if (c != null) c.write.mode("append").parquet(landing)
+        drain("streamOhlcAudit", dailyBars(spark.readStream.schema(schema).parquet(landing)),
+            ckpt) { (b, _) =>
           b.write.mode("append").parquet(outDir)
         }
-        .start()
-      q.awaitTermination()
+      }
+      spark.read.parquet(outDir)
+        .filter(col("event_type") =!= "closeout")
+        .select(col("event_type"), to_date(col("day_start")).as("day"),
+          col("open"), col("high"), col("low"), col("close"), col("volume"))
+        .orderBy("event_type", "day")
+        .pinned()
     }
-    val out = spark.read.parquet(outDir)
-      .filter(col("event_type") =!= "closeout")
-      .select(col("event_type"), to_date(col("day_start")).as("day"),
-        col("open"), col("high"), col("low"), col("close"), col("volume"))
-      .orderBy("event_type", "day")
-      .pinned()
-    rmTree(new java.io.File(tmp))
-    out
   }
 
   /** Driver-visible audit of [[dedupStream]] (streaming exact dedup):
@@ -779,20 +740,16 @@ object Streaming {
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"))
-    val Array(bounds) = ev.agg(min(unix_millis(col("ts"))).as("lo"),
-      max(unix_millis(col("ts"))).as("hi")).collect() // 2-value driver action
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+    val ms = unix_millis(col("ts"))
+    val (lo, hi) = span(ev, ms)
     val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
     val dayMs = 86400000L
-    val tmp = java.nio.file.Files.createTempDirectory("q197_dedup").toString
-    val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/deduped", s"$tmp/ckpt")
     val schema = StructType(Seq(
       StructField("event_id", LongType, nullable = false),
       StructField("ts", TimestampType, nullable = true),
       StructField("user_id", LongType, nullable = false),
       StructField("event_type", StringType, nullable = true),
       StructField("value", DoubleType, nullable = false)))
-    val ms = unix_millis(col("ts"))
     val dup1 = ev.filter(ms >= t1 - dayMs && ms < t1)
     val dup2 = ev.filter(ms >= t2 - dayMs && ms < t2)
     // non-vacuity guard: an empty re-delivery slice would make this
@@ -805,29 +762,21 @@ object Streaming {
       // chunk 2 = its own rows + a re-delivery of chunk 1's last day
       ev.filter(ms >= t1 && ms < t2).unionAll(dup1),
       ev.filter(ms >= t2).unionAll(dup2))
-    feeds.foreach { chunk =>
-      chunk.write.mode("append").parquet(landing)
-      val q = dedupStream(
-          spark.readStream.schema(schema).parquet(landing), "2 days")
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          // per-batch plan net: no-op unless a spec enabled collection
-          graft.tools.StreamPlans.record("streamDedupAudit", b.sparkSession)
+    replay("q197_dedup") { tmp =>
+      val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/deduped", s"$tmp/ckpt")
+      feeds.foreach { chunk =>
+        chunk.write.mode("append").parquet(landing)
+        drain("streamDedupAudit", dedupStream(
+            spark.readStream.schema(schema).parquet(landing), "2 days"), ckpt) { (b, _) =>
           b.write.mode("append").parquet(outDir)
         }
-        .start()
-      q.awaitTermination()
+      }
+      spark.read.parquet(outDir)
+        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
+        .agg(count(lit(1)).as("n_events"), dsumd(col("value")).as("total_value"))
+        .orderBy("event_type", "day")
+        .pinned()
     }
-    val out = spark.read.parquet(outDir)
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n_events"), dsumd(col("value")).as("total_value"))
-      .orderBy("event_type", "day")
-      .pinned()
-    rmTree(new java.io.File(tmp))
-    out
   }
 
   /** Fixed-width per-series indicator state: the day count and the two
@@ -889,51 +838,39 @@ object Streaming {
     import org.apache.spark.sql.types._
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-    val Array(bounds) = ev.agg(min(unix_millis(col("ts"))).as("lo"),
-      max(unix_millis(col("ts"))).as("hi")).collect() // 2-value driver action
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+    val ms = unix_millis(col("ts"))
+    val (lo, hi) = span(ev, ms)
     val dayMs = 86400000L
     // day-aligned thirds (complete-days contract)
     val t1 = Math.floorDiv(lo + (hi - lo) / 3, dayMs) * dayMs
     val t2 = Math.floorDiv(lo + 2 * (hi - lo) / 3, dayMs) * dayMs
-    val tmp = java.nio.file.Files.createTempDirectory("q200_ema").toString
-    val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/state", s"$tmp/ckpt")
     val schema = StructType(Seq(
       StructField("event_id", LongType, nullable = false),
       StructField("ts", TimestampType, nullable = true),
       StructField("event_type", StringType, nullable = true),
       StructField("value", DoubleType, nullable = false)))
-    val ms = unix_millis(col("ts"))
     val chunks = Seq(ev.filter(ms < t1), ev.filter(ms >= t1 && ms < t2),
       ev.filter(ms >= t2))
-    chunks.foreach { c =>
-      c.write.mode("append").parquet(landing)
-      val q = emaMaintain(spark.readStream.schema(schema).parquet(landing))
-        .toDF("event_type", "n_days", "ema_fast", "ema_slow")
-        .writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          // per-batch plan net: no-op unless a spec enabled collection
-          graft.tools.StreamPlans.record("streamEmaAudit", b.sparkSession)
+    replay("q200_ema") { tmp =>
+      val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/state", s"$tmp/ckpt")
+      chunks.foreach { c =>
+        c.write.mode("append").parquet(landing)
+        drain("streamEmaAudit", emaMaintain(spark.readStream.schema(schema).parquet(landing))
+            .toDF("event_type", "n_days", "ema_fast", "ema_slow"),
+            ckpt, OutputMode.Update()) { (b, _) =>
           b.write.mode("append").parquet(outDir)
         }
-        .start()
-      q.awaitTermination()
+      }
+      // final state per series = max day count (monotone across batches)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("event_type")).orderBy(col("n_days").desc)
+      spark.read.parquet(outDir)
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__rn")
+        .withColumn("macd", col("ema_fast") - col("ema_slow"))
+        .orderBy("event_type")
+        .pinned()
     }
-    val all = spark.read.parquet(outDir)
-    // final state per series = max day count (monotone across batches)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("event_type")).orderBy(col("n_days").desc)
-    val out = all
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-      .withColumn("macd", col("ema_fast") - col("ema_slow"))
-      .orderBy("event_type")
-      .pinned()
-    rmTree(new java.io.File(tmp))
-    out
   }
 
   /** Driver-visible audit of the stream-stream LEFT OUTER interval
@@ -953,19 +890,14 @@ object Streaming {
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"))
-    val Array(bounds) = ev.agg(min(unix_millis(col("ts"))).as("lo"),
-      max(unix_millis(col("ts"))).as("hi")).collect() // 2-value driver action
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+    val ms = unix_millis(col("ts"))
+    val (lo, hi) = span(ev, ms)
     val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-    val tmp = java.nio.file.Files.createTempDirectory("q203_outer").toString
-    val (landP, landV, outDir, ckpt) =
-      (s"$tmp/purchases", s"$tmp/views", s"$tmp/joined", s"$tmp/ckpt")
     val schema = StructType(Seq(
       StructField("event_id", LongType, nullable = false),
       StructField("ts", TimestampType, nullable = true),
       StructField("user_id", LongType, nullable = false),
       StructField("value", DoubleType, nullable = false)))
-    val ms = unix_millis(col("ts"))
     val sentinel = Seq((-1L, new java.sql.Timestamp(hi + 3L * 86400000L),
       -1L, 0.0)).toDF("event_id", "ts", "user_id", "value")
     def sides(c: org.apache.spark.sql.DataFrame) = (
@@ -979,34 +911,27 @@ object Streaming {
         Some(sides(ev.filter(ms >= t2))),
         Some((sentinel, sentinel)),
         None) // no-data flush start (q143 close-out)
-    feeds.foreach { f =>
-      f.foreach { case (pc, vc) =>
-        pc.write.mode("append").parquet(landP)
-        vc.write.mode("append").parquet(landV)
-      }
-      val q = purchaseViewJoin(
-          spark.readStream.schema(schema).parquet(landP),
-          spark.readStream.schema(schema).parquet(landV),
-          "1 hour", "left_outer")
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          // per-batch plan net: no-op unless a spec enabled collection
-          graft.tools.StreamPlans.record("streamOuterJoinAudit", b.sparkSession)
+    replay("q203_outer") { tmp =>
+      val (landP, landV, outDir, ckpt) =
+        (s"$tmp/purchases", s"$tmp/views", s"$tmp/joined", s"$tmp/ckpt")
+      feeds.foreach { f =>
+        f.foreach { case (pc, vc) =>
+          pc.write.mode("append").parquet(landP)
+          vc.write.mode("append").parquet(landV)
+        }
+        drain("streamOuterJoinAudit", purchaseViewJoin(
+            spark.readStream.schema(schema).parquet(landP),
+            spark.readStream.schema(schema).parquet(landV),
+            "1 hour", "left_outer"), ckpt) { (b, _) =>
           b.write.mode("append").parquet(outDir)
         }
-        .start()
-      q.awaitTermination()
+      }
+      spark.read.parquet(outDir)
+        .filter(col("user_id") >= 0) // drop the sentinel's own emission
+        .select("p_id", "user_id", "p_ts", "p_value", "v_id", "v_ts", "v_value")
+        .orderBy("p_id", "v_id")
+        .pinned()
     }
-    val out = spark.read.parquet(outDir)
-      .filter(col("user_id") >= 0) // drop the sentinel's own emission
-      .select("p_id", "user_id", "p_ts", "p_value", "v_id", "v_ts", "v_value")
-      .orderBy("p_id", "v_id")
-      .pinned()
-    rmTree(new java.io.File(tmp))
-    out
   }
 
   /** Driver-visible audit of the q217 trend-MV maintenance as a
@@ -1028,67 +953,52 @@ object Streaming {
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"),
         col("event_type"))
-    val Array(bounds) = ev.agg(min(unix_millis(col("ts"))).as("lo"),
-      max(unix_millis(col("ts"))).as("hi")).collect() // 2-value driver action
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+    val ms = unix_millis(col("ts"))
+    val (lo, hi) = span(ev, ms)
     val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-    val tmp = java.nio.file.Files.createTempDirectory("q222_trend").toString
-    val (landing, state, ckpt) = (s"$tmp/landing", s"$tmp/state", s"$tmp/ckpt")
     val schema = StructType(Seq(
       StructField("event_id", LongType, nullable = false),
       StructField("ts", TimestampType, nullable = true),
       StructField("user_id", LongType, nullable = false),
       StructField("value", DoubleType, nullable = false),
       StructField("event_type", StringType, nullable = true)))
-    val ms = unix_millis(col("ts"))
     val chunks = Seq(ev.filter(ms < t1), ev.filter(ms >= t1 && ms < t2),
       ev.filter(ms >= t2))
-    chunks.foreach { c =>
-      c.write.mode("append").parquet(landing)
-      val q = spark.readStream.schema(schema).parquet(landing)
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          // per-batch plan net: no-op unless a spec enabled collection
-          graft.tools.StreamPlans.record("streamTrendAudit", b.sparkSession)
+    replay("q222_trend") { tmp =>
+      val (landing, state, ckpt) = (s"$tmp/landing", s"$tmp/state", s"$tmp/ckpt")
+      chunks.foreach { c =>
+        c.write.mode("append").parquet(landing)
+        drain("streamTrendAudit", spark.readStream.schema(schema).parquet(landing),
+            ckpt) { (b, _) =>
           val delta = b.groupBy(col("event_type"),
               (col("user_id") % 10).as("cohort"), to_date(col("ts")).as("day"))
             .agg((dsum(col("value")) * 10000).cast("long").as("y"))
-          val merged =
-            if (new java.io.File(state).exists()) {
-              // pin the old MV before overwriting its directory
-              val old = spark.read.parquet(state).pinned()
-              old.unionByName(delta)
-                .groupBy("event_type", "cohort", "day")
-                .agg(sum(col("y")).as("y"))
-            } else delta
-          merged.write.mode("overwrite").parquet(state)
-          ()
+          // pin the old MV before overwriting its directory
+          readStore(spark, state).fold(delta)(_.pinned().unionByName(delta)
+              .groupBy("event_type", "cohort", "day")
+              .agg(sum(col("y")).as("y")))
+            .write.mode("overwrite").parquet(state)
         }
-        .start()
-      q.awaitTermination()
+      }
+      val pts = spark.read.parquet(state)
+        .withColumn("x",
+          datediff(col("day"), lit("1970-01-01").cast("date")).cast("long"))
+      pts.groupBy("event_type", "cohort")
+        .agg(count(lit(1)).as("n_days"),
+          sum(col("x")).as("sx"), sum(col("y")).as("sy"),
+          sum(col("x") * col("y")).as("sxy"),
+          sum(col("x") * col("x")).as("sxx"))
+        .select(col("event_type"), col("cohort"), col("n_days"),
+          (col("n_days") * col("sxy") - col("sx") * col("sy")).as("slope_num"),
+          (col("n_days") * col("sxx") - col("sx") * col("sx")).as("slope_den"),
+          ((col("n_days") * col("sxy") - col("sx") * col("sy")).cast("double") /
+            // zero-variance guard (the q239/q221 cross-engine edge)
+            when(col("n_days") * col("sxx") - col("sx") * col("sx") =!= 0,
+                (col("n_days") * col("sxx") - col("sx") * col("sx")).cast("double")) / 1e4)
+            .as("slope_per_day"))
+        .orderBy("event_type", "cohort")
+        .pinned()
     }
-    val pts = spark.read.parquet(state)
-      .withColumn("x",
-        datediff(col("day"), lit("1970-01-01").cast("date")).cast("long"))
-    val out = pts.groupBy("event_type", "cohort")
-      .agg(count(lit(1)).as("n_days"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"))
-      .select(col("event_type"), col("cohort"), col("n_days"),
-        (col("n_days") * col("sxy") - col("sx") * col("sy")).as("slope_num"),
-        (col("n_days") * col("sxx") - col("sx") * col("sx")).as("slope_den"),
-        ((col("n_days") * col("sxy") - col("sx") * col("sy")).cast("double") /
-          // zero-variance guard (the q239/q221 cross-engine edge)
-          when(col("n_days") * col("sxx") - col("sx") * col("sx") =!= 0,
-              (col("n_days") * col("sxx") - col("sx") * col("sx")).cast("double")) / 1e4)
-          .as("slope_per_day"))
-      .orderBy("event_type", "cohort")
-      .pinned()
-    rmTree(new java.io.File(tmp))
-    out
   }
 
   /** Per-user funnel state: first-view time and the converting
@@ -1143,63 +1053,51 @@ object Streaming {
     import org.apache.spark.sql.types._
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-    val Array(bounds) = ev.agg(min(unix_millis(col("ts"))).as("lo"),
-      max(unix_millis(col("ts"))).as("hi")).collect() // 2-value driver action
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+    val ms = unix_millis(col("ts"))
+    val (lo, hi) = span(ev, ms)
     val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-    val tmp = java.nio.file.Files.createTempDirectory("q246_funnel").toString
-    val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/conv", s"$tmp/ckpt")
     val schema = StructType(Seq(
       StructField("event_id", LongType, nullable = false),
       StructField("ts", TimestampType, nullable = true),
       StructField("user_id", LongType, nullable = false),
       StructField("event_type", StringType, nullable = true)))
-    val ms = unix_millis(col("ts"))
     val chunks = Seq(ev.filter(ms < t1), ev.filter(ms >= t1 && ms < t2),
       ev.filter(ms >= t2))
-    chunks.foreach { c =>
-      // ONE file per chunk: funnelMaintain's proof needs a
-      // user's events time-ordered ACROSS micro-batches, which holds
-      // only if each landed chunk is consumed whole in a single batch —
-      // a multi-file chunk could be split by a maxFilesPerTrigger-style
-      // source limit, letting a purchase process before its earlier
-      // same-chunk view (conversion lost vs the batch oracle). A
-      // single file per restart makes single-batch-per-chunk structural.
-      c.coalesce(1).write.mode("append").parquet(landing)
-      val q = funnelMaintain(spark.readStream.schema(schema).parquet(landing))
-        .toDF("user_id", "v_us", "p_us")
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          // per-batch plan net: no-op unless a spec enabled collection
-          graft.tools.StreamPlans.record("streamFunnelAudit", b.sparkSession)
+    replay("q246_funnel") { tmp =>
+      val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/conv", s"$tmp/ckpt")
+      chunks.foreach { c =>
+        // ONE file per chunk: funnelMaintain's proof needs a
+        // user's events time-ordered ACROSS micro-batches, which holds
+        // only if each landed chunk is consumed whole in a single batch —
+        // a multi-file chunk could be split by a maxFilesPerTrigger-style
+        // source limit, letting a purchase process before its earlier
+        // same-chunk view (conversion lost vs the batch oracle). A
+        // single file per restart makes single-batch-per-chunk structural.
+        c.coalesce(1).write.mode("append").parquet(landing)
+        drain("streamFunnelAudit", funnelMaintain(spark.readStream.schema(schema).parquet(landing))
+            .toDF("user_id", "v_us", "p_us"), ckpt) { (b, _) =>
           b.write.mode("append").parquet(outDir)
         }
-        .start()
-      q.awaitTermination()
+      }
+      val conv = spark.read.parquet(outDir).distinct()
+      // q245's histogram-cumulation report over the streamed conversions
+      val h = conv.select((col("user_id") % 10).as("cohort"),
+          expr("(p_us - v_us) DIV 60000000").as("delay_min"))
+        .groupBy("cohort", "delay_min").agg(count(lit(1)).as("c"))
+      val wC = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("cohort")).orderBy(col("delay_min"))
+      val tot = h.groupBy("cohort").agg(sum(col("c")).as("n_conv"))
+      h.withColumn("cum", sum(col("c")).over(wC))
+        .join(tot, "cohort")
+        .groupBy("cohort")
+        .agg(max(col("n_conv")).as("n_conv"),
+          min(when(col("cum") * 2 >= col("n_conv"), col("delay_min"))).as("p50"),
+          min(when(col("cum") * 10 >= col("n_conv") * 9, col("delay_min"))).as("p90"),
+          min(when(col("cum") * 100 >= col("n_conv") * 99, col("delay_min"))).as("p99"),
+          max(col("delay_min")).as("max_delay"))
+        .orderBy("cohort")
+        .pinned()
     }
-    val conv = spark.read.parquet(outDir).distinct()
-    // q245's histogram-cumulation report over the streamed conversions
-    val h = conv.select((col("user_id") % 10).as("cohort"),
-        expr("(p_us - v_us) DIV 60000000").as("delay_min"))
-      .groupBy("cohort", "delay_min").agg(count(lit(1)).as("c"))
-    val wC = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("cohort")).orderBy(col("delay_min"))
-    val tot = h.groupBy("cohort").agg(sum(col("c")).as("n_conv"))
-    val out = h.withColumn("cum", sum(col("c")).over(wC))
-      .join(tot, "cohort")
-      .groupBy("cohort")
-      .agg(max(col("n_conv")).as("n_conv"),
-        min(when(col("cum") * 2 >= col("n_conv"), col("delay_min"))).as("p50"),
-        min(when(col("cum") * 10 >= col("n_conv") * 9, col("delay_min"))).as("p90"),
-        min(when(col("cum") * 100 >= col("n_conv") * 99, col("delay_min"))).as("p99"),
-        max(col("delay_min")).as("max_delay"))
-      .orderBy("cohort")
-      .pinned()
-    rmTree(new java.io.File(tmp))
-    out
   }
 
   /** Per-QI-class release-gate state: rows seen so far and the
@@ -1257,8 +1155,6 @@ object Streaming {
         col("c_acctbal"))
     val maxKey = cust.agg(max(col("c_custkey"))).head.getLong(0) // 1-value driver action
     val cuts = Seq(maxKey / 3, 2 * maxKey / 3)
-    val tmp = java.nio.file.Files.createTempDirectory("q251_kanon").toString
-    val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/released", s"$tmp/ckpt")
     val schema = StructType(Seq(
       StructField("c_custkey", LongType, nullable = false),
       StructField("c_nationkey", IntegerType, nullable = true),
@@ -1268,36 +1164,28 @@ object Streaming {
       cust.filter(col("c_custkey") <= cuts(0)),
       cust.filter(col("c_custkey") > cuts(0) && col("c_custkey") <= cuts(1)),
       cust.filter(col("c_custkey") > cuts(1)))
-    chunks.foreach { c =>
-      c.write.mode("append").parquet(landing)
-      // k = 2 is FIXTURE-SCALED (sf0.001's largest class holds 2 rows
-      // — the production default stays kAnonGate's k = 5); at k = 2
-      // the gate engages at every SF: 6/416/1375 classes open
-      val q = kAnonGate(spark.readStream.schema(schema).parquet(landing), k = 2)
-        .toDF("c_custkey", "c_nationkey", "c_mktsegment", "bal_band")
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          // per-batch plan net: no-op unless a spec enabled collection
-          graft.tools.StreamPlans.record("streamKAnonAudit", b.sparkSession)
+    replay("q251_kanon") { tmp =>
+      val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/released", s"$tmp/ckpt")
+      chunks.foreach { c =>
+        c.write.mode("append").parquet(landing)
+        // k = 2 is FIXTURE-SCALED (sf0.001's largest class holds 2 rows
+        // — the production default stays kAnonGate's k = 5); at k = 2
+        // the gate engages at every SF: 6/416/1375 classes open
+        drain("streamKAnonAudit", kAnonGate(spark.readStream.schema(schema).parquet(landing), k = 2)
+            .toDF("c_custkey", "c_nationkey", "c_mktsegment", "bal_band"), ckpt) { (b, _) =>
           b.write.mode("append").parquet(outDir)
         }
-        .start()
-      q.awaitTermination()
+      }
+      spark.read.parquet(outDir).distinct()
+        .groupBy("c_nationkey")
+        .agg(count(lit(1)).as("n_released"),
+          countDistinct(concat(col("c_mktsegment"), lit("#"),
+            col("bal_band").cast("string"))).as("n_classes"),
+          min(col("c_custkey")).as("min_released"),
+          max(col("c_custkey")).as("max_released"))
+        .orderBy("c_nationkey")
+        .pinned()
     }
-    val out = spark.read.parquet(outDir).distinct()
-      .groupBy("c_nationkey")
-      .agg(count(lit(1)).as("n_released"),
-        countDistinct(concat(col("c_mktsegment"), lit("#"),
-          col("bal_band").cast("string"))).as("n_classes"),
-        min(col("c_custkey")).as("min_released"),
-        max(col("c_custkey")).as("max_released"))
-      .orderBy("c_nationkey")
-      .pinned()
-    rmTree(new java.io.File(tmp))
-    out
   }
 
   case class StratEntry(h: String, doc_id: Long)
@@ -1369,8 +1257,6 @@ object Streaming {
     val docs = graft.Tables.documents(spark, dir).select("doc_id", "source")
     val maxDoc = docs.agg(max(col("doc_id"))).head.getLong(0) // 1-value driver action
     val cuts = Seq(maxDoc / 3, 2 * maxDoc / 3)
-    val tmp = java.nio.file.Files.createTempDirectory("q255_strat").toString
-    val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/sample", s"$tmp/ckpt")
     val schema = StructType(Seq(
       StructField("doc_id", LongType, nullable = false),
       StructField("source", StringType, nullable = true)))
@@ -1378,21 +1264,17 @@ object Streaming {
       docs.filter(col("doc_id") <= cuts(0)),
       docs.filter(col("doc_id") > cuts(0) && col("doc_id") <= cuts(1)),
       docs.filter(col("doc_id") > cuts(1)))
-    // narrow shuffle: every stage here is fixture-sized (the state
-    // shuffle keys on ~20 sources) — session-width shuffles would be
-    // pure empty-task scheduling overhead
-    val out = withNarrowShuffle(spark) {
-      chunks.foreach { c =>
-        c.write.mode("append").parquet(landing) // new files = new delivery
-        val q = stratifiedSampleStream(
-            spark.readStream.schema(schema).parquet(landing), k = 20)
-          .writeStream
-          .outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (b: Dataset[StratSampleRow], bid: Long) =>
-            // per-batch plan net: no-op unless a spec enabled collection
-            graft.tools.StreamPlans.record("streamStratSampleAudit", b.sparkSession)
+    replay("q255_strat") { tmp =>
+      val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/sample", s"$tmp/ckpt")
+      // narrow shuffle: every stage here is fixture-sized (the state
+      // shuffle keys on ~20 sources) — session-width shuffles would be
+      // pure empty-task scheduling overhead
+      withNarrowShuffle(spark) {
+        chunks.foreach { c =>
+          c.write.mode("append").parquet(landing) // new files = new delivery
+          drain("streamStratSampleAudit", stratifiedSampleStream(
+              spark.readStream.schema(schema).parquet(landing), k = 20),
+              ckpt, OutputMode.Update()) { (b, bid) =>
             // IDEMPOTENT per batchId: a failure-replayed
             // batch OVERWRITES its own subdirectory instead of
             // appending a second copy — the max-gen fold below keeps
@@ -1402,19 +1284,16 @@ object Streaming {
             // one checkpoint (the offset log continues numbering).
             b.toDF().write.mode("overwrite").parquet(s"$outDir/batchId=$bid")
           }
-          .start()
-        q.awaitTermination()
+        }
+        val byGen = org.apache.spark.sql.expressions.Window.partitionBy("source")
+        spark.read.parquet(outDir)
+          .withColumn("mx", max(col("gen")).over(byGen))
+          .filter(col("gen") === col("mx"))
+          .select(col("source"), col("rn"), col("doc_id"), col("h"))
+          .orderBy("source", "rn")
+          .pinned()
       }
-      val byGen = org.apache.spark.sql.expressions.Window.partitionBy("source")
-      spark.read.parquet(outDir)
-        .withColumn("mx", max(col("gen")).over(byGen))
-        .filter(col("gen") === col("mx"))
-        .select(col("source"), col("rn"), col("doc_id"), col("h"))
-        .orderBy("source", "rn")
-        .pinned()
     }
-    rmTree(new java.io.File(tmp))
-    out
   }
 
   val queries: Map[String, graft.Q] = Map(

@@ -11,7 +11,8 @@ import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
   * actually carry the operator shapes (state restore/save, stream
   * joins, the per-batch dedup/anti-join chains) are the per-batch
   * `IncrementalExecution`s inside each loop. This recorder nets them:
-  * each loop's foreachBatch closure calls [[record]], which — when
+  * `Streaming.drain`, the one runner every checkpointed loop goes
+  * through, calls [[record]] in its foreachBatch closure, which — when
   * collection is enabled — fingerprints the CURRENT batch's
   * IncrementalExecution physical plan (at foreachBatch time the active
   * query's `lastExecution` IS the running batch) into a per-loop set.

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -575,41 +575,76 @@ class StreamingSpec extends SparkSpec {
     // review found the unconditional evict silently shrank the sample
     import org.apache.spark.sql.types._
     val docs = Tables.documents(spark, sf).select("doc_id", "source")
-    val dir = tmp("q255_redeliver")
-    val (landing, outDir, ckpt) = (s"$dir/landing", s"$dir/out", s"$dir/ckpt")
     val schema = StructType(Seq(
       StructField("doc_id", LongType, nullable = false),
       StructField("source", StringType, nullable = true)))
     val half = docs.filter($"doc_id" % 2 === 0)
     val rest = docs.filter($"doc_id" % 2 =!= 0)
-    // chunk 1, chunk 1 AGAIN (new files = at-least-once redelivery of
-    // every row, arriving while many strata's top-k are already full),
-    // then the remaining docs
-    Seq(half, half, rest).foreach { c =>
-      c.write.mode("append").parquet(landing)
-      val q = Streaming.stratifiedSampleStream(
-          spark.readStream.schema(schema).parquet(landing), k = 20)
-        .writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch {
-          (b: org.apache.spark.sql.Dataset[Streaming.StratSampleRow], _: Long) =>
-            b.toDF().write.mode("append").parquet(outDir)
+    val folded = Streaming.replay("q255_redeliver") { dir =>
+      val (landing, outDir, ckpt) = (s"$dir/landing", s"$dir/out", s"$dir/ckpt")
+      // chunk 1, chunk 1 AGAIN (new files = at-least-once redelivery of
+      // every row, arriving while many strata's top-k are already full),
+      // then the remaining docs
+      Seq(half, half, rest).foreach { c =>
+        c.write.mode("append").parquet(landing)
+        Streaming.drain("stratifiedSampleRedelivery", Streaming.stratifiedSampleStream(
+            spark.readStream.schema(schema).parquet(landing), k = 20),
+            ckpt, OutputMode.Update()) { (b, _) =>
+          b.toDF().write.mode("append").parquet(outDir)
         }
-        .start()
-      q.awaitTermination()
+      }
+      val byGen = org.apache.spark.sql.expressions.Window.partitionBy("source")
+      spark.read.parquet(outDir)
+        .withColumn("mx", max($"gen").over(byGen))
+        .filter($"gen" === $"mx")
+        .select("source", "rn", "doc_id", "h")
+        .collect().map(_.toSeq).toSet
     }
-    val byGen = org.apache.spark.sql.expressions.Window.partitionBy("source")
-    val folded = spark.read.parquet(outDir)
-      .withColumn("mx", max($"gen").over(byGen))
-      .filter($"gen" === $"mx")
-      .select("source", "rn", "doc_id", "h")
-      .collect().map(_.toSeq).toSet
     val batch = SparkEntry.queries("q254_stratified_sample")(spark, sf)
       .collect().map(_.toSeq).toSet
     assert(folded == batch,
       "redelivery must not change the sample: folded state != batch q254")
-    graft.Scratch.rmTree(new java.io.File(dir))
+  }
+
+  test("replay removes its directory after the body, and rethrows a failing body's exception") {
+    val kept = Streaming.replay("replay_returns") { d =>
+      Files.writeString(Paths.get(d, "part"), "x"); d
+    }
+    assert(!Files.exists(Paths.get(kept)), s"$kept survived a body that returned")
+    var dir = ""
+    val boom = new IllegalStateException("seeded failure in the body")
+    val thrown = intercept[IllegalStateException] {
+      Streaming.replay("replay_throws") { d =>
+        dir = d
+        Files.writeString(Paths.get(d, "part"), "x")
+        throw boom
+      }
+    }
+    assert(thrown eq boom, s"replay rethrew $thrown, not the body's exception")
+    assert(dir.nonEmpty && !Files.exists(Paths.get(dir)), s"$dir survived a body that threw")
+  }
+
+  test("every checkpointed loop in src/main runs through Streaming.drain") {
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val sources =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(f => f -> Files.readString(f)).toList
+      finally walk.close()
+    val home = Paths.get("src/main/scala/graft/streaming/Streaming.scala")
+    val homeText = sources.toMap.getOrElse(home, "")
+    val from = homeText.indexOf("def drain[")
+    val until = if (from < 0) -1 else homeText.indexOf("\n\n", from)
+    def inDrain(f: java.nio.file.Path, at: Int) = f == home && at > from && at < until
+    val misplaced = Seq(".writeStream", "StreamPlans.record(").flatMap { token =>
+      val sites = for {
+        (f, text) <- sources
+        m <- java.util.regex.Pattern.quote(token).r.findAllMatchIn(text)
+      } yield (f, m.start, text.take(m.start).count(_ == '\n') + 1)
+      if (sites.size == 1 && sites.forall { case (f, at, _) => inDrain(f, at) }) Nil
+      else Seq(s"$token x${sites.size}: " +
+        sites.map { case (f, _, line) => s"$f:$line" }.mkString(", "))
+    }
+    if (misplaced.nonEmpty)
+      fail(("each must occur once, inside Streaming.drain" +: misplaced).mkString("\n"))
   }
 }
