@@ -14,10 +14,10 @@ package graft
   *  - the JSON line is also written to a file (the driver's bounded
   *    stdout capture truncated the per-query map in two consecutive
   *    round artifacts; a file is the only truncation-proof per-query
-  *    history): SPARK_GRAFT_BENCH_OUT if set, else the COMMITTED
-  *    BENCH_QUERIES.json when SPARK_GRAFT_BENCH_COMMIT=1, else the
-  *    gitignored target/BENCH_QUERIES.json — so default runs never
-  *    clobber the reconciled committed artifact;
+  *    history): SPARK_GRAFT_BENCH_OUT if set (`=BENCH_QUERIES.json`
+  *    updates the committed artifact), else the gitignored
+  *    target/BENCH_QUERIES.json — so default runs never clobber the
+  *    reconciled committed artifact;
   *  - a SHORT total-only JSON line follows the big one, so a bounded
   *    stdout capture that truncates the per-query map still carries the
   *    headline number (a committed driver artifact once lost its total
@@ -28,28 +28,6 @@ object Bench {
     val sfDir = sys.env.getOrElse(Env.SfDir, "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse(Env.Reps, "2").toInt.max(1)
     val spark = Session.local()
-    // Exogenous-window canary: a SEPARATE fixed-work timer process
-    // (tools/canary/Canary.java via JDK source-file mode — no
-    // classpath needed, so it launches identically under sbt).
-    // Its timeline distinguishes "the host was slow during these reps"
-    // from "the tree got slower" by artifact diff instead of a
-    // re-bisect; its own JVM means bench-side GC never dilates it.
-    // Timeline lands next to the artifact: the committed
-    // BENCH_CANARY.jsonl under BENCH_COMMIT=1, else gitignored target/.
-    val canaryFile =
-      if (sys.env.get(Env.BenchCommit).contains("1")) "BENCH_CANARY.jsonl"
-      else "target/BENCH_CANARY.jsonl"
-    val canaryProc: Option[Process] =
-      if (!sys.env.get(Env.Canary).contains("1")) None
-      else try {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
-        val pb = new ProcessBuilder("java", "tools/canary/Canary.java", canaryFile)
-        pb.redirectErrorStream(true)
-        pb.redirectOutput(new java.io.File("target/canary.launch.log"))
-        Some(pb.start())
-      } catch { case e: java.io.IOException =>
-        System.err.println(s"BENCH CANARY launch failed: ${e.getMessage}"); None
-      }
     // optional debug filter: SPARK_GRAFT_ONLY=regex runs a subset.
     // Full runs skip the fixed-size semantics audits (benchExcluded) —
     // an explicit ONLY regex still selects them for dev timing.
@@ -129,18 +107,15 @@ object Bench {
       }
       qIndex += 1
       val gc0 = gcMs
-      // scale-shape pins (q86) time ONE rep: min-of-reps exists to cut
-      // host noise on throughput queries, not to double a pin's cost
-      val qReps = if (SparkEntry.singleRep(name)) 1 else reps
-      var times = runReps(qReps)
+      var times = runReps(reps)
       // Sub-second queries get extra reps: min-of-2 on
       // a trivial line still carried 8–10× host-noise swings between
       // artifacts (q06/q15 in BENCH_r08, on byte-identical code).
       // Extra reps on a < 1 s line are cheap by definition; the target
       // is min-of-4 so the committed artifact's sub-second cohort stops
       // moving multi-x on identical code.
-      if (!SparkEntry.singleRep(name) && times.nonEmpty && times.min < 1.0 && qReps < 4)
-        times = times ++ runReps(4 - qReps)
+      if (times.nonEmpty && times.min < 1.0 && reps < 4)
+        times = times ++ runReps(4 - reps)
       // Dispersion localizer: when this query's reps
       // disagree by >3x, print EVERY rep time plus the GC time the
       // query's reps accumulated — separates a one-rep environmental
@@ -172,17 +147,15 @@ object Bench {
     // truncation-proof summary: a bounded stdout capture can lose the
     // head of the big line above; this one is < 120 bytes and LAST
     println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":${failed.size}}""")
-    // One-artifact protocol: the COMMITTED
-    // BENCH_QUERIES.json is updated ONLY on an explicit opt-in
-    // (SPARK_GRAFT_BENCH_COMMIT=1) — the driver's default per-round runs
-    // kept overwriting the builder's reconciled artifact in the working
-    // tree. Default full runs land in target/BENCH_QUERIES.json
-    // (gitignored, still truncation-proof for reading back); an explicit
-    // SPARK_GRAFT_BENCH_OUT overrides the path either way; SPARK_GRAFT_ONLY
-    // subset dev runs write only when BENCH_OUT is explicitly set.
+    // One-artifact protocol: the COMMITTED BENCH_QUERIES.json is
+    // updated ONLY on an explicit SPARK_GRAFT_BENCH_OUT=BENCH_QUERIES.json
+    // — default runs overwriting the reconciled artifact in the working
+    // tree is the failure this prevents. Default full runs land in
+    // target/BENCH_QUERIES.json (gitignored, still truncation-proof for
+    // reading back); SPARK_GRAFT_ONLY subset dev runs write only when
+    // BENCH_OUT is explicitly set.
     val out = sys.env.get(Env.BenchOut).orElse {
       if (sys.env.contains(Env.Only)) None
-      else if (sys.env.get(Env.BenchCommit).contains("1")) Some("BENCH_QUERIES.json")
       else Some("target/BENCH_QUERIES.json")
     }
     out.foreach { o =>
@@ -196,23 +169,6 @@ object Bench {
       }
     }
     spark.stop()
-    // canary teardown + summary: median/max workMs over the run. A
-    // max >> median localizes a host window; per-rep attribution comes
-    // from joining the timeline's epoch timestamps against the BENCH
-    // TIME stderr ordering.
-    canaryProc.foreach { p =>
-      p.destroy(); p.waitFor()
-      try {
-        val ms = scala.io.Source.fromFile(canaryFile).getLines()
-          .flatMap("\"workMs\":(\\d+)".r.findFirstMatchIn(_)).map(_.group(1).toLong)
-          .toSeq.sorted
-        if (ms.nonEmpty)
-          System.err.println(s"BENCH CANARY n=${ms.size} medianMs=${ms(ms.size / 2)} " +
-            s"p95Ms=${ms((ms.size * 95) / 100 min (ms.size - 1))} maxMs=${ms.last} file=$canaryFile")
-      } catch { case e: Exception =>
-        System.err.println(s"BENCH CANARY summary failed: ${e.getMessage}")
-      }
-    }
     if (failed.nonEmpty) System.err.println(s"BENCH: ${failed.size} queries failed: ${failed.mkString(", ")}")
   }
 }

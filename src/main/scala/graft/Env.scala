@@ -10,9 +10,7 @@ object Env {
   val Cpus     = "SPARK_GRAFT_CPUS"
   val Reps     = "SPARK_GRAFT_REPS"
   val Only     = "SPARK_GRAFT_ONLY"
-  val BenchOut = "SPARK_GRAFT_BENCH_OUT"
-  val BenchCommit = "SPARK_GRAFT_BENCH_COMMIT" // =1: update committed BENCH_QUERIES.json
+  val BenchOut = "SPARK_GRAFT_BENCH_OUT" // =BENCH_QUERIES.json: update the committed artifact
   val DataDir  = "SPARK_GRAFT_DATA_DIR" // graft.Main's pipeline data root
   val Stress   = "SPARK_GRAFT_STRESS"   // =1: run the opt-in scale-stress suite
-  val Canary   = "SPARK_GRAFT_CANARY"   // =1: Bench launches the fixed-work host canary
 }

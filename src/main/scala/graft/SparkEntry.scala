@@ -61,10 +61,6 @@ object SparkEntry {
     * cluster-route shape is exactly what the net exists to pin. */
   val auditQueries: Set[String] = benchExcluded - "q86_lsh_narrow_salted"
 
-  /** Queries Bench runs at ONE rep instead of SPARK_GRAFT_REPS — none
-    * currently; q86 is in [[benchExcluded]]. */
-  val singleRep: Set[String] = Set.empty
-
   /** Queries whose construction triggers a MEMOIZED per-process build
     * (media container encode, persisted IVF/range/Z-order/bloom/
     * signature stores). Bench invokes each once in the UNTIMED setup

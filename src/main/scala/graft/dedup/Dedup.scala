@@ -78,9 +78,9 @@ object Dedup {
     *
     * Runs as the codegen'd [[graft.plans.MinHashSigsExpr]] — one
     * sliding-window pass per document, no shingle array, no explode, no
-    * aggregate; the former explode + groupBy(min×k) spelling is kept
-    * below as the executable reference the expression is lockstep-tested
-    * against (TextDedupSpec). No optimizer barrier is needed between the
+    * aggregate; the former explode + groupBy(min×k) spelling is the
+    * executable reference the expression is lockstep-tested against
+    * (TextDedupSpec). No optimizer barrier is needed between the
     * kernel project and the s0..s{k-1} split: CollapseProject's
     * cost-aware check refuses to inline a non-cheap producer referenced
     * k times, so the kernel stays in its own Project and runs once per
@@ -100,14 +100,6 @@ object Dedup {
         (0 until k).map(i => col("mh").getItem(i).as(s"s$i")): _*)
   }
 
-  /** Reference pipeline spelling of [[minhashSignatures]] (explode +
-    * k min-aggregates over the shingle index). */
-  def minhashSignaturesPipeline(docs: DataFrame, n: Int, k: Int): DataFrame = {
-    val mins = (0 until k).map(i =>
-      min(xxhash64(lit(i), col("g"))).as(s"s$i"))
-    shingleIndex(docs, n).groupBy("doc_id").agg(mins.head, mins.tail: _*)
-  }
-
   /** The ONE spelling of the banding scheme: melt a signature table to
     * (doc_id, band, key, carry...) rows — band j's key is xxhash64 of
     * its r signature slots. Both candidate paths share this so the band
@@ -125,22 +117,6 @@ object Dedup {
           carry.map(col): _*)
         .select(col("doc_id") +: col("bk.band").as("band") +: col("bk.key").as("key") +:
           carry.map(col): _*))
-  }
-
-  /** LSH banding: band j key = xxhash64 of its r signature slots;
-    * docs sharing any band key become candidate pairs. */
-  def lshCandidates(sigs: DataFrame, bands: Int, rows: Int): DataFrame = {
-    val melted = meltedBands(sigs, bands, rows, carry = Nil)
-    // fanOut after the distinct: the pair stream is tiny in BYTES but
-    // huge in downstream CPU (est + verify per pair), and AQE coalesces
-    // by bytes — left alone it squeezes millions of pairs into 1-2
-    // partitions and serializes the whole verify phase.
-    Tables.fanOut(
-      melted.as("x").join(melted.as("y"),
-          col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
-        .distinct())
   }
 
   /** Full MinHash-LSH near-dup pipeline: band candidates → cheap
@@ -310,7 +286,7 @@ object Dedup {
     * [[graft.plans.MinHashSigsTokensExpr]] — tokenization, w-gram
     * assembly and k-seed hashing in one pass per document, no exploded
     * gram index, no aggregate, no shuffle (the former explode + k-min
-    * pipeline below is the executable reference it is lockstep-tested
+    * pipeline is the executable reference it is lockstep-tested
     * against, TextDedupSpec). Docs with < w tokens return NULL from the
     * kernel and are filtered — the same corpus the explode dropped.
     * The kernel-once split relies on the same cost-aware
@@ -337,16 +313,6 @@ object Dedup {
           col("text"), lit(w), lit(k)).as("mh"))
       .select(col("doc_id") +:
         (0 until k).map(i => col("mh").getItem(i).as(s"s$i")): _*)
-  }
-
-  /** Reference pipeline spelling of [[minhashSignaturesTokens]]
-    * (explode + k min-aggregates over the token w-gram index). */
-  def minhashSignaturesTokensPipeline(docs: DataFrame, w: Int, k: Int): DataFrame = {
-    val toks = split(trim(col("text")), "\\s+")
-    val idx = Tables.fanOut(docs)
-      .select(col("doc_id"), explode(tokenShingles(toks, w)).as("g"))
-    val mins = (0 until k).map(i => min(xxhash64(lit(i), col("g"))).as(s"s$i"))
-    idx.groupBy("doc_id").agg(mins.head, mins.tail: _*)
   }
 
   /** [[minhashNearDups]] with token w-gram shingles: the canonical
@@ -564,32 +530,14 @@ object Dedup {
     * fingerprint bit b set iff votes[b] > 0. `textCol` is a column name
     * resolvable in the input plan.
     *
-    * Runs as the codegen'd [[graft.plans.SimHash64Expr]] — the HOF
-    * spelling below is CodegenFallback/interpreted and pays 64 lambda
-    * frames per token; kept as the session-less fallback and the
-    * executable spec the expression is lockstep-tested against
-    * (TextDedupSpec). */
-  def simhash64(textCol: String): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) =>
-        graft.plans.SimHash64.register(s)
-        call_function(graft.plans.SimHash64.NAME, col(textCol))
-      case None => simhash64Hof(textCol)
-    }
-
-  /** Reference HOF spelling of [[simhash64]] (interpreted). */
-  def simhash64Hof(textCol: String): Column = expr(
-    s"""aggregate(
-          zip_with(
-            aggregate(
-              transform(split(trim($textCol), '\\\\s+'), t -> xxhash64(t)),
-              array_repeat(CAST(0 AS BIGINT), 64),
-              (acc, h) -> zip_with(acc, sequence(0, 63),
-                (a, b) -> a + CASE WHEN (shiftright(h, b) & 1) = 1 THEN 1 ELSE -1 END)),
-            sequence(0, 63),
-            (v, b) -> CASE WHEN v > 0 THEN shiftleft(CAST(1 AS BIGINT), b)
-                      ELSE CAST(0 AS BIGINT) END),
-          CAST(0 AS BIGINT), (x, y) -> x + y)""")
+    * Runs as the codegen'd [[graft.plans.SimHash64Expr]] on the active
+    * session — the HOF spelling is CodegenFallback/interpreted and pays
+    * 64 lambda frames per token; it stays the executable spec the
+    * expression is lockstep-tested against (TextDedupSpec). */
+  def simhash64(textCol: String): Column = {
+    graft.plans.SimHash64.register(SparkSession.active)
+    call_function(graft.plans.SimHash64.NAME, col(textCol))
+  }
 
   /** SimHash near-dups: 8-bit chunk collision proposes candidates
     * (equi-join, no cross product), Hamming ≤ maxDist verifies. With 8

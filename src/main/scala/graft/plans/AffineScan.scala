@@ -20,9 +20,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * expresses a SCAN (aggregate folds to one value; transform is
   * pointwise), and the O(n²) transform-over-prefix-slices spelling is
   * both quadratic and CodegenFallback — these two kernels are each ONE
-  * primitive-double codegen loop, O(n), allocation-free beyond the
-  * output array. They stay lockstep-pinned against the interpreted
-  * quadratic spelling in PrefixSpec.
+  * primitive-double loop ([[AffineScan.prodA]], [[AffineScan.scanB]]),
+  * O(n), allocation-free beyond the output array. They stay
+  * lockstep-pinned against the interpreted quadratic spelling in
+  * PrefixSpec.
   *
   * Null semantics (repo convention, cf. [[RandomProject]]): NULL input
   * array → NULL; a NULL element poisons to NULL; mismatched a/b lengths
@@ -39,42 +40,14 @@ case class AffineProdA(child: Expression) extends UnaryExpression {
       s"${AffineScan.PROD_NAME} requires ARRAY<DOUBLE>, got ${other.catalogString}")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val a = input.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    val out = new Array[Double](n)
-    var acc = 1.0
-    var i = 0
-    while (i < n) {
-      if (a.isNullAt(i)) return null
-      out(i) = acc
-      acc = acc * a.getDouble(i)
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    AffineScan.prodA(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val out = ctx.freshName("out")
-      val acc = ctx.freshName("acc")
-      s"""
-         int $n = $arr.numElements();
-         double[] $out = new double[$n];
-         double $acc = 1.0;
-         for (int $i = 0; $i < $n; $i++) {
-           if ($arr.isNullAt($i)) { ${ev.isNull} = true; break; }
-           $out[$i] = $acc;
-           $acc = $acc * $arr.getDouble($i);
-         }
-         if (!${ev.isNull}) {
-           ${ev.value} =
-             new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         }
-       """
-    })
+    nullSafeCodeGen(ctx, ev, a => s"""
+      ${ev.value} = graft.plans.AffineScan.prodA($a);
+      if (${ev.value} == null) { ${ev.isNull} = true; }
+    """)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -95,9 +68,42 @@ case class AffineScanB(left: Expression, right: Expression)
           s"got (${l.catalogString}, ${r.catalogString})")
     }
 
-  override def nullSafeEval(as: Any, bs: Any): Any = {
-    val a = as.asInstanceOf[ArrayData]
-    val b = bs.asInstanceOf[ArrayData]
+  override def nullSafeEval(as: Any, bs: Any): Any =
+    AffineScan.scanB(as.asInstanceOf[ArrayData], bs.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (as, bs) => s"""
+      ${ev.value} = graft.plans.AffineScan.scanB($as, $bs);
+      if (${ev.value} == null) { ${ev.isNull} = true; }
+    """)
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object AffineScan {
+  val PROD_NAME = "affine_prod_a"
+  val SCAN_NAME = "affine_scan_b"
+
+  /** A_exc of `a`; NULL if an element is NULL. */
+  def prodA(a: ArrayData): ArrayData = {
+    val n = a.numElements()
+    val out = new Array[Double](n)
+    var acc = 1.0
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i)) return null
+      out(i) = acc
+      acc = acc * a.getDouble(i)
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** B_exc of the pairs (a_i, b_i); NULL if an element is NULL or the
+    * lengths differ. */
+  def scanB(a: ArrayData, b: ArrayData): ArrayData = {
     val n = a.numElements()
     if (b.numElements() != n) return null
     val out = new Array[Double](n)
@@ -111,41 +117,6 @@ case class AffineScanB(left: Expression, right: Expression)
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (as, bs) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val out = ctx.freshName("out")
-      val acc = ctx.freshName("acc")
-      s"""
-         int $n = $as.numElements();
-         if ($bs.numElements() != $n) {
-           ${ev.isNull} = true;
-         } else {
-           double[] $out = new double[$n];
-           double $acc = 0.0;
-           for (int $i = 0; $i < $n; $i++) {
-             if ($as.isNullAt($i) || $bs.isNullAt($i)) { ${ev.isNull} = true; break; }
-             $out[$i] = $acc;
-             $acc = $as.getDouble($i) * $acc + $bs.getDouble($i);
-           }
-           if (!${ev.isNull}) {
-             ${ev.value} =
-               new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-           }
-         }
-       """
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object AffineScan {
-  val PROD_NAME = "affine_prod_a"
-  val SCAN_NAME = "affine_scan_b"
 
   def register(spark: SparkSession): Unit = {
     Registration.tempFunction(spark, PROD_NAME, {

@@ -49,7 +49,7 @@ case class DeflateLen(child: Expression) extends UnaryExpression {
 object DeflateLen {
   val NAME = "deflate_len"
 
-  // Native-memory lifetime, stated explicitly (r7 ADVICE): one Deflater
+  // Native-memory lifetime, stated explicitly: one Deflater
   // per executor THREAD, never end()'d — each pooled task thread pins a
   // few hundred KB of native zlib state for the thread's lifetime.
   // Executor task-pool threads are long-lived and bounded in count, so

@@ -42,38 +42,16 @@ case class DotLong(left: Expression, right: Expression) extends BinaryExpression
         s"got (${left.dataType.catalogString}, ${right.dataType.catalogString})")
 
   override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    if (a.numElements() != b.numElements()) null
-    else {
-      var s = 0L
-      var i = 0
-      while (i < a.numElements()) {
-        if (a.isNullAt(i) || b.isNullAt(i)) return null
-        s += a.getLong(i) * b.getLong(i)
-        i += 1
-      }
-      s
-    }
+    val (a, b) = (l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+    if (DotScaled.defined(a, b)) DotLong.compute(a, b) else null
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-         if ($a.numElements() != $b.numElements()) {
-           ${ev.isNull} = true;
-         } else {
-           long $s = 0L;
-           for (int $i = 0; $i < $a.numElements(); $i++) {
-             if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-             $s += $a.getLong($i) * $b.getLong($i);
-           }
-           if (!${ev.isNull}) { ${ev.value} = $s; }
-         }
-       """
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+      if (graft.plans.DotScaled.defined($a, $b)) {
+        ${ev.value} = graft.plans.DotLong.compute($a, $b);
+      } else { ${ev.isNull} = true; }
+    """)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -81,6 +59,17 @@ case class DotLong(left: Expression, right: Expression) extends BinaryExpression
 
 object DotLong {
   val NAME = "dot_long"
+
+  /** Σ a_i · b_i over two arrays that [[DotScaled.defined]] accepts. */
+  def compute(a: ArrayData, b: ArrayData): Long = {
+    var s = 0L
+    var i = 0
+    while (i < a.numElements()) {
+      s += a.getLong(i) * b.getLong(i)
+      i += 1
+    }
+    s
+  }
 
   def build(exprs: Seq[Expression]): Expression = {
     if (exprs.length != 2)

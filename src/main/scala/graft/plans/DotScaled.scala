@@ -47,44 +47,17 @@ case class DotScaled(left: Expression, right: Expression) extends BinaryExpressi
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    if (a.numElements() != b.numElements()) null
-    else {
-      val (af, bf) = (isFloat(left), isFloat(right))
-      var s = 0L
-      var i = 0
-      while (i < a.numElements()) {
-        // null element poisons the sum — zip_with/aggregate parity
-        if (a.isNullAt(i) || b.isNullAt(i)) return null
-        val x = if (af) a.getFloat(i).toDouble else a.getDouble(i)
-        val y = if (bf) b.getFloat(i).toDouble else b.getDouble(i)
-        s += math.floor(x * y * 1e14).toLong
-        i += 1
-      }
-      s
-    }
+    val (a, b) = (l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+    if (DotScaled.defined(a, b)) DotScaled.compute(a, b, isFloat(left), isFloat(right))
+    else null
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val getA = if (isFloat(left)) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      val getB = if (isFloat(right)) s"(double) $b.getFloat($i)" else s"$b.getDouble($i)"
-      s"""
-         if ($a.numElements() != $b.numElements()) {
-           ${ev.isNull} = true;
-         } else {
-           long $s = 0L;
-           for (int $i = 0; $i < $a.numElements(); $i++) {
-             if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-             $s += (long) Math.floor($getA * $getB * 1e14);
-           }
-           if (!${ev.isNull}) { ${ev.value} = $s; }
-         }
-       """
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+      if (graft.plans.DotScaled.defined($a, $b)) {
+        ${ev.value} = graft.plans.DotScaled.compute($a, $b, ${isFloat(left)}, ${isFloat(right)});
+      } else { ${ev.isNull} = true; }
+    """)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -92,6 +65,34 @@ case class DotScaled(left: Expression, right: Expression) extends BinaryExpressi
 
 object DotScaled {
   val NAME = "dot_scaled"
+
+  /** Whether a pairwise dot product of `a` and `b` is defined: equal
+    * lengths and no NULL element (a NULL element poisons the sum, and
+    * zip_with null-pads the shorter side). Shared by [[DotLong]]. */
+  def defined(a: ArrayData, b: ArrayData): Boolean = {
+    val n = a.numElements()
+    if (b.numElements() != n) return false
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return false
+      i += 1
+    }
+    true
+  }
+
+  /** Σ floor(a_i · b_i · 1e14) over two arrays that [[defined]] accepts;
+    * `aFloat`/`bFloat` pick FLOAT over DOUBLE elements per side. */
+  def compute(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Long = {
+    var s = 0L
+    var i = 0
+    while (i < a.numElements()) {
+      val x = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      val y = if (bFloat) b.getFloat(i).toDouble else b.getDouble(i)
+      s += math.floor(x * y * 1e14).toLong
+      i += 1
+    }
+    s
+  }
 
   def build(exprs: Seq[Expression]): Expression = {
     if (exprs.length != 2)

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * as ARRAY<STRUCT<cdist: DOUBLE, c_cluster: BIGINT>> sorted ascending
   * by (cdist, c_cluster) — one codegen'd tight loop per row.
   *
-  * Built for the lloydAssign family (r14, guide §1.2 step 2 + §2.4):
+  * Built for the lloydAssign family:
   * the former crossJoin(broadcast(cents)) + per-vector argmin exchange
   * carried the whole corpus through a shuffle; inlining the nCells-row
   * centroid table removes the exchanges, but spelling the 8×64-term

@@ -11,8 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** minhash_sigs(text, n, k): the k MinHash signature slots of a text's
   * character n-gram shingle set in ONE compiled pass — min over shingles
   * of xxhash64(i, shingle) for i = 0..k-1, exactly the semantics of the
-  * former explode + groupBy(min×k) pipeline in graft.dedup.Dedup
-  * (TextDedupSpec pins slot-for-slot lockstep).
+  * former explode + groupBy(min×k) pipeline, kept in TextDedupSpec,
+  * which pins slot-for-slot lockstep.
   *
   * Why an expression: the pipeline spelling materializes an interpreted
   * HOF shingle array per document, explodes it to |corpus|·|shingles|

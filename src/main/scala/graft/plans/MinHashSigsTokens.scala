@@ -12,9 +12,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * text's token w-gram shingle set in ONE compiled pass — min over
   * w-grams of xxhash64(i, gram) for i = 0..k-1, where the gram string
   * is `array_join(slice(split(trim(text), "\\s+"), p, w), " ")`,
-  * exactly the semantics of the explode + groupBy(min×k) pipeline in
-  * [[graft.dedup.Dedup.minhashSignaturesTokens]] (TextDedupSpec pins
-  * slot-for-slot lockstep, including whitespace edge cases).
+  * exactly the semantics of the explode + groupBy(min×k) pipeline kept
+  * in TextDedupSpec, which pins slot-for-slot lockstep against
+  * [[graft.dedup.Dedup.minhashSignaturesTokens]], including whitespace
+  * edge cases.
   *
   * Why an expression: the pipeline spelling explodes ~n_tokens gram
   * rows per document and shuffles them through k min-aggregates — a

@@ -49,8 +49,29 @@ case class RandomProject(child: Expression, kOut: Int, dIn: Int)
   @transient private lazy val signs: Array[Long] =
     RandomProject.signMatrix(dIn, kOut)
 
-  override def nullSafeEval(input: Any): Any = {
-    val a = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    RandomProject.compute(input.asInstanceOf[ArrayData], isFloat, signs, kOut, dIn)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val signsRef = ctx.addReferenceObj("rpSigns", signs, "long[]")
+    nullSafeCodeGen(ctx, ev, a => s"""
+      ${ev.value} = graft.plans.RandomProject.compute($a, $isFloat, $signsRef, $kOut, $dIn);
+      if (${ev.value} == null) { ${ev.isNull} = true; }
+    """)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object RandomProject {
+  val NAME = "random_project"
+
+  /** The kOut projections of `a` under the flattened sign matrix
+    * `signs` (signs(j * kOut + k)); NULL if `a` is not dIn long or holds
+    * a NULL element. `isFloat` picks FLOAT over DOUBLE elements. */
+  def compute(a: ArrayData, isFloat: Boolean, signs: Array[Long],
+      kOut: Int, dIn: Int): ArrayData = {
     if (a.numElements() != dIn) return null
     val out = new Array[Long](kOut)
     var j = 0
@@ -65,45 +86,9 @@ case class RandomProject(child: Expression, kOut: Int, dIn: Int)
     new GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val signsRef = ctx.addReferenceObj("rpSigns", signs, "long[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val j = ctx.freshName("j")
-      val k = ctx.freshName("k")
-      val out = ctx.freshName("out")
-      val vf = ctx.freshName("vf")
-      val get = if (isFloat) s"(double) $a.getFloat($j)" else s"$a.getDouble($j)"
-      s"""
-         if ($a.numElements() != $dIn) {
-           ${ev.isNull} = true;
-         } else {
-           long[] $out = new long[$kOut];
-           for (int $j = 0; $j < $dIn; $j++) {
-             if ($a.isNullAt($j)) { ${ev.isNull} = true; break; }
-             long $vf = (long) Math.floor($get * 1e6);
-             for (int $k = 0; $k < $kOut; $k++) {
-               $out[$k] += $signsRef[$j * $kOut + $k] * $vf;
-             }
-           }
-           if (!${ev.isNull}) {
-             ${ev.value} =
-               new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-           }
-         }
-       """
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object RandomProject {
-  val NAME = "random_project"
-
   /** The ONE canonical sign derivation (shared with the interpreted
-    * spelling in Similarity and the DuckDB oracle): parity of the
-    * first hex char of md5("j:k"). */
+    * reference spelling in SimilaritySpec and the DuckDB oracle):
+    * parity of the first hex char of md5("j:k"). */
   def signMatrix(dIn: Int, kOut: Int): Array[Long] = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val out = new Array[Long](dIn * kOut)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** 64-bit SimHash of a text column in one compiled pass — the codegen'd
-  * replacement for the HOF spelling in graft.dedup.Dedup (nested
+  * replacement for the HOF spelling kept in TextDedupSpec (nested
   * aggregate∘zip_with over 64 bit positions per token, which runs
   * interpreted: Spark's higher-order functions are CodegenFallback, so
   * every token pays 64 lambda frames and boxed longs; this is the

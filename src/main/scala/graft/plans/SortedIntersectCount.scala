@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, NullType, StringType}
 
 /** |A ∩ B| for two SORTED, DISTINCT string OR bigint arrays via a
-  * two-pointer merge — O(|A|+|B|), zero allocation,
-  * whole-stage-codegen'd.
+  * two-pointer merge ([[SortedIntersectCount.compute]]) — O(|A|+|B|),
+  * zero allocation, called from whole-stage codegen.
   *
   * Built because Spark's ArrayIntersect evaluates interpreted and
   * builds a hash set per call: on the dedup verify path (millions of
@@ -53,8 +53,9 @@ case class SortedIntersectCount(left: Expression, right: Expression)
         s"got (${left.dataType.catalogString}, ${right.dataType.catalogString})")
   }
 
-  /** Element type driving the comparison — resolved at analysis time,
-    * so codegen branches statically (no per-row dispatch). */
+  /** Element type driving the comparison — resolved at analysis time
+    * and passed to [[SortedIntersectCount.compute]] as a literal, so the
+    * JIT folds the branch (no per-row dispatch). */
   private lazy val longElems: Boolean = Seq(left.dataType, right.dataType).exists {
     case ArrayType(LongType, _) => true
     case _ => false
@@ -63,13 +64,34 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   override def nullable: Boolean = true
 
   override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+    val n = SortedIntersectCount.compute(
+      l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData], longElems)
+    if (n < 0) null else n
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+      ${ev.value} = graft.plans.SortedIntersectCount.compute($a, $b, $longElems);
+      if (${ev.value} < 0) { ${ev.isNull} = true; }
+    """)
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object SortedIntersectCount {
+  val NAME = "sorted_intersect_count"
+
+  /** |a ∩ b| by a two-pointer merge over sorted distinct arrays of
+    * BIGINT (`longElems`) or STRING elements, or -1 for NULL (a count is
+    * never negative): a NULL element reached by the merge poisons the
+    * result, since sortedness is undefined with nulls. */
+  def compute(a: ArrayData, b: ArrayData, longElems: Boolean): Int = {
+    val na = a.numElements()
+    val nb = b.numElements()
     var i = 0; var j = 0; var n = 0
-    while (i < a.numElements() && j < b.numElements()) {
-      // null element poisons the result (sortedness is undefined with
-      // nulls) — return NULL, never NPE; DotScaled convention
-      if (a.isNullAt(i) || b.isNullAt(j)) return null
+    while (i < na && j < nb) {
+      if (a.isNullAt(i) || b.isNullAt(j)) return -1
       val c =
         if (longElems) java.lang.Long.compare(a.getLong(i), b.getLong(j))
         else a.getUTF8String(i).compareTo(b.getUTF8String(j))
@@ -79,32 +101,6 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     }
     n
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val cmp =
-        if (longElems) s"java.lang.Long.compare($a.getLong($i), $b.getLong($j))"
-        else s"$a.getUTF8String($i).compareTo($b.getUTF8String($j))"
-      s"""
-         int $i = 0, $j = 0;
-         ${ev.value} = 0;
-         while ($i < $a.numElements() && $j < $b.numElements()) {
-           if ($a.isNullAt($i) || $b.isNullAt($j)) { ${ev.isNull} = true; break; }
-           int $c = $cmp;
-           if ($c == 0) { ${ev.value}++; $i++; $j++; }
-           else if ($c < 0) { $i++; } else { $j++; }
-         }
-       """
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object SortedIntersectCount {
-  val NAME = "sorted_intersect_count"
 
   /** Arity-checked builder shared by both registration paths; element
     * types are validated by checkInputDataTypes at analysis time. */

@@ -24,9 +24,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * the per-doc build sorts a primitive long[] (dual-pivot quicksort,
   * no comparator dispatch) and allocates ZERO gram objects, and the
   * cached array is 8 bytes/gram instead of an object header + bytes.
-  * The r10/r11 q37 stage profile put the UTF8String merge at ~58% of
-  * the whole near-dup pipeline — this kernel exists to collapse that
-  * constant (guide §1.2 "per-task work", §2.3 "narrower types").
+  * A q37 stage profile put the UTF8String merge at ~58% of the whole
+  * near-dup pipeline — this kernel exists to collapse that constant
+  * (less per-task work, narrower types).
   *
   * Element ORDER differs from the string kernel (numeric vs UTF8
   * binary order) — irrelevant to every consumer: both sides of a merge

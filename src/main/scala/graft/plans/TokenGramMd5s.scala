@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * ARRAY<STRING> with element i-1 == md5(array_join(slice(toks, i, w),
   * ' ')) byte-for-byte (TextDedupSpec pins the lockstep equality).
   *
-  * Why a kernel (r13, guide §1.2 "per-task work"): seven query paths
+  * Why a kernel (per-task work): seven query paths
   * (novelty q151/q162, overlap q152, dup-spans q72, decontamination
   * q66/q139/q107-adjacent, winnowing q140) spell this as
   * explode(sequence) + md5(array_join(slice(...))) — per POSITION that

@@ -68,9 +68,8 @@ object WinnowFp {
   def compute(text: UTF8String): InternalRow = {
     // code points exactly as Spark's substring/ascii count characters —
     // decoded into a primitive int[] (sized at the char-length upper
-    // bound, truncated to the code-point count): one Integer box per
+    // bound, truncated to the code-point count): no Integer box per
     // corpus character on THE hot path this kernel exists to optimize
-    // was the r5 ADVICE finding
     val s = text.toString
     val cp = new Array[Int](s.length)
     var m = 0

@@ -1,7 +1,7 @@
 package graft.similarity
 
 import graft.{PinnedOps, Q, Tables}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,23 +27,15 @@ object Similarity {
   val FP = 1e14
 
   /** Scaled-long dot product: Σ floor(a_i·b_i·1e14), exact + portable.
-    * Runs as the codegen'd [[graft.plans.DotScaled]] expression — the
-    * HOF spelling (aggregate∘zip_with) is CodegenFallback/interpreted
-    * and dominates pair-dense similarity plans; kept as the fallback
-    * for session-less Column composition. Both spellings are the same
-    * IEEE arithmetic, so oracle hashes are unchanged. */
-  def dotScaled(a: Column, b: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) =>
-        graft.plans.DotScaled.register(s)
-        call_function(graft.plans.DotScaled.NAME, a, b)
-      case None =>
-        aggregate(
-          zip_with(a, b, (x, y) =>
-            floor(x.cast("double") * y.cast("double") * lit(FP)).cast("long")),
-          lit(0L),
-          (acc, p) => acc + p)
-    }
+    * Runs as the codegen'd [[graft.plans.DotScaled]] expression on the
+    * active session — the HOF spelling (aggregate∘zip_with) is
+    * CodegenFallback/interpreted and dominates pair-dense similarity
+    * plans. Both spellings are the same IEEE arithmetic, so oracle
+    * hashes are unchanged. */
+  def dotScaled(a: Column, b: Column): Column = {
+    graft.plans.DotScaled.register(SparkSession.active)
+    call_function(graft.plans.DotScaled.NAME, a, b)
+  }
 
   /** cosine = dot/(|a||b|), every intermediate deterministic. A
     * zero-norm (all-zero) vector has no direction: its cosine is
@@ -269,8 +261,7 @@ object Similarity {
     require(rows.nonEmpty, "lloydDistsSorted: empty centroid table")
     val centArr = rows.toSeq.map(r => (0 until dims).map(i => r.getAs[Double](s"c$i")))
     val cellArr = rows.toSeq.map(_.getAs[Long]("c_cluster"))
-    val sess = org.apache.spark.sql.SparkSession.getActiveSession.get
-    graft.plans.LloydDists.register(sess)
+    graft.plans.LloydDists.register(cents.sparkSession)
     call_function(graft.plans.LloydDists.NAME, emb,
       typedLit(centArr), typedLit(cellArr))
   }
@@ -920,8 +911,8 @@ object Similarity {
     // first, so each projected coordinate is an exact integer sum.
     // Scale shape: ONE narrow per-row pass through the codegen'd
     // random_project kernel (each element read once, all 8 sums
-    // accumulated in a primitive long[] — the HOF spelling below is
-    // the interpreted reference, 8 CodegenFallback folds), then a
+    // accumulated in a primitive long[] — the interpreted HOF
+    // reference in SimilaritySpec takes 8 CodegenFallback folds), then a
     // posexplode Generate to long form (no d×8 join, no shuffle
     // before the output sort). At a 1000-executor scale-up the pass
     // stays embarrassingly parallel.
@@ -1237,21 +1228,6 @@ object Similarity {
       .filter(col("rank") <= 10)
       .select(col("q_id"), col("rank"), col("vec_id"), col("adc_micro"))
       .orderBy("q_id", "rank")
-  }
-
-  /** The interpreted REFERENCE spelling of the random_project kernel —
-    * kOut fold-left HOF sums against per-k literal sign vectors from
-    * the same canonical [[graft.plans.RandomProject.signMatrix]];
-    * SimilaritySpec pins their lockstep. Returns columns p0..p{k-1}. */
-  def randomProjectHof(v: Column, kOut: Int, dIn: Int): Seq[Column] = {
-    val signs = graft.plans.RandomProject.signMatrix(dIn, kOut)
-    (0 until kOut).map { k =>
-      val sk = (0 until dIn).map(j => signs(j * kOut + k))
-      aggregate(
-        zip_with(v, typedlit(sk),
-          (x, r) => floor(x.cast("double") * lit(1e6)).cast("long") * r),
-        lit(0L), (acc, t) => acc + t).as(s"p$k")
-    }
   }
 
   /** IVF (inverted-file) ANN: deterministic coarse centroids, cell

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.similarity.Similarity
 
@@ -301,7 +302,7 @@ class SimilaritySpec extends SparkSpec {
         call_function("random_project", $"embedding", lit(8), lit(64)).as("p"))
       .select($"vec_id", posexplode($"p").as(Seq("k", "proj")))
       .as[(Long, Int, Long)].collect().toSet
-    val hof = e.select($"vec_id" +: Similarity.randomProjectHof($"embedding", 8, 64): _*)
+    val hof = e.select($"vec_id" +: SimilaritySpec.randomProjectHof($"embedding", 8, 64): _*)
       .collect().flatMap { r =>
         (0 until 8).map(k => (r.getAs[Long]("vec_id"), k, r.getAs[Long](s"p$k")))
       }.toSet
@@ -763,6 +764,24 @@ class SimilaritySpec extends SparkSpec {
           l.contains("/codes") && l.contains("PartitionFilters: [cell")),
         s"$q must prune code partitions by probed cell:\n$p")
       assert(df.count() > 0)
+    }
+  }
+}
+
+object SimilaritySpec {
+
+  /** The interpreted REFERENCE spelling of the random_project kernel —
+    * kOut fold-left HOF sums against per-k literal sign vectors from
+    * the same canonical [[graft.plans.RandomProject.signMatrix]].
+    * Returns columns p0..p{k-1}. */
+  def randomProjectHof(v: Column, kOut: Int, dIn: Int): Seq[Column] = {
+    val signs = graft.plans.RandomProject.signMatrix(dIn, kOut)
+    (0 until kOut).map { k =>
+      val sk = (0 until dIn).map(j => signs(j * kOut + k))
+      aggregate(
+        zip_with(v, typedlit(sk),
+          (x, r) => floor(x.cast("double") * lit(1e6)).cast("long") * r),
+        lit(0L), (acc, t) => acc + t).as(s"p$k")
     }
   }
 }

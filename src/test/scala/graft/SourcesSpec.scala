@@ -7,8 +7,6 @@ import graft.sources.{Ingest, Pipeline, TickerStore}
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(p: String): String = Files.createTempDirectory(p).toString
-
   test("mock ticker table is a 22-row LocalRelation (S18)") {
     val m = Ingest.mockTickerTable(spark)
     assert(m.count() == 22)

@@ -6,14 +6,28 @@ import org.apache.spark.scheduler.{SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Shared session base for all suites: the engine's session on 4 local
   * cores, shared by every suite in the test JVM. */
-abstract class SparkSpec extends AnyFunSuite {
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = Session.local(4)
   val sf = "/root/testdata/sf0.001"
+
+  private val tmpDirs = new ConcurrentLinkedQueue[java.io.File]()
+
+  /** A fresh directory under `java.io.tmpdir`, removed when the suite
+    * ends. */
+  def tmp(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tmpDirs.add(d)
+    d.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try tmpDirs.asScala.foreach(Scratch.rmTree) finally super.afterAll()
 
   /** Run `body` and keep the listener events it caused that `pick`
     * selects, in delivery order. The listener bus is asynchronous, so a

@@ -10,9 +10,6 @@ import scala.jdk.CollectionConverters._
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   test("windowed counts over a memory stream match the batch twin") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]

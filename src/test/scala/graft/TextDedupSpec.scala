@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators.TextAnalysis
 import graft.dedup.Dedup
@@ -134,7 +135,7 @@ class TextDedupSpec extends SparkSpec {
       df.orderBy("doc_id").collect()
         .map(r => r.getLong(0) -> (1 to 32).map(r.getLong).toSeq).toMap
     val fast = collect(Dedup.minhashSignatures(docs, 3, 32))
-    val ref = collect(Dedup.minhashSignaturesPipeline(docs, 3, 32))
+    val ref = collect(TextDedupSpec.minhashSignaturesPipeline(docs, 3, 32))
     assert(fast.keySet == ref.keySet, "both paths must keep the same docs")
     assert(!fast.contains(9001L) && fast.contains(9002L))
     fast.foreach { case (id, sig) =>
@@ -162,7 +163,7 @@ class TextDedupSpec extends SparkSpec {
       df.orderBy("doc_id").collect()
         .map(r => r.getLong(0) -> (1 to 32).map(r.getLong).toSeq).toMap
     val fast = collect(Dedup.minhashSignaturesTokens(docs, 5, 32))
-    val ref = collect(Dedup.minhashSignaturesTokensPipeline(docs, 5, 32))
+    val ref = collect(TextDedupSpec.minhashSignaturesTokensPipeline(docs, 5, 32))
     assert(fast.keySet == ref.keySet, "both paths must keep the same docs")
     assert(!fast.contains(9001L) && fast.contains(9002L) && !fast.contains(9003L))
     fast.foreach { case (id, sig) =>
@@ -179,7 +180,7 @@ class TextDedupSpec extends SparkSpec {
       df.orderBy("doc_id").collect()
         .map(r => r.getLong(0) -> (1 to 8).map(r.getLong).toSeq).toMap
     val fast2 = collect2(Dedup.minhashSignaturesTokens(wsDocs, 2, 8))
-    val ref2 = collect2(Dedup.minhashSignaturesTokensPipeline(wsDocs, 2, 8))
+    val ref2 = collect2(TextDedupSpec.minhashSignaturesTokensPipeline(wsDocs, 2, 8))
     assert(fast2.keySet == ref2.keySet,
       s"w=2 corpus diverged: fast=${fast2.keySet} ref=${ref2.keySet}")
     assert(fast2.contains(1L) && !fast2.contains(5L) && !fast2.contains(7L))
@@ -325,12 +326,12 @@ class TextDedupSpec extends SparkSpec {
       .toDF("text")
     val rows = docs.select(
       Dedup.simhash64("text").as("fast"),
-      Dedup.simhash64Hof("text").as("ref"))
+      TextDedupSpec.simhash64Hof("text").as("ref"))
       .as[(Long, Long)].collect()
     rows.foreach { case (f, r) => assert(f == r, f"simhash mismatch: $f%016x vs $r%016x") }
     // and on real corpus text
     val real = Tables.documents(spark, sf).limit(50)
-      .select(Dedup.simhash64("text").as("fast"), Dedup.simhash64Hof("text").as("ref"))
+      .select(Dedup.simhash64("text").as("fast"), TextDedupSpec.simhash64Hof("text").as("ref"))
       .as[(Long, Long)].collect()
     real.foreach { case (f, r) => assert(f == r) }
   }
@@ -1197,4 +1198,41 @@ class TextDedupSpec extends SparkSpec {
     assert(m(40L) == 40L && m(41L) == 40L)
     assert(m(20L) == 20L && m(21L) == 20L)
   }
+}
+
+/** The reference spellings the codegen'd dedup kernels are
+  * lockstep-tested against. */
+object TextDedupSpec {
+
+  /** Reference pipeline spelling of [[Dedup.minhashSignatures]]
+    * (explode + k min-aggregates over the shingle index). */
+  def minhashSignaturesPipeline(docs: DataFrame, n: Int, k: Int): DataFrame = {
+    val mins = (0 until k).map(i =>
+      min(xxhash64(lit(i), col("g"))).as(s"s$i"))
+    Dedup.shingleIndex(docs, n).groupBy("doc_id").agg(mins.head, mins.tail: _*)
+  }
+
+  /** Reference pipeline spelling of [[Dedup.minhashSignaturesTokens]]
+    * (explode + k min-aggregates over the token w-gram index). */
+  def minhashSignaturesTokensPipeline(docs: DataFrame, w: Int, k: Int): DataFrame = {
+    val toks = split(trim(col("text")), "\\s+")
+    val idx = Tables.fanOut(docs)
+      .select(col("doc_id"), explode(Dedup.tokenShingles(toks, w)).as("g"))
+    val mins = (0 until k).map(i => min(xxhash64(lit(i), col("g"))).as(s"s$i"))
+    idx.groupBy("doc_id").agg(mins.head, mins.tail: _*)
+  }
+
+  /** Reference HOF spelling of [[Dedup.simhash64]] (interpreted). */
+  def simhash64Hof(textCol: String): Column = expr(
+    s"""aggregate(
+          zip_with(
+            aggregate(
+              transform(split(trim($textCol), '\\\\s+'), t -> xxhash64(t)),
+              array_repeat(CAST(0 AS BIGINT), 64),
+              (acc, h) -> zip_with(acc, sequence(0, 63),
+                (a, b) -> a + CASE WHEN (shiftright(h, b) & 1) = 1 THEN 1 ELSE -1 END)),
+            sequence(0, 63),
+            (v, b) -> CASE WHEN v > 0 THEN shiftleft(CAST(1 AS BIGINT), b)
+                      ELSE CAST(0 AS BIGINT) END),
+          CAST(0 AS BIGINT), (x, y) -> x + y)""")
 }
