@@ -1,24 +1,18 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each catalogue query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    if (args.length != 2) {
+      Console.err.println("usage: graft.Verify <sfDir> <outDir>")
+      sys.exit(2)
+    }
     val Array(sfDir, outDir) = args
     val spark = Session.local()
     new java.io.File(outDir).mkdirs()
-    // dev-loop subset filter, same contract as Bench (driver never sets it)
-    val selected = sys.env.get(Env.Only) match {
-      case Some(re) => SparkEntry.queries.filter(_._1.matches(re))
-      case None => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
-      }
-      finally Caches.releaseAll() // drop per-query cached intermediates
+    Bench.walk("VERIFY", Bench.catalogue(timed = false)) { (name, fn) =>
+      fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

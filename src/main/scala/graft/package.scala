@@ -1,6 +1,6 @@
 package object graft {
   /** Signature of every driver-checkable query: (session, sf dir) => result.
-    * See SparkEntry.queries / Verify / Bench. */
+    * See SparkEntry and Bench.walk. */
   type Q = (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame
 
   /** `.pinned()` — the registered spelling of `.localCheckpoint()` for

@@ -1,35 +1,28 @@
 package graft.tools
 
-import graft.Env
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.execution.FormattedMode
+import graft.Bench
 
-/** Dev-only: dump .explain("formatted") for every query matching a
-  * regex to <outDir>/<query><suffix>.txt — the before/after plan
-  * artifacts the optimization rounds commit under plans/rNN/.
-  * Usage: runMain graft.tools.PlanDump <outDir> <suffix> [regex]
+/** Dev-only: dump .explain("formatted") for every query SPARK_GRAFT_ONLY
+  * selects (else every one) to <outDir>/<query>.txt — the plan artifacts
+  * the optimization rounds commit under plans/rNN/. A before/after pair
+  * is two output directories.
+  * Usage: SPARK_GRAFT_ONLY=<regex> runMain graft.tools.PlanDump <outDir>
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
+    if (args.length != 1) {
+      Console.err.println("usage: graft.tools.PlanDump <outDir>")
+      sys.exit(2)
+    }
     val outDir = args(0)
-    val suffix = args(1)
-    val re = if (args.length > 2) args(2) else ".*"
-    val sfDir = sys.env.getOrElse(Env.SfDir, "/root/testdata/sf0.1")
     val spark = graft.Session.local()
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(_._1.matches(re))
-      .foreach { case (name, fn) =>
-        try {
-          val df = fn(spark, sfDir)
-          val txt = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(outDir, s"$name$suffix.txt"),
-            txt.getBytes("UTF-8"))
-        } catch {
-          case t: Throwable =>
-            System.err.println(s"PLANDUMP FAIL $name: ${t.getClass.getSimpleName}: ${t.getMessage}")
-        } finally graft.Caches.releaseAll()
-      }
+    Files.createDirectories(Paths.get(outDir))
+    Bench.walk("PLANDUMP", Bench.catalogue(timed = false)) { (name, fn) =>
+      val txt = fn(spark, Bench.sfDir).queryExecution.explainString(FormattedMode)
+      Files.write(Paths.get(outDir, s"$name.txt"), txt.getBytes("UTF-8"))
+    }
     spark.stop()
   }
 }

@@ -1,47 +1,48 @@
 package graft.tools
 
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import graft.Env
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.Bench
 
-/** Dev-only: run one query (warm, noop sink) and print the FINAL
-  * executed plan tree with each operator's SQLMetrics — a UI-less way
-  * to find where the time goes. Cached intermediates are followed into
-  * their InMemoryRelation build plans.
-  * Usage: runMain graft.tools.QueryMetrics <queryName>
+/** Dev-only: run each query SPARK_GRAFT_ONLY selects (else every one)
+  * through the noop sink, after Bench's warmup and fixture builds, and
+  * print its FINAL executed plan tree with each operator's SQLMetrics —
+  * a UI-less way to find where the time goes. Cached intermediates are
+  * followed into their InMemoryRelation build plans.
+  * Usage: SPARK_GRAFT_ONLY=<regex> runMain graft.tools.QueryMetrics
   */
 object QueryMetrics {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val sfDir = sys.env.getOrElse(Env.SfDir, "/root/testdata/sf0.1")
     val spark = graft.Session.local()
-    def consume(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    val fn = graft.SparkEntry.queries(name)
-    try { consume(fn(spark, sfDir)) } finally graft.Caches.releaseAll() // warm
+    val queries = Bench.catalogue(timed = false)
+    Bench.prepare("METRICS", spark, Bench.sfDir, queries)
     // the noop write runs its OWN QueryExecution — capture it via a
     // listener, or the walked plan shows pristine (zero) metrics
-    @volatile var captured: org.apache.spark.sql.execution.QueryExecution = null
-    spark.listenerManager.register(
-      new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-          captured = qe
-        override def onFailure(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-      })
-    val t0 = System.nanoTime()
-    val df = fn(spark, sfDir)
-    val t1 = System.nanoTime()
-    consume(df)
-    val t2 = System.nanoTime()
-    // listener fires asynchronously; a short poll is enough for a dev tool
-    var waited = 0
-    while (captured == null && waited < 50) { Thread.sleep(100); waited += 1 }
-    println(f"BUILD ${(t1 - t0) / 1e9}%.3f s  EXEC ${(t2 - t1) / 1e9}%.3f s")
+    @volatile var last: QueryExecution = null
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, d: Long): Unit = last = qe
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    Bench.walk("METRICS", queries) { (name, fn) =>
+      val df = fn(spark, Bench.sfDir)
+      Bench.consume(df)
+      // the listener fires asynchronously; the write's execution is the
+      // first one created after the frame's, so earlier queries' late
+      // events are skipped. A short poll is enough for a dev tool.
+      def written = Option(last).filter(_.id > df.queryExecution.id)
+      var waited = 0
+      while (written.isEmpty && waited < 50) { Thread.sleep(100); waited += 1 }
+      println(s"===== $name =====")
+      printPlan(written.getOrElse(df.queryExecution).executedPlan)
+    }
+    spark.stop()
+  }
+
+  private def printPlan(root: SparkPlan): Unit = {
     val seen = new java.util.IdentityHashMap[AnyRef, AnyRef]()
-    def walk(p: SparkPlan, depth: Int): Unit = {
+    def go(p: SparkPlan, depth: Int): Unit = {
       if (seen.containsKey(p)) return
       seen.put(p, p)
       val interesting = p.metrics.toSeq
@@ -57,18 +58,13 @@ object QueryMetrics {
         }
       println("  " * depth + p.nodeName + "  " + interesting.mkString(" "))
       p match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan, depth + 1)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          walk(q.plan, depth + 1)
-        case im: InMemoryTableScanExec =>
-          walk(im.relation.cachedPlan, depth + 1)
-        case _ => p.children.foreach(walk(_, depth + 1))
+        case a: AdaptiveSparkPlanExec => go(a.executedPlan, depth + 1)
+        case q: QueryStageExec => go(q.plan, depth + 1)
+        case im: InMemoryTableScanExec => go(im.relation.cachedPlan, depth + 1)
+        case _ => p.children.foreach(go(_, depth + 1))
       }
-      p.subqueries.foreach(walk(_, depth + 1))
+      p.subqueries.foreach(go(_, depth + 1))
     }
-    walk(if (captured != null) captured.executedPlan
-         else df.queryExecution.executedPlan, 0)
-    graft.Caches.releaseAll()
-    spark.stop()
+    go(root, 0)
   }
 }
