@@ -83,7 +83,7 @@ object Main {
     val tickerRoot = s"$dataDir/tickers"
     val landing = s"$dataDir/landing"
     def landingHasData: Boolean = TickerStore.holdsDataFile(spark, landing)
-    lazy val landingSchema = spark.read.parquet(landing).schema
+    lazy val landingSchema = Tables.parquet(spark, landing).schema
     Stages(
       sync = () => {
         val t = Ingest.loadTickersWithFallback(spark, Seq.empty)

@@ -3,8 +3,8 @@ package graft
 /** Per-process scratch roots for query-built store fixtures (persisted
   * IVF indexes, range/Z-order/bloom skipping stores).
   *
-  * Three properties, each fixing a concrete defect class (r7 ADVICE on
-  * q127 + verdict #5):
+  * Three properties, each fixing a concrete defect class (q127's store
+  * collisions and stale stores):
   *  - paths derive from the SANITIZED full source-dir path, never its
   *    hashCode — two different sf dirs can no longer collide onto one
   *    store;
@@ -37,7 +37,7 @@ object Scratch {
 
   /** Stable per-(process, kind, source-dir) store path. The sanitized
     * readable segment is for humans; INJECTIVITY comes from the md5
-    * digest of the RAW path (r8 ADVICE: sanitization alone maps every
+    * digest of the RAW path (sanitization alone maps every
     * non-[A-Za-z0-9._-] char to '_', so "/a/b" and "/a_b" collided —
     * and ensure() would then silently serve the first dir's prebuilt
     * store for the second). */

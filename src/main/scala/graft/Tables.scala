@@ -1,14 +1,19 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.BasicFileAttributes
+import java.util.concurrent.TimeUnit
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated synthetic tables (TESTDATA.md,
   * FIXTURES.md §B). One parquet file per table under the sf dir.
   *
-  * Scans stay plain `spark.read.parquet` so Catalyst's vectorized parquet
-  * reader, predicate pushdown and column pruning all apply; callers
-  * `select` only what they need so `ReadSchema` stays narrow.
+  * Scans stay plain parquet scans ([[parquet]]) so Catalyst's vectorized
+  * parquet reader, predicate pushdown and column pruning all apply;
+  * callers `select` only what they need so `ReadSchema` stays narrow.
   */
 object Tables {
   def region(s: SparkSession, dir: String): DataFrame    = load(s, dir, "region")
@@ -54,7 +59,94 @@ object Tables {
   def embeddings(s: SparkSession, dir: String): DataFrame = load(s, dir, "embeddings")
 
   private def load(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    parquet(s, s"$dir/$name.parquet")
+
+  /** The parquet files or directories at `paths`, read with the schema
+    * Spark infers for them: the engine's one read of parquet without an
+    * explicit schema. Spark infers a schema by reading a footer in a
+    * Spark job, on every read, even of one file. This read infers it once
+    * per JVM for the same files under the same settings, then reads with
+    * `.schema(inferred)`, which launches no job.
+    *
+    * The memo is JVM-wide, so a new session (or a new symlink to the same
+    * files) reuses it. Its key ([[SchemaKey]]) is the identity of the
+    * visible data files plus the session settings that change inference,
+    * so a rewritten or added file infers again. A path that does not
+    * exist is read as Spark reads it, which throws Spark's own error. */
+  def parquet(s: SparkSession, paths: String*): DataFrame =
+    schemaKey(s, paths) match {
+      case None => s.read.parquet(paths: _*)
+      case Some(key) => Option(schemas.synchronized(schemas.get(key))) match {
+        case Some(schema) => s.read.schema(schema).parquet(paths: _*)
+        case None =>
+          val df = s.read.parquet(paths: _*)
+          schemas.synchronized(schemas.put(key, df.schema))
+          df
+      }
+    }
+
+  /** What a parquet read's inferred schema depends on.
+    *
+    * `files`: per given path (globs expanded), the root's location, then
+    * each data file under it, listed recursively with
+    * [[sources.TickerStore]]'s visibility rule (Spark's file index skips
+    * the same `_`/`.` names), as its path below the root (partition
+    * directory names become columns) and its identity. A local file's
+    * identity is its real path (symlinks resolved), its file key (device
+    * and inode) when the file system has one, its length and its mtime
+    * in nanoseconds; elsewhere it is the path, length and mtime. Parquet
+    * summary files (`_metadata`, `_common_metadata`), which Spark skips
+    * writing by default, are not part of it.
+    *
+    * `confs`: every `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*`
+    * value set on the session, plus case sensitivity, partition-type
+    * inference and the session time zone. */
+  private case class SchemaKey(confs: Seq[(String, String)], files: Seq[String])
+
+  private val InferenceConfs = Seq("spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled", "spark.sql.session.timeZone")
+
+  /** None when a path matches nothing. */
+  private def schemaKey(s: SparkSession, paths: Seq[String]): Option[SchemaKey] = {
+    val perPath = paths.map { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val local = fs.getScheme == "file"
+      def where(st: FileStatus): String =
+        if (local) Paths.get(st.getPath.toUri).toRealPath().toString else st.getPath.toString
+      def id(st: FileStatus): String =
+        if (!local) s"${where(st)}|${st.getLen}|${st.getModificationTime}"
+        else {
+          val a = Files.readAttributes(Paths.get(st.getPath.toUri), classOf[BasicFileAttributes])
+          s"${where(st)}|${a.fileKey}|${a.size}|${a.lastModifiedTime.to(TimeUnit.NANOSECONDS)}"
+        }
+      def leaves(st: FileStatus): Seq[FileStatus] =
+        if (st.isFile) Seq(st)
+        else sources.TickerStore.visibleChildren(fs, st.getPath).sortBy(_.getPath.getName)
+          .flatMap(leaves)
+      Option(fs.globStatus(path)).getOrElse(Array.empty[FileStatus]).toSeq.flatMap { root =>
+        val under = root.getPath.toString
+        where(root) +: leaves(root).map(f => s"${f.getPath.toString.stripPrefix(under)}>${id(f)}")
+      }
+    }
+    if (perPath.exists(_.isEmpty)) None
+    else {
+      val confs = s.conf.getAll.toSeq.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+      } ++ InferenceConfs.map(k => k -> s.conf.getOption(k).orNull)
+      Some(SchemaKey(confs.sorted, perPath.flatten))
+    }
+  }
+
+  /** Entries of the memo behind [[parquet]]. */
+  private val SchemaMemoCapacity = 256
+
+  /** Inferred schemas by [[SchemaKey]], JVM-wide; past
+    * [[SchemaMemoCapacity]] entries the least recently used goes. */
+  private val schemas = new java.util.LinkedHashMap[SchemaKey, StructType](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[SchemaKey, StructType]): Boolean =
+      size > SchemaMemoCapacity
+  }
 
   /** Spread a small-file scan across all cores — CONDITIONALLY. A
     * single parquet file arrives as ONE partition; any CPU-heavy
@@ -74,7 +166,7 @@ object Tables {
     * byte-based coalescing would serialize them on 1-2 cores.
     *
     * `nonSelectiveFilter`: Filter is EXCLUDED from the no-op shape by
-    * default (r6 ADVICE law, re-pinned r13) — a selective pushed
+    * default — a selective pushed
     * filter over a many-file scan keeps the partition COUNT while
     * emptying most partitions, and non-CBO plan stats pass the child
     * size through a Filter unchanged, so NO stats gate can see
@@ -129,9 +221,8 @@ object Tables {
     * construction, so planning `.rdd` is safe (no query stage runs)
     * and its partition count reflects the scan's file layout.
     *
-    * Filter is deliberately EXCLUDED from the no-op shape (r6, ADVICE;
-    * the r12 closing-tree commit briefly re-added it and went
-    * suite-red — reverted r13): a selective pushed filter over a
+    * Filter is deliberately EXCLUDED from the no-op shape (re-adding it
+    * turns the suite red): a selective pushed filter over a
     * many-file scan keeps the scan's partition COUNT while emptying
     * most partitions, so the count gate would pass and the downstream
     * CPU-heavy work would serialize on the few non-empty ones — the

@@ -165,15 +165,15 @@ object Dedup {
     // the build is scoped to SURVIVOR docs — candidate pairs touch a
     // small fraction of a large corpus, so a full-corpus array build
     // (and its ~gramSize× cache) would be the largest avoidable cost of
-    // the pipeline at 100 TB (r5 verdict headline). Under the budget the
-    // full-corpus build wins instead: the fixture-scale A/B (r6,
-    // interleaved, sf0.1) measured the scoped shape ~1 s SLOWER because
+    // the pipeline at 100 TB. Under the budget the
+    // full-corpus build wins instead: the fixture-scale A/B
+    // (interleaved, sf0.1) measured the scoped shape ~1 s SLOWER because
     // its extra query stages (pair-cache barrier, id union, semi-join)
     // cost more than the ~0.5 s of kernel+cache they save on a 60k-doc
     // corpus. q86 pins the scoped shape on the real corpus.
     //
-    // GRAM REPRESENTATION (r13, guide §1.2 per-task work / §2.3
-    // narrower types): for n <= 3 the grams are PACKED LONGS
+    // GRAM REPRESENTATION (less per-task work, narrower types): for
+    // n <= 3 the grams are PACKED LONGS
     // (21-bit code points — injective on valid UTF-8), so the per-pair
     // merge compares primitives and the cached arrays are 8 bytes/gram;
     // counts and therefore the pair set + jaccard values are
@@ -234,7 +234,7 @@ object Dedup {
     val inter = expr("sorted_intersect_count(a_sh, b_sh)")
     val uni = size(col("a_sh")) + size(col("b_sh")) - inter
     withSh
-      // LENGTH FILTER (r10 verdict #5 — the q37 profile showed the
+      // LENGTH FILTER (the q37 profile showed the
       // two-pointer merge is ~58% of the pipeline over ~1M est-
       // surviving pairs): J = I/(|A|+|B|−I) ≤ min/max, so J ≥ t
       // REQUIRES min(|A|,|B|) ≥ t·max(|A|,|B|) — the classic size
@@ -243,7 +243,7 @@ object Dedup {
       // so mismatched-length pairs never pay the merge kernel; implied
       // by the final predicate, so the pair set is bit-identical.
       // Spelled with the SAME fp-division shape as the final
-      // `inter/uni >= threshold` predicate (r11 advice): fp division
+      // `inter/uni >= threshold` predicate: fp division
       // is monotone and min/max >= I/union pointwise (I <= min,
       // union >= max), so min/max >= t whenever I/union >= t with the
       // identical rounding — the product spelling (`min*1.0 >= t*max`)
@@ -298,7 +298,7 @@ object Dedup {
     // evaluate the kernel twice per row (see minhashSignatures). The
     // predicate is exactly the kernel's null condition (< w tokens),
     // so no null signatures survive; TextDedupSpec pins the
-    // tokenization parity this relies on. ACCEPTED COST (r5 ADVICE):
+    // tokenization parity this relies on. ACCEPTED COST:
     // this regex split tokenizes every doc once just to count, and the
     // kernel re-tokenizes — ~2× tokenize on the signature stage. The
     // alternatives are worse: a post-projection IS NOT NULL filter gets
@@ -493,7 +493,7 @@ object Dedup {
     val spark = batch.sparkSession
     val rows = k / bands
     require(rows * bands == k, s"k=$k must split into $bands bands")
-    val storeSigs = spark.read.parquet(storeDir)
+    val storeSigs = Tables.parquet(spark, storeDir)
     val batchSigs = graft.Caches.cached(minhashSignaturesTokens(batch, w, k))
     val carry = (0 until k).map(i => s"s$i")
     val storeMelt = meltedBands(storeSigs, bands, rows, carry)
@@ -640,8 +640,8 @@ object Dedup {
     // over (a_id, b_id) qualifies). Then the symmetrized union is
     // ALREADY distinct — branch 1 has src < dst, branch 2 src > dst —
     // and the defensive dedup below would burn a pair-stream-sized
-    // exchange + hash aggregate to remove nothing (guide §2.4: remove
-    // shuffles on data already unique). Correctness never depends on
+    // exchange + hash aggregate to remove nothing (no shuffle on data
+    // already unique). Correctness never depends on
     // it: components of a multigraph equal components of its support,
     // so a wrong vouch costs loop work, not answers; the default stays
     // safe for un-vouched streams (e.g. incrementalComponents'
@@ -687,7 +687,7 @@ object Dedup {
         })
       changed = updated.filter(col("new_label") < col("label")).count()
       // round N's blocks are dead once N+1 is materialized and the
-      // changed-count read — release now, not at JVM exit (r10 #1)
+      // changed-count read — release now, not at JVM exit
       graft.Caches.unpin(pinned)
       pinned = updated
       labels = updated.select(col("id"), col("new_label").as("label"))
@@ -900,8 +900,8 @@ object Dedup {
     // (LSH candidates are probabilistic) + the TextDedupSpec lockstep
     // law: output == the full-corpus q65-parameter pipeline's pairs
     // restricted to pairs touching >= 1 batch doc. The store builds
-    // ONCE per process (Scratch — collision-free per-run path, r7
-    // ADVICE/#5): rep 1 pays the cold store write, rep 2+ times the
+    // ONCE per process (Scratch — collision-free per-run path): rep
+    // 1 pays the cold store write, rep 2+ times the
     // batch side only, which is exactly what a nightly run pays.
     "q88_incremental_minhash" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).select("doc_id", "text")
@@ -1043,7 +1043,7 @@ object Dedup {
     * chosen by md5(cluster_id) thresholds. Shared by q112 and the
     * straddle-freedom / route-equality laws in TextDedupSpec.
     *
-    * PAIR ROUTE (r8 verdict #1): the default candidate source is the
+    * PAIR ROUTE: the default candidate source is the
     * PRODUCTION one — [[minhashNearDupsTokens]], i.e. q86's
     * budget-routed narrow+salted LSH survivors join followed by the
     * exact-Jaccard verify — because train/val/test assembly is a

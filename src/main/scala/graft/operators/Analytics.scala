@@ -35,7 +35,7 @@ object Analytics {
         .select("u", "v")
         .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** Distinct customer⇄supplier trade edge list as a MATERIALIZED
@@ -58,7 +58,7 @@ object Analytics {
         .distinct()
         .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** Same store discipline for the customer→part purchase edge list
@@ -74,7 +74,7 @@ object Analytics {
         .distinct()
         .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** Distinct co-order pair counts (u < v, c = co-ordering orders) —
@@ -126,7 +126,7 @@ object Analytics {
     * iterator — flatMapSortedGroups gives (ts, event_id)-ordered rows
     * without materializing the journey array, so state per user is
     * O(1) (a letter, a counter, a run length, a flag) regardless of
-    * how many events one user owns. This is the r9 verdict #2 fix:
+    * how many events one user owns. By contrast,
     * the collect_list spelling ([[sequencePatternCollect]]) bounds
     * its aggregation row only by per-user activity — a hot key at
     * 100× data is a single-task OOM; the sorted-iterator DFA rides
@@ -193,7 +193,7 @@ object Analytics {
     // `distinctEdges`: caller vouches the edge list is duplicate-free
     // (e.g. derived injectively from a store that was written
     // distinct), so the defensive dedup — an edge-sized exchange +
-    // hash aggregate at every scale — removes nothing (guide §2.4).
+    // hash aggregate at every scale — removes nothing.
     // Unlike components(), PageRank's ANSWER does depend on edge
     // multiplicity (degrees), so the vouch must be structural, never
     // statistical; default stays the safe dedup.
@@ -233,7 +233,7 @@ object Analytics {
       var delta = Double.MaxValue
       // Round 0's dangling mass (the Page/Brin correction term) is a
       // one-time bootstrap aggregate; EVERY LATER round's is
-      // piggybacked on that round's delta job (r11 verdict #6) — one
+      // piggybacked on that round's delta job — one
       // driver action per round, not two: both are 1-row aggregates
       // over the same id-joined rank frames, so the sink-mass sum
       // rides the delta scan for free.
@@ -267,7 +267,7 @@ object Analytics {
         delta = stats.getDouble(0)
         dMass = stats.getDouble(1)
         // round N's blocks are dead once round N+1 is materialized and
-        // the delta read — release them now, not at JVM exit (r10 #1)
+        // the delta read — release them now, not at JVM exit
         graft.Caches.unpin(pinned)
         pinned = updated
         ranks = updated.select(col("id"), col("new_rank").as("rank"))
@@ -291,7 +291,7 @@ object Analytics {
       .as[(Long, Long)]
       .repartition(1)
       .mapPartitions { it =>
-        // unpack to PRIMITIVE long arrays immediately (r13, guide §1.2):
+        // unpack to PRIMITIVE long arrays immediately:
         // the former tuple-array sort + boxed flatMap/distinct spent
         // more time boxing than the whole power iteration. One box per
         // edge (the Dataset iterator) is unavoidable; everything after
@@ -317,7 +317,7 @@ object Analytics {
           val n = u + 1
           val ids = java.util.Arrays.copyOf(ids0, n)
           // primitive binary search, not a boxed Long->Int map: the
-          // id->index translation runs twice per edge (r13, guide §1.2)
+          // id->index translation runs twice per edge
           def idx(x: Long): Int = java.util.Arrays.binarySearch(ids, x)
           // deterministic fold order, primitively: (srcIdx, dstIdx)
           // packed into one long and sorted — ids are ascending, so
@@ -434,8 +434,8 @@ object Analytics {
     }),
 
     // Hierarchical rollup: year → priority with grouping flags.
-    // PRE-AGGREGATED before the Expand (r13, guide §2.3 "aggregate
-    // before you shuffle"): rollup/cube multiply their INPUT by the
+    // PRE-AGGREGATED before the Expand (aggregate before you
+    // shuffle): rollup/cube multiply their INPUT by the
     // grouping-set count (Expand), so the naive spelling expands every
     // fact row 3×/4×. Count and the exact decimal sum are both
     // decomposable, so a plain (keys → partials) aggregate first makes
@@ -536,7 +536,7 @@ object Analytics {
     // estimate's error bound is asserted in AnalyticsSpec.
     "q29_approx_distinct" -> ((s, dir) => {
       // exact and sketch SPLIT into two aggregates joined on the
-      // |statuses|-sized result (r13, guide §2.3): mixing countDistinct
+      // |statuses|-sized result: mixing countDistinct
       // with approx_count_distinct in ONE agg makes the planner's
       // distinct-rewrite evaluate the HLL partial at the (status,
       // custkey) grain — one 3.4 KB sketch buffer PER DISTINCT KEY
@@ -739,7 +739,7 @@ object Analytics {
         .limit(20)
     }),
 
-    // PAGERANK TO CONVERGENCE (r9 verdict #6 — q114 is the unrolled
+    // PAGERANK TO CONVERGENCE (q114 is the unrolled
     // 2-round demo; this is the operator): damped degree-normalized
     // rank over the same bipartite customer⇄supplier trade graph,
     // iterated until the L1 delta crosses tol, with a maxIter guard
@@ -907,7 +907,7 @@ object Analytics {
     // drop share in fixed-point. Scale shape: the running high-water
     // mark IS an exclusive prefix-max over the arrival order, spelled
     // as exactly that via the shared [[Prefix.exclusiveMax]] operator
-    // (r7 verdict #2 — this replaces the hand-rolled 64Ki-block
+    // (this replaces the hand-rolled 64Ki-block
     // two-phase): the operator blocks on event_id DIV span, recurses
     // over block maxes until the top level fits one task, and caps
     // every window task at span rows for ANY corpus size. The rollup
@@ -946,7 +946,7 @@ object Analytics {
         .distinct())
       val n = it.select(countDistinct(col("ok")).as("n_orders"))
       val cnt = graft.Caches.cached(it.groupBy("pk").agg(count(lit(1)).as("c")))
-      // A-PRIORI SUPPORT PREFILTER (r10 verdict #3): a pair needs
+      // A-PRIORI SUPPORT PREFILTER: a pair needs
       // c_ab >= 3, and c_ab <= min(c_a, c_b) — so a part with TOTAL
       // count < 3 can never appear in any surviving pair. Semi-joining
       // the basket stream against the frequent-part set BEFORE the
@@ -959,7 +959,7 @@ object Analytics {
       val a = itF.select(col("ok"), col("pk").as("part_a"))
       val b = itF.select(col("ok").as("ok2"), col("pk").as("part_b"))
       val pairs = a.join(b, col("ok") === col("ok2") && col("part_a") < col("part_b"))
-      // r14 (guide §2.3 "narrower types"): the pair reduce keys on ONE
+      // Narrower types: the pair reduce keys on ONE
       // packed long instead of two — half the aggregate key bytes and
       // one comparison per probe on the query's hottest aggregate
       // (QueryMetrics: the 3 pair-grain HashAggregates carried
@@ -1053,8 +1053,8 @@ object Analytics {
     // day of age at the user's LAST active day. The naive spelling is
     // a per-user recurrence (q198's scan); with a CONSTANT per-day
     // decay the weights TELESCOPE to 0.5^(last−day) — a closed form
-    // that needs no recurrence at all. Cross-engine stability (r9
-    // ADVICE corrected the old "exact exponent shift" claim): v·0.5^k
+    // that needs no recurrence at all. Cross-engine stability (not
+    // an "exact exponent shift"): v·0.5^k
     // is NOT generally representable in 4 decimal digits — each term
     // IS rounded by the DECIMAL(18,4) cast. Correctness holds because
     // 0.5^k is dyadic, so both engines compute the IDENTICAL double
@@ -1085,7 +1085,7 @@ object Analytics {
     // directly to a purchase" (the regex vvvp over the first-letter
     // journey) — contiguity that window functions would need
     // self-joins per step to express (q70's funnel checks ORDER of
-    // firsts). Scale shape (r9 verdict #2): the pattern runs as a
+    // firsts). Scale shape: the pattern runs as a
     // STREAMED DFA over each user's sorted event iterator
     // ([[journeySummaries]] — flatMapSortedGroups, O(1) state per
     // user), so the journey is NEVER materialized; the old
@@ -1163,7 +1163,7 @@ object Analytics {
     // orders and the batch split is BY ORDER (the q93 delta
     // convention), so no order's pairs straddle the cut. The merge
     // writes a SIBLING generation and serves from it — never an
-    // overwrite of the directory being read (r10 ADVICE: the old
+    // overwrite of the directory being read (the old
     // checkpoint-pin spelling made correctness hinge on eager
     // materialization + block survival); at production scale the
     // rewrite is partition-scoped to touched key ranges (the q226
@@ -1175,20 +1175,19 @@ object Analytics {
       val path = graft.Scratch.dirFor("copurchase_inc", dir)
       graft.Scratch.ensure(path) {
         // the merge WRITES TO A SIBLING generation and then FLIPS A
-        // MANIFEST pointer at it (r10 ADVICE): never overwrite the
+        // MANIFEST pointer at it: never overwrite the
         // directory being read — correctness must not hinge on
         // checkpoint blocks surviving eviction. The flip is the last
         // step, so a reader that raced the merge still resolves gen0
-        // whole; gen0 is reclaimed only AFTER the flip (r11 ADVICE:
-        // the earlier spelling claimed a swap but served gen1 directly
-        // and retained the stale gen0). A cluster deployment does the
+        // whole; gen0 is reclaimed only AFTER the flip, never
+        // retained stale. A cluster deployment does the
         // same with an atomic manifest put (the q226 spelling).
         val gen0 = s"$path/gen0"
         val gen1 = s"$path/gen1"
         pairCounts(li.filter(col("l_orderkey") % 10 =!= 0))
           .write.mode("overwrite").parquet(gen0)
         StoreManifest.flip(path, "gen0")
-        s.read.parquet(gen0)
+        Tables.parquet(s, gen0)
           .unionByName(pairCounts(li.filter(col("l_orderkey") % 10 === 0)))
           .groupBy("u", "v").agg(sum(col("c")).as("c"))
           .write.mode("overwrite").parquet(gen1)
@@ -1196,7 +1195,7 @@ object Analytics {
         StoreManifest.reclaim(path, "gen0")
       }
       trianglesPerPart(graft.Caches.cached(
-        s.read.parquet(s"$path/${StoreManifest.current(path)}")
+        Tables.parquet(s, s"$path/${StoreManifest.current(path)}")
           .filter(col("c") >= 2).select("u", "v")))
     }),
 
@@ -1230,7 +1229,7 @@ object Analytics {
       while (h <= 4 && !frontier.isEmpty) {
         val visited = levels.map(_.select("n")).reduce(_ unionAll _)
         // pin, don't raw-checkpoint: every level lives until the final
-        // union is consumed, then releases with the query (r10 #1)
+        // union is consumed, then releases with the query
         val next = graft.Caches.pin(frontier.join(adj, col("n") === col("src"))
           .select(col("dst").as("n")).distinct()
           .join(visited, Seq("n"), "left_anti")
@@ -1339,8 +1338,8 @@ object Analytics {
         .orderBy("cohort")
     }),
 
-    // DANGLING-MASS PROPAGATION, ORACLE-CHECKED (r10 verdict #6 made
-    // the pageRank operator redistribute sink mass; this query puts the
+    // DANGLING-MASS PROPAGATION, ORACLE-CHECKED (the pageRank
+    // operator redistributes sink mass; this query puts the
     // SAME algebra under the DuckDB hash gate, which the fixpoint q214
     // cannot — a loop isn't one SQL statement, but two UNROLLED rounds
     // are): the customer→part purchase graph is genuinely directed with
@@ -1353,7 +1352,7 @@ object Analytics {
     // built once and cached; each round is one edge-keyed join + one
     // node-sized aggregate; dangling totals and the node count are
     // 1-row broadcasts (the q142 stats shape).
-    // r14 (guide §1.2 step 1 "the distributed algorithm"): the two
+    // The distributed algorithm: the two
     // unrolled generic rounds collapse into ONE edge-keyed
     // join+aggregate, using structural facts of THIS query's own graph
     // spelling (not data assumptions): out-edges exist exactly for the
@@ -1409,8 +1408,8 @@ object Analytics {
   )
 
   /** The GENERIC two-unrolled-rounds dangling-mass spelling q253 used
-    * through r13 — kept as the reference twin for the AnalyticsSpec law
-    * that proves the collapsed r14 spelling bit-identical. */
+    * before its collapsed spelling — kept as the reference twin for the
+    * AnalyticsSpec law that proves the collapsed spelling bit-identical. */
   private[graft] def danglingMassGeneric(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     val e = graft.Caches.cached(custPartEdges(s, dir))

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * aggregate; every merge round then runs on the (word, count) VOCAB
   * table — orders of magnitude smaller than the corpus and the reason
   * production BPE trainers are feasible at all. Pair counts are
-  * DELTA-MAINTAINED across rounds (r7 verdict #7): the full adjacency
+  * DELTA-MAINTAINED across rounds: the full adjacency
   * aggregate runs once, and each round only re-counts the pairs of
   * words that CONTAIN the last merge — so per-round cost is
   * touched-words-sized, which is what lets nMerges scale past demo
@@ -89,8 +89,8 @@ object Bpe {
     x.length < y.length
   }
 
-  /** Single-task merge loop for vocabs under the plan-stat budget (r13,
-    * guide §1.2/§2.4): the distributed loop pays ~3 jobs PER ROUND
+  /** Single-task merge loop for vocabs under the plan-stat budget: the
+    * distributed loop pays ~3 jobs PER ROUND
     * (argmax collect + two eager checkpoints) no matter how small the
     * vocab — on a demo-sized vocab that is pure scheduling overhead,
     * the same fixed-cost-per-round problem [[graft.dedup.Dedup]] solves
@@ -164,7 +164,7 @@ object Bpe {
       return trainMergesSingleTask(spark, wordFreq, nMerges)
     // pin both tables once; each round's lineage is then one delta deep
     // (Caches.pin, not raw localCheckpoint: superseded rounds release
-    // mid-loop and whatever survives releases at query end — r10 #1)
+    // mid-loop and whatever survives releases at query end)
     var vocab = graft.Caches.pin(symVocab(spark, wordFreq))
     var counts = graft.Caches.pin(pairCounts(vocab))
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
@@ -253,7 +253,7 @@ object Bpe {
       .filter(length(col("word")) > 0)
       .groupBy("word").agg(count(lit(1)).as("cnt"))
 
-  /** Persist the trained tokenizer (r9 verdict #3): the 10-round merge
+  /** Persist the trained tokenizer: the 10-round merge
     * training is TRAINED STATE, like the MinHash signature store — in
     * production the tokenizer is an artifact read from a store, not
     * retrained inside every encode job. Runs once per (process,
@@ -273,7 +273,7 @@ object Bpe {
     * (nMerges rows), the tokenizer-load step of every encode job. */
   def storedMerges(s: SparkSession, dir: String): Seq[(String, String)] = {
     import s.implicits._
-    s.read.parquet(s"${mergeStoreDir(s, dir)}/merges")
+    Tables.parquet(s, s"${mergeStoreDir(s, dir)}/merges")
       .orderBy("rank").select("left", "right")
       .as[(String, String)].collect().toSeq
   }
@@ -310,7 +310,7 @@ object Bpe {
         .filter(length(col("word")) > 0)
       val wf = graft.Caches.cached(
         words.groupBy("word").agg(count(lit(1)).as("cnt")))
-      // tokenizer-as-artifact (r9 verdict #3): encode against the
+      // tokenizer-as-artifact: encode against the
       // STORED merge table; training happens once in the store build
       val merges = storedMerges(s, dir)
       val encoded = wf.select(col("word")).as[String].map { w =>

@@ -484,13 +484,13 @@ object TimeSeries {
         // base state from 4/5 of events, then tonight's 1/5 merged in
         dailyOf(ev.filter(col("event_id") % 5 =!= 0))
           .write.mode("overwrite").parquet(s"$d/state_base")
-        s.read.parquet(s"$d/state_base")
+        Tables.parquet(s, s"$d/state_base")
           .unionByName(dailyOf(ev.filter(col("event_id") % 5 === 0)))
           .groupBy("event_type", "cohort", "day")
           .agg(sum(col("y")).as("y"))
           .write.mode("overwrite").parquet(s"$d/state")
       }
-      val pts = s.read.parquet(s"$d/state")
+      val pts = Tables.parquet(s, s"$d/state")
         .withColumn("x",
           datediff(col("day"), lit("1970-01-01").cast("date")).cast("long"))
       pts.groupBy("event_type", "cohort")

@@ -97,7 +97,7 @@ object Similarity {
     // the probe side is STATS-GATED, not hinted unconditionally:
     // isQuery is an arbitrary Column, so a predicate selecting a
     // corpus-scale subset would otherwise force a never-demoted
-    // corpus×tables×(bits+1) broadcast (r5 ADVICE — the same hazard
+    // corpus×tables×(bits+1) broadcast (the same hazard
     // maybeBroadcast guards everywhere else). The gate sees the corpus
     // LEAF times the known fan-out factor (filter selectivity is
     // invisible to non-CBO stats, so it errs corpus-sized); where the
@@ -224,7 +224,7 @@ object Similarity {
                                      dims: Int): DataFrame =
     lloydAssignKeep(e0, cents, dims, Nil)
 
-  /** r14 (guide §2.4 "remove shuffles outright"): the centroid table is
+  /** Remove the shuffle outright: the centroid table is
     * BOUNDED (nCells rows — 8/16 in every caller, including the
     * store-read append path), so inline it as literals and assign in
     * ONE stream-through projection. The former shape — corpus×nCells
@@ -397,7 +397,7 @@ object Similarity {
     // (Lv et al.'s multiprobe trick); exact cosine re-rank over the
     // union. (Approximate ⇒ no SQL oracle; recall asserted in
     // SimilaritySpec against q38.)
-    // Sizing, measured on the fixture (RecallSweep, r5): this corpus's
+    // Sizing, measured on the fixture (RecallSweep): this corpus's
     // true top-5 neighbors sit at modest cosine (~0.4-0.6), where
     // single-probe tables waste candidates — plain 24-table×5-bit needs
     // 54% of the corpus as candidates for recall 0.76, while multiprobe
@@ -475,7 +475,7 @@ object Similarity {
     // q43 computation (parity + partition-pruning asserted in
     // SimilaritySpec on THIS query's plan), so rows-only like q43.
     // Bench note: the index builds ONCE per process (Scratch.ensure —
-    // collision-free per-run path, r7 ADVICE/#5), so rep 1 pays the
+    // collision-free per-run path), so rep 1 pays the
     // cold build and rep 2+ times SERVING — production amortizes the
     // build across every query after it, and the bench line now
     // reflects that.
@@ -542,7 +542,7 @@ object Similarity {
     // survivor pairs; accounting aggregates before joining.
     "q90_semantic_dedup" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      // r14: assignment keeps the embedding column inline, so the former
+      // Assignment keeps the embedding column inline, so the former
       // e ⋈ lloydAssign(e) join-back (one corpus exchange each side at
       // scale) is gone — see lloydAssignKeep
       val withCell = graft.Caches.cached(
@@ -992,8 +992,8 @@ object Similarity {
     // by ONE map-side-combined (vec, subspace) argmin; serving joins
     // codes to the 20480-row broadcast distance table on (subspace,
     // code) and sums per (query, vec) — one exchange; the top-10 rank
-    // compiles to WindowGroupLimit. Serving rides the PERSISTED index
-    // (r9 verdict #1): [[writePqIndex]] trains codebooks and encodes
+    // compiles to WindowGroupLimit. Serving rides the PERSISTED index:
+    // [[writePqIndex]] trains codebooks and encodes
     // the corpus ONCE per process (Scratch.ensure, charged to Bench's
     // untimed build phase), and the query reads codes + codebooks —
     // the production profile, where re-encoding the corpus per query
@@ -1042,7 +1042,7 @@ object Similarity {
         .orderBy("q_id", "rank")
     }),
 
-    // INCREMENTAL PQ SERVING (r9 verdict #1's append half — the q103
+    // INCREMENTAL PQ SERVING (the persisted index's append half — the q103
     // contract on the PQ side): the index builds on the initial corpus
     // slice, tonight's batch is encoded against the STORED codebooks
     // and assigned against the STORED coarse centroids
@@ -1104,10 +1104,10 @@ object Similarity {
       val e = Tables.fanOut(Tables.embeddings(s, dir))
         .select("vec_id", "embedding")
       val cents = lloydCents(e, nCells = 8, dims = 64)
-      // r14: the nCells=8 centroid table rides inlined in the codegen'd
+      // The nCells=8 centroid table rides inlined in the codegen'd
       // lloyd_dists kernel, so the two-nearest pick is one in-row sorted
       // array — the former corpus×8 crossJoin fan-out and the per-vector
-      // collect_list exchange are gone (guide §2.4); the kernel sorts by
+      // collect_list exchange are gone; the kernel sorts by
       // the same (cdist, c_cluster) struct comparator as the old sorted
       // collect_list ⇒ bit-identical (d1, d2, cell).
       val two = e
@@ -1349,7 +1349,7 @@ object Similarity {
     * window) and rebuilds — the append path never does it silently. */
   def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                        batch: DataFrame): Unit = {
-    val cents = spark.read.parquet(s"$dir/centroids")
+    val cents = Tables.parquet(spark, s"$dir/centroids")
     rankCells(Tables.fanOut(batch.select("vec_id", "embedding")), cents)
       .filter(col("crank") === 1)
       .select(col("vec_id"), col("embedding"), col("nrm"), col("cent_id").as("cell"))
@@ -1367,21 +1367,21 @@ object Similarity {
     * never corpus data. */
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, dir: String,
                      queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    val cents = spark.read.parquet(s"$dir/centroids")
+    val cents = Tables.parquet(spark, s"$dir/centroids")
     val probes = rankCells(queries.select("vec_id", "embedding"), cents)
       .filter(col("crank") <= nprobe)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("nrm").as("q_norm"), col("cent_id").as("cell"))
     val probeCells = probes.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).toSeq // bounded: <= nprobe * |queries|
-    val idx = spark.read.parquet(s"$dir/index")
+    val idx = Tables.parquet(spark, s"$dir/index")
       .filter(col("cell").isin(probeCells: _*)) // partition-pruned scan
       .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
         col("nrm").as("c_norm"), col("cell"))
     rerankProbedCells(idx, probes, k)
   }
 
-  /** Build a PERSISTED PQ/IVFPQ index (r9 verdict #1 — the q87
+  /** Build a PERSISTED PQ/IVFPQ index (the q87
     * `writeIvfIndex` pattern applied to the PQ family): codebook
     * training (pqCents) and the full-corpus encode (pqCodes) run ONCE
     * at ingest and land in a store; every query afterwards reads
@@ -1392,7 +1392,7 @@ object Similarity {
     *                     IVFPQ probe prunes cell DIRECTORIES exactly
     *                     like [[ivfTopKIndexed]]'s index
     * At 100 TB this is the difference between a per-query corpus
-    * re-encode (the r9 weak grade) and a code-table scan bounded by
+    * re-encode and a code-table scan bounded by
     * nprobe/nCells of the corpus. All three artifacts are the same
     * deterministic computations the state-free spellings run
     * (scaled-long rational means, argmin with cluster-id tie-break),
@@ -1425,9 +1425,9 @@ object Similarity {
     * a maintenance-window rotation, never a silent side effect. */
   def appendToPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                       batch: DataFrame): Unit = {
-    val coarse = spark.read.parquet(s"$dir/coarse")
+    val coarse = Tables.parquet(spark, s"$dir/coarse")
     val dims = coarse.columns.length - 1 // c_cluster + c0..c{dims-1}
-    val books = spark.read.parquet(s"$dir/codebooks")
+    val books = Tables.parquet(spark, s"$dir/codebooks")
     val subDim = books.columns.length - 2 // cluster, ss, c0..c{subDim-1}
     val e = graft.Caches.cached(
       Tables.fanOut(batch.select("vec_id", "embedding")))
@@ -1454,7 +1454,7 @@ object Similarity {
   def deleteFromPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                         ids: DataFrame): Unit = {
     val del = ids.select(col("vec_id"))
-    val codes = spark.read.parquet(s"$dir/codes")
+    val codes = Tables.parquet(spark, s"$dir/codes")
     // the partition column round-trips as INT (directory-name
     // inference), so pin it to long before the bounded collects
     val cells = codes.join(del, Seq("vec_id"), "left_semi")
@@ -1495,9 +1495,9 @@ object Similarity {
     * (q, vec) ADC sum; the top-k rank compiles to WindowGroupLimit. */
   def pqAdcTopKIndexed(spark: org.apache.spark.sql.SparkSession, dir: String,
                        qv: DataFrame, k: Int): DataFrame = {
-    val books = spark.read.parquet(s"$dir/codebooks")
+    val books = Tables.parquet(spark, s"$dir/codebooks")
     val subDim = books.columns.length - 2
-    val codes = spark.read.parquet(s"$dir/codes")
+    val codes = Tables.parquet(spark, s"$dir/codes")
     val dtable = broadcast(pqDtable(qv, books, subDim))
     val scored = codes.join(dtable, Seq("ss", "code"))
       .groupBy(col("q_id"), col("vec_id"))
@@ -1517,9 +1517,9 @@ object Similarity {
     * cost is (nprobe/nCells) of an already-32×-shrunk code table. */
   def ivfpqTopKIndexed(spark: org.apache.spark.sql.SparkSession, dir: String,
                        qv0: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    val coarse = spark.read.parquet(s"$dir/coarse")
+    val coarse = Tables.parquet(spark, s"$dir/coarse")
     val dims = coarse.columns.length - 1
-    val books = spark.read.parquet(s"$dir/codebooks")
+    val books = Tables.parquet(spark, s"$dir/codebooks")
     val subDim = books.columns.length - 2
     val qv = graft.Caches.cached(qv0)
     val wc = Window.partitionBy("q_id")
@@ -1532,7 +1532,7 @@ object Similarity {
         .select(col("q_id"), col("c_cluster").as("cell")))
     val probeCells = probed.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).toSeq // bounded: <= nprobe * |queries|
-    val codes = spark.read.parquet(s"$dir/codes")
+    val codes = Tables.parquet(spark, s"$dir/codes")
       .filter(col("cell").isin(probeCells: _*)) // partition-pruned scan
     val dtable = broadcast(pqDtable(qv, books, subDim))
     val scored = codes.join(broadcast(probed), Seq("cell"))

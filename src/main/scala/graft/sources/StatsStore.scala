@@ -32,7 +32,7 @@ object StatsStore {
         count(lit(1)).as("n_rows"))
 
   /** Overwrite `$dir/manifest` through a tmp-dir write + rename swap
-    * (r8 ADVICE: the append fns' data-append and manifest-overwrite are
+    * (the append fns' data-append and manifest-overwrite are
     * two non-atomic steps; a direct overwrite that dies mid-write could
     * leave a PARTIAL manifest that silently hides data files from
     * manifest-pruned reads). After the swap the only crash window is
@@ -58,7 +58,7 @@ object StatsStore {
   /** Stores whose coverage has been verified since their last mutation
     * in THIS process. readRange/readBox/readNeedle are called per
     * bench rep; without memoization every serve paid a directory
-    * listing plus a manifest read+collect (r9 ADVICE — it inflated the
+    * listing plus a manifest read+collect (it inflated the
     * timed serving cost of q106/q111/q127). Writers and appenders
     * invalidate the entry, so the check re-runs exactly once after
     * each mutation; external-process mutations are out of scope (the
@@ -77,7 +77,7 @@ object StatsStore {
     ()
   }
 
-  /** Loud consistency check (r8 ADVICE): every parquet data file must
+  /** Loud consistency check: every parquet data file must
     * appear in the manifest — a data append that crashed before its
     * manifest swap would otherwise make the new files INVISIBLE to
     * manifest-pruned reads (silently missing rows). Cost: one manifest
@@ -92,7 +92,7 @@ object StatsStore {
     val dataFiles = fs.listStatus(dataPath).iterator
       .map(_.getPath).filter(_.getName.endsWith(".parquet"))
       .map(_.toUri.getPath).toSet
-    val manifestFiles = spark.read.parquet(s"$dir/manifest")
+    val manifestFiles = graft.Tables.parquet(spark, s"$dir/manifest")
       .select("file").distinct()
       .collect().map(r => new Path(r.getString(0)).toUri.getPath).toSet
     val missing = dataFiles -- manifestFiles
@@ -112,14 +112,14 @@ object StatsStore {
       .sortWithinPartitions(keyCol)
       .write.mode("overwrite").parquet(s"$dir/data")
     val spark = df.sparkSession
-    rangeManifestRows(spark.read.parquet(s"$dir/data"), keyCol)
+    rangeManifestRows(graft.Tables.parquet(spark, s"$dir/data"), keyCol)
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/manifest")
     invalidateCoverage(dir)
   }
 
-  /** Nightly-ingest maintenance for a range store (r7 verdict #5 — the
-    * q103 append pattern applied to StatsStore): cluster ONLY the
+  /** Nightly-ingest maintenance for a range store (the q103 append
+    * pattern applied to StatsStore): cluster ONLY the
     * batch, append its files to the data dir, and extend the manifest
     * with the new files' stats. Batch cost, not store cost: the stats
     * scan is filtered to the new files via the `_metadata.file_path`
@@ -136,13 +136,13 @@ object StatsStore {
     val spark = batch.sparkSession
     // file-count-sized driver/executor footprint, pinned before the
     // append so the overwrite below can't read its own output
-    val old = spark.read.parquet(s"$dir/manifest").pinned()
+    val old = graft.Tables.parquet(spark, s"$dir/manifest").pinned()
     val oldFiles = old.select("file").collect().map(_.getString(0)).toSeq
     batch.repartitionByRange(nFiles, col(keyCol))
       .sortWithinPartitions(keyCol)
       .write.mode("append").parquet(s"$dir/data")
     val fresh = rangeManifestRows(
-      spark.read.parquet(s"$dir/data")
+      graft.Tables.parquet(spark, s"$dir/data")
         .filter(!col("_metadata.file_path").isin(oldFiles: _*)), keyCol)
     swapManifest(old.unionByName(fresh), dir)
   }
@@ -150,7 +150,7 @@ object StatsStore {
   /** Files whose [min,max] intersects [lo,hi] — the skip decision,
     * exposed for specs. Bounded driver action: nBuckets rows. */
   def prunedFiles(spark: SparkSession, dir: String, lo: Long, hi: Long): Seq[String] =
-    spark.read.parquet(s"$dir/manifest")
+    graft.Tables.parquet(spark, s"$dir/manifest")
       .filter(col("max_key") >= lo && col("min_key") <= hi)
       .select("file").collect().map(_.getString(0)).toSeq
 
@@ -162,9 +162,9 @@ object StatsStore {
   def readRange(spark: SparkSession, dir: String, keyCol: String, lo: Long, hi: Long): DataFrame = {
     requireManifestCoversData(spark, dir)
     val files = prunedFiles(spark, dir, lo, hi)
-    val base = spark.read.parquet(s"$dir/data")
+    val base = graft.Tables.parquet(spark, s"$dir/data")
     if (files.isEmpty) base.limit(0)
-    else spark.read.parquet(files: _*)
+    else graft.Tables.parquet(spark, files: _*)
       .filter(col(keyCol) >= lo && col(keyCol) <= hi)
   }
 
@@ -204,7 +204,7 @@ object StatsStore {
       .drop("z")
       .write.mode("overwrite").parquet(s"$dir/data")
     val spark = df.sparkSession
-    spark.read.parquet(s"$dir/data")
+    graft.Tables.parquet(spark, s"$dir/data")
       .groupBy(col("_metadata.file_path").as("file"))
       .agg(min(col(xCol)).as("min_x"), max(col(xCol)).as("max_x"),
         min(col(yCol)).as("min_y"), max(col(yCol)).as("max_y"),
@@ -218,7 +218,7 @@ object StatsStore {
     * Bounded driver action: nBuckets manifest rows. */
   def prunedBoxFiles(spark: SparkSession, dir: String,
                      loX: Long, hiX: Long, loY: Long, hiY: Long): Seq[String] =
-    spark.read.parquet(s"$dir/manifest")
+    graft.Tables.parquet(spark, s"$dir/manifest")
       .filter(col("max_x") >= loX && col("min_x") <= hiX &&
               col("max_y") >= loY && col("min_y") <= hiY)
       .select("file").collect().map(_.getString(0)).toSeq
@@ -229,9 +229,9 @@ object StatsStore {
               loX: Long, hiX: Long, loY: Long, hiY: Long): DataFrame = {
     requireManifestCoversData(spark, dir)
     val files = prunedBoxFiles(spark, dir, loX, hiX, loY, hiY)
-    val base = spark.read.parquet(s"$dir/data")
+    val base = graft.Tables.parquet(spark, s"$dir/data")
     if (files.isEmpty) base.limit(0)
-    else spark.read.parquet(files: _*)
+    else graft.Tables.parquet(spark, files: _*)
       .filter(col(xCol) >= loX && col(xCol) <= hiX &&
               col(yCol) >= loY && col(yCol) <= hiY)
   }
@@ -267,12 +267,12 @@ object StatsStore {
       .sortWithinPartitions("doc_id")
       .write.mode("overwrite").parquet(s"$dir/data")
     val spark = docs.sparkSession
-    bloomManifestRows(spark.read.parquet(s"$dir/data"), mBits, k)
+    bloomManifestRows(graft.Tables.parquet(spark, s"$dir/data"), mBits, k)
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/manifest")
     invalidateCoverage(dir)
   }
 
-  /** Nightly-ingest maintenance for a bloom store (r7 verdict #5):
+  /** Nightly-ingest maintenance for a bloom store:
     * append the batch's files, build bloom rows for ONLY the new files
     * (the `_metadata.file_path` predicate prunes the stats scan at
     * listing time), and extend the manifest. Per-file filters are
@@ -282,14 +282,14 @@ object StatsStore {
   def appendToBloomStore(batch: DataFrame, dir: String, nFiles: Int,
                          mBits: Int = 1 << 16, k: Int = 3): Unit = {
     val spark = batch.sparkSession
-    val old = spark.read.parquet(s"$dir/manifest").pinned()
+    val old = graft.Tables.parquet(spark, s"$dir/manifest").pinned()
     val oldFiles = old.select("file").distinct()
       .collect().map(_.getString(0)).toSeq // bounded: store file count
     batch.repartitionByRange(nFiles, col("doc_id"))
       .sortWithinPartitions("doc_id")
       .write.mode("append").parquet(s"$dir/data")
     val fresh = bloomManifestRows(
-      spark.read.parquet(s"$dir/data")
+      graft.Tables.parquet(spark, s"$dir/data")
         .filter(!col("_metadata.file_path").isin(oldFiles: _*)), mBits, k)
     swapManifest(old.unionByName(fresh), dir)
   }
@@ -310,7 +310,7 @@ object StatsStore {
         .as("pos")).distinct().collect().map(_.getAs[Long]("pos"))
     val need = posRows.map(p => (p / 64, 1L << (p % 64).toInt)).toSeq
     val idxs = need.map(_._1).distinct
-    val hit = spark.read.parquet(s"$dir/manifest")
+    val hit = graft.Tables.parquet(spark, s"$dir/manifest")
       .filter(col("idx").isin(idxs: _*)) // pushed to the manifest scan
       .collect().map(r => (r.getAs[String]("file"), r.getAs[Long]("idx")) ->
         r.getAs[Long]("bits")).toMap
@@ -326,9 +326,9 @@ object StatsStore {
                  mBits: Int = 1 << 16, k: Int = 3): DataFrame = {
     requireManifestCoversData(spark, dir)
     val files = bloomCandidateFiles(spark, dir, needle, mBits, k)
-    val base = spark.read.parquet(s"$dir/data")
+    val base = graft.Tables.parquet(spark, s"$dir/data")
     if (files.isEmpty) base.limit(0)
-    else spark.read.parquet(files: _*)
+    else graft.Tables.parquet(spark, files: _*)
       .filter(array_contains(split(trim(col("text")), "\\s+"), needle))
   }
 
@@ -343,9 +343,9 @@ object StatsStore {
     // that the prune actually skips files and that pruned == unpruned
     // row-for-row). The max(user_id) lookup is a 1-value bounded
     // driver action. The store builds ONCE per process via
-    // Scratch.ensure (collision-free per-run path — r7 ADVICE) so rep
+    // Scratch.ensure (collision-free per-run path) so rep
     // 2+ of the bench measures manifest-pruned SERVING, the production
-    // cost profile (r7 verdict #5); CORRECTNESS always runs in a fresh
+    // cost profile; CORRECTNESS always runs in a fresh
     // process whose first rep builds.
     "q106_stats_pruned_scan" -> ((s, dir) => {
       val ev = graft.Tables.events(s, dir)
@@ -374,7 +374,7 @@ object StatsStore {
       val li = graft.Tables.lineitem(s, dir)
         .select("l_partkey", "l_suppkey", "l_returnflag",
           "l_quantity", "l_extendedprice", "l_discount")
-      // build-once + serve (r7 verdict #5): rep 2+ times the 2-D
+      // build-once + serve: rep 2+ times the 2-D
       // manifest-pruned read, not the clustered rewrite
       val store = graft.Scratch.ensure(graft.Scratch.dirFor("zstore", dir)) {
         writeZorderStore(li, graft.Scratch.dirFor("zstore", dir),
@@ -407,7 +407,7 @@ object StatsStore {
     "q127_bloom_pruned_scan" -> ((s, dir) => {
       val docs = graft.Tables.documents(s, dir)
         .select("doc_id", "source", "text")
-      // collision-free per-run path + build-once (r7 ADVICE + #5)
+      // collision-free per-run path + build-once
       val store = graft.Scratch.ensure(graft.Scratch.dirFor("bstore", dir)) {
         writeBloomStore(docs, graft.Scratch.dirFor("bstore", dir), nBuckets = 16)
       }

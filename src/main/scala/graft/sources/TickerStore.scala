@@ -142,7 +142,7 @@ object TickerStore {
     * skips (names starting with `.`, or with `_` outside a `col=value`
     * partition name, and in-flight `._COPYING_` files); empty for a
     * missing directory. */
-  private def visibleChildren(fs: FileSystem, p: Path): Seq[FileStatus] = {
+  private[graft] def visibleChildren(fs: FileSystem, p: Path): Seq[FileStatus] = {
     def visible(st: FileStatus) = {
       val n = st.getPath.getName
       !(n.startsWith("_") && !n.contains("=")) && !n.startsWith(".") &&

@@ -248,7 +248,7 @@ object Streaming {
     def lifecycle(dir: String): (Long, Int) = {
       val p = new org.apache.hadoop.fs.Path(dir)
       require(fs.exists(p), s"store $dir does not exist — nothing to maintain")
-      val all = spark.read.parquet(dir)
+      val all = graft.Tables.parquet(spark, dir)
       val retired = all.join(ids, Seq("doc_id"), "left_semi")
         .withColumn("retire_date", lit(retireDate))
       // archive FIRST: if the job dies between archive and swap, the
@@ -335,7 +335,7 @@ object Streaming {
                         schema: Option[org.apache.spark.sql.types.StructType] = None): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(dir)
     if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
-    else Some(schema.fold(spark.read)(spark.read.schema).parquet(dir))
+    else Some(schema.fold(graft.Tables.parquet(spark, dir))(spark.read.schema(_).parquet(dir)))
   }
 
   /** Run `body` under a fixture-sized shuffle width: every join in an
@@ -440,7 +440,7 @@ object Streaming {
       val (landing, sigDir, admDir, ckpt, archive) =
         (s"$tmp/landing", s"$tmp/sigs", s"$tmp/admitted", s"$tmp/ckpt", s"$tmp/archive")
       def counts(): (Long, Long) =
-        (spark.read.parquet(admDir).count(), spark.read.parquet(sigDir).count())
+        (graft.Tables.parquet(spark, admDir).count(), graft.Tables.parquet(spark, sigDir).count())
       def land(batch: Seq[(Long, String)]): Unit = {
         batch.toDF("doc_id", "text")
           .write.mode("append").parquet(landing) // new files = new delivery
@@ -505,7 +505,7 @@ object Streaming {
       // each doc is emitted exactly once (its one processing batch), so
       // the manifest is a plain rollup; localCheckpoint materializes it
       // before the per-invocation temp stores are removed
-      spark.read.parquet(outDir)
+      graft.Tables.parquet(spark, outDir)
         .groupBy(col("source"), col("bin"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"),
           min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
@@ -552,7 +552,7 @@ object Streaming {
       }
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id", "version").orderBy(col("run").desc)
-      spark.read.parquet(outDir)
+      graft.Tables.parquet(spark, outDir)
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("user_id"), col("version"), col("attr"), col("valid_from"),
@@ -616,7 +616,7 @@ object Streaming {
       }
       val wU = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy("start")
-      spark.read.parquet(outDir)
+      graft.Tables.parquet(spark, outDir)
         .filter(col("user_id") =!= sentinelUser)
         .withColumn("session_id", row_number().over(wU).cast("long"))
         .select(col("user_id"), col("session_id"),
@@ -667,7 +667,7 @@ object Streaming {
           b.write.mode("append").parquet(outDir)
         }
       }
-      spark.read.parquet(outDir)
+      graft.Tables.parquet(spark, outDir)
         .select("p_id", "user_id", "p_ts", "p_value", "v_id", "v_ts", "v_value")
         .orderBy("p_id", "v_id")
         .pinned()
@@ -713,7 +713,7 @@ object Streaming {
           b.write.mode("append").parquet(outDir)
         }
       }
-      spark.read.parquet(outDir)
+      graft.Tables.parquet(spark, outDir)
         .filter(col("event_type") =!= "closeout")
         .select(col("event_type"), to_date(col("day_start")).as("day"),
           col("open"), col("high"), col("low"), col("close"), col("volume"))
@@ -771,7 +771,7 @@ object Streaming {
           b.write.mode("append").parquet(outDir)
         }
       }
-      spark.read.parquet(outDir)
+      graft.Tables.parquet(spark, outDir)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("n_events"), dsumd(col("value")).as("total_value"))
         .orderBy("event_type", "day")
@@ -864,7 +864,7 @@ object Streaming {
       // final state per series = max day count (monotone across batches)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("event_type")).orderBy(col("n_days").desc)
-      spark.read.parquet(outDir)
+      graft.Tables.parquet(spark, outDir)
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1).drop("__rn")
         .withColumn("macd", col("ema_fast") - col("ema_slow"))
@@ -926,7 +926,7 @@ object Streaming {
           b.write.mode("append").parquet(outDir)
         }
       }
-      spark.read.parquet(outDir)
+      graft.Tables.parquet(spark, outDir)
         .filter(col("user_id") >= 0) // drop the sentinel's own emission
         .select("p_id", "user_id", "p_ts", "p_value", "v_id", "v_ts", "v_value")
         .orderBy("p_id", "v_id")
@@ -980,7 +980,7 @@ object Streaming {
             .write.mode("overwrite").parquet(state)
         }
       }
-      val pts = spark.read.parquet(state)
+      val pts = graft.Tables.parquet(spark, state)
         .withColumn("x",
           datediff(col("day"), lit("1970-01-01").cast("date")).cast("long"))
       pts.groupBy("event_type", "cohort")
@@ -1079,7 +1079,7 @@ object Streaming {
           b.write.mode("append").parquet(outDir)
         }
       }
-      val conv = spark.read.parquet(outDir).distinct()
+      val conv = graft.Tables.parquet(spark, outDir).distinct()
       // q245's histogram-cumulation report over the streamed conversions
       val h = conv.select((col("user_id") % 10).as("cohort"),
           expr("(p_us - v_us) DIV 60000000").as("delay_min"))
@@ -1176,7 +1176,7 @@ object Streaming {
           b.write.mode("append").parquet(outDir)
         }
       }
-      spark.read.parquet(outDir).distinct()
+      graft.Tables.parquet(spark, outDir).distinct()
         .groupBy("c_nationkey")
         .agg(count(lit(1)).as("n_released"),
           countDistinct(concat(col("c_mktsegment"), lit("#"),
@@ -1286,7 +1286,7 @@ object Streaming {
           }
         }
         val byGen = org.apache.spark.sql.expressions.Window.partitionBy("source")
-        spark.read.parquet(outDir)
+        graft.Tables.parquet(spark, outDir)
           .withColumn("mx", max(col("gen")).over(byGen))
           .filter(col("gen") === col("mx"))
           .select(col("source"), col("rn"), col("doc_id"), col("h"))
