@@ -14,17 +14,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    per-query MIN — run-to-run variance on this host is multi-x;
   *  - a query with any crashing rep is recorded in "failed" (and
   *    excluded from "queries"/total) instead of logging a fake fast time;
-  *  - the JSON line is also written to a file (the driver's bounded
-  *    stdout capture truncated the per-query map in two consecutive
-  *    round artifacts; a file is the only truncation-proof per-query
-  *    history): SPARK_GRAFT_BENCH_OUT if set (`=BENCH_QUERIES.json`
-  *    updates the committed artifact), else the gitignored
+  *  - the JSON line is also written to a file (a bounded stdout
+  *    capture can truncate the per-query map; a file is the only
+  *    truncation-proof per-query history): SPARK_GRAFT_BENCH_OUT if
+  *    set (`=BENCH_QUERIES.json` updates the committed artifact), else the gitignored
   *    target/BENCH_QUERIES.json — so default runs never clobber the
   *    reconciled committed artifact;
   *  - a SHORT total-only JSON line follows the big one, so a bounded
   *    stdout capture that truncates the per-query map still carries the
-  *    headline number (a committed driver artifact once lost its total
-  *    that way).
+  *    headline number.
   *
   * This object also holds the one walk over the query catalogue that
   * every catalogue main (Bench, Verify, tools.QueryMetrics,
@@ -73,35 +71,37 @@ object Bench {
     }
   }
 
-  /** Run `body`; a NonFatal throw prints `<tag> FAIL <name>: <class>:
-    * <message>` and gives None. Caches and pins are released either
-    * way, so nothing a query registered outlives its attempt. */
-  private def attempt[A](tag: String, name: String)(body: => A): Option[A] =
-    try Some(body)
+  /** Run `body`; a NonFatal throw prints `<tag> FAIL <name>: <cause>`
+    * and gives `Left(cause)`, the cause being `<class>: <message>`.
+    * Caches and pins are released either way, so nothing a query
+    * registered outlives its attempt. */
+  private def attempt[A](tag: String, name: String)(body: => A): Either[String, A] =
+    try Right(body)
     catch { case NonFatal(t) =>
-      Console.err.println(s"$tag FAIL $name: ${t.getClass.getName}: ${t.getMessage}")
-      None
+      val cause = s"${t.getClass.getName}: ${t.getMessage}"
+      Console.err.println(s"$tag FAIL $name: $cause")
+      Left(cause)
     }
     finally Caches.releaseAll()
 
   /** The walk: one attempt of `body` per query, in name order. It ends
     * with one summary line naming the failed queries and returns the
-    * results of the queries that succeeded, in name order, and the
-    * failed names. */
-  def walk[A](tag: String, queries: Map[String, Q])(body: (String, Q) => A): (Seq[(String, A)], Seq[String]) = {
+    * results of the queries that succeeded and each failed query with
+    * its cause (`<class>: <message>`), both in name order. */
+  def walk[A](tag: String, queries: Map[String, Q])(body: (String, Q) => A): (Seq[(String, A)], Seq[(String, String)]) = {
     val tried = queries.toSeq.sortBy(_._1).map { case (n, fn) => n -> attempt(tag, n)(body(n, fn)) }
-    val failed = tried.collect { case (n, None) => n }
+    val failed = tried.collect { case (n, Left(cause)) => n -> cause }
     Console.err.println(s"$tag DONE ${tried.size - failed.size} of ${tried.size} ok; failed: " +
-      (if (failed.isEmpty) "none" else failed.mkString(", ")))
-    (tried.collect { case (n, Some(a)) => n -> a }, failed)
+      (if (failed.isEmpty) "none" else failed.map(_._1).mkString(", ")))
+    (tried.collect { case (n, Right(a)) => n -> a }, failed)
   }
 
   /** Every rep of one query, as (build ms, exec ms): build is frame
     * construction, including any eager work the query does there; exec
     * is the noop write. `n` reps, topped up to four when the fastest is
     * under a second: min-of-2 on a trivial line still carried 8–10×
-    * host-noise swings between artifacts (q06/q15 in BENCH_r08, on
-    * byte-identical code). A rep that throws fails the query. */
+    * host-noise swings between runs of byte-identical code (q06/q15).
+    * A rep that throws fails the query. */
   def reps(spark: SparkSession, sfDir: String, fn: Q, n: Int): Seq[(Long, Long)] = {
     def rep(): (Long, Long) =
       try {
@@ -171,7 +171,7 @@ object Bench {
     leakLine() // closing diagnostic: end-of-run process state
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = failed.map { case (n, _) => "\"" + n + "\"" }.mkString("[", ",", "]")
     val total = results.map(_._2).sum
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"reps":$nReps,"sf":"$sfDir"}"""

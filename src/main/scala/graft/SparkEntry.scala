@@ -37,8 +37,8 @@ object SparkEntry {
     *  - q86 deliberately re-runs the q37 pipeline through the
     *    beyond-budget 100 TB route (pair-cache barrier + salted narrow
     *    survivors + survivor-scoped arrays) purely as a scale-shape pin —
-    *    a pin, not a throughput query, and its one-rep timing was the
-    *    noisiest line of BENCH_r07.
+    *    a pin, not a throughput query, and its one-rep timing is the
+    *    noisiest line of a run.
     * SPARK_GRAFT_ONLY still selects any of them explicitly for dev
     * timing. */
   val benchExcluded: Set[String] = Set("q101_admission_loop",
@@ -49,25 +49,13 @@ object SparkEntry {
     "q246_stream_funnel", "q251_stream_kanon_gate",
     "q255_stream_stratified_sample")
 
-  /** The audit subset of [[benchExcluded]]: queries whose CONSTRUCTION
-    * executes a full checkpointed streaming loop / lifecycle replay and
-    * whose returned frame is a pinned result scan. Their physical plan
-    * is a constant (`Scan:1` / a LocalTableScan rollup) carrying zero
-    * plan-regression signal, so PLANS.json does not pin them: their
-    * correctness lives in the Verify hash gate, their per-batch plans
-    * in STREAMPLANS.json (both fingerprint nets read the tests' one
-    * catalogue pass, which runs each audit loop once). q86 stays
-    * fingerprinted: its construction is lazy plan-building and its
-    * cluster-route shape is exactly what the net exists to pin. */
-  val auditQueries: Set[String] = benchExcluded - "q86_lsh_narrow_salted"
-
   /** Queries whose construction triggers a MEMOIZED per-process build
     * (media container encode, persisted IVF/range/Z-order/bloom/
     * signature stores). Bench invokes each once in the UNTIMED setup
     * phase so the build is charged to setup, not to
-    * whichever query the map happens to iterate first — q104's 3.4×
-    * phantom regression in BENCH_r08 was exactly such a first-touch
-    * media-encode charge. Membership here does NOT exclude a query
+    * whichever query the map happens to iterate first (a first-touch
+    * media-encode charge once showed as a 3.4× phantom regression of
+    * q104). Membership here does NOT exclude a query
     * from timing; it only pre-pays its shared fixture. */
   val benchBuilds: Seq[String] = Seq(
     "q42_multimodal_features",   // syntheticMedia container encode

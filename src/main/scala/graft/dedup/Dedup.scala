@@ -28,15 +28,6 @@ object Dedup {
     * of the WIDE carry-signatures shape — see its doc for the trade. */
   val DefaultNarrowBudgetBytes: Long = 512L * 1024 * 1024
 
-  /** Distinct character n-gram shingles of the named text column.
-    * Guarded for |text| < n: Spark's sequence(1, 0) runs DESCENDING, so
-    * the no-shingle case must short-circuit to an empty array. */
-  def shingles(textCol: String, n: Int): Column =
-    array_distinct(expr(
-      s"""CASE WHEN length($textCol) < $n THEN CAST(array() AS ARRAY<STRING>)
-          ELSE transform(sequence(1, length($textCol) - ${n - 1}),
-                         i -> substring($textCol, i, $n)) END"""))
-
   /** (doc_id, shingle) inverted index. fanOut first: the explode and
     * per-shingle hashing are the CPU-heavy part of every dedup path.
     * The gram array comes from the codegen'd sorted_shingles kernel
@@ -255,19 +246,6 @@ object Dedup {
         (inter.cast("double") / uni).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
-
-  /** Distinct word w-gram shingles of a whitespace-tokenized text
-    * column — the unit of similarity production text dedup actually
-    * uses (token 4/5-grams), in contrast to the character n-grams
-    * above. On a small-vocabulary corpus the distinction is dramatic:
-    * the char-3-gram universe saturates (every doc contains most
-    * shingles, so every pair looks ~0.45 similar and LSH buckets
-    * degenerate), while token w-grams stay discriminative. `toksCol`
-    * must already be the split token array. */
-  def tokenShingles(toksCol: Column, w: Int): Column =
-    array_distinct(when(size(toksCol) < w, expr("CAST(array() AS ARRAY<STRING>)"))
-      .otherwise(transform(sequence(lit(1), size(toksCol) - (w - 1)),
-        i => array_join(slice(toksCol, i, lit(w)), " "))))
 
   /** Exact pairwise token w-gram Jaccard via [[jaccardFromIndex]] —
     * the ground truth the token LSH pipeline's recall is audited

@@ -3,7 +3,6 @@ package graft.multimodal
 import graft.{Q, Tables}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column handling (BASELINE.json north star): media as
   * opaque BINARY columns with typed metadata, batch-shaped decode /
@@ -82,7 +81,7 @@ object Multimodal {
       val n = signal.length
       // RIFF requires word-aligned chunks: an odd data chunk carries one
       // trailing pad byte NOT counted in its ckSize but counted in the
-      // enclosing RIFF size (r7 ADVICE — javax.sound tolerates the
+      // enclosing RIFF size (javax.sound tolerates the
       // unpadded form, external consumers need not). An empty signal
       // encodes as a VALID zero-sample container rather than aborting
       // the whole query on one empty payload.
@@ -112,14 +111,14 @@ object Multimodal {
         val buf = new Array[Byte](8192)
         var n = ais.read(buf)
         // -1 is the EOF contract; a 0-byte read is legal mid-stream for
-        // general InputStreams (r7 ADVICE), so only -1 terminates
+        // general InputStreams, so only -1 terminates
         while (n != -1) { out.write(buf, 0, n); n = ais.read(buf) }
         out.toByteArray
       } finally ais.close()
     }
 
-    /** Real multi-frame video container boundary (r7 verdict #6) — a
-      * length-prefixed concatenation of REAL PNG frames, pure JDK and
+    /** Real multi-frame video container boundary — a length-prefixed
+      * concatenation of REAL PNG frames, pure JDK and
       * deterministic: `GVID` magic, big-endian frame count, then per
       * frame a big-endian byte length + a genuine 1×w grayscale PNG
       * ([[encodeGrayPng]]). The signal chunks into `frameSize`-pixel
@@ -209,16 +208,6 @@ object Multimodal {
     }
   }
 
-  /** Media-table schema contract: metadata columns + opaque payload. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false),       // image|audio|video
-    StructField("mime", StringType, nullable = false),
-    StructField("width", IntegerType, nullable = true),       // image/video
-    StructField("height", IntegerType, nullable = true),
-    StructField("duration_ms", LongType, nullable = true),    // audio/video
-    StructField("payload", BinaryType, nullable = false)))
-
   /** Deterministic synthetic media table derived from documents: ALL
     * THREE kinds now travel through real containers — image payloads
     * are REAL PNGs, audio payloads REAL 8-bit-PCM WAVs, video payloads
@@ -227,23 +216,23 @@ object Multimodal {
     * Lets every sf dir double as a media corpus.
     *
     * The encoded table MEMOIZES per (context, dir) behind an eager
-    * localCheckpoint (r7 verdict #8): five queries decode the same
-    * payloads every bench run, and several call this builder 2–3 times
+    * localCheckpoint: five queries decode the same payloads every bench
+    * run, and several call this builder 2–3 times
     * within one plan — the memo makes the container-encode pass a
     * build-once fixture within a process without changing any oracle
     * (at production scale the media STORE plays this role: blobs are
     * encoded once at ingest, queries only decode). */
   def syntheticMedia(s: SparkSession, dir: String): DataFrame = {
-    // r8 ADVICE: key on the OWNING SESSION, not just the context — a
+    // key on the OWNING SESSION, not just the context — a
     // cached DataFrame built under one session served to a sibling
     // session of the same context would carry the first session's
     // session-level conf/registrations. Within Bench/Verify there is
     // one session, so the build-once economics are unchanged; spec
     // suites that rebuild sessions re-encode (fixture-sized cost).
     val key = System.identityHashCode(s) + "|" + s.sparkContext.applicationId + "|" + dir
-    // evict entries owned by stopped contexts (r8 ADVICE: the memo
-    // otherwise grows without bound across session restarts in spec
-    // suites, pinning orphaned checkpoint handles)
+    // evict entries owned by stopped contexts (the memo otherwise grows
+    // without bound across session restarts in spec suites, pinning
+    // orphaned checkpoint handles)
     mediaMemo.entrySet.removeIf(e =>
       e.getValue.sparkSession.sparkContext.isStopped)
     val cached = mediaMemo.get(key)

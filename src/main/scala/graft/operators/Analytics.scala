@@ -371,26 +371,6 @@ object Analytics {
       .toDF("id", "rank")
   }
 
-  /** The collect_list spelling of q206 — kept ONLY as the spec twin
-    * for the DFA == collect law; never a production path (unbounded
-    * per-key array, see [[journeySummaries]]). */
-  private[graft] def sequencePatternCollect(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val j = Tables.events(s, dir)
-      .select(col("user_id"),
-        struct(col("ts"), col("event_id"),
-          substring(col("event_type"), 1, 1).as("l")).as("x"))
-      .groupBy("user_id")
-      .agg(array_sort(collect_list(col("x"))).as("xs"))
-      .select(col("user_id"),
-        concat_ws("", expr("transform(xs, x -> x.l)")).as("journey"))
-    j.groupBy(substring(col("journey"), 1, 1).as("first_ev"),
-        col("journey").rlike("vvvp").as("converts"))
-      .agg(count(lit(1)).as("n_users"),
-        sum(length(col("journey"))).cast("long").as("total_events"))
-      .orderBy("first_ev", "converts")
-  }
-
   val queries: Map[String, Q] = Map(
     // Sequential funnel: first view → first purchase strictly after it,
     // per user, rolled up to cohorts. Everything shuffles on user_id —
@@ -1406,40 +1386,6 @@ object Analytics {
         .limit(20)
     })
   )
-
-  /** The GENERIC two-unrolled-rounds dangling-mass spelling q253 used
-    * before its collapsed spelling — kept as the reference twin for the
-    * AnalyticsSpec law that proves the collapsed spelling bit-identical. */
-  private[graft] def danglingMassGeneric(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    val e = graft.Caches.cached(custPartEdges(s, dir))
-    val nodes = graft.Caches.cached(
-      e.select((col("c") * 2).as("id"))
-        .unionByName(e.select((col("p") * 2 + 1).as("id"))).distinct())
-    val nn = nodes.agg(count(lit(1)).as("n"))
-    val deg = graft.Caches.cached(
-      e.groupBy((col("c") * 2).as("id")).agg(count(lit(1)).as("deg")))
-    def round(m: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-      // dangling mass: nodes with no out-edges (1-row aggregate)
-      val dang = m.join(deg, Seq("id"), "left_anti")
-        .agg(coalesce(sum(col("m")), lit(0L)).as("dm"))
-      val infl = e.select((col("c") * 2).as("id"), (col("p") * 2 + 1).as("dst"))
-        .join(m.join(deg, Seq("id")), Seq("id"))
-        .select(col("dst").as("id"), expr("m DIV deg").as("frag"))
-        .groupBy("id").agg(sum(col("frag")).as("infl"))
-      nodes.join(infl, Seq("id"), "left")
-        .crossJoin(broadcast(dang)) // 1 row: this round's dangling mass
-        .crossJoin(broadcast(nn))   // 1 row: the node count
-        .select(col("id"),
-          (coalesce(col("infl"), lit(0L)) + expr("dm DIV n")).as("m"))
-    }
-    val m1 = graft.Caches.cached(round(nodes.withColumn("m", lit(1000000L))))
-    val m2 = round(m1)
-    m2.select(col("id").as("node_id"), (col("id") % 2).as("kind"),
-        col("m").as("mass"))
-      .orderBy(col("mass").desc, col("node_id").asc)
-      .limit(20)
-  }
 
   val oracles: Map[String, String] = Map(
     "q253_dangling_mass" ->

@@ -63,7 +63,7 @@ object Bpe {
       .select(col("l"), col("syms").getItem(col("i") + 1).as("r"), col("cnt"))
       .groupBy("l", "r").agg(sum(col("cnt")).as("n"))
 
-  private def symVocab(spark: SparkSession, wordFreq: DataFrame): Dataset[(Array[String], Long)] = {
+  private[graft] def symVocab(spark: SparkSession, wordFreq: DataFrame): Dataset[(Array[String], Long)] = {
     import spark.implicits._
     wordFreq.select(col("word"), col("cnt"))
       .as[(String, Long)]
@@ -211,33 +211,6 @@ object Bpe {
           .coalesce(spark.sparkContext.defaultParallelism))
         graft.Caches.unpin(counts); graft.Caches.unpin(vocab)
         counts = nextCounts; vocab = nextVocab
-        round += 1
-      }
-    }
-    merges.toSeq
-  }
-
-  /** Reference spelling: full pair recount every round. Kept ONLY as
-    * the lockstep oracle for the incremental maintenance (BpeSpec pins
-    * equality at 50 merges) — O(vocab) per round where [[trainMerges]]
-    * is O(touched words). */
-  private[graft] def trainMergesRecompute(spark: SparkSession, wordFreq: DataFrame,
-                                          nMerges: Int): Seq[(Int, String, String, Long)] = {
-    import spark.implicits._
-    var vocab = graft.Caches.pin(symVocab(spark, wordFreq))
-    val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-    var round = 1
-    while (round <= nMerges) {
-      val top = pairCounts(vocab).orderBy(col("n").desc, col("l"), col("r")).limit(1)
-        .as[(String, String, Long)].collect()
-      if (top.isEmpty) round = nMerges + 1
-      else {
-        val (l, r, n) = top(0)
-        merges += ((merges.length + 1, l, r, n))
-        val next = graft.Caches.pin(
-          vocab.map { case (syms, c) => (applyMerge(syms, l, r), c) })
-        graft.Caches.unpin(vocab)
-        vocab = next
         round += 1
       }
     }

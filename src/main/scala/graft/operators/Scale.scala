@@ -25,10 +25,6 @@ import graft.functions.Exact._
   *    lands on `salts` tasks instead of one. AQE's skew-join splitting
   *    covers the adaptive case; this is the explicit spelling for
   *    planned-hot keys.
-  *  - [[writeBucketed]]/bucketed joins (ScaleSpec): pre-hash the table
-  *    into N buckets sorted by the join key, so repeated joins on that
-  *    key run SortMergeJoin with NO Exchange on either side — the
-  *    co-located-join layout a 100 TB fact table is stored in.
   */
 object Scale {
 
@@ -56,14 +52,6 @@ object Scale {
     val s = small.withColumn("_salt", explode(sequence(lit(0), lit(salts - 1))))
     b.join(s, Seq(key, "_salt")).drop("_salt")
   }
-
-  /** Bucketed-table layout: hash-bucket + sort by the join key so later
-    * joins/aggregations on that key need no Exchange (ScaleSpec asserts
-    * the exchange-free plan). Bucketing requires the table catalog
-    * (`saveAsTable`), matching Spark's persistent-layout model. */
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, key).sortBy(key).saveAsTable(table)
 
   val queries: Map[String, Q] = Map(
     // Salted two-phase aggregation over the 5 hot o_orderpriority keys —

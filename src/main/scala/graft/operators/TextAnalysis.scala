@@ -74,7 +74,7 @@ object TextAnalysis {
                               dir: String): org.apache.spark.sql.DataFrame = {
     val tok = graft.Caches.cached(Tables.fanOut(Tables.documents(s, dir))
       .select(col("doc_id"), explode(wsToks).as("w")))
-    // r13 A/B: REMOVING this cache was tried and measured WORSE (q113
+    // REMOVING this cache was tried and measured WORSE in an A/B (q113
     // 1.49→2.26 s, q126 0.62→1.11): three consumers (vocab aggregate,
     // total count, the per-token join) each re-running the explode cost
     // more than the cache round-trip — unlike q162's toks-array cache,
@@ -97,7 +97,7 @@ object TextAnalysis {
   }
 
   /** The shared (doc_id, source, toks) frame the per-source health
-    * cores consume (r13, guide §2.3/§2.4): q162 composes FOUR of those
+    * cores consume: q162 composes FOUR of those
     * cores, and each used to re-read the parquet and re-tokenize —
     * four corpus passes for one dashboard. Callers that compose several
     * cores tokenize ONCE (and may cache the result); standalone queries
@@ -286,39 +286,6 @@ object TextAnalysis {
     * diverge the two accountings. */
   private[operators] def bagOfWordsFp: Column =
     md5(array_join(array_sort(array_distinct(wsToks)), " "))
-
-  /** Rolling polynomial 5-gram hashes (base 257 mod 1e9+7) at every
-    * character position — the Rabin-Karp hash family used by winnowing
-    * fingerprinting (Schleimer et al., SIGMOD 2003). The window product
-    * is unrolled so the whole pipeline is one codegen'd HOF pass and the
-    * oracle spelling is literally identical FOR ASCII INPUT — Spark's
-    * ascii() yields the signed first UTF-8 byte while DuckDB's unicode()
-    * yields the code point, so callers must strip non-ASCII first (q46
-    * normalizes with the same regexp on both sides); k is a
-    * constant, so per-position evaluation is O(k)=O(1) per char — the
-    * classic O(1) rolling update buys nothing at k=5 and would cost a
-    * sequential dependency. */
-  def rollingHashesExpr(textCol: String): String =
-    // every ascii() is cast to BIGINT BEFORE its multiply: an INT×INT
-    // product overflows ANSI arithmetic from code point 127 up (127 ×
-    // 16974593 > Int.MaxValue) — printable ASCII survives only because
-    // '~' is 126. Values are unchanged wherever the INT spelling didn't
-    // overflow, and the hash is now total on any code point.
-    s"""CASE WHEN length($textCol) < 5 THEN CAST(array() AS ARRAY<BIGINT>)
-        ELSE transform(sequence(1, length($textCol) - 4), i ->
-          (CAST(ascii(substring($textCol, i, 1)) AS BIGINT) * 4362470401 +
-           CAST(ascii(substring($textCol, i + 1, 1)) AS BIGINT) * 16974593 +
-           CAST(ascii(substring($textCol, i + 2, 1)) AS BIGINT) * 66049 +
-           CAST(ascii(substring($textCol, i + 3, 1)) AS BIGINT) * 257 +
-           CAST(ascii(substring($textCol, i + 4, 1)) AS BIGINT)) % 1000000007) END"""
-
-  /** Winnowing selection: min hash of every w=4 window of consecutive
-    * gram hashes, distinct — a document's O(len/w)-sized robust
-    * fingerprint set (shared fingerprints ⇒ shared ≥k+w-1-char runs). */
-  def winnowExpr(hashesCol: String): String =
-    s"""CASE WHEN size($hashesCol) = 0 THEN CAST(array() AS ARRAY<BIGINT>)
-        ELSE array_distinct(transform(sequence(1, greatest(size($hashesCol) - 3, 1)),
-          i -> array_min(slice($hashesCol, i, 4)))) END"""
 
   val queries: Map[String, Q] = Map(
     // Language-ID heuristic, doc-level on a bounded slice.
@@ -595,8 +562,8 @@ object TextAnalysis {
       val docs = graft.Caches.cached(Tables.fanOut(Tables.documents(s, dir))
         .select(col("doc_id"), wsToks.as("toks"))
         .filter(size(col("toks")) >= 8)) // sequence(1,0) descends in Spark
-      // corpus-sized cache, MEASURED under the honest (cache-charging)
-      // bench r6: 1.90 s cached vs 2.25 s recomputing the gram stream
+      // corpus-sized cache, MEASURED under the cache-charging bench:
+      // 1.90 s cached vs 2.25 s recomputing the gram stream
       // per consumer (sf0.1, reps=3 min) — the double tokenize+md5
       // costs more than the one materialization, so the cache stays
       graft.plans.TokenGramMd5s.register(s)

@@ -12,8 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * of a text in one compiled pass — exactly
   * `array_sort(array_distinct(transform(...substring windows...)))`,
   * the per-doc shingle-array shape every exact-Jaccard verify joins in
-  * ([[graft.dedup.Dedup.shingles]] is the interpreted reference
-  * spelling, lockstep-pinned).
+  * (TextDedupSpec's `shingles` is the interpreted reference spelling,
+  * lockstep-pinned).
   *
   * Why an expression: the HOF spelling materializes the gram array
   * interpreted (one substring allocation + lambda frame per character),

@@ -11,8 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** sorted_token_shingles(text, w): the SORTED DISTINCT token w-gram
   * array of a text in one compiled pass — exactly
   * `array_sort(tokenShingles(split(trim(text), "\\s+"), w))` (the
-  * interpreted reference spelling in [[graft.dedup.Dedup]],
-  * lockstep-pinned), sharing [[MinHashSigsTokens]]'s byte-level
+  * interpreted reference spelling in TextDedupSpec, lockstep-pinned), sharing [[MinHashSigsTokens]]'s byte-level
   * tokenizer so split semantics can never diverge between the
   * signature and verify sides of the token dedup pipelines.
   *

@@ -12,9 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** winnow_fp(text): a document's winnowing fingerprint in ONE compiled
   * pass — STRUCT(n_grams INT, wfp ARRAY<BIGINT>) where n_grams is the
   * rolling-hash count and wfp the winnowed fingerprint set, exactly the
-  * semantics of the HOF twin spellings
-  * [[graft.operators.TextAnalysis.rollingHashesExpr]] +
-  * [[graft.operators.TextAnalysis.winnowExpr]] (lockstep-pinned):
+  * semantics of the HOF reference spellings `rollingHashesExpr` +
+  * `winnowExpr` in TextDedupSpec (lockstep-pinned):
   *
   *  - gram hashes: for every 5-code-point window,
   *    (c0·4362470401 + c1·16974593 + c2·66049 + c3·257 + c4) mod

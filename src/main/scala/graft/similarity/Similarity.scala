@@ -37,21 +37,17 @@ object Similarity {
     call_function(graft.plans.DotScaled.NAME, a, b)
   }
 
-  /** cosine = dot/(|a||b|), every intermediate deterministic. A
-    * zero-norm (all-zero) vector has no direction: its cosine is
-    * defined as 0 rather than NaN — Spark sorts NaN ABOVE every real
-    * double, so an unguarded 0/0 would make a single zero vector the
-    * rank-1 "neighbor" of every query in every desc-ordered top-k.
-    * The oracle spellings carry the same CASE. */
-  def cosine(a: Column, b: Column): Column =
-    cosinePre(a, b, norm(a), norm(b))
-
   /** Vector norm, computed ONCE per row (pair-wise ops must not
     * recompute norms per pair — 3× the HOF work). */
   def norm(v: Column): Column = sqrt(dotScaled(v, v).cast("double") / FP)
 
-  /** cosine from a precomputed-norm pair: dot is the only per-pair HOF.
-    * Zero-norm guard per [[cosine]]. */
+  /** cosine = dot/(|a||b|) from a precomputed-norm pair: dot is the only
+    * per-pair HOF, every intermediate deterministic. A zero-norm
+    * (all-zero) vector has no direction: its cosine is defined as 0
+    * rather than NaN — Spark sorts NaN ABOVE every real double, so an
+    * unguarded 0/0 would make a single zero vector the rank-1 "neighbor"
+    * of every query in every desc-ordered top-k. The oracle spellings
+    * carry the same CASE. */
   def cosinePre(a: Column, b: Column, na: Column, nb: Column): Column =
     when(na === 0.0 || nb === 0.0, lit(0.0))
       .otherwise((dotScaled(a, b).cast("double") / FP) / (na * nb))
@@ -264,20 +260,6 @@ object Similarity {
     graft.plans.LloydDists.register(cents.sparkSession)
     call_function(graft.plans.LloydDists.NAME, emb,
       typedLit(centArr), typedLit(cellArr))
-  }
-
-  /** The REFERENCE assignment spelling (crossJoin + min(struct) argmin)
-    * — kept for the SimilaritySpec route-equality law that proves the
-    * literal-inlined [[lloydAssignKeep]] bit-identical to it. */
-  private[graft] def lloydAssignJoin(e0: DataFrame, cents: DataFrame,
-                                     dims: Int): DataFrame = {
-    val e = e0.select("vec_id", "embedding")
-    e.crossJoin(broadcast(cents))
-      .withColumn("dist", lloydDist("embedding", dims))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("dist"), col("c_cluster"))).as("m"))
-      .select(col("vec_id"), col("m.c_cluster").as("cell"),
-        col("m.dist").as("dist"))
   }
 
   /** PQ codebooks: per-(seed-cell) scaled-long sums over all dims in
@@ -1170,65 +1152,6 @@ object Similarity {
         .orderBy("q_id", "rank")
     })
   )
-
-  /** The state-free q185 spelling (codebooks trained and corpus
-    * encoded INSIDE the query) — kept as the spec twin for the
-    * store == state-free law; the production query serves from the
-    * persisted index. */
-  private[graft] def pqAdcStateFree(s: org.apache.spark.sql.SparkSession,
-                                    dir: String): DataFrame = {
-    val subDim = 8
-    val e = Tables.fanOut(Tables.embeddings(s, dir))
-      .select("vec_id", "embedding")
-    val cents = pqCents(e, nSub = 8, subDim = subDim, nCodes = 256)
-    val codes = pqCodes(e, cents, subDim)
-    val qv = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val dtable = broadcast(pqDtable(qv, cents, subDim))
-    val scored = codes.join(dtable, Seq("ss", "code"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("gd")).as("adc_micro"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("adc_micro").asc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 10)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("adc_micro"))
-      .orderBy("q_id", "rank")
-  }
-
-  /** The state-free q186 spelling — spec twin, see [[pqAdcStateFree]]. */
-  private[graft] def ivfpqStateFree(s: org.apache.spark.sql.SparkSession,
-                                    dir: String): DataFrame = {
-    val subDim = 8
-    val e = Tables.fanOut(Tables.embeddings(s, dir))
-      .select("vec_id", "embedding")
-    val cells = lloydAssign(e).select("vec_id", "cell")
-    val cents8 = lloydCents(e, nCells = 8, dims = 64)
-    val qv = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val wc = Window.partitionBy("q_id")
-      .orderBy(col("cdist").asc, col("c_cluster").asc)
-    val probed = qv.crossJoin(broadcast(cents8))
-      .withColumn("cdist", lloydDist("q_emb", 64))
-      .withColumn("crk", row_number().over(wc))
-      .filter(col("crk") <= 2)
-      .select(col("q_id"), col("c_cluster").as("cell"))
-    val cents = pqCents(e, nSub = 8, subDim = subDim, nCodes = 256)
-    val codes = pqCodes(e, cents, subDim)
-    val dtable = broadcast(pqDtable(qv, cents, subDim))
-    val cand = cells.join(broadcast(probed), Seq("cell"))
-      .select("q_id", "vec_id")
-    val scored = cand.join(codes, Seq("vec_id"))
-      .join(dtable, Seq("q_id", "ss", "code"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("gd")).as("adc_micro"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("adc_micro").asc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 10)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("adc_micro"))
-      .orderBy("q_id", "rank")
-  }
 
   /** IVF (inverted-file) ANN: deterministic coarse centroids, cell
     * assignment by max cosine, nprobe-cell probe + exact re-rank; the

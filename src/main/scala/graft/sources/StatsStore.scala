@@ -1,6 +1,5 @@
 package graft.sources
 
-import graft.PinnedOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,41 +24,17 @@ import org.apache.spark.sql.functions._
 object StatsStore {
 
   /** Per-file (min, max, rows) stats over a data scan — the manifest's
-    * row shape, shared by the full build and the incremental append. */
+    * row shape. */
   private def rangeManifestRows(data: DataFrame, keyCol: String): DataFrame =
     data.groupBy(col("_metadata.file_path").as("file"))
       .agg(min(col(keyCol)).as("min_key"), max(col(keyCol)).as("max_key"),
         count(lit(1)).as("n_rows"))
 
-  /** Overwrite `$dir/manifest` through a tmp-dir write + rename swap
-    * (the append fns' data-append and manifest-overwrite are
-    * two non-atomic steps; a direct overwrite that dies mid-write could
-    * leave a PARTIAL manifest that silently hides data files from
-    * manifest-pruned reads). After the swap the only crash window is
-    * between the two renames, which leaves NO manifest — a loud read
-    * failure, never silent missing rows; [[requireManifestCoversData]]
-    * catches the remaining append-then-crash-before-swap case. */
-  private def swapManifest(rows: DataFrame, dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = rows.sparkSession
-    rows.coalesce(1).write.mode("overwrite").parquet(s"$dir/manifest_tmp")
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new Path(s"$dir/manifest")
-    val old = new Path(s"$dir/manifest_old")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(live) && !fs.rename(live, old))
-      throw new java.io.IOException(s"manifest swap: could not retire $live")
-    if (!fs.rename(new Path(s"$dir/manifest_tmp"), live))
-      throw new java.io.IOException(s"manifest swap: could not publish $live")
-    fs.delete(old, true)
-    invalidateCoverage(dir)
-  }
-
   /** Stores whose coverage has been verified since their last mutation
     * in THIS process. readRange/readBox/readNeedle are called per
     * bench rep; without memoization every serve paid a directory
     * listing plus a manifest read+collect (it inflated the
-    * timed serving cost of q106/q111/q127). Writers and appenders
+    * timed serving cost of q106/q111/q127). Writers
     * invalidate the entry, so the check re-runs exactly once after
     * each mutation; external-process mutations are out of scope (the
     * Scratch roots are per-pid by construction). */
@@ -78,8 +53,8 @@ object StatsStore {
   }
 
   /** Loud consistency check: every parquet data file must
-    * appear in the manifest — a data append that crashed before its
-    * manifest swap would otherwise make the new files INVISIBLE to
+    * appear in the manifest — a store write that died between its data
+    * and its manifest would otherwise make the new files INVISIBLE to
     * manifest-pruned reads (silently missing rows). Cost: one manifest
     * scan + one directory listing, both file-count-sized — the same
     * metadata cost class as a transaction-log replay. Paths compare
@@ -99,7 +74,7 @@ object StatsStore {
     if (missing.nonEmpty)
       throw new IllegalStateException(
         s"store $dir: ${missing.size} data file(s) absent from the manifest " +
-          s"(interrupted append?) — rebuild the store or re-run the append; " +
+          s"(interrupted write?) — rebuild the store; " +
           s"first missing: ${missing.head}")
   }
 
@@ -116,35 +91,6 @@ object StatsStore {
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/manifest")
     invalidateCoverage(dir)
-  }
-
-  /** Nightly-ingest maintenance for a range store (the q103 append
-    * pattern applied to StatsStore): cluster ONLY the
-    * batch, append its files to the data dir, and extend the manifest
-    * with the new files' stats. Batch cost, not store cost: the stats
-    * scan is filtered to the new files via the `_metadata.file_path`
-    * predicate (file-pruned at listing time), and the old manifest
-    * rides along as rows (the manifest is file-count-sized — its
-    * rewrite is the moral equivalent of a Delta log append). Batch key
-    * ranges may OVERLAP existing files — pruning stays CORRECT
-    * (per-file [min,max] is per-file truth); overlap only costs
-    * pruning efficiency, which the rotation rebuild
-    * ([[writeRangeStore]], the retireAndCompact maintenance window)
-    * repays. SourcesSpec pins append == rebuild for serving. */
-  def appendToRangeStore(batch: DataFrame, dir: String, keyCol: String,
-                         nFiles: Int): Unit = {
-    val spark = batch.sparkSession
-    // file-count-sized driver/executor footprint, pinned before the
-    // append so the overwrite below can't read its own output
-    val old = graft.Tables.parquet(spark, s"$dir/manifest").pinned()
-    val oldFiles = old.select("file").collect().map(_.getString(0)).toSeq
-    batch.repartitionByRange(nFiles, col(keyCol))
-      .sortWithinPartitions(keyCol)
-      .write.mode("append").parquet(s"$dir/data")
-    val fresh = rangeManifestRows(
-      graft.Tables.parquet(spark, s"$dir/data")
-        .filter(!col("_metadata.file_path").isin(oldFiles: _*)), keyCol)
-    swapManifest(old.unionByName(fresh), dir)
   }
 
   /** Files whose [min,max] intersects [lo,hi] — the skip decision,
@@ -249,7 +195,7 @@ object StatsStore {
     * stat.bloomFilter. A probe needs ALL k bits present; false
     * positives only cost an extra file open, never a wrong result. */
   /** Per-file OR-ed bloom words over a data scan — the manifest's row
-    * shape, shared by the full build and the incremental append. */
+    * shape. */
   private def bloomManifestRows(data: DataFrame, mBits: Int, k: Int): DataFrame =
     data
       .select(col("_metadata.file_path").as("file"),
@@ -270,28 +216,6 @@ object StatsStore {
     bloomManifestRows(graft.Tables.parquet(spark, s"$dir/data"), mBits, k)
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/manifest")
     invalidateCoverage(dir)
-  }
-
-  /** Nightly-ingest maintenance for a bloom store:
-    * append the batch's files, build bloom rows for ONLY the new files
-    * (the `_metadata.file_path` predicate prunes the stats scan at
-    * listing time), and extend the manifest. Per-file filters are
-    * independent by construction, so append == rebuild EXACTLY for
-    * candidate sets and serving (SourcesSpec pins it) — unlike the
-    * range store there is not even a pruning-efficiency trade. */
-  def appendToBloomStore(batch: DataFrame, dir: String, nFiles: Int,
-                         mBits: Int = 1 << 16, k: Int = 3): Unit = {
-    val spark = batch.sparkSession
-    val old = graft.Tables.parquet(spark, s"$dir/manifest").pinned()
-    val oldFiles = old.select("file").distinct()
-      .collect().map(_.getString(0)).toSeq // bounded: store file count
-    batch.repartitionByRange(nFiles, col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .write.mode("append").parquet(s"$dir/data")
-    val fresh = bloomManifestRows(
-      graft.Tables.parquet(spark, s"$dir/data")
-        .filter(!col("_metadata.file_path").isin(oldFiles: _*)), mBits, k)
-    swapManifest(old.unionByName(fresh), dir)
   }
 
   /** Files whose bloom has ALL of the needle's k bits — the candidate

@@ -6,15 +6,12 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Snapshot storage layer (SURVEY.md §2.1 S8-S12, §1.3): CSV and JSON
-  * compat flavors of the ticker snapshot plus the canonical
-  * date-partitioned parquet layout with latest-snapshot resolution.
-  *
-  * The reference's CSV sink declares 3 columns but feeds 4-field rows,
-  * so the enriched snapshot never actually persists (the url-drop
-  * defect, scrape_tickers.py:505-513, SURVEY.md §1.3) — here the
-  * 3-column projection is EXPLICIT, realizing the intent and fixing the
-  * defect. Snapshot versioning replaces filename mangling
+/** Snapshot storage layer (SURVEY.md §2.1 S12, §1.3): the ticker
+  * snapshot's one store, a date-partitioned parquet layout with
+  * latest-snapshot resolution. It holds all four fields, so the
+  * reference's url-drop defect (its CSV sink declares 3 columns but
+  * feeds 4-field rows, scrape_tickers.py:505-513) cannot occur.
+  * Snapshot versioning replaces filename mangling
   * (tickers_YYYYMMDD[_updated].json) with a `sync_date` partition
   * column, so "latest" is a partition listing, not an mtime glob
   * (update_ticker_info.py:38-60).
@@ -26,42 +23,13 @@ object TickerStore {
     StructField("name", StringType), StructField("sector", StringType),
     StructField("url", StringType)))
 
-  val csvSchema: StructType = StructType(tickerSchema.fields.take(3))
-
-  /** S9 (defect fixed): 3-col CSV snapshot via explicit projection. */
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.select("symbol", "name", "sector")
-      .write.option("header", "true").mode(SaveMode.Overwrite).csv(path)
-
-  /** S8: header CSV scan with pinned schema. */
-  def readCsv(s: SparkSession, path: String): DataFrame =
-    s.read.option("header", "true").schema(csvSchema).csv(path)
-
-  /** S11: JSON snapshot (all 4 fields, like the reference's JSON sinks). */
-  def writeJson(df: DataFrame, path: String): Unit =
-    df.select("symbol", "name", "sector", "url")
-      .write.mode(SaveMode.Overwrite).json(path)
-
-  /** S10: JSON scan with pinned schema. */
-  def readJson(s: SparkSession, path: String): DataFrame =
-    s.read.schema(tickerSchema).json(path)
-
-  /** Canonical store: parquet partitioned by sync_date (+ kind, keeping
-    * the reference's raw-vs-updated distinction queryable). */
-  def writeSnapshot(df: DataFrame, root: String, syncDate: String, kind: String): Unit =
-    df.select("symbol", "name", "sector", "url")
-      .withColumn("sync_date", lit(syncDate))
-      .withColumn("kind", lit(kind))
-      .write.partitionBy("sync_date", "kind").mode(SaveMode.Append).parquet(root)
-
   /** Same-day IDEMPOTENT snapshot write — the reference's sync
     * OVERWRITES tickers_YYYYMMDD.json when re-run the same day
     * (scrape_tickers.py's dated filename), so a re-run must replace
     * that day's partition, never append duplicates into it. Spelled as
     * a dynamic partition overwrite: only the (sync_date, kind)
     * partitions present in `df`'s write are rewritten; history stays.
-    * [[graft.Main]]'s sync/update stages use this; the plain
-    * [[writeSnapshot]] append remains for distinct-date bulk loads. */
+    * [[graft.Main]]'s sync/update stages write through this. */
   def writeSnapshotIdempotent(df: DataFrame, root: String, syncDate: String, kind: String): Unit = {
     val spark = df.sparkSession
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
@@ -75,15 +43,6 @@ object TickerStore {
       case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
   }
-
-  /** P5: delisted-ticker archive — rows leaving the universe move to an
-    * append-only archive partitioned by delist date (filter + write;
-    * README.md:166-172's "archive delisted tickers"). */
-  def archiveDelisted(snapshot: DataFrame, delisted: DataFrame,
-                      archiveRoot: String, delistDate: String): Unit =
-    snapshot.join(delisted.select("symbol"), Seq("symbol"), "left_semi")
-      .withColumn("delist_date", lit(delistDate))
-      .write.partitionBy("delist_date").mode(SaveMode.Append).parquet(archiveRoot)
 
   /** The latest snapshot's partition directories: `syncDate` with the
     * `kinds` read for it (raw values, unescaped) and their `dirs`. */
@@ -156,10 +115,4 @@ object TickerStore {
     * pinned [[tickerSchema]] (no schema inference). */
   def readSnapshot(s: SparkSession, latest: Latest): DataFrame =
     s.read.schema(tickerSchema).parquet(latest.dirs: _*)
-
-  /** The latest snapshot's rows ([[latestPartition]], then
-    * [[readSnapshot]]); throws when `root` holds no snapshot. */
-  def readLatestSnapshot(s: SparkSession, root: String): DataFrame =
-    readSnapshot(s, latestPartition(s, root).getOrElse(
-      throw new IllegalStateException(s"no ticker snapshot under $root")))
 }

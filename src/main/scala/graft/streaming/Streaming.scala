@@ -34,16 +34,6 @@ object Streaming {
       .select(col("w.start").as("day_start"), col("event_type"),
         col("open"), col("high"), col("low"), col("close"), col("volume"))
 
-  /** Watermarked sliding-window event counts (late data tolerated). */
-  def windowedCounts(events: DataFrame, size: String = "1 hour",
-                     slide: String = "30 minutes", watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), size, slide).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
-      .select(col("w.start").as("w_start"), col("w.end").as("w_end"),
-        col("event_type"), col("n"), col("total"))
-
   /** Incremental append job: micro-batch merge of a landing directory
     * into a DAY-PARTITIONED store with natural-key dedup — the P2 loop.
     * Runs with Trigger.AvailableNow (cron-equivalent).
@@ -216,7 +206,7 @@ object Streaming {
 
   /** Store lifecycle for the [[nearDupAdmit]] stores —
     * the document-side analogue of the reference's snapshot rotation /
-    * delisted-ticker archive (P5, `TickerStore.archiveDelisted`):
+    * delisted-ticker archive (P5):
     *
     *  - RETIRE: rows whose doc_id is in `retireIds` (takedown, TTL,
     *    supersession) move from the admitted-doc store AND the
@@ -1756,16 +1746,6 @@ object Streaming {
     * purges each key once the watermark passes its event time. */
   def dedupStream(events: DataFrame, watermark: String = "1 day"): DataFrame =
     events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark("event_id")
-
-  /** Event-time session windows (built-in session_window aggregate). */
-  def sessionWindows(events: DataFrame, gap: String = "30 minutes",
-                     watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap).as("w"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
-      .select(col("w.start").as("session_start"), col("w.end").as("session_end"),
-        col("user_id"), col("n_events"), col("total_value"))
 
   case class PackDoc(doc_id: Long, source: String, n_tok: Long)
   case class PackedDoc(doc_id: Long, source: String, n_tok: Long,

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Analytics.custPartEdges
 
 class AnalyticsSpec extends SparkSpec {
   import spark.implicits._
@@ -124,7 +126,7 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("q253 collapsed one-pass spelling == generic two-round loop, bit-for-bit") {
-    // r14: the shipped q253 rides the bipartite structural facts of its
+    // the shipped q253 rides the bipartite structural facts of its
     // own spelling (odd ids are the dangling set of every round; even
     // ids carry the uniform dm DIV n) to fold both rounds into one
     // edge pass — this law re-runs the GENERIC two-round loop it
@@ -134,7 +136,7 @@ class AnalyticsSpec extends SparkSpec {
       df.select($"node_id", $"kind", $"mass").as[(Long, Long, Long)].collect().toSeq
     val got = rows(SparkEntry.queries("q253_dangling_mass")(spark, sf))
     graft.Caches.releaseAll()
-    val ref = rows(graft.operators.Analytics.danglingMassGeneric(spark, sf))
+    val ref = rows(AnalyticsSpec.danglingMassGeneric(spark, sf))
     graft.Caches.releaseAll()
     assert(got == ref, s"collapsed q253 diverged from the generic loop:\n$got\nvs\n$ref")
   }
@@ -258,7 +260,7 @@ class AnalyticsSpec extends SparkSpec {
       df.select($"first_ev", $"converts", $"n_users", $"total_events")
         .as[(String, Boolean, Long, Long)].collect().toSeq
     val dfa = rows(SparkEntry.queries("q206_sequence_pattern")(spark, sf))
-    val collected = rows(graft.operators.Analytics.sequencePatternCollect(spark, sf))
+    val collected = rows(AnalyticsSpec.sequencePatternCollect(spark, sf))
     assert(dfa == collected,
       s"DFA diverged from the collect spelling:\n  dfa=$dfa\n  collect=$collected")
     // the DFA plan must not buffer journeys: no collect_list anywhere
@@ -418,5 +420,62 @@ class AnalyticsSpec extends SparkSpec {
     val again = graft.operators.Analytics.copurchaseEdges(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(again == served)
+  }
+}
+
+/** The reference spellings AnalyticsSpec's laws compare catalogue
+  * queries against. */
+object AnalyticsSpec {
+
+  /** The collect_list spelling of q206, the reference of the DFA ==
+    * collect law; never a production path (unbounded per-key array, see
+    * [[graft.operators.Analytics.journeySummaries]]). */
+  def sequencePatternCollect(s: SparkSession, dir: String): DataFrame = {
+    val j = Tables.events(s, dir)
+      .select(col("user_id"),
+        struct(col("ts"), col("event_id"),
+          substring(col("event_type"), 1, 1).as("l")).as("x"))
+      .groupBy("user_id")
+      .agg(array_sort(collect_list(col("x"))).as("xs"))
+      .select(col("user_id"),
+        concat_ws("", expr("transform(xs, x -> x.l)")).as("journey"))
+    j.groupBy(substring(col("journey"), 1, 1).as("first_ev"),
+        col("journey").rlike("vvvp").as("converts"))
+      .agg(count(lit(1)).as("n_users"),
+        sum(length(col("journey"))).cast("long").as("total_events"))
+      .orderBy("first_ev", "converts")
+  }
+
+  /** The GENERIC two-unrolled-rounds dangling-mass spelling q253 used
+    * before its collapsed spelling: the reference of the law that proves
+    * the collapsed spelling bit-identical. */
+  def danglingMassGeneric(s: SparkSession, dir: String): DataFrame = {
+    val e = Caches.cached(custPartEdges(s, dir))
+    val nodes = Caches.cached(
+      e.select((col("c") * 2).as("id"))
+        .unionByName(e.select((col("p") * 2 + 1).as("id"))).distinct())
+    val nn = nodes.agg(count(lit(1)).as("n"))
+    val deg = Caches.cached(
+      e.groupBy((col("c") * 2).as("id")).agg(count(lit(1)).as("deg")))
+    def round(m: DataFrame): DataFrame = {
+      // dangling mass: nodes with no out-edges (1-row aggregate)
+      val dang = m.join(deg, Seq("id"), "left_anti")
+        .agg(coalesce(sum(col("m")), lit(0L)).as("dm"))
+      val infl = e.select((col("c") * 2).as("id"), (col("p") * 2 + 1).as("dst"))
+        .join(m.join(deg, Seq("id")), Seq("id"))
+        .select(col("dst").as("id"), expr("m DIV deg").as("frag"))
+        .groupBy("id").agg(sum(col("frag")).as("infl"))
+      nodes.join(infl, Seq("id"), "left")
+        .crossJoin(broadcast(dang)) // 1 row: this round's dangling mass
+        .crossJoin(broadcast(nn))   // 1 row: the node count
+        .select(col("id"),
+          (coalesce(col("infl"), lit(0L)) + expr("dm DIV n")).as("m"))
+    }
+    val m1 = Caches.cached(round(nodes.withColumn("m", lit(1000000L))))
+    val m2 = round(m1)
+    m2.select(col("id").as("node_id"), (col("id") % 2).as("kind"),
+        col("m").as("mass"))
+      .orderBy(col("mass").desc, col("node_id").asc)
+      .limit(20)
   }
 }

@@ -3,9 +3,9 @@ package graft
 import java.io.{ByteArrayOutputStream, PrintStream}
 import org.apache.spark.sql.functions.{lit, raise_error}
 
-/** [[Bench.walk]], the one walk every catalogue main runs on, driven
-  * with synthetic catalogues: a failing query is reported with its
-  * cause and never stops the walk or leaks what it registered. */
+/** [[Bench.walk]], the one walk over the catalogue, driven with
+  * synthetic catalogues: a failing query is reported and returned with
+  * its cause and never stops the walk or leaks what it registered. */
 class BenchSpec extends SparkSpec {
 
   /** `body`'s result and the stderr lines it printed through `Console`. */
@@ -33,7 +33,7 @@ class BenchSpec extends SparkSpec {
       }
     }
     assert(ok == Seq("w1_rows" -> 5L))
-    assert(failed == Seq("w2_throws_in_build", "w3_throws_in_write"))
+    assert(failed.map(_._1) == Seq("w2_throws_in_build", "w3_throws_in_write"))
     assert(Caches.pinnedCount == 0, "a failed query's pin outlived its attempt")
     // the cause of the write's failure, as a direct consume reports it
     val cause = intercept[Exception](Bench.consume(throwsInWrite(spark, sf)))
@@ -42,6 +42,11 @@ class BenchSpec extends SparkSpec {
     assert(fails(0) == "TEST FAIL w2_throws_in_build: java.lang.IllegalStateException: no frame after the pin")
     assert(fails(1).startsWith(s"TEST FAIL w3_throws_in_write: ${cause.getClass.getName}: ") &&
       fails(1).contains("raised in the write"), fails(1))
+    // the walk returns each cause as `<class>: <message>`, as it printed it
+    assert(failed(0)._2 == "java.lang.IllegalStateException: no frame after the pin")
+    assert(failed(1)._2.startsWith(s"${cause.getClass.getName}: ") &&
+      failed(1)._2.contains("raised in the write"), failed(1)._2)
+    assert(fails == failed.map { case (n, c) => s"TEST FAIL $n: $c" })
     assert(lines.last == "TEST DONE 1 of 3 ok; failed: w2_throws_in_build, w3_throws_in_write")
   }
 
@@ -58,7 +63,7 @@ class BenchSpec extends SparkSpec {
     val ((ok, failed), lines) = stderrOf {
       Bench.walk("TEST", queries)((_, fn) => Bench.reps(spark, sf, fn, 2))
     }
-    assert(failed == Seq("r1_second_rep_throws"))
+    assert(failed == Seq("r1_second_rep_throws" -> "java.lang.RuntimeException: rep 2 failed"))
     assert(lines.contains("TEST FAIL r1_second_rep_throws: java.lang.RuntimeException: rep 2 failed"))
     assert(ok.map(_._1) == Seq("r2_steady"))
     // a sub-second query is topped up to four reps, each split into build and exec

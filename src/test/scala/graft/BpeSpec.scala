@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Bpe
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 class BpeSpec extends SparkSpec {
@@ -44,7 +45,7 @@ class BpeSpec extends SparkSpec {
     // this test exists to pin; the default stats gate would route this
     // demo vocab to the single-task path (equality pinned below)
     val inc = Bpe.trainMerges(spark, wf, nMerges = 50, localBudgetBytes = 0L)
-    val ref = Bpe.trainMergesRecompute(spark, wf, nMerges = 50)
+    val ref = BpeSpec.trainMergesRecompute(spark, wf, nMerges = 50)
     assert(inc.nonEmpty && inc == ref,
       s"incremental/recompute diverged: ${inc.zip(ref).find(p => p._1 != p._2)}")
   }
@@ -134,5 +135,34 @@ class BpeSpec extends SparkSpec {
     assert(stored == retrained,
       s"stored merge table diverged from retraining:\n  stored=$stored\n  retrained=$retrained")
     assert(stored.size == 10, "fixture corpus must yield the full 10 merges")
+  }
+}
+
+object BpeSpec {
+
+  /** Reference spelling of [[Bpe.trainMerges]]: full pair recount every
+    * round, the lockstep oracle for the incremental maintenance —
+    * O(vocab) per round where `trainMerges` is O(touched words). */
+  def trainMergesRecompute(spark: SparkSession, wordFreq: DataFrame,
+                           nMerges: Int): Seq[(Int, String, String, Long)] = {
+    import spark.implicits._
+    var vocab = Caches.pin(Bpe.symVocab(spark, wordFreq))
+    val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
+    var round = 1
+    while (round <= nMerges) {
+      val top = Bpe.pairCounts(vocab).orderBy(col("n").desc, col("l"), col("r")).limit(1)
+        .as[(String, String, Long)].collect()
+      if (top.isEmpty) round = nMerges + 1
+      else {
+        val (l, r, n) = top(0)
+        merges += ((merges.length + 1, l, r, n))
+        val next = Caches.pin(
+          vocab.map { case (syms, c) => (Bpe.applyMerge(syms, l, r), c) })
+        Caches.unpin(vocab)
+        vocab = next
+        round += 1
+      }
+    }
+    merges.toSeq
   }
 }

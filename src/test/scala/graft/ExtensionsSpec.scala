@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
@@ -146,11 +144,8 @@ class ExtensionsSpec extends SparkSpec {
     // doGenCode string is a second spelling that only the compiled path runs
     val member = """\n  (?:override|def|private|protected|lazy|val|@transient)\b|\n\}""".r
     val loop = """\b(?:for|while)\s*\(""".r
-    val files = Files.list(Paths.get("src/main/scala/graft/plans"))
-    val sources =
-      try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
-        .map(f => f.getFileName.toString -> Files.readString(f)).toList
-      finally files.close()
+    val sources = SourceTree.scalaFiles("src/main/scala/graft/plans")
+      .map { case (f, src) => f.getFileName.toString -> src }
     val bodies = sources.flatMap { case (name, src) =>
       "def doGenCode".r.findAllMatchIn(src).map { m =>
         val rest = src.substring(m.end)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.multimodal.Multimodal
 
 class MultimodalSpec extends SparkSpec {
@@ -8,7 +9,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("synthetic media table honours the schema contract") {
     val m = Multimodal.syntheticMedia(spark, sf)
-    assert(m.columns.toSeq == Multimodal.mediaSchema.fieldNames.toSeq)
+    assert(m.columns.toSeq == MultimodalSpec.mediaSchema.fieldNames.toSeq)
     val kinds = m.select("kind").distinct().as[String].collect().toSet
     assert(kinds == Set("image", "audio", "video"))
     // image rows carry dimensions, audio/video carry duration
@@ -314,4 +315,17 @@ class MultimodalSpec extends SparkSpec {
     assert(rows.exists(r => r._3 > 1), "gate never fired")
     assert(rows.exists(r => r._2 > 1 && r._3 < r._2), "gate always fired")
   }
+}
+
+object MultimodalSpec {
+
+  /** Media-table schema contract: metadata columns + opaque payload. */
+  val mediaSchema: StructType = StructType(Seq(
+    StructField("media_id", LongType, nullable = false),
+    StructField("kind", StringType, nullable = false),       // image|audio|video
+    StructField("mime", StringType, nullable = false),
+    StructField("width", IntegerType, nullable = true),       // image/video
+    StructField("height", IntegerType, nullable = true),
+    StructField("duration_ms", LongType, nullable = true),    // audio/video
+    StructField("payload", BinaryType, nullable = false)))
 }

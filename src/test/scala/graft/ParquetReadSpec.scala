@@ -88,11 +88,7 @@ class ParquetReadSpec extends SparkSpec {
   }
 
   test("src/main reads parquet without a schema only through Tables.parquet") {
-    val walk = Files.walk(Paths.get("src/main/scala"))
-    val sources =
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
-        .map(f => f -> Files.readString(f)).toList
-      finally walk.close()
+    val sources = SourceTree.scalaFiles("src/main/scala")
     val home = Paths.get("src/main/scala/graft/Tables.scala")
     val homeText = sources.toMap.getOrElse(home, "")
     val from = homeText.indexOf("def parquet(")

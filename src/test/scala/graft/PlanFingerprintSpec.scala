@@ -42,10 +42,10 @@ class PlanFingerprintSpec extends SparkSpec {
   test("every query's physical-plan operator multiset matches the committed PLANS.json") {
     // audit queries are not pinned: their construction RUNS a full
     // streaming/lifecycle replay and their returned plan is a constant
-    // result scan with no regression signal (see SparkEntry.auditQueries)
+    // result scan with no regression signal (see Catalogue.auditQueries)
     val pass = Catalogue.pass(spark, sf)
     val current = pass.records.toSeq.sortBy(_._1).collect {
-      case (name, r) if !SparkEntry.auditQueries(name) => name -> r.fingerprint
+      case (name, r) if !Catalogue.auditQueries(name) => name -> r.fingerprint
     }
     if (sys.env.get("SPARK_GRAFT_PLANS_UPDATE").contains("1")) {
       assert(pass.failed.isEmpty, s"not regenerating $artifact over failed queries:\n" +

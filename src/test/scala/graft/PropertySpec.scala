@@ -161,7 +161,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("winnowing fingerprints are edit-robust and identity-stable (q46 law)") {
-    import graft.operators.TextAnalysis
     val base = samples(Gen.listOfN(40, Gen.alphaLowerChar), 6)
       .map(_.mkString).filter(_.length == 40)
     base.foreach { text =>
@@ -169,8 +168,8 @@ class PropertySpec extends SparkSpec {
       val edited = text.updated(20, if (text(20) == 'z') 'a' else 'z')
       val df = Seq(("orig", text), ("same", text), ("edit", edited))
         .toDF("tag", "text")
-        .withColumn("hs", expr(TextAnalysis.rollingHashesExpr("text")))
-        .withColumn("wfp", expr(TextAnalysis.winnowExpr("hs")))
+        .withColumn("hs", expr(TextDedupSpec.rollingHashesExpr("text")))
+        .withColumn("wfp", expr(TextDedupSpec.winnowExpr("hs")))
         .select($"tag", $"wfp")
       val fp = df.as[(String, Seq[Long])].collect().toMap
       assert(fp("orig") == fp("same"), "identical text ⇒ identical fingerprints")

@@ -65,12 +65,12 @@ class ScaleSpec extends SparkSpec {
         "fanOut must repartition shuffle-bearing plans unconditionally")
       // FILTERED many-file scan: the partition count survives a
       // selective pushed filter while most partitions empty out, so the
-      // gate must not no-op (r6 ADVICE) - the repartition only carries
+      // gate must not no-op - the repartition only carries
       // the filter's survivors
       val filtered = spark.read.parquet(s"$tmp/many").filter($"doc_id" < 10)
       assert(hasRepartition(Tables.fanOut(filtered)),
         "fanOut must repartition filtered scans - their partitions may be mostly empty")
-      // the nonSelectiveFilter OPT-IN (r13): a call site that vouches
+      // the nonSelectiveFilter OPT-IN: a call site that vouches
       // its predicate keeps the bulk of every partition (q01's
       // l_shipdate <= 1998-09-02 shape) makes Filter transparent, so
       // an already-parallel filtered scan stays exchange-free at
@@ -121,7 +121,7 @@ class ScaleSpec extends SparkSpec {
 
   test("adversarial skew: one mega-cluster's pair emission spreads across salt blocks") {
     import graft.dedup.Dedup
-    // skewed corpus (r6 verdict #5): 10% of the docs are ONE near-dup
+    // skewed corpus: 10% of the docs are ONE near-dup
     // cluster — identical signatures, so every band has one mega bucket
     // holding C(60,2) = 1770 of the pair emission. The law must hold on
     // exactly the distribution salting exists for.
@@ -202,33 +202,6 @@ class ScaleSpec extends SparkSpec {
       assert(p.contains("blk"),
         s"q86 must route through the salted narrow survivors join:\n${p.take(3000)}")
     } finally Caches.releaseAll()
-  }
-
-  test("bucketed tables join with zero Exchange (co-located layout)") {
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      Scale.writeBucketed(
-        Tables.orders(spark, sf).select("o_orderkey", "o_custkey", "o_totalprice"),
-        "b_orders", "o_custkey", 8)
-      Scale.writeBucketed(
-        Tables.customer(spark, sf).select("c_custkey", "c_nationkey"),
-        "b_customer", "c_custkey", 8)
-      val j = spark.table("b_orders")
-        .join(spark.table("b_customer"), $"o_custkey" === $"c_custkey")
-      j.collect() // finalize the adaptive plan
-      val p = j.queryExecution.executedPlan.toString
-      assert(!p.contains("Exchange"),
-        s"bucketed join must not shuffle or broadcast either side:\n$p")
-      // and the layout is real: same join result as the unbucketed plan
-      assert(j.count() ==
-        Tables.orders(spark, sf).join(Tables.customer(spark, sf),
-          $"o_custkey" === $"c_custkey").count())
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS b_orders")
-      spark.sql("DROP TABLE IF EXISTS b_customer")
-    }
   }
 
   test("adversarial mega-paragraph: q165's argmin combines map-side (scale law)") {

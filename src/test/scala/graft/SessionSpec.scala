@@ -1,7 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Path, Paths}
 import org.apache.logging.log4j.{Level, LogManager}
 
 /** [[Session]] is the one way to build a session: it hands back the live
@@ -27,11 +26,8 @@ class SessionSpec extends SparkSpec {
 
   test("the sources build a session in exactly one place: Session.scala") {
     val call = """SparkSession\.builder\(\)""".r
-    def callSites(root: String): Seq[Path] = {
-      val files = Files.walk(Paths.get(root))
-      try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
-        .flatMap(f => Seq.fill(call.findAllIn(Files.readString(f)).size)(f)).toList
-      finally files.close()
+    def callSites(root: String): Seq[Path] = SourceTree.scalaFiles(root).flatMap {
+      case (f, text) => Seq.fill(call.findAllIn(text).size)(f)
     }
     assert(callSites("src/main/scala") == Seq(Paths.get("src/main/scala/graft/Session.scala")))
     assert(callSites("src/test/scala").isEmpty)

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.similarity.Similarity
 
@@ -10,7 +11,7 @@ class SimilaritySpec extends SparkSpec {
   test("cosine: exact on constructed vectors") {
     val df = Seq((Seq(1.0f, 0.0f), Seq(0.0f, 1.0f)), (Seq(1.0f, 1.0f), Seq(1.0f, 1.0f)))
       .toDF("a", "b")
-    val got = df.select(Similarity.cosine($"a", $"b").as("c")).as[Double].collect()
+    val got = df.select(SimilaritySpec.cosine($"a", $"b").as("c")).as[Double].collect()
     assert(math.abs(got(0)) < 1e-9 && math.abs(got(1) - 1.0) < 1e-9)
   }
 
@@ -23,7 +24,7 @@ class SimilaritySpec extends SparkSpec {
       (Seq(1.0f, 1.0f), Seq(0.0f, 0.0f)),
       (Seq(0.0f, 0.0f), Seq(0.0f, 0.0f)))
       .toDF("a", "b")
-    val got = df.select(Similarity.cosine($"a", $"b").as("c")).as[Double].collect()
+    val got = df.select(SimilaritySpec.cosine($"a", $"b").as("c")).as[Double].collect()
     got.foreach(c => assert(c == 0.0, s"zero-norm cosine must be 0.0, got $c"))
     // and through the ranked path: a planted zero vector must not
     // displace true neighbors
@@ -36,7 +37,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("lloydAssign literal-inlined route == crossJoin+argmin reference, bit-for-bit") {
-    // r14: lloydAssignKeep inlines the bounded centroid table as
+    // lloydAssignKeep inlines the bounded centroid table as
     // literals (one stream-through projection, zero exchanges); this
     // law pins it bit-identical — cells AND distances — to the former
     // crossJoin + min(struct) spelling on the live corpus.
@@ -46,7 +47,7 @@ class SimilaritySpec extends SparkSpec {
       df.select($"vec_id", $"cell", $"dist").as[(Long, Long, Double)]
         .collect().toSet
     val lit = rows(Similarity.lloydAssignKeep(e, cents, 64, Nil))
-    val ref = rows(Similarity.lloydAssignJoin(e, cents, 64))
+    val ref = rows(SimilaritySpec.lloydAssignJoin(e, cents, 64))
     assert(lit == ref, "literal-inlined lloyd assignment diverged from the join route")
     // and the keep variant carries extra columns without changing the assignment
     val kept = Similarity.lloydAssignKeep(e, cents, 64, Seq("embedding"))
@@ -144,17 +145,15 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("LSH ANN recall floor against exact top-5 (q40)") {
-    // multiprobe 12×8 measures 0.76 on this fixture (r5 RecallSweep);
-    // floor tightened 0.6 → 0.7 (r6, per verdict): a silent
-    // half-regression must not pass
+    // multiprobe 12×8 measures 0.76 on this fixture; the 0.7 floor
+    // keeps a silent half-regression from passing
     val r = recallVsExact("q40_ann_lsh")
     info(f"q40 recall@5 = $r%.3f")
     assert(r >= 0.7, f"LSH recall collapsed: $r%.3f")
   }
 
   test("IVF ANN recall floor against exact top-5 (q43)") {
-    // nprobe=6/16 measures 0.78 on this fixture (r5 RecallSweep);
-    // floor tightened 0.6 → 0.7 (r6, per verdict)
+    // nprobe=6/16 measures 0.78 on this fixture; floor 0.7
     val r = recallVsExact("q43_ann_ivf")
     info(f"q43 recall@5 = $r%.3f")
     assert(r >= 0.7, f"IVF recall collapsed: $r%.3f")
@@ -183,8 +182,7 @@ class SimilaritySpec extends SparkSpec {
     val lsh = SparkEntry.queries("q48_embedding_neardup_lsh")(spark, sf)
       .select($"a_id", $"b_id").as[(Long, Long)].collect().toSet
     assert(lsh.subsetOf(exact), s"false positives: ${lsh.diff(exact)}")
-    // multiprobe 8×8 measures 0.708 on this fixture (r5 RecallSweep);
-    // floor tightened 0.55 → 0.65 (r6, per verdict)
+    // multiprobe 8×8 measures 0.708 on this fixture; floor 0.65
     val recall = if (exact.isEmpty) 1.0 else lsh.size.toDouble / exact.size
     info(f"q48 pair recall = $recall%.3f (${lsh.size}/${exact.size})")
     assert(recall >= 0.65, f"LSH pair recall collapsed: $recall%.3f")
@@ -219,7 +217,7 @@ class SimilaritySpec extends SparkSpec {
     val df = SparkEntry.queries("q87_ivf_serve")(spark, sf)
     // the probed-cell filter must reach the index scan as a PARTITION
     // filter on the DRIVER-HARNESS query itself, not only the library
-    // helper (promoted from the writeIvfIndex test per r5 verdict)
+    // helper
     val p = df.queryExecution.executedPlan.toString
     assert(p.linesIterator.exists(l => l.contains("FileScan") &&
         l.contains("/index") && l.contains("PartitionFilters: [cell")),
@@ -657,19 +655,19 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("persisted PQ index: store-served q185/q186 equal the state-free spellings bit-for-bit") {
-    // r9 verdict #1: the production queries serve from the Scratch
-    // store; the in-query training spellings survive as twins. Both
+    // the production queries serve from the Scratch store; the
+    // in-query training spellings are the references. Both
     // sides are integer-granule deterministic, so equality is exact
     // set equality on every output column, not a tolerance.
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"q_id", $"rank".cast("int"), $"vec_id", $"adc_micro")
         .as[(Long, Int, Long, Long)].collect().toSet
     val flatStore = rows(SparkEntry.queries("q185_pq_adc_topk")(spark, sf))
-    val flatFree = rows(Similarity.pqAdcStateFree(spark, sf))
+    val flatFree = rows(SimilaritySpec.pqAdcStateFree(spark, sf))
     assert(flatStore == flatFree,
       "store-served PQ-ADC diverged from the state-free spelling")
     val ivfStore = rows(SparkEntry.queries("q186_ivfpq_topk")(spark, sf))
-    val ivfFree = rows(Similarity.ivfpqStateFree(spark, sf))
+    val ivfFree = rows(SimilaritySpec.ivfpqStateFree(spark, sf))
     assert(ivfStore == ivfFree,
       "store-served IVFPQ diverged from the state-free spelling")
   }
@@ -783,5 +781,80 @@ object SimilaritySpec {
           (x, r) => floor(x.cast("double") * lit(1e6)).cast("long") * r),
         lit(0L), (acc, t) => acc + t).as(s"p$k")
     }
+  }
+
+  /** cosine of two vector columns: [[Similarity.cosinePre]] with both
+    * norms computed inline. */
+  def cosine(a: Column, b: Column): Column =
+    Similarity.cosinePre(a, b, Similarity.norm(a), Similarity.norm(b))
+
+  /** The REFERENCE assignment spelling (crossJoin + min(struct) argmin)
+    * of the route-equality law that proves the literal-inlined
+    * [[Similarity.lloydAssignKeep]] bit-identical to it. */
+  def lloydAssignJoin(e0: DataFrame, cents: DataFrame, dims: Int): DataFrame = {
+    val e = e0.select("vec_id", "embedding")
+    e.crossJoin(broadcast(cents))
+      .withColumn("dist", Similarity.lloydDist("embedding", dims))
+      .groupBy(col("vec_id"))
+      .agg(min(struct(col("dist"), col("c_cluster"))).as("m"))
+      .select(col("vec_id"), col("m.c_cluster").as("cell"),
+        col("m.dist").as("dist"))
+  }
+
+  /** The state-free q185 spelling (codebooks trained and corpus
+    * encoded INSIDE the query), the reference of the store == state-free
+    * law; the production query serves from the persisted index. */
+  def pqAdcStateFree(s: SparkSession, dir: String): DataFrame = {
+    val subDim = 8
+    val e = Tables.fanOut(Tables.embeddings(s, dir))
+      .select("vec_id", "embedding")
+    val cents = Similarity.pqCents(e, nSub = 8, subDim = subDim, nCodes = 256)
+    val codes = Similarity.pqCodes(e, cents, subDim)
+    val qv = e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    val dtable = broadcast(Similarity.pqDtable(qv, cents, subDim))
+    val scored = codes.join(dtable, Seq("ss", "code"))
+      .groupBy(col("q_id"), col("vec_id"))
+      .agg(sum(col("gd")).as("adc_micro"))
+    val w = Window.partitionBy("q_id")
+      .orderBy(col("adc_micro").asc, col("vec_id").asc)
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 10)
+      .select(col("q_id"), col("rank"), col("vec_id"), col("adc_micro"))
+      .orderBy("q_id", "rank")
+  }
+
+  /** The state-free q186 spelling, the reference of the same law, see
+    * [[pqAdcStateFree]]. */
+  def ivfpqStateFree(s: SparkSession, dir: String): DataFrame = {
+    val subDim = 8
+    val e = Tables.fanOut(Tables.embeddings(s, dir))
+      .select("vec_id", "embedding")
+    val cells = Similarity.lloydAssign(e).select("vec_id", "cell")
+    val cents8 = Similarity.lloydCents(e, nCells = 8, dims = 64)
+    val qv = e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    val wc = Window.partitionBy("q_id")
+      .orderBy(col("cdist").asc, col("c_cluster").asc)
+    val probed = qv.crossJoin(broadcast(cents8))
+      .withColumn("cdist", Similarity.lloydDist("q_emb", 64))
+      .withColumn("crk", row_number().over(wc))
+      .filter(col("crk") <= 2)
+      .select(col("q_id"), col("c_cluster").as("cell"))
+    val cents = Similarity.pqCents(e, nSub = 8, subDim = subDim, nCodes = 256)
+    val codes = Similarity.pqCodes(e, cents, subDim)
+    val dtable = broadcast(Similarity.pqDtable(qv, cents, subDim))
+    val cand = cells.join(broadcast(probed), Seq("cell"))
+      .select("q_id", "vec_id")
+    val scored = cand.join(codes, Seq("vec_id"))
+      .join(dtable, Seq("q_id", "ss", "code"))
+      .groupBy(col("q_id"), col("vec_id"))
+      .agg(sum(col("gd")).as("adc_micro"))
+    val w = Window.partitionBy("q_id")
+      .orderBy(col("adc_micro").asc, col("vec_id").asc)
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 10)
+      .select(col("q_id"), col("rank"), col("vec_id"), col("adc_micro"))
+      .orderBy("q_id", "rank")
   }
 }

@@ -88,29 +88,12 @@ class SourcesSpec extends SparkSpec {
       live.head().getAs[String]("provenance") == "live")
   }
 
-  test("CSV snapshot round-trip uses the fixed 3-column projection (S8/S9)") {
-    val dir = tmp("csv")
-    TickerStore.writeCsv(Ingest.mockTickerTable(spark).toDF(), dir)
-    val back = TickerStore.readCsv(spark, dir)
-    assert(back.columns.toSeq == Seq("symbol", "name", "sector")) // url dropped by design
-    assert(back.count() == 22)
-    assert(back.filter($"symbol" === "ENGRO").head().getString(2) == "Fertilizer")
-  }
-
-  test("JSON snapshot round-trip keeps all 4 fields (S10/S11)") {
-    val dir = tmp("json")
-    TickerStore.writeJson(Ingest.mockTickerTable(spark).toDF(), dir)
-    val back = TickerStore.readJson(spark, dir)
-    assert(back.columns.toSeq == Seq("symbol", "name", "sector", "url"))
-    assert(back.filter($"url".startsWith("https://dps.psx.com.pk/")).count() == 22)
-  }
-
   test("partitioned store resolves the latest snapshot of either kind (S12)") {
     val root = tmp("store")
     val t = Ingest.mockTickerTable(spark).toDF()
-    TickerStore.writeSnapshot(t, root, "20250101", "raw")
-    TickerStore.writeSnapshot(t.withColumn("name", upper($"name")), root, "20250102", "updated")
-    val latest = TickerStore.readLatestSnapshot(spark, root)
+    TickerStore.writeSnapshotIdempotent(t, root, "20250101", "raw")
+    TickerStore.writeSnapshotIdempotent(t.withColumn("name", upper($"name")), root, "20250102", "updated")
+    val latest = TickerStore.readSnapshot(spark, TickerStore.latestPartition(spark, root).get)
     assert(latest.count() == 22)
     // the 0102 'updated' snapshot wins, regardless of kind
     assert(latest.filter($"symbol" === "HBL").head().getString(1) == "HABIB BANK LIMITED")
@@ -122,9 +105,9 @@ class SourcesSpec extends SparkSpec {
     // both kinds would duplicate every symbol with stale raw values
     val root = tmp("store2")
     val t = Ingest.mockTickerTable(spark).toDF()
-    TickerStore.writeSnapshot(t, root, "20250105", "raw")
-    TickerStore.writeSnapshot(t.withColumn("name", upper($"name")), root, "20250105", "updated")
-    val latest = TickerStore.readLatestSnapshot(spark, root)
+    TickerStore.writeSnapshotIdempotent(t, root, "20250105", "raw")
+    TickerStore.writeSnapshotIdempotent(t.withColumn("name", upper($"name")), root, "20250105", "updated")
+    val latest = TickerStore.readSnapshot(spark, TickerStore.latestPartition(spark, root).get)
     assert(latest.count() == 22, "one row per symbol, not raw+updated interleaved")
     assert(latest.filter($"symbol" === "HBL").head().getString(1) == "HABIB BANK LIMITED")
   }
@@ -132,7 +115,7 @@ class SourcesSpec extends SparkSpec {
   test("latest-snapshot listing skips staging dirs and partitions without data, like Spark's file index (S12)") {
     val root = tmp("store_listing")
     val t = Ingest.mockTickerTable(spark).toDF()
-    TickerStore.writeSnapshot(t, root, "20250101", "raw")
+    TickerStore.writeSnapshotIdempotent(t, root, "20250101", "raw")
     val dataFile = Files.list(java.nio.file.Paths.get(s"$root/sync_date=20250101/kind=raw"))
       .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
     // later-dated leftovers that must not win: an uncommitted task
@@ -151,13 +134,13 @@ class SourcesSpec extends SparkSpec {
     // Spark's own partition discovery agrees on the latest date
     assert(spark.read.parquet(root).agg(max($"sync_date".cast("string"))).head.getString(0)
       == "20250101")
-    assert(TickerStore.readLatestSnapshot(spark, root).count() == 22)
+    assert(TickerStore.readSnapshot(spark, TickerStore.latestPartition(spark, root).get).count() == 22)
   }
 
   test("latest-snapshot listing unescapes partition values (S12)") {
     val root = tmp("store_escaped")
     val t = Ingest.mockTickerTable(spark).toDF()
-    TickerStore.writeSnapshot(t, root, "2025/01=05", "raw")
+    TickerStore.writeSnapshotIdempotent(t, root, "2025/01=05", "raw")
     assert(new java.io.File(root).list().filter(_.startsWith("sync_date")).toSeq
       == Seq("sync_date=2025%2F01%3D05"))
     val latest = TickerStore.latestPartition(spark, root).get
@@ -173,17 +156,6 @@ class SourcesSpec extends SparkSpec {
     assert(Main.run(Seq("--update-ticker-info"),
       Main.defaultStages(spark, s"$dataDir/missing", "20250111"), log += _) == 1)
     assert(log.exists(_.matches("stage update-ticker-info \\(\\d+\\.\\d\\d s\\): FAILED")), log)
-  }
-
-  test("delisted archive keeps only departing symbols, partitioned by date (P5)") {
-    val root = tmp("archive")
-    val snap = Ingest.mockTickerTable(spark).toDF()
-    val delisted = Seq("WTL", "CPHL").toDF("symbol")
-    TickerStore.archiveDelisted(snap, delisted, root, "20250110")
-    val arch = spark.read.parquet(root)
-    assert(arch.count() == 2)
-    assert(arch.select("symbol").as[String].collect().toSet == Set("WTL", "CPHL"))
-    assert(arch.columns.contains("delist_date"))
   }
 
   test("pipeline orchestration: critical failure aborts, non-critical continues (S20)") {
@@ -330,7 +302,7 @@ class SourcesSpec extends SparkSpec {
     // sync + update: latest snapshot resolves to the updated kind
     assert(TickerStore.latestPartition(spark, s"$dataDir/tickers")
       .map(l => (l.syncDate, l.kinds)) == Some(("20250111", Seq("updated"))))
-    val latest = TickerStore.readLatestSnapshot(spark, s"$dataDir/tickers")
+    val latest = TickerStore.readSnapshot(spark, TickerStore.latestPartition(spark, s"$dataDir/tickers").get)
     assert(latest.count() == 22)
     // SAME-DAY RE-RUN IDEMPOTENCE: the reference's sync overwrites its
     // dated file; a second full-run on the same sync date must REPLACE
@@ -339,7 +311,7 @@ class SourcesSpec extends SparkSpec {
     // pins its input first and releases the pin afterwards
     assert(Main.run(Seq("--sync-tickers", "--update-ticker-info"), st, _ => ()) == 0)
     assert(pinsSeen.toSeq == Seq(pins0, pins0 + 1) && Caches.pinnedCount == pins0)
-    val latest2 = TickerStore.readLatestSnapshot(spark, s"$dataDir/tickers")
+    val latest2 = TickerStore.readSnapshot(spark, TickerStore.latestPartition(spark, s"$dataDir/tickers").get)
     assert(latest2.count() == 22,
       s"same-day re-run duplicated snapshot rows: ${latest2.count()}")
     // historical: bars match the operator over the same landing data,
@@ -547,77 +519,6 @@ class SourcesSpec extends SparkSpec {
       assert(fpFrac < 0.5, s"bloom filters saturated: mean FP fraction $fpFrac")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmpB))
-    }
-  }
-
-  test("range store: nightly append == rebuild for serving (r7 #5)") {
-    import graft.sources.StatsStore
-    import org.apache.spark.sql.functions._
-    val tmpA = java.nio.file.Files.createTempDirectory("rstore_app").toString
-    val tmpF = java.nio.file.Files.createTempDirectory("rstore_full").toString
-    try {
-      val ev = Tables.events(spark, sf).select("event_id", "user_id", "event_type", "value")
-      val maxU = ev.agg(max("user_id")).head.getLong(0)
-      // day 1 = low user ids, nightly batch = the rest (ranges OVERLAP
-      // the band boundary, the append path's documented hard case)
-      StatsStore.writeRangeStore(ev.filter($"user_id" <= maxU / 2), tmpA,
-        "user_id", nBuckets = 8)
-      StatsStore.appendToRangeStore(ev.filter($"user_id" > maxU / 2), tmpA,
-        "user_id", nFiles = 8)
-      StatsStore.writeRangeStore(ev, tmpF, "user_id", nBuckets = 16)
-      // manifest covers every data file exactly once, all rows accounted
-      val man = spark.read.parquet(s"$tmpA/manifest")
-      assert(man.count() == man.select("file").distinct().count())
-      assert(man.agg(sum("n_rows")).head.getLong(0) == ev.count())
-      val dataFiles = spark.read.parquet(s"$tmpA/data")
-        .select(col("_metadata.file_path")).distinct().count()
-      assert(man.count() == dataFiles, "append must manifest its new files")
-      // serving equality: appended store == one-shot rebuild, on a band
-      // spanning both generations
-      def serve(dir: String) = StatsStore
-        .readRange(spark, dir, "user_id", maxU * 2 / 5, maxU * 3 / 5)
-        .select("event_id").as[Long].collect().sorted.toSeq
-      assert(serve(tmpA) == serve(tmpF) && serve(tmpA).nonEmpty)
-      // pruning still engages on the appended store
-      val pruned = StatsStore.prunedFiles(spark, tmpA, maxU * 2 / 5, maxU * 3 / 5)
-      assert(pruned.nonEmpty && pruned.size < man.count())
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmpA))
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmpF))
-    }
-  }
-
-  test("bloom store: nightly append == rebuild for serving (r7 #5)") {
-    import graft.sources.StatsStore
-    import org.apache.spark.sql.functions._
-    val tmpA = java.nio.file.Files.createTempDirectory("bstore_app").toString
-    val tmpF = java.nio.file.Files.createTempDirectory("bstore_full").toString
-    try {
-      val docs = Tables.documents(spark, sf).select("doc_id", "source", "text")
-      val maxD = docs.agg(max("doc_id")).head.getLong(0)
-      StatsStore.writeBloomStore(docs.filter($"doc_id" <= maxD / 2), tmpA, nBuckets = 8)
-      StatsStore.appendToBloomStore(docs.filter($"doc_id" > maxD / 2), tmpA, nFiles = 8)
-      StatsStore.writeBloomStore(docs, tmpF, nBuckets = 16)
-      // every data file carries bloom rows in the manifest
-      val manFiles = spark.read.parquet(s"$tmpA/manifest")
-        .select("file").distinct().count()
-      val dataFiles = spark.read.parquet(s"$tmpA/data")
-        .select(col("_metadata.file_path")).distinct().count()
-      assert(manFiles == dataFiles, "append must bloom its new files")
-      // a needle present ONLY in the appended generation must be found
-      val lateNeedle = docs.filter($"doc_id" > maxD / 2)
-        .select($"doc_id", explode(array_distinct(split(trim($"text"), "\\s+"))).as("w"))
-        .groupBy("w").agg(countDistinct($"doc_id").as("nd"))
-        .orderBy("nd", "w").limit(1).collect()(0).getString(0)
-      def serve(dir: String, n: String) = StatsStore.readNeedle(spark, dir, n)
-        .select("doc_id").as[Long].collect().sorted.toSeq
-      assert(serve(tmpA, lateNeedle) == serve(tmpF, lateNeedle))
-      assert(serve(tmpA, lateNeedle).nonEmpty)
-      // absent needles still prune everything at the read level
-      assert(StatsStore.readNeedle(spark, tmpA, "zz_no_such_token_zz").count() == 0)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmpA))
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmpF))
     }
   }
 }

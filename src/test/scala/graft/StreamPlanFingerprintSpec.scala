@@ -37,7 +37,7 @@ class StreamPlanFingerprintSpec extends SparkSpec {
   test("every audit loop's per-batch plan fingerprint set matches the committed STREAMPLANS.json") {
     val pass = Catalogue.pass(spark, sf)
     // a loop that threw recorded only part of its batches
-    val thrown = (pass.failed.filter { case (name, _) => SparkEntry.auditQueries(name) } ++
+    val thrown = (pass.failed.filter { case (name, _) => Catalogue.auditQueries(name) } ++
       pass.replayFailure.map("the incrementalAppend replay" -> _))
       .toSeq.sorted.map { case (name, cause) => s"$name threw $cause" }
     if (thrown.nonEmpty) fail(thrown.mkString("\n"))

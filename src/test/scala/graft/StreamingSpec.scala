@@ -10,26 +10,6 @@ import scala.jdk.CollectionConverters._
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
-  test("windowed counts over a memory stream match the batch twin") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val df = mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
-    val q = Streaming.windowedCounts(df)
-      .writeStream.format("memory").queryName("wc").outputMode("complete").start()
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
-    mem.addData(
-      (1L, t("2024-01-01 10:05:00"), 1L, "view", 1.0),
-      (2L, t("2024-01-01 10:20:00"), 1L, "view", 2.0),
-      (3L, t("2024-01-01 11:40:00"), 2L, "click", 3.0))
-    q.processAllAvailable()
-    val rows = spark.table("wc").collect()
-    q.stop()
-    // event 1+2 land in windows [09:30,10:30) and [10:00,11:00)
-    val full = rows.filter(r => r.getAs[String]("event_type") == "view" &&
-      r.getAs[java.sql.Timestamp]("w_start") == t("2024-01-01 10:00:00"))
-    assert(full.length == 1 && full(0).getAs[Long]("n") == 2)
-  }
-
   test("streaming daily bars match the batch OHLC operator") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, java.sql.Timestamp, String, Double)]
@@ -337,19 +317,6 @@ class StreamingSpec extends SparkSpec {
     assert(rows(0).getAs[Long]("p_id") == 1L && rows(0).getAs[Long]("v_id") == 100L)
   }
 
-  test("session windows group by inactivity gap") {
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
-    val ev = Seq(
-      (1L, t("2024-01-01 10:00:00"), 1L, "view", 1.0),
-      (2L, t("2024-01-01 10:10:00"), 1L, "view", 2.0),
-      (3L, t("2024-01-01 12:00:00"), 1L, "view", 3.0), // > 30 min gap → new session
-      (4L, t("2024-01-01 10:05:00"), 2L, "view", 4.0)
-    ).toDF("event_id", "ts", "user_id", "event_type", "value")
-    val s = Streaming.sessionWindows(ev).orderBy("user_id", "session_start").collect()
-    assert(s.length == 3)
-    assert(s(0).getAs[Long]("n_events") == 2 && s(1).getAs[Long]("n_events") == 1)
-  }
-
   test("sessionize closes sessions after the event-time gap with O(users) state") {
     implicit val sqlCtx = spark.sqlContext
     def t(s: String) = java.sql.Timestamp.valueOf(s)
@@ -568,8 +535,8 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming stratified sample survives at-least-once redelivery (evict only on real insert)") {
     // a redelivered doc already in a FULL top-k must be a no-op: the
-    // TreeSet add returns false and no eviction may fire — the r12
-    // review found the unconditional evict silently shrank the sample
+    // TreeSet add returns false and no eviction may fire — an
+    // unconditional evict silently shrinks the sample
     import org.apache.spark.sql.types._
     val docs = Tables.documents(spark, sf).select("doc_id", "source")
     val schema = StructType(Seq(
@@ -622,11 +589,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("every checkpointed loop in src/main runs through Streaming.drain") {
-    val walk = Files.walk(Paths.get("src/main/scala"))
-    val sources =
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
-        .map(f => f -> Files.readString(f)).toList
-      finally walk.close()
+    val sources = SourceTree.scalaFiles("src/main/scala")
     val home = Paths.get("src/main/scala/graft/streaming/Streaming.scala")
     val homeText = sources.toMap.getOrElse(home, "")
     val from = homeText.indexOf("def drain[")

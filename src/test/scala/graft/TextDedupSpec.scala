@@ -28,8 +28,8 @@ class TextDedupSpec extends SparkSpec {
     // expected values computed with DuckDB 1.0 running the q46 oracle
     // spelling on the same string — pins the cross-engine lockstep
     val r = Seq("hello world abc").toDF("text")
-      .withColumn("hs", expr(TextAnalysis.rollingHashesExpr("text")))
-      .withColumn("wfp", expr(TextAnalysis.winnowExpr("hs")))
+      .withColumn("hs", expr(TextDedupSpec.rollingHashesExpr("text")))
+      .withColumn("wfp", expr(TextDedupSpec.winnowExpr("hs")))
       .select(size($"hs").as("n_grams"), size($"wfp").as("n_fp"),
         expr("array_min(wfp)").as("mn"), expr("array_max(wfp)").as("mx"),
         expr("slice(hs, 1, 3)").as("first3"))
@@ -40,8 +40,8 @@ class TextDedupSpec extends SparkSpec {
       Seq(418513571L, 449925302L, 987395830L))
     // short-text guard: no grams, no fingerprints
     val short = Seq("abc").toDF("text")
-      .withColumn("hs", expr(TextAnalysis.rollingHashesExpr("text")))
-      .withColumn("wfp", expr(TextAnalysis.winnowExpr("hs")))
+      .withColumn("hs", expr(TextDedupSpec.rollingHashesExpr("text")))
+      .withColumn("wfp", expr(TextDedupSpec.winnowExpr("hs")))
       .select(size($"hs"), size($"wfp")).head()
     assert(short.getInt(0) == 0 && short.getInt(1) == 0)
   }
@@ -197,7 +197,7 @@ class TextDedupSpec extends SparkSpec {
     val real = Tables.documents(spark, sf).limit(60).select(col("text"))
     Seq(edge, real).foreach { df =>
       val rows = df
-        .select(array_sort(Dedup.shingles("text", 3)).as("ref"),
+        .select(array_sort(TextDedupSpec.shingles("text", 3)).as("ref"),
           call_function(graft.plans.SortedShingles.NAME, col("text"), lit(3)).as("fast"))
         .as[(Seq[String], Seq[String])].collect()
       rows.foreach { case (ref, fast) =>
@@ -207,7 +207,7 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("packed-long shingles preserve set sizes and pairwise intersection counts exactly") {
-    // The r13 verify kernel: grams as 21-bit-packed code points
+    // The packed verify kernel: grams as 21-bit-packed code points
     // (ARRAY<BIGINT>). Everything the exact-Jaccard verify reads —
     // |set| and |A ∩ B| — must be bit-identical to the string kernel
     // for ANY valid-UTF-8 corpus (injective packing), including
@@ -257,7 +257,7 @@ class TextDedupSpec extends SparkSpec {
     Seq(edge, real).foreach { df =>
       val toks = split(trim(col("text")), "\\s+")
       val rows = df
-        .select(array_sort(Dedup.tokenShingles(toks, 2)).as("ref"),
+        .select(array_sort(TextDedupSpec.tokenShingles(toks, 2)).as("ref"),
           call_function(graft.plans.SortedTokenShingles.NAME,
             col("text"), lit(2)).as("fast"))
         .as[(Seq[String], Seq[String])].collect()
@@ -279,8 +279,8 @@ class TextDedupSpec extends SparkSpec {
     val real = Tables.documents(spark, sf).limit(60).select(col("text"))
     Seq(edge, real).foreach { df =>
       val rows = df
-        .withColumn("hs", expr(TextAnalysis.rollingHashesExpr("text")))
-        .withColumn("wfp", expr(TextAnalysis.winnowExpr("hs")))
+        .withColumn("hs", expr(TextDedupSpec.rollingHashesExpr("text")))
+        .withColumn("wfp", expr(TextDedupSpec.winnowExpr("hs")))
         .withColumn("w", call_function(graft.plans.WinnowFp.NAME, col("text")))
         .select(size(col("hs")).as("ref_n"), col("wfp").as("ref_wfp"),
           col("w.n_grams").as("k_n"), col("w.wfp").as("k_wfp"))
@@ -338,10 +338,10 @@ class TextDedupSpec extends SparkSpec {
 
   test("shingles: distinct character n-grams") {
     val sh = Seq("abcab").toDF("text")
-      .select(Dedup.shingles("text", 3).as("s")).as[Seq[String]].head()
+      .select(TextDedupSpec.shingles("text", 3).as("s")).as[Seq[String]].head()
     assert(sh.toSet == Set("abc", "bca", "cab"))
     val empty = Seq("ab").toDF("text")
-      .select(Dedup.shingles("text", 3).as("s")).as[Seq[String]].head()
+      .select(TextDedupSpec.shingles("text", 3).as("s")).as[Seq[String]].head()
     assert(empty.isEmpty)
   }
 
@@ -598,7 +598,7 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("leakage-free split: LSH route == exact route assignment (q112 r8-verdict law)") {
-    // r8 verdict #1: q112's default pair source is now the production
+    // q112's default pair source is the production
     // LSH route (q86 machinery). Both routes exact-verify candidates at
     // the same threshold, so they can differ only if banding misses a
     // qualifying pair — pin full assignment equality at tested scale.
@@ -1217,7 +1217,7 @@ object TextDedupSpec {
   def minhashSignaturesTokensPipeline(docs: DataFrame, w: Int, k: Int): DataFrame = {
     val toks = split(trim(col("text")), "\\s+")
     val idx = Tables.fanOut(docs)
-      .select(col("doc_id"), explode(Dedup.tokenShingles(toks, w)).as("g"))
+      .select(col("doc_id"), explode(TextDedupSpec.tokenShingles(toks, w)).as("g"))
     val mins = (0 until k).map(i => min(xxhash64(lit(i), col("g"))).as(s"s$i"))
     idx.groupBy("doc_id").agg(mins.head, mins.tail: _*)
   }
@@ -1235,4 +1235,62 @@ object TextDedupSpec {
             (v, b) -> CASE WHEN v > 0 THEN shiftleft(CAST(1 AS BIGINT), b)
                       ELSE CAST(0 AS BIGINT) END),
           CAST(0 AS BIGINT), (x, y) -> x + y)""")
+
+  /** Distinct character n-gram shingles of the named text column — the
+    * interpreted reference spelling of the sorted_shingles kernel.
+    * Guarded for |text| < n: Spark's sequence(1, 0) runs DESCENDING, so
+    * the no-shingle case must short-circuit to an empty array. */
+  def shingles(textCol: String, n: Int): Column =
+    array_distinct(expr(
+      s"""CASE WHEN length($textCol) < $n THEN CAST(array() AS ARRAY<STRING>)
+          ELSE transform(sequence(1, length($textCol) - ${n - 1}),
+                         i -> substring($textCol, i, $n)) END"""))
+
+  /** Distinct word w-gram shingles of a whitespace-tokenized text
+    * column — the unit of similarity production text dedup actually
+    * uses (token 4/5-grams), in contrast to the character n-grams
+    * of [[shingles]]. On a small-vocabulary corpus the distinction is dramatic:
+    * the char-3-gram universe saturates (every doc contains most
+    * shingles, so every pair looks ~0.45 similar and LSH buckets
+    * degenerate), while token w-grams stay discriminative. `toksCol`
+    * must already be the split token array. The interpreted
+    * reference spelling of the sorted_token_shingles kernel. */
+  def tokenShingles(toksCol: Column, w: Int): Column =
+    array_distinct(when(size(toksCol) < w, expr("CAST(array() AS ARRAY<STRING>)"))
+      .otherwise(transform(sequence(lit(1), size(toksCol) - (w - 1)),
+        i => array_join(slice(toksCol, i, lit(w)), " "))))
+
+  /** Rolling polynomial 5-gram hashes (base 257 mod 1e9+7) at every
+    * character position — the Rabin-Karp hash family used by winnowing
+    * fingerprinting (Schleimer et al., SIGMOD 2003): the HOF reference
+    * spelling of the winnow_fp kernel's gram hashes. The window product
+    * is unrolled so the oracle spelling is literally identical FOR ASCII
+    * INPUT — Spark's
+    * ascii() yields the signed first UTF-8 byte while DuckDB's unicode()
+    * yields the code point, so callers must strip non-ASCII first (q46
+    * normalizes with the same regexp on both sides); k is a
+    * constant, so per-position evaluation is O(k)=O(1) per char — the
+    * classic O(1) rolling update buys nothing at k=5 and would cost a
+    * sequential dependency. */
+  def rollingHashesExpr(textCol: String): String =
+    // every ascii() is cast to BIGINT BEFORE its multiply: an INT×INT
+    // product overflows ANSI arithmetic from code point 127 up (127 ×
+    // 16974593 > Int.MaxValue) — printable ASCII survives only because
+    // '~' is 126. Values are unchanged wherever the INT spelling didn't
+    // overflow, and the hash is now total on any code point.
+    s"""CASE WHEN length($textCol) < 5 THEN CAST(array() AS ARRAY<BIGINT>)
+        ELSE transform(sequence(1, length($textCol) - 4), i ->
+          (CAST(ascii(substring($textCol, i, 1)) AS BIGINT) * 4362470401 +
+           CAST(ascii(substring($textCol, i + 1, 1)) AS BIGINT) * 16974593 +
+           CAST(ascii(substring($textCol, i + 2, 1)) AS BIGINT) * 66049 +
+           CAST(ascii(substring($textCol, i + 3, 1)) AS BIGINT) * 257 +
+           CAST(ascii(substring($textCol, i + 4, 1)) AS BIGINT)) % 1000000007) END"""
+
+  /** Winnowing selection: min hash of every w=4 window of consecutive
+    * gram hashes, distinct — a document's O(len/w)-sized robust
+    * fingerprint set (shared fingerprints ⇒ shared ≥k+w-1-char runs). */
+  def winnowExpr(hashesCol: String): String =
+    s"""CASE WHEN size($hashesCol) = 0 THEN CAST(array() AS ARRAY<BIGINT>)
+        ELSE array_distinct(transform(sequence(1, greatest(size($hashesCol) - 3, 1)),
+          i -> array_min(slice($hashesCol, i, 4)))) END"""
 }
