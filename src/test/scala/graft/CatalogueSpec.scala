@@ -10,20 +10,27 @@ import org.scalatest.funsuite.AnyFunSuite
   * queries (and re-running the 14 audit loops) again. `src/main` holds
   * only what an entry point reaches. */
 class CatalogueSpec extends AnyFunSuite {
-  private val trees = Seq("src/main/scala", "src/test/scala", "perfbench/src")
+  private val mains = Seq("src/main/scala", "perfbench/src")
 
   /** Each file under `trees` once per match of `re` in it. */
-  private def sites(re: Regex, trees: Seq[String] = trees): Seq[Path] =
+  private def sites(re: Regex, trees: Seq[String] = mains): Seq[Path] =
     trees.flatMap(SourceTree.scalaFiles).flatMap { case (f, text) =>
       Seq.fill(re.findAllIn(text).size)(f)
     }
+
+  test("the tests iterate the query catalogue in exactly one place: Catalogue.scala") {
+    // any use of the catalogue map but a `.keySet` or a `queries("name")` lookup
+    val found = sites("""(?:SparkEntry|Streaming)\.queries(?!\s*\(|\.keySet)""".r, Seq("src/test/scala"))
+    assert(found.distinct == Seq(Paths.get("src/test/scala/graft/Catalogue.scala")),
+      s"catalogue iterated at: ${found.mkString(", ")}")
+  }
 
   test("the mains walk the query catalogue in exactly one place: Bench.scala") {
     val bench = Paths.get("src/main/scala/graft/Bench.scala")
     // SparkEntry.scala builds the map out of the module maps
     val home = Paths.get("src/main/scala/graft/SparkEntry.scala")
     // any use of the catalogue map but a `.keySet`, a `queries("name")`
-    // lookup or handing it to the walk (`Bench.walk("TAG", SparkEntry.queries)`)
+    // lookup or handing it to the walk, `Bench.walk("TAG", <the map>)`
     val iteration = sites("""(?<!Bench\.walk\("\w{1,20}", )(?:SparkEntry|Streaming)\.queries(?!\s*\(|\.keySet)""".r)
       .filterNot(_ == home)
     val sinks = sites("""format\("noop"\)""".r, Seq("src/main/scala"))
