@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.storage.StorageLevel
 
 /** Registry for operator-internal `.cache()`s AND `.localCheckpoint()`s
   * so harnesses can release them between queries.
@@ -14,10 +15,9 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * register caches here; Verify/Bench call [[releaseAll]] after each
   * query's consuming action completes.
   *
-  * Checkpoints need the same discipline but a DIFFERENT release path
-  * (r10 verdict #1 — the bench back-half drift): `localCheckpoint()`
-  * pins its materialized blocks on an internal RDD that
-  * `Dataset.unpersist()` does NOT touch, so a 238-query run of
+  * Checkpoints need the same discipline but a DIFFERENT release path:
+  * `localCheckpoint()` pins its materialized blocks on an internal RDD
+  * that `Dataset.unpersist()` does NOT touch, so a 238-query run of
   * iterative loops (PageRank rounds, BFS levels, BPE merge rounds,
   * store-overwrite pins) leaks every round's blocks into the block
   * manager for the life of the JVM. [[pin]] checkpoints a frame and
@@ -42,10 +42,15 @@ object Caches {
   // of the exact frame a loop supersedes
   private val tokenOf = new java.util.IdentityHashMap[Dataset[_], java.lang.Long]()
 
-  /** Cache `df` and remember it for later release. */
+  /** Cache `df` and remember it for later release. A plan that is
+    * already cached belongs to whoever cached it: it is returned as is
+    * and not registered, so a release here never drops another owner's
+    * cache. */
   def cached(df: DataFrame): DataFrame = synchronized {
-    df.cache()
-    active += df
+    if (df.storageLevel == StorageLevel.NONE) {
+      df.cache()
+      active += df
+    }
     df
   }
 

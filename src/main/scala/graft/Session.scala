@@ -49,4 +49,13 @@ object Session {
     Configurator.setLevel("org.apache.spark.rdd", Level.ERROR)
     spark
   }
+
+  /** Runs `body` with the session's shuffle width set to `width` of the
+    * current width, and restores the current width afterwards, also
+    * when `body` throws. */
+  def withShuffleWidth[A](spark: SparkSession, width: Long => Long)(body: => A): A = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", width(prev.toLong))
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
 }

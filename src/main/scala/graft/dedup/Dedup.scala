@@ -635,10 +635,7 @@ object Dedup {
     // driver aggregate anyway — reuse it. ~1M edges per partition.
     val nEdges = edges.count()
     if (nEdges <= localBudget) return componentsSingleTask(edges)
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.shuffle.partitions",
-      math.max(2L, math.min(prevParts.toLong, nEdges / 1000000L + 1)).toString)
-    try {
+    graft.Session.withShuffleWidth(sess, w => math.max(2L, math.min(w, nEdges / 1000000L + 1))) {
     var pinned = graft.Caches.pin(edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id")))
     var labels: DataFrame = pinned
@@ -688,7 +685,7 @@ object Dedup {
             "label-mismatched) — component diameter exceeds 2^rounds; raise maxIter")
     }
     labels.select(col("id").as("doc_id"), col("label").as("canonical_id"))
-    } finally sess.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** Merge tonight's NEW edges into a STORED component labeling
@@ -963,8 +960,9 @@ object Dedup {
           .select("a_id", "b_id"))
       val newE = pairs.filter((col("a_id") + col("b_id")) % 3 === 0)
       val oldE = pairs.filter((col("a_id") + col("b_id")) % 3 =!= 0)
-      // oldE is a filtered subset of a groupBy(a,b) stream: unique a<b
-      incrementalComponents(graft.Caches.cached(components(oldE, uniquePairs = true)), newE)
+      // oldE is a filtered subset of a groupBy(a,b) stream: unique a<b;
+      // incrementalComponents caches the stored labeling itself
+      incrementalComponents(components(oldE, uniquePairs = true), newE)
         .orderBy("doc_id")
     }),
 

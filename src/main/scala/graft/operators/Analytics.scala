@@ -223,10 +223,7 @@ object Analytics {
         "or opt in to redistributeDangling")
     val sinks = if (dangling > 0) graft.Caches.cached(danglingNodes) else danglingNodes
     // size the per-round shuffle to the graph (the components() rule)
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.shuffle.partitions",
-      math.max(2L, math.min(prevParts.toLong, n / 100000L + 1)).toString)
-    try {
+    graft.Session.withShuffleWidth(sess, w => math.max(2L, math.min(w, n / 100000L + 1))) {
       var pinned = graft.Caches.pin(nodes.withColumn("rank", lit(1.0 / n)))
       var ranks: org.apache.spark.sql.DataFrame = pinned
       var iter = 0
@@ -276,7 +273,7 @@ object Analytics {
       if (delta > tol) throw new IllegalStateException(
         s"pageRank: no fixpoint after $maxIter rounds (L1 delta=$delta > tol=$tol)")
       ranks
-    } finally sess.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** The single-task degenerate case of [[pageRank]] — same algebra,

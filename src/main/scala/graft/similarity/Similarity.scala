@@ -1391,14 +1391,8 @@ object Similarity {
       .pinned() // pin BEFORE overwriting the partitions being read
     val keptCells = survivors.select(col("cell").cast("long")).distinct()
       .collect().map(_.getLong(0)).toSet // bounded: <= nCells values
-    val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try survivors.write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/codes")
-    finally prevMode match {
-      case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    survivors.write.mode("overwrite").partitionBy("cell")
+      .option("partitionOverwriteMode", "dynamic").parquet(s"$dir/codes")
     // fully-emptied cells: no survivor rows → dynamic overwrite never
     // touched their directories; remove them or deleted vectors would
     // come back from the dead on the next scan

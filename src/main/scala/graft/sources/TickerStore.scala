@@ -30,19 +30,12 @@ object TickerStore {
     * a dynamic partition overwrite: only the (sync_date, kind)
     * partitions present in `df`'s write are rewritten; history stays.
     * [[graft.Main]]'s sync/update stages write through this. */
-  def writeSnapshotIdempotent(df: DataFrame, root: String, syncDate: String, kind: String): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df.select("symbol", "name", "sector", "url")
+  def writeSnapshotIdempotent(df: DataFrame, root: String, syncDate: String, kind: String): Unit =
+    df.select("symbol", "name", "sector", "url")
       .withColumn("sync_date", lit(syncDate))
       .withColumn("kind", lit(kind))
-      .write.partitionBy("sync_date", "kind").mode(SaveMode.Overwrite).parquet(root)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+      .write.partitionBy("sync_date", "kind").mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic").parquet(root)
 
   /** The latest snapshot's partition directories: `syncDate` with the
     * `kinds` read for it (raw values, unescaped) and their `dirs`. */

@@ -173,8 +173,12 @@ object Streaming {
           .select("a_id", "b_id")
         // members: (doc_id, canonical_id) for every batch doc with a
         // batch-internal pair; singletons (incl. singleton store
-        // hits) are handled by the storeHit anti-join below
-        val members = graft.Caches.cached(
+        // hits) are handled by the storeHit anti-join below. Pinned,
+        // not lazily cached: the job that pins `admitted` below reads
+        // its one partition from several tasks at once, and a lazy
+        // cache lets them race to build that one block (the losers
+        // wait, then log "Block ... already exists")
+        val members = graft.Caches.pin(
           // uniquePairs: batchPairs is a semi-join-scoped subset of
           // the LSH verify stream (distinct a<b)
           Dedup.components(graft.Caches.cached(batchPairs), uniquePairs = true))
@@ -308,11 +312,66 @@ object Streaming {
     try body(dir.toString) finally graft.Scratch.rmTree(dir)
   }
 
-  /** (min, max) of the long expression `e` over `df` — a bounded
-    * 2-value driver action, from which the audits cut their replays. */
-  private def span(df: DataFrame, e: Column): (Long, Long) = {
-    val Array(r) = df.agg(min(e), max(e)).collect()
-    (r.getLong(0), r.getLong(1))
+  /** Replays `starts` through one checkpointed loop under `tmp`. Each
+    * start appends its frames as new files to the landings they are
+    * keyed by (`tmp/<name>`), or lands nothing when it is None: a start
+    * with no new data, which lets a watermark close out. Then one
+    * [[drain]] start of `query` runs over every landing, each read with
+    * the schema of the first frame landed there, on the one checkpoint
+    * `tmp/ckpt`. `sink` gets each micro-batch with its start's index and
+    * its batch id. */
+  private[graft] def replayStarts[T](loop: String, tmp: String,
+                                     starts: Seq[Option[Map[String, DataFrame]]],
+                                     mode: OutputMode = OutputMode.Append())(
+                                     query: Map[String, DataFrame] => Dataset[T])(
+                                     sink: (Dataset[T], Int, Long) => Unit): Unit = {
+    val landed = starts.flatten.flatten.distinctBy(_._1)
+    val spark = landed.head._2.sparkSession
+    starts.zipWithIndex.foreach { case (start, k) =>
+      start.foreach(_.foreach { case (name, df) =>
+        df.write.mode("append").parquet(s"$tmp/$name")
+      })
+      drain(loop, query(landed.map { case (name, df) =>
+          name -> spark.readStream.schema(df.schema).parquet(s"$tmp/$name")
+        }.toMap), s"$tmp/ckpt", mode)(sink(_, k, _))
+    }
+  }
+
+  /** One start per chunk, each landing into `landing`. */
+  private def landing(chunks: Seq[DataFrame]): Seq[Option[Map[String, DataFrame]]] =
+    chunks.map(c => Some(Map("landing" -> c)))
+
+  /** Event time `ts` in epoch ms. */
+  private def ms: Column = unix_millis(col("ts"))
+
+  /** The two cut points at a third and two thirds of `ev`'s event-time
+    * span, and the span's end — a bounded 2-value driver action, from
+    * which the audits cut their replays. */
+  private def timeThirds(ev: DataFrame): (Long, Long, Long) = {
+    val Array(r) = ev.agg(min(ms), max(ms)).collect()
+    val (lo, hi) = (r.getLong(0), r.getLong(1))
+    (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3, hi)
+  }
+
+  /** `ev` cut into three time-ordered chunks at the epoch ms `t1`, `t2`. */
+  private def cutAt(ev: DataFrame, t1: Long, t2: Long): Seq[DataFrame] =
+    Seq(ev.filter(ms < t1), ev.filter(ms >= t1 && ms < t2), ev.filter(ms >= t2))
+
+  /** `df` cut into three chunks at a third and two thirds of its max
+    * `id` (a 1-value driver action). */
+  private def idThirds(df: DataFrame, id: String): Seq[DataFrame] = {
+    val m = df.agg(max(col(id))).head.getLong(0)
+    val (c1, c2) = (m / 3, 2 * m / 3)
+    Seq(df.filter(col(id) <= c1), df.filter(col(id) > c1 && col(id) <= c2),
+      df.filter(col(id) > c2))
+  }
+
+  /** A chunk of events split into the purchase and the view landing of
+    * the stream-stream join audits. */
+  private def joinSides(c: DataFrame): Map[String, DataFrame] = {
+    def side(t: String) =
+      c.filter(col("event_type") === t).select("event_id", "ts", "user_id", "value")
+    Map("purchases" -> side("purchase"), "views" -> side("view"))
   }
 
   /** The parquet store at `dir`, or None while it does not exist yet.
@@ -332,11 +391,8 @@ object Streaming {
     * audit is ≤ 17 docs, so a wide session shuffle only adds empty-task
     * scheduling overhead to the ~30 stages a multi-run audit executes.
     * Restores the session width after. */
-  private def withNarrowShuffle[A](spark: SparkSession)(body: => A): A = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try { spark.conf.set("spark.sql.shuffle.partitions", "4"); body }
-    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  private def withNarrowShuffle[A](spark: SparkSession)(body: => A): A =
+    graft.Session.withShuffleWidth(spark, _ => 4)(body)
 
   /** Driver-visible audit of [[nearDupAdmit]]'s three-run admission law:
     * runs the REAL streaming loop three times over a deterministic
@@ -359,24 +415,20 @@ object Streaming {
     * at corpus scale the audit stays 17 docs by construction. */
   def admissionLoopAudit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types._
     val base = auditFixture(spark, dir)
     def doc(rn: Int): (Long, String) = base(rn - 1)
     val b1 = base.take(10).toSeq :+ (1000001L, doc(1)._2)
     val b2 = base.slice(10, 15).toSeq ++
       Seq((1000002L, doc(2)._2), (1000003L, doc(16)._2), (1000004L, doc(16)._2))
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("text", StringType, nullable = true)))
     val runs = replay("q101_admit") { tmp =>
       val (landing, sig, adm, ckpt) =
         (s"$tmp/landing", s"$tmp/sigs", s"$tmp/admitted", s"$tmp/ckpt")
       def storeCount(): Long = readStore(spark, adm).fold(0L)(_.count())
       withNarrowShuffle(spark) {
         Seq(b1, b2, b2).zipWithIndex.map { case (batch, i) =>
-          batch.toDF("doc_id", "text")
-            .write.mode("append").parquet(landing) // new files = new delivery
-          nearDupAdmit(spark, landing, sig, adm, ckpt, schema,
+          val df = batch.toDF("doc_id", "text")
+          df.write.mode("append").parquet(landing) // new files = new delivery
+          nearDupAdmit(spark, landing, sig, adm, ckpt, df.schema,
             w = 5, k = 16, bands = 16, threshold = 0.7)
           (i + 1L, batch.length.toLong, storeCount())
         }
@@ -418,23 +470,19 @@ object Streaming {
     * construction at any corpus scale. */
   def storeLifecycleAudit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types._
     val base = auditFixture(spark, dir)
     def doc(rn: Int): (Long, String) = base(rn - 1)
     val b1 = base.take(10).toSeq :+ (2000001L, doc(1)._2)
     val b2 = Seq((2000002L, doc(1)._2), (2000003L, doc(2)._2))
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("text", StringType, nullable = true)))
     val rows = replay("q132_lifecycle") { tmp =>
       val (landing, sigDir, admDir, ckpt, archive) =
         (s"$tmp/landing", s"$tmp/sigs", s"$tmp/admitted", s"$tmp/ckpt", s"$tmp/archive")
       def counts(): (Long, Long) =
         (graft.Tables.parquet(spark, admDir).count(), graft.Tables.parquet(spark, sigDir).count())
       def land(batch: Seq[(Long, String)]): Unit = {
-        batch.toDF("doc_id", "text")
-          .write.mode("append").parquet(landing) // new files = new delivery
-        nearDupAdmit(spark, landing, sigDir, admDir, ckpt, schema,
+        val df = batch.toDF("doc_id", "text")
+        df.write.mode("append").parquet(landing) // new files = new delivery
+        nearDupAdmit(spark, landing, sigDir, admDir, ckpt, df.schema,
           w = 5, k = 16, bands = 16, threshold = 0.7)
       }
       withNarrowShuffle(spark) {
@@ -470,32 +518,18 @@ object Streaming {
     * monotone across batches — the ordering contract the operator
     * documents (append-only ingest with monotone ids). */
   def streamPackAudit(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
     val docs = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), col("text"))
-    val maxDoc = docs.agg(max(col("doc_id"))).head.getLong(0) // 1-value driver action
-    val cuts = Seq(maxDoc / 3, 2 * maxDoc / 3)
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("source", StringType, nullable = true),
-      StructField("text", StringType, nullable = true)))
-    val chunks = Seq(
-      docs.filter(col("doc_id") <= cuts(0)),
-      docs.filter(col("doc_id") > cuts(0) && col("doc_id") <= cuts(1)),
-      docs.filter(col("doc_id") > cuts(1)))
+    val starts = landing(idThirds(docs, "doc_id"))
     replay("q133_pack") { tmp =>
-      val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/packed", s"$tmp/ckpt")
-      chunks.foreach { c =>
-        c.write.mode("append").parquet(landing) // new files = new delivery
-        drain("streamPackAudit", sequencePack(spark.readStream.schema(schema).parquet(landing)),
-            ckpt, OutputMode.Update()) { (b, _) =>
-          b.toDF().write.mode("append").parquet(outDir)
-        }
+      replayStarts("streamPackAudit", tmp, starts, OutputMode.Update())(
+          l => sequencePack(l("landing"))) { (b, _, _) =>
+        b.toDF().write.mode("append").parquet(s"$tmp/packed")
       }
       // each doc is emitted exactly once (its one processing batch), so
       // the manifest is a plain rollup; localCheckpoint materializes it
       // before the per-invocation temp stores are removed
-      graft.Tables.parquet(spark, outDir)
+      graft.Tables.parquet(spark, s"$tmp/packed")
         .groupBy(col("source"), col("bin"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"),
           min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
@@ -515,34 +549,18 @@ object Streaming {
     * events never straddle a batch and each key's slices arrive
     * (ts, event_id)-monotone — the operator's ordering contract. */
   def streamScd2Audit(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
     val ev = graft.Tables.events(spark, dir)
       .filter(col("user_id") < 100)
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-    val ms = unix_millis(col("ts"))
-    val (lo, hi) = span(ev, ms)
-    val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-    val schema = StructType(Seq(
-      StructField("user_id", LongType, nullable = false),
-      StructField("event_id", LongType, nullable = false),
-      StructField("ts", TimestampType, nullable = true),
-      StructField("event_type", StringType, nullable = true)))
-    val chunks = Seq(
-      ev.filter(ms < t1),
-      ev.filter(ms >= t1 && ms < t2),
-      ev.filter(ms >= t2))
+    val (t1, t2, _) = timeThirds(ev)
     replay("q134_scd2") { tmp =>
-      val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/hist", s"$tmp/ckpt")
-      chunks.zipWithIndex.foreach { case (c, k) =>
-        c.write.mode("append").parquet(landing) // new files = new delivery
-        drain("streamScd2Audit", scd2Stream(spark.readStream.schema(schema).parquet(landing)),
-            ckpt, OutputMode.Update()) { (b, _) =>
-          b.toDF().withColumn("run", lit(k)).write.mode("append").parquet(outDir)
-        }
+      replayStarts("streamScd2Audit", tmp, landing(cutAt(ev, t1, t2)), OutputMode.Update())(
+          l => scd2Stream(l("landing"))) { (b, k, _) =>
+        b.toDF().withColumn("run", lit(k)).write.mode("append").parquet(s"$tmp/hist")
       }
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id", "version").orderBy(col("run").desc)
-      graft.Tables.parquet(spark, outDir)
+      graft.Tables.parquet(spark, s"$tmp/hist")
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("user_id"), col("version"), col("attr"), col("valid_from"),
@@ -574,39 +592,25 @@ object Streaming {
     * session_start, session_end). */
   def streamSessionAudit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types._
     val gapMs = 30 * 60 * 1000L
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"))
-    val ms = unix_millis(col("ts"))
-    val (lo, hi) = span(ev, ms)
-    val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
+    val (t1, t2, hi) = timeThirds(ev)
     val sentinelUser = Long.MaxValue // reserved: no real user can collide
-    val schema = StructType(Seq(
-      StructField("event_id", LongType, nullable = false),
-      StructField("ts", TimestampType, nullable = true),
-      StructField("user_id", LongType, nullable = false),
-      StructField("event_type", StringType, nullable = true),
-      StructField("value", DoubleType, nullable = false)))
     val sentinel = Seq((-1L, new java.sql.Timestamp(hi + gapMs + 7200000L),
       sentinelUser, "closeout", 0.0))
       .toDF("event_id", "ts", "user_id", "event_type", "value")
-    val chunks = Seq(ev.filter(ms < t1), ev.filter(ms >= t1 && ms < t2),
-      ev.filter(ms >= t2), sentinel, null) // null = no-new-data timeout flush
+    // None = no-new-data timeout flush
+    val starts = landing(cutAt(ev, t1, t2) :+ sentinel) :+ None
     replay("q137_sessions") { tmp =>
-      val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/sessions", s"$tmp/ckpt")
-      chunks.foreach { c =>
-        if (c != null) c.write.mode("append").parquet(landing)
-        drain("streamSessionAudit", sessionize(
-            spark.readStream.schema(schema).parquet(landing).as[Event],
-            gapMinutes = 30, watermark = "0 seconds"), ckpt) { (b, _) =>
-          b.toDF().write.mode("append").parquet(outDir)
-        }
+      replayStarts("streamSessionAudit", tmp, starts)(l => sessionize(
+          l("landing").as[Event], gapMinutes = 30, watermark = "0 seconds")) { (b, _, _) =>
+        b.toDF().write.mode("append").parquet(s"$tmp/sessions")
       }
       val wU = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy("start")
-      graft.Tables.parquet(spark, outDir)
+      graft.Tables.parquet(spark, s"$tmp/sessions")
         .filter(col("user_id") =!= sentinelUser)
         .withColumn("session_id", row_number().over(wU).cast("long"))
         .select(col("user_id"), col("session_id"),
@@ -627,37 +631,17 @@ object Streaming {
     * output is the complete interval-join relation and hash-matches
     * a plain batch range-join oracle. */
   def streamIntervalJoinAudit(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"))
-    val ms = unix_millis(col("ts"))
-    val (lo, hi) = span(ev, ms)
-    val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-    val schema = StructType(Seq(
-      StructField("event_id", LongType, nullable = false),
-      StructField("ts", TimestampType, nullable = true),
-      StructField("user_id", LongType, nullable = false),
-      StructField("value", DoubleType, nullable = false)))
-    val cuts = Seq(ms < t1, ms >= t1 && ms < t2, ms >= t2)
+    val (t1, t2, _) = timeThirds(ev)
+    val starts = cutAt(ev, t1, t2).map(c => Some(joinSides(c)))
     replay("q141_ssjoin") { tmp =>
-      val (landP, landV, outDir, ckpt) =
-        (s"$tmp/purchases", s"$tmp/views", s"$tmp/joined", s"$tmp/ckpt")
-      cuts.foreach { cond =>
-        val chunk = ev.filter(cond)
-        chunk.filter(col("event_type") === "purchase")
-          .select("event_id", "ts", "user_id", "value")
-          .write.mode("append").parquet(landP)
-        chunk.filter(col("event_type") === "view")
-          .select("event_id", "ts", "user_id", "value")
-          .write.mode("append").parquet(landV)
-        drain("streamIntervalJoinAudit", purchaseViewJoin(
-            spark.readStream.schema(schema).parquet(landP),
-            spark.readStream.schema(schema).parquet(landV)), ckpt) { (b, _) =>
-          b.write.mode("append").parquet(outDir)
-        }
+      replayStarts("streamIntervalJoinAudit", tmp, starts)(
+          l => purchaseViewJoin(l("purchases"), l("views"))) { (b, _, _) =>
+        b.write.mode("append").parquet(s"$tmp/joined")
       }
-      graft.Tables.parquet(spark, outDir)
+      graft.Tables.parquet(spark, s"$tmp/joined")
         .select("p_id", "user_id", "p_ts", "p_value", "v_id", "v_ts", "v_value")
         .orderBy("p_id", "v_id")
         .pinned()
@@ -677,33 +661,21 @@ object Streaming {
     * min_by/max_by over (ts, event_id), no order-sensitive sums. */
   def streamOhlcAudit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types._
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-    val ms = unix_millis(col("ts"))
-    val (lo, hi) = span(ev, ms)
-    val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-    val schema = StructType(Seq(
-      StructField("event_id", LongType, nullable = false),
-      StructField("ts", TimestampType, nullable = true),
-      StructField("event_type", StringType, nullable = true),
-      StructField("value", DoubleType, nullable = false)))
+    val (t1, t2, hi) = timeThirds(ev)
     // sentinel: one event 3 days past the corpus (1-day window + 1-day
     // watermark + margin) under a reserved type the fold excludes
     val sentinel = Seq((-1L, new java.sql.Timestamp(hi + 3L * 86400000L),
       "closeout", 0.0)).toDF("event_id", "ts", "event_type", "value")
-    val chunks = Seq(ev.filter(ms < t1), ev.filter(ms >= t1 && ms < t2),
-      ev.filter(ms >= t2), sentinel, null) // null = no-data flush start
+    // None = no-data flush start
+    val starts = landing(cutAt(ev, t1, t2) :+ sentinel) :+ None
     replay("q143_ohlc") { tmp =>
-      val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/bars", s"$tmp/ckpt")
-      chunks.foreach { c =>
-        if (c != null) c.write.mode("append").parquet(landing)
-        drain("streamOhlcAudit", dailyBars(spark.readStream.schema(schema).parquet(landing)),
-            ckpt) { (b, _) =>
-          b.write.mode("append").parquet(outDir)
-        }
+      replayStarts("streamOhlcAudit", tmp, starts)(l => dailyBars(l("landing"))) {
+          (b, _, _) =>
+        b.write.mode("append").parquet(s"$tmp/bars")
       }
-      graft.Tables.parquet(spark, outDir)
+      graft.Tables.parquet(spark, s"$tmp/bars")
         .filter(col("event_type") =!= "closeout")
         .select(col("event_type"), to_date(col("day_start")).as("day"),
           col("open"), col("high"), col("low"), col("close"), col("volume"))
@@ -725,21 +697,12 @@ object Streaming {
     * (keys purge as the watermark passes; StreamingSpec pins the
     * bound); the landing replay carries ~10% duplicate volume. */
   def streamDedupAudit(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
     import graft.functions.Exact.dsumd
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"))
-    val ms = unix_millis(col("ts"))
-    val (lo, hi) = span(ev, ms)
-    val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
+    val (t1, t2, _) = timeThirds(ev)
     val dayMs = 86400000L
-    val schema = StructType(Seq(
-      StructField("event_id", LongType, nullable = false),
-      StructField("ts", TimestampType, nullable = true),
-      StructField("user_id", LongType, nullable = false),
-      StructField("event_type", StringType, nullable = true),
-      StructField("value", DoubleType, nullable = false)))
     val dup1 = ev.filter(ms >= t1 - dayMs && ms < t1)
     val dup2 = ev.filter(ms >= t2 - dayMs && ms < t2)
     // non-vacuity guard: an empty re-delivery slice would make this
@@ -747,21 +710,15 @@ object Streaming {
     // bounded driver actions on pushed-down range scans)
     require(dup1.limit(1).count() == 1 && dup2.limit(1).count() == 1,
       "q197 audit requires non-empty duplicate re-delivery slices")
-    val feeds = Seq(
-      ev.filter(ms < t1),
-      // chunk 2 = its own rows + a re-delivery of chunk 1's last day
-      ev.filter(ms >= t1 && ms < t2).unionAll(dup1),
-      ev.filter(ms >= t2).unionAll(dup2))
+    val Seq(c1, c2, c3) = cutAt(ev, t1, t2)
+    // chunk 2 = its own rows + a re-delivery of chunk 1's last day
+    val starts = landing(Seq(c1, c2.unionAll(dup1), c3.unionAll(dup2)))
     replay("q197_dedup") { tmp =>
-      val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/deduped", s"$tmp/ckpt")
-      feeds.foreach { chunk =>
-        chunk.write.mode("append").parquet(landing)
-        drain("streamDedupAudit", dedupStream(
-            spark.readStream.schema(schema).parquet(landing), "2 days"), ckpt) { (b, _) =>
-          b.write.mode("append").parquet(outDir)
-        }
+      replayStarts("streamDedupAudit", tmp, starts)(
+          l => dedupStream(l("landing"), "2 days")) { (b, _, _) =>
+        b.write.mode("append").parquet(s"$tmp/deduped")
       }
-      graft.Tables.parquet(spark, outDir)
+      graft.Tables.parquet(spark, s"$tmp/deduped")
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("n_events"), dsumd(col("value")).as("total_value"))
         .orderBy("event_type", "day")
@@ -825,36 +782,21 @@ object Streaming {
     * it hash-matches q196's batch oracle EXACTLY — fold maintenance is
     * bit-preserving, unlike sketch maintenance (q181). */
   def streamEmaAudit(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-    val ms = unix_millis(col("ts"))
-    val (lo, hi) = span(ev, ms)
-    val dayMs = 86400000L
+    val (t1, t2, _) = timeThirds(ev)
     // day-aligned thirds (complete-days contract)
-    val t1 = Math.floorDiv(lo + (hi - lo) / 3, dayMs) * dayMs
-    val t2 = Math.floorDiv(lo + 2 * (hi - lo) / 3, dayMs) * dayMs
-    val schema = StructType(Seq(
-      StructField("event_id", LongType, nullable = false),
-      StructField("ts", TimestampType, nullable = true),
-      StructField("event_type", StringType, nullable = true),
-      StructField("value", DoubleType, nullable = false)))
-    val chunks = Seq(ev.filter(ms < t1), ev.filter(ms >= t1 && ms < t2),
-      ev.filter(ms >= t2))
+    def day(t: Long) = Math.floorDiv(t, 86400000L) * 86400000L
     replay("q200_ema") { tmp =>
-      val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/state", s"$tmp/ckpt")
-      chunks.foreach { c =>
-        c.write.mode("append").parquet(landing)
-        drain("streamEmaAudit", emaMaintain(spark.readStream.schema(schema).parquet(landing))
-            .toDF("event_type", "n_days", "ema_fast", "ema_slow"),
-            ckpt, OutputMode.Update()) { (b, _) =>
-          b.write.mode("append").parquet(outDir)
-        }
+      replayStarts("streamEmaAudit", tmp, landing(cutAt(ev, day(t1), day(t2))),
+          OutputMode.Update())(l => emaMaintain(l("landing"))
+          .toDF("event_type", "n_days", "ema_fast", "ema_slow")) { (b, _, _) =>
+        b.write.mode("append").parquet(s"$tmp/state")
       }
       // final state per series = max day count (monotone across batches)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("event_type")).orderBy(col("n_days").desc)
-      graft.Tables.parquet(spark, outDir)
+      graft.Tables.parquet(spark, s"$tmp/state")
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1).drop("__rn")
         .withColumn("macd", col("ema_fast") - col("ema_slow"))
@@ -876,47 +818,21 @@ object Streaming {
     * batch LEFT JOIN over the same events. */
   def streamOuterJoinAudit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types._
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"))
-    val ms = unix_millis(col("ts"))
-    val (lo, hi) = span(ev, ms)
-    val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-    val schema = StructType(Seq(
-      StructField("event_id", LongType, nullable = false),
-      StructField("ts", TimestampType, nullable = true),
-      StructField("user_id", LongType, nullable = false),
-      StructField("value", DoubleType, nullable = false)))
+    val (t1, t2, hi) = timeThirds(ev)
     val sentinel = Seq((-1L, new java.sql.Timestamp(hi + 3L * 86400000L),
       -1L, 0.0)).toDF("event_id", "ts", "user_id", "value")
-    def sides(c: org.apache.spark.sql.DataFrame) = (
-      c.filter(col("event_type") === "purchase")
-        .select("event_id", "ts", "user_id", "value"),
-      c.filter(col("event_type") === "view")
-        .select("event_id", "ts", "user_id", "value"))
-    val feeds: Seq[Option[(org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]] =
-      Seq(Some(sides(ev.filter(ms < t1))),
-        Some(sides(ev.filter(ms >= t1 && ms < t2))),
-        Some(sides(ev.filter(ms >= t2))),
-        Some((sentinel, sentinel)),
-        None) // no-data flush start (q143 close-out)
+    val starts = (cutAt(ev, t1, t2).map(joinSides) :+
+      Map("purchases" -> sentinel, "views" -> sentinel)).map(Some(_)) :+
+      None // no-data flush start (q143 close-out)
     replay("q203_outer") { tmp =>
-      val (landP, landV, outDir, ckpt) =
-        (s"$tmp/purchases", s"$tmp/views", s"$tmp/joined", s"$tmp/ckpt")
-      feeds.foreach { f =>
-        f.foreach { case (pc, vc) =>
-          pc.write.mode("append").parquet(landP)
-          vc.write.mode("append").parquet(landV)
-        }
-        drain("streamOuterJoinAudit", purchaseViewJoin(
-            spark.readStream.schema(schema).parquet(landP),
-            spark.readStream.schema(schema).parquet(landV),
-            "1 hour", "left_outer"), ckpt) { (b, _) =>
-          b.write.mode("append").parquet(outDir)
-        }
+      replayStarts("streamOuterJoinAudit", tmp, starts)(l => purchaseViewJoin(
+          l("purchases"), l("views"), "1 hour", "left_outer")) { (b, _, _) =>
+        b.write.mode("append").parquet(s"$tmp/joined")
       }
-      graft.Tables.parquet(spark, outDir)
+      graft.Tables.parquet(spark, s"$tmp/joined")
         .filter(col("user_id") >= 0) // drop the sentinel's own emission
         .select("p_id", "user_id", "p_ts", "p_value", "v_id", "v_ts", "v_value")
         .orderBy("p_id", "v_id")
@@ -938,37 +854,23 @@ object Streaming {
     * strongest pin. (Clean-run audit: at-least-once REPLAY of a
     * non-idempotent additive merge is q197's topic, not this one.) */
   def streamTrendAudit(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
     import graft.functions.Exact._
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"),
         col("event_type"))
-    val ms = unix_millis(col("ts"))
-    val (lo, hi) = span(ev, ms)
-    val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-    val schema = StructType(Seq(
-      StructField("event_id", LongType, nullable = false),
-      StructField("ts", TimestampType, nullable = true),
-      StructField("user_id", LongType, nullable = false),
-      StructField("value", DoubleType, nullable = false),
-      StructField("event_type", StringType, nullable = true)))
-    val chunks = Seq(ev.filter(ms < t1), ev.filter(ms >= t1 && ms < t2),
-      ev.filter(ms >= t2))
+    val (t1, t2, _) = timeThirds(ev)
     replay("q222_trend") { tmp =>
-      val (landing, state, ckpt) = (s"$tmp/landing", s"$tmp/state", s"$tmp/ckpt")
-      chunks.foreach { c =>
-        c.write.mode("append").parquet(landing)
-        drain("streamTrendAudit", spark.readStream.schema(schema).parquet(landing),
-            ckpt) { (b, _) =>
-          val delta = b.groupBy(col("event_type"),
-              (col("user_id") % 10).as("cohort"), to_date(col("ts")).as("day"))
-            .agg((dsum(col("value")) * 10000).cast("long").as("y"))
-          // pin the old MV before overwriting its directory
-          readStore(spark, state).fold(delta)(_.pinned().unionByName(delta)
-              .groupBy("event_type", "cohort", "day")
-              .agg(sum(col("y")).as("y")))
-            .write.mode("overwrite").parquet(state)
-        }
+      val state = s"$tmp/state"
+      replayStarts("streamTrendAudit", tmp, landing(cutAt(ev, t1, t2)))(_("landing")) {
+          (b, _, _) =>
+        val delta = b.groupBy(col("event_type"),
+            (col("user_id") % 10).as("cohort"), to_date(col("ts")).as("day"))
+          .agg((dsum(col("value")) * 10000).cast("long").as("y"))
+        // pin the old MV before overwriting its directory
+        readStore(spark, state).fold(delta)(_.pinned().unionByName(delta)
+            .groupBy("event_type", "cohort", "day")
+            .agg(sum(col("y")).as("y")))
+          .write.mode("overwrite").parquet(state)
       }
       val pts = graft.Tables.parquet(spark, state)
         .withColumn("x",
@@ -1040,36 +942,23 @@ object Streaming {
     * full-recompute DuckDB oracle VERBATIM — streamed funnel state ==
     * batch funnel, the q222 oracle-sharing pin. */
   def streamFunnelAudit(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-    val ms = unix_millis(col("ts"))
-    val (lo, hi) = span(ev, ms)
-    val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-    val schema = StructType(Seq(
-      StructField("event_id", LongType, nullable = false),
-      StructField("ts", TimestampType, nullable = true),
-      StructField("user_id", LongType, nullable = false),
-      StructField("event_type", StringType, nullable = true)))
-    val chunks = Seq(ev.filter(ms < t1), ev.filter(ms >= t1 && ms < t2),
-      ev.filter(ms >= t2))
+    val (t1, t2, _) = timeThirds(ev)
+    // ONE file per chunk: funnelMaintain's proof needs a
+    // user's events time-ordered ACROSS micro-batches, which holds
+    // only if each landed chunk is consumed whole in a single batch —
+    // a multi-file chunk could be split by a maxFilesPerTrigger-style
+    // source limit, letting a purchase process before its earlier
+    // same-chunk view (conversion lost vs the batch oracle). A
+    // single file per restart makes single-batch-per-chunk structural.
+    val starts = landing(cutAt(ev, t1, t2).map(_.coalesce(1)))
     replay("q246_funnel") { tmp =>
-      val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/conv", s"$tmp/ckpt")
-      chunks.foreach { c =>
-        // ONE file per chunk: funnelMaintain's proof needs a
-        // user's events time-ordered ACROSS micro-batches, which holds
-        // only if each landed chunk is consumed whole in a single batch —
-        // a multi-file chunk could be split by a maxFilesPerTrigger-style
-        // source limit, letting a purchase process before its earlier
-        // same-chunk view (conversion lost vs the batch oracle). A
-        // single file per restart makes single-batch-per-chunk structural.
-        c.coalesce(1).write.mode("append").parquet(landing)
-        drain("streamFunnelAudit", funnelMaintain(spark.readStream.schema(schema).parquet(landing))
-            .toDF("user_id", "v_us", "p_us"), ckpt) { (b, _) =>
-          b.write.mode("append").parquet(outDir)
-        }
+      replayStarts("streamFunnelAudit", tmp, starts)(l => funnelMaintain(l("landing"))
+          .toDF("user_id", "v_us", "p_us")) { (b, _, _) =>
+        b.write.mode("append").parquet(s"$tmp/conv")
       }
-      val conv = graft.Tables.parquet(spark, outDir).distinct()
+      val conv = graft.Tables.parquet(spark, s"$tmp/conv").distinct()
       // q245's histogram-cumulation report over the streamed conversions
       val h = conv.select((col("user_id") % 10).as("cohort"),
           expr("(p_us - v_us) DIV 60000000").as("delay_min"))
@@ -1139,34 +1028,19 @@ object Streaming {
     * "customers whose class size ≥ 5" computed by DuckDB from
     * scratch. */
   def streamKAnonAudit(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
     val cust = graft.Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"),
         col("c_acctbal"))
-    val maxKey = cust.agg(max(col("c_custkey"))).head.getLong(0) // 1-value driver action
-    val cuts = Seq(maxKey / 3, 2 * maxKey / 3)
-    val schema = StructType(Seq(
-      StructField("c_custkey", LongType, nullable = false),
-      StructField("c_nationkey", IntegerType, nullable = true),
-      StructField("c_mktsegment", StringType, nullable = true),
-      StructField("c_acctbal", DoubleType, nullable = true)))
-    val chunks = Seq(
-      cust.filter(col("c_custkey") <= cuts(0)),
-      cust.filter(col("c_custkey") > cuts(0) && col("c_custkey") <= cuts(1)),
-      cust.filter(col("c_custkey") > cuts(1)))
+    val starts = landing(idThirds(cust, "c_custkey"))
     replay("q251_kanon") { tmp =>
-      val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/released", s"$tmp/ckpt")
-      chunks.foreach { c =>
-        c.write.mode("append").parquet(landing)
-        // k = 2 is FIXTURE-SCALED (sf0.001's largest class holds 2 rows
-        // — the production default stays kAnonGate's k = 5); at k = 2
-        // the gate engages at every SF: 6/416/1375 classes open
-        drain("streamKAnonAudit", kAnonGate(spark.readStream.schema(schema).parquet(landing), k = 2)
-            .toDF("c_custkey", "c_nationkey", "c_mktsegment", "bal_band"), ckpt) { (b, _) =>
-          b.write.mode("append").parquet(outDir)
-        }
+      // k = 2 is FIXTURE-SCALED (sf0.001's largest class holds 2 rows
+      // — the production default stays kAnonGate's k = 5); at k = 2
+      // the gate engages at every SF: 6/416/1375 classes open
+      replayStarts("streamKAnonAudit", tmp, starts)(l => kAnonGate(l("landing"), k = 2)
+          .toDF("c_custkey", "c_nationkey", "c_mktsegment", "bal_band")) { (b, _, _) =>
+        b.write.mode("append").parquet(s"$tmp/released")
       }
-      graft.Tables.parquet(spark, outDir).distinct()
+      graft.Tables.parquet(spark, s"$tmp/released").distinct()
         .groupBy("c_nationkey")
         .agg(count(lit(1)).as("n_released"),
           countDistinct(concat(col("c_mktsegment"), lit("#"),
@@ -1243,40 +1117,26 @@ object Streaming {
     * EXACTLY — the oracle is q254's SQL verbatim (the q246/q222
     * oracle-sharing pin), hash-matched. */
   def streamStratSampleAudit(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
     val docs = graft.Tables.documents(spark, dir).select("doc_id", "source")
-    val maxDoc = docs.agg(max(col("doc_id"))).head.getLong(0) // 1-value driver action
-    val cuts = Seq(maxDoc / 3, 2 * maxDoc / 3)
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("source", StringType, nullable = true)))
-    val chunks = Seq(
-      docs.filter(col("doc_id") <= cuts(0)),
-      docs.filter(col("doc_id") > cuts(0) && col("doc_id") <= cuts(1)),
-      docs.filter(col("doc_id") > cuts(1)))
+    val starts = landing(idThirds(docs, "doc_id"))
     replay("q255_strat") { tmp =>
-      val (landing, outDir, ckpt) = (s"$tmp/landing", s"$tmp/sample", s"$tmp/ckpt")
       // narrow shuffle: every stage here is fixture-sized (the state
       // shuffle keys on ~20 sources) — session-width shuffles would be
       // pure empty-task scheduling overhead
       withNarrowShuffle(spark) {
-        chunks.foreach { c =>
-          c.write.mode("append").parquet(landing) // new files = new delivery
-          drain("streamStratSampleAudit", stratifiedSampleStream(
-              spark.readStream.schema(schema).parquet(landing), k = 20),
-              ckpt, OutputMode.Update()) { (b, bid) =>
-            // IDEMPOTENT per batchId: a failure-replayed
-            // batch OVERWRITES its own subdirectory instead of
-            // appending a second copy — the max-gen fold below keeps
-            // every row of the latest gen, so an append-mode duplicate
-            // would survive to the compared output. batchIds are
-            // unique across the three chunk queries because they share
-            // one checkpoint (the offset log continues numbering).
-            b.toDF().write.mode("overwrite").parquet(s"$outDir/batchId=$bid")
-          }
+        replayStarts("streamStratSampleAudit", tmp, starts, OutputMode.Update())(
+            l => stratifiedSampleStream(l("landing"), k = 20)) { (b, _, bid) =>
+          // IDEMPOTENT per batchId: a failure-replayed
+          // batch OVERWRITES its own subdirectory instead of
+          // appending a second copy — the max-gen fold below keeps
+          // every row of the latest gen, so an append-mode duplicate
+          // would survive to the compared output. batchIds are
+          // unique across the three chunk queries because they share
+          // one checkpoint (the offset log continues numbering).
+          b.toDF().write.mode("overwrite").parquet(s"$tmp/sample/batchId=$bid")
         }
         val byGen = org.apache.spark.sql.expressions.Window.partitionBy("source")
-        graft.Tables.parquet(spark, outDir)
+        graft.Tables.parquet(spark, s"$tmp/sample")
           .withColumn("mx", max(col("gen")).over(byGen))
           .filter(col("gen") === col("mx"))
           .select(col("source"), col("rn"), col("doc_id"), col("h"))

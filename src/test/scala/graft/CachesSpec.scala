@@ -1,7 +1,7 @@
 package graft
 
-/** Mechanical laws for the checkpoint-release registry (r10 verdict #1
-  * — the bench back-half drift fix lives or dies on these semantics):
+/** Mechanical laws for the checkpoint-release registry (the bench
+  * back-half drift fix lives or dies on these semantics):
   * pin materializes and registers, unpin/releaseAll actually remove
   * the checkpoint's blocks from the block manager, and scoped cleanup
   * frees ONLY its own registrations (an outer pin must survive a
@@ -44,6 +44,17 @@ class CachesSpec extends SparkSpec {
     while (persistentCount > base && System.nanoTime() < deadline) Thread.sleep(50)
     assert(persistentCount == base,
       s"releaseAll must drain the block manager (still ${persistentCount - base} extra)")
+  }
+
+  test("cached leaves a plan cached outside the registry to its owner") {
+    Caches.releaseAll()
+    val owned = (1 to 11).toDF("x").cache()
+    try {
+      assert(Caches.cached((1 to 11).toDF("x")).count() == 11)
+      Caches.releaseAll()
+      assert(owned.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "releaseAll dropped a cache that Caches.cached did not make")
+    } finally owned.unpersist()
   }
 
   test("scoped releases ONLY its own registrations — outer pins survive and stay readable") {

@@ -537,28 +537,20 @@ class StreamingSpec extends SparkSpec {
     // a redelivered doc already in a FULL top-k must be a no-op: the
     // TreeSet add returns false and no eviction may fire — an
     // unconditional evict silently shrinks the sample
-    import org.apache.spark.sql.types._
     val docs = Tables.documents(spark, sf).select("doc_id", "source")
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("source", StringType, nullable = true)))
     val half = docs.filter($"doc_id" % 2 === 0)
     val rest = docs.filter($"doc_id" % 2 =!= 0)
     val folded = Streaming.replay("q255_redeliver") { dir =>
-      val (landing, outDir, ckpt) = (s"$dir/landing", s"$dir/out", s"$dir/ckpt")
       // chunk 1, chunk 1 AGAIN (new files = at-least-once redelivery of
       // every row, arriving while many strata's top-k are already full),
       // then the remaining docs
-      Seq(half, half, rest).foreach { c =>
-        c.write.mode("append").parquet(landing)
-        Streaming.drain("stratifiedSampleRedelivery", Streaming.stratifiedSampleStream(
-            spark.readStream.schema(schema).parquet(landing), k = 20),
-            ckpt, OutputMode.Update()) { (b, _) =>
-          b.toDF().write.mode("append").parquet(outDir)
-        }
+      Streaming.replayStarts("stratifiedSampleRedelivery", dir,
+          Seq(half, half, rest).map(c => Some(Map("landing" -> c))), OutputMode.Update())(
+          l => Streaming.stratifiedSampleStream(l("landing"), k = 20)) { (b, _, _) =>
+        b.toDF().write.mode("append").parquet(s"$dir/out")
       }
       val byGen = org.apache.spark.sql.expressions.Window.partitionBy("source")
-      spark.read.parquet(outDir)
+      spark.read.parquet(s"$dir/out")
         .withColumn("mx", max($"gen").over(byGen))
         .filter($"gen" === $"mx")
         .select("source", "rn", "doc_id", "h")
@@ -592,19 +584,30 @@ class StreamingSpec extends SparkSpec {
     val sources = SourceTree.scalaFiles("src/main/scala")
     val home = Paths.get("src/main/scala/graft/streaming/Streaming.scala")
     val homeText = sources.toMap.getOrElse(home, "")
-    val from = homeText.indexOf("def drain[")
-    val until = if (from < 0) -1 else homeText.indexOf("\n\n", from)
-    def inDrain(f: java.nio.file.Path, at: Int) = f == home && at > from && at < until
+    // a site lies inside one of `defs` when it falls between that
+    // definition's `def <name>` and its first blank line
+    def inside(defs: Seq[String])(f: java.nio.file.Path, at: Int) = f == home && defs.exists { d =>
+      val from = homeText.indexOf(s"def $d")
+      from >= 0 && at > from && at < homeText.indexOf("\n\n", from)
+    }
+    def sitesOf(token: String) = for {
+      (f, text) <- sources
+      m <- java.util.regex.Pattern.quote(token).r.findAllMatchIn(text)
+    } yield (f, m.start, text.take(m.start).count(_ == '\n') + 1)
+    def listed(token: String, sites: Seq[(java.nio.file.Path, Int, Int)]) =
+      s"$token x${sites.size}: " + sites.map { case (f, _, line) => s"$f:$line" }.mkString(", ")
     val misplaced = Seq(".writeStream", "StreamPlans.record(").flatMap { token =>
-      val sites = for {
-        (f, text) <- sources
-        m <- java.util.regex.Pattern.quote(token).r.findAllMatchIn(text)
-      } yield (f, m.start, text.take(m.start).count(_ == '\n') + 1)
-      if (sites.size == 1 && sites.forall { case (f, at, _) => inDrain(f, at) }) Nil
-      else Seq(s"$token x${sites.size}: " +
-        sites.map { case (f, _, line) => s"$f:$line" }.mkString(", "))
+      val sites = sitesOf(token)
+      if (sites.size == 1 && sites.forall { case (f, at, _) => inside(Seq("drain["))(f, at) }) Nil
+      else Seq(listed(token, sites))
     }
     if (misplaced.nonEmpty)
       fail(("each must occur once, inside Streaming.drain" +: misplaced).mkString("\n"))
+    // every stream read is a landing the daily append, the admission
+    // loop or the audits' replay driver reads
+    val readers = Seq("incrementalAppend(", "nearDupAdmit(", "replayStarts[")
+    val stray = sitesOf(".readStream").filterNot { case (f, at, _) => inside(readers)(f, at) }
+    if (stray.nonEmpty)
+      fail(s"readStream only inside Streaming.${readers.mkString(", ")}: " + listed(".readStream", stray))
   }
 }
